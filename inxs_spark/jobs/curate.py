@@ -103,9 +103,11 @@ def curate(
     from pyspark import StorageLevel
 
     from ..operators.dedup import (
-        dedup_keep_one_per_cluster,
+        connected_components,
         exact_dedup,
+        keep_cluster_min,
         minhash_dedup_pairs,
+        release_checkpoint,
     )
     from ..operators.text import (
         language_id_expr,
@@ -164,7 +166,8 @@ def curate(
     # cluster (pairwise loser-dropping over-deletes on chains A~B~C);
     # connected_components materializes the edge set eagerly — those
     # bounded jobs read the deduped CACHE, not the input
-    pruned = dedup_keep_one_per_cluster(deduped, pairs, id_col)
+    clusters = connected_components(pairs)
+    pruned = keep_cluster_min(deduped, clusters, id_col)
     if normalize:
         pruned = pruned.drop(dd_col)
     pruned = pruned.persist(lvl)
@@ -178,6 +181,7 @@ def curate(
     # (round-4 advice)
     if getattr(pairs, "_candidate_pairs_cache", None) is not None:
         pairs._candidate_pairs_cache.unpersist()
+    release_checkpoint(clusters)
     deduped.unpersist()
 
     t = time.monotonic()

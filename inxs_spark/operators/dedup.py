@@ -109,6 +109,14 @@ _MERSENNE31 = (1 << 31) - 1
 _MINHASH_MEMO_MAX = 1_000_000
 
 
+def _memo_fill(memo: dict, keys: list, vals: list, cap: int) -> None:
+    """Remember as many key→value misses as fit: ``memo`` never grows
+    past ``cap`` entries."""
+    room = cap - len(memo)
+    if room > 0:
+        memo.update(zip(keys[:room], vals[:room]))
+
+
 def _make_minhash_udf(num_perm: int, k: int, mode: str):
     """Vectorized MinHash signatures: per batch, shingle → 64-bit base
     hash (blake2b, process-independent), then all permutations at once
@@ -158,8 +166,7 @@ def _make_minhash_udf(num_perm: int, k: int, mode: str):
                 mv = (np.frombuffer(buf, dtype=">u8") % m31_u64).astype(
                     np.int64
                 ).tolist()
-                if len(memo) < _MINHASH_MEMO_MAX:
-                    memo.update(zip(miss, mv))
+                _memo_fill(memo, miss, mv, _MINHASH_MEMO_MAX)
                 vals.extend(mv)
             base = np.array(vals, dtype=np.int64)
             return ((A[:, None] * base[None, :] + B[:, None]) % _MERSENNE31).min(
@@ -561,7 +568,10 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
 
     Each iteration checkpoints via localCheckpoint() to cut the plan
     lineage — without it the join tree doubles per round and Catalyst
-    analysis cost explodes by iteration ~10. ``_iters_out`` (tests)
+    analysis cost explodes by iteration ~10. Every checkpoint but the
+    returned one is released before returning; release that one with
+    :func:`release_checkpoint` once the actions that read it have run.
+    ``_iters_out`` (tests)
     receives the executed round count; ``metrics_dir`` (production)
     receives one JSON lineage record (rounds, n_edges, labels changed
     in the last round, converged flag) so a run can ALARM on
@@ -607,8 +617,12 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
             with open(tmp, "w") as fh:
                 fh.write(json.dumps(rec) + "\n")
             os.replace(tmp, os.path.join(metrics_dir, "cc_metrics.json"))
-        return labels
+        # built from the schema alone, so the edges can go now
+        empty = labels.sparkSession.createDataFrame([], labels.schema)
+        release_checkpoint(edges)
+        return empty
     rounds, changed = 0, 0
+    previous = None  # the last round's checkpoint, superseded below
     for rounds in range(1, max_iters + 1):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
@@ -647,6 +661,9 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
             .count()
         )
         labels = updated.withColumnRenamed("new_cluster", "cluster_id")
+        if previous is not None:
+            release_checkpoint(previous)
+        previous = updated
         if changed == 0:
             break
     converged = changed == 0 and rounds > 0
@@ -669,9 +686,23 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
         with open(tmp, "w") as fh:
             fh.write(json.dumps(rec) + "\n")
         os.replace(tmp, os.path.join(metrics_dir, "cc_metrics.json"))
+    release_checkpoint(edges)
     if _iters_out is not None:
         _iters_out.append(rounds)
     return labels
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the local checkpoints ``df`` reads from. Only for
+    frames built directly on ``localCheckpoint()`` results, such as
+    the labels :func:`connected_components` returns, and only once
+    every action that reads them has run: a released local checkpoint
+    cannot be recomputed."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def dedup_keep_one_per_cluster(df: DataFrame, pairs: DataFrame,
@@ -679,7 +710,13 @@ def dedup_keep_one_per_cluster(df: DataFrame, pairs: DataFrame,
     """Component-correct near-dup removal: keep exactly the min-id
     document of every connected near-dup cluster (singletons —
     documents in no pair — always survive)."""
-    clusters = connected_components(pairs)
+    return keep_cluster_min(df, connected_components(pairs), id_col)
+
+
+def keep_cluster_min(df: DataFrame, clusters: DataFrame,
+                     id_col: str = "doc_id") -> DataFrame:
+    """``df`` minus every document that is in a cluster of
+    :func:`connected_components` but is not its min id."""
     losers = clusters.filter(F.col("id") != F.col("cluster_id")).select(
         F.col("id").alias(id_col)
     )
@@ -732,8 +769,7 @@ def _simhash64(texts: pd.Series) -> pd.Series:
                 blake2b(t.encode(), digest_size=8).digest() for t in miss
             )
             mv = np.frombuffer(buf, dtype=">u8").tolist()
-            if len(_SIMHASH_MEMO) < _SIMHASH_MEMO_MAX:
-                _SIMHASH_MEMO.update(zip(miss, mv))
+            _memo_fill(_SIMHASH_MEMO, miss, mv, _SIMHASH_MEMO_MAX)
             vals.extend(mv)
         hashes = np.array(vals, dtype=np.uint64)
         bits = ((hashes[:, None] >> np.arange(64, dtype=np.uint64)) & 1)

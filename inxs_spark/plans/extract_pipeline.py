@@ -39,6 +39,7 @@ from typing import Iterator, Optional
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DataType
 
 from ..extract import MAIN_CONTENT, extract_turn
 from ..kernel.transformation import Transformation
@@ -219,8 +220,12 @@ def default_fanout_partitions(df: DataFrame) -> int:
     turns/partition, so one wave beat the old 3x-cores default by
     28-55% on the 601k-turn tier; oversized partitions lose
     pipelining overlap and pay n·log n sort cost, worth ~8-10% back
-    on the 2.4M-turn tier. Following the file layout on big inputs
-    bounds partitions near the writer's granularity (at 100 TB,
+    on the 2.4M-turn tier. That sweep ran while every Python task also
+    paid ~0.3 CPU-s re-reading Spark's pyspark archives on each
+    ``importlib.invalidate_caches()``, a cost the worker daemon
+    (``sources/worker_daemon.py``) now removes; the ~25-50k crossover
+    has not been re-measured without it. Following the file layout on
+    big inputs bounds partitions near the writer's granularity (at 100 TB,
     ~800k files → ~800k partitions, not total-cores partitions of
     30M turns). The probes here NEVER run a Spark job —
     ``inputFiles()`` is a listing; ``df.rdd.getNumPartitions()``
@@ -285,10 +290,7 @@ def extract_df(
     # output schema (or the key/text inputs) used to fail deep inside
     # mapInArrow with a confusing duplicate-field error — reject it
     # up front with the actual offender named
-    reserved = {
-        "conv_id", "turn_idx", "text",
-        "extracted_text", "spans", "failure",
-    }
+    reserved = {"text", *DataType.fromDDL(OUTPUT_SPARK_SCHEMA).names}
     clash = [c for c in passthrough_cols if c in reserved]
     if clash:
         raise ValueError(

@@ -3,7 +3,9 @@
 Local mode here; on a real cluster the same configs ship via
 ``spark-submit --conf`` (BASELINE.json:14). AQE stays on for runtime
 skew/coalesce re-planning; Arrow batch size bounds Python-worker memory
-per batch (SURVEY.md §5.2).
+per batch (SURVEY.md §5.2). Local Python workers start through
+:mod:`inxs_spark.sources.worker_daemon`, which removes the per-task cost
+of re-reading Spark's pyspark archives.
 """
 
 from __future__ import annotations
@@ -14,6 +16,23 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS_PER_BATCH = 4096
+WORKER_DAEMON_MODULE = "inxs_spark.sources.worker_daemon"
+
+
+def worker_daemon_module(master: str) -> str | None:
+    """The Python daemon module for ``master``: ours when local-mode
+    workers can import this package, that is when its root is the
+    working directory or on ``PYTHONPATH`` (Spark starts the daemon
+    there with ``python -m``); otherwise None, which keeps Spark's
+    ``pyspark.daemon`` (a daemon that cannot be imported fails every
+    Python task)."""
+    if not master.startswith("local"):
+        return None
+    root = os.path.realpath(os.path.join(os.path.dirname(__file__), "..", ".."))
+    entries = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    if any(os.path.realpath(p or os.getcwd()) == root for p in entries):
+        return WORKER_DAEMON_MODULE
+    return None
 
 
 def get_spark(
@@ -38,4 +57,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    daemon = worker_daemon_module(master)
+    if daemon is not None:
+        builder = builder.config("spark.python.daemon.module", daemon)
     return builder.getOrCreate()

@@ -85,13 +85,23 @@ def ensure_transcripts(spark: SparkSession, tier: str = "small",
     return path
 
 
+SF_DIR_TIERS = {
+    "sf0.001": "tiny", "sf0.01": "small", "sf0.1": "bench", "sf1.0": "scale",
+}
+
+
 def tier_for_sf_dir(sf_dir: str) -> str:
     """Map a driver sf dir to a transcript tier (TESTDATA.md tiers:
-    sf0.001→tiny, sf0.01→small, sf0.1→bench)."""
+    sf0.001→tiny, sf0.01→small, sf0.1→bench, sf1.0→scale). An unknown
+    dir raises instead of silently timing some other tier's input."""
     name = os.path.basename(sf_dir.rstrip("/"))
-    return {"sf0.001": "tiny", "sf0.01": "small", "sf0.1": "bench"}.get(
-        name, "small"
-    )
+    try:
+        return SF_DIR_TIERS[name]
+    except KeyError:
+        raise ValueError(
+            f"no transcript tier for sf dir {name!r}; "
+            f"known: {sorted(SF_DIR_TIERS)}"
+        ) from None
 
 
 def read_transcripts_jsonl(spark: SparkSession, path: str) -> DataFrame:

@@ -372,13 +372,22 @@ class TestDedup:
         rows = [
             (i, f"plain english document {i} with common words here", "en")
             for i in range(10)
+        ] + [  # a near-dup pair, so connected components runs rounds
+            (20, "the quick brown fox jumps over the lazy dog and runs on", "en"),
+            (21, "the quick brown fox jumps over the lazy dog and runs off", "en"),
         ]
         df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
         out = str(tmp_path / "curated")
+        jsc = spark.sparkContext._jsc
+        held = set(jsc.getPersistentRDDs().keySet())
         _c, stats = curate(
-            df, min_quality=0.0, out=out, metrics_out=str(tmp_path),
-            run_id="testrun",
+            df, jaccard_threshold=0.6, min_quality=0.0, out=out,
+            metrics_out=str(tmp_path), run_id="testrun",
         )
+        # out= releases everything it cached or checkpointed (a set
+        # difference: earlier tests' leftovers may be cleaned meanwhile)
+        assert set(jsc.getPersistentRDDs().keySet()) - held == set()
+        assert stats["after_near_dup_prune"] == stats["after_exact_dedup"] - 1
         assert spark.read.parquet(out).count() == stats["output"]
         m = {r.stage: r for r in
              spark.read.parquet(str(tmp_path / "metrics_table")).collect()}
@@ -1163,6 +1172,31 @@ class TestDedup:
         got = {(r.id_a, r.id_b) for r in
                simhash_pairs_from_sigs(sigs, max_hamming=0).collect()}
         assert got == {(1, 2)}
+
+    def test_hash_memos_stop_at_their_cap(self, monkeypatch):
+        """The per-task shingle/token memos fill only their remaining
+        capacity: one batch of misses never pushes them past the cap."""
+        import inspect
+
+        import pandas as pd
+
+        from inxs_spark.operators import dedup
+
+        monkeypatch.setattr(dedup, "_MINHASH_MEMO_MAX", 5)
+        monkeypatch.setattr(dedup, "_SIMHASH_MEMO_MAX", 5)
+        monkeypatch.setattr(dedup, "_SIMHASH_MEMO", {})
+        texts = pd.Series([" ".join(f"w{i}" for i in range(40)),
+                           " ".join(f"v{i}" for i in range(40))])
+
+        sig = dedup._make_minhash_udf(8, 3, "word").func
+        memo = inspect.getclosurevars(sig).nonlocals["memo"]
+        first = sig(texts)
+        assert len(memo) == 5
+        # a memo at its cap changes nothing: same signatures, same size
+        assert sig(texts).tolist() == first.tolist() and len(memo) == 5
+
+        dedup._simhash64.func(texts)
+        assert len(dedup._SIMHASH_MEMO) == 5
 
     def test_clamped_count(self, spark):
         from inxs_spark.operators.dedup import clamped_count

@@ -556,6 +556,17 @@ def test_transform_df_on_error_raise(spark):
         ).collect()
 
 
+def test_passthrough_cols_reject_output_names(spark, tiny_transcripts):
+    """A passthrough column named like an output column or the text
+    input is refused up front, naming the offender."""
+    from inxs_spark.plans.extract_pipeline import extract_df
+
+    turns = spark.read.parquet(tiny_transcripts)
+    for name in ("text", "conv_id", "failure", "spans"):
+        with pytest.raises(ValueError, match=f"'{name}'"):
+            extract_df(turns, passthrough_cols=("role", name))
+
+
 def test_passthrough_cols_equal_join_back(spark, tiny_transcripts):
     """passthrough_cols carries source columns through the Arrow hop
     1:1: values equal the join-back formulation, and the plan contains
