@@ -6,7 +6,7 @@ collected in one import::
     EF.asof_join(trades, quotes, by="sym", on="ts", right_select=...)
 """
 
-from ..operators.dedup import minhash_signature_expr, shingles  # noqa: F401
+from ..operators.dedup import shingles  # noqa: F401
 from ..operators.relational import (  # noqa: F401
     asof_join,
     range_band_join,
@@ -16,7 +16,7 @@ from ..operators.similarity import cosine, dot, norm  # noqa: F401
 from ..operators.text import bpe_ish_tokens, chunk_documents, tokens  # noqa: F401
 
 __all__ = [
-    "shingles", "minhash_signature_expr",
+    "shingles",
     "cosine", "dot", "norm",
     "tokens", "bpe_ish_tokens", "chunk_documents",
     "asof_join", "range_band_join", "time_bucket",

@@ -49,6 +49,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.io import compact_records, write_json_atomic
+
 #: stage names in pipeline order — shared by stats, the metrics table
 #: and the tests
 CURATE_STAGES = (
@@ -249,18 +251,19 @@ def write_curate_metrics(
     compact: bool = True,
 ) -> None:
     """Persist per-stage attrition lineage: one JSON line per stage
-    under ``<metrics_out>/metrics/`` (append-only, atomic rename —
-    same contract as the extraction runner's per-partition records;
-    like the runner, a DRIVER-LOCAL directory standing in for the
-    metrics Iceberg table append of the production design) and, when
-    ``compact=True``, the compacted ``<metrics_out>/metrics_table``
-    parquet — so a production curation run's funnel is queryable next
-    to the extraction lineage instead of living only in a returned
-    dict. Per-record callers on a long stream should pass
-    ``compact=False`` (appending is O(1) per call) and compact once
-    at the end via :func:`compact_curate_metrics` — recompacting
-    every call would re-read every prior record, O(N²) over a
-    stream's lifetime (round-4 review finding)."""
+    in ``<metrics_out>/metrics/<op>_<run_id>.json`` (written with
+    :func:`~inxs_spark.sources.io.write_json_atomic` — same contract as
+    the extraction runner's per-partition records; like the runner, a
+    DRIVER-LOCAL directory standing in for the metrics Iceberg table
+    append of the production design) and, when ``compact=True``, the
+    compacted ``<metrics_out>/metrics_table`` parquet — so a
+    production curation run's funnel is queryable next to the
+    extraction lineage instead of living only in a returned dict.
+    Per-record callers on a long stream should pass ``compact=False``
+    (appending is O(1) per call) and compact once at the end with
+    ``compact_records(spark, metrics_out, CURATE_METRICS_SCHEMA)`` —
+    recompacting every call would re-read every prior record, O(N²)
+    over a stream's lifetime (round-4 review finding)."""
     walls = walls or {}
     stages = [s for s in CURATE_STAGES if s in stats]
     rows = []
@@ -277,34 +280,11 @@ def write_curate_metrics(
             "wall_s": round(float(walls.get(s, 0.0)), 3),
         })
         prev = n
-    mdir = os.path.join(metrics_out, "metrics")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".{op}_{run_id}.json.tmp")
-    with open(tmp, "w") as fh:
-        for r in rows:
-            fh.write(json.dumps(r) + "\n")
-    os.replace(tmp, os.path.join(mdir, f"{op}_{run_id}.json"))
+    write_json_atomic(
+        os.path.join(metrics_out, "metrics", f"{op}_{run_id}.json"), rows
+    )
     if compact:
-        compact_curate_metrics(spark, metrics_out)
-
-
-def compact_curate_metrics(spark: SparkSession, metrics_out: str) -> None:
-    """Fold every per-run/per-batch metrics JSON into the queryable
-    ``metrics_table`` parquet (one pass over all records — call once
-    per run / at stream shutdown, not per microbatch)."""
-    mdir = os.path.join(metrics_out, "metrics")
-    if not os.path.isdir(mdir):
-        return
-    paths = [
-        os.path.join(mdir, n)
-        for n in sorted(os.listdir(mdir))
-        if n.endswith(".json")
-    ]
-    if not paths:
-        return
-    spark.read.schema(CURATE_METRICS_SCHEMA).json(paths).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(metrics_out, "metrics_table"))
+        compact_records(spark, metrics_out, CURATE_METRICS_SCHEMA)
 
 
 def main(argv: list[str] | None = None) -> int:

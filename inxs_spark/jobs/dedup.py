@@ -41,17 +41,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def _incremental_survivors(batch: DataFrame, pairs: DataFrame,
+def _incremental_survivors(batch: DataFrame, clusters: DataFrame,
                            id_col: str) -> DataFrame:
-    """Batch survivors against an indexed corpus: a batch doc is
-    dropped when its near-dup component contains ANY indexed
-    (non-batch) doc — the index always wins, regardless of id
-    ordering, because the indexed copy already shipped — otherwise
-    the min batch id of each batch-only component survives (the same
-    rule dedup_keep_one_per_cluster applies corpus-wide)."""
-    from ..operators.dedup import connected_components
-
-    clusters = connected_components(pairs)
+    """Batch survivors against an indexed corpus, given the
+    :func:`~inxs_spark.operators.dedup.connected_components` labels of
+    the batch's pairs: a batch doc is dropped when its near-dup
+    component contains ANY indexed (non-batch) doc — the index always
+    wins, regardless of id ordering, because the indexed copy already
+    shipped — otherwise the min batch id of each batch-only component
+    survives (the same rule keep_cluster_min applies corpus-wide)."""
     bid = batch.select(F.col(id_col).alias("id")).withColumn(
         "__in_batch", F.lit(1)
     )
@@ -104,9 +102,11 @@ def dedup_job(
     from pyspark import StorageLevel
 
     from ..operators.dedup import (
-        dedup_keep_one_per_cluster,
+        connected_components,
         exact_dedup,
+        keep_cluster_min,
         minhash_dedup_pairs,
+        release_checkpoint,
         simhash_dup_pairs,
     )
     from ..operators.text import normalize_expr
@@ -160,7 +160,7 @@ def dedup_job(
     walls["input"] = time.monotonic() - t0
 
     t = time.monotonic()
-    pairs = None
+    clusters = None
     if method == "exact":
         survivors = exact_dedup(c0, id_col, dd_col)
     else:
@@ -202,16 +202,19 @@ def dedup_job(
         pairs_read = df.sparkSession.read.parquet(
             os.path.join(out_root, "pairs")
         )
+        clusters = connected_components(pairs_read)
         if index_dir is not None:
-            survivors = _incremental_survivors(c0, pairs_read, id_col)
+            survivors = _incremental_survivors(c0, clusters, id_col)
         else:
-            survivors = dedup_keep_one_per_cluster(c0, pairs_read, id_col)
+            survivors = keep_cluster_min(c0, clusters, id_col)
     if normalize:
         survivors = survivors.drop(dd_col)
 
     survivors.write.mode("overwrite").parquet(
         os.path.join(out_root, "survivors")
     )
+    if clusters is not None:
+        release_checkpoint(clusters)
     out = df.sparkSession.read.parquet(os.path.join(out_root, "survivors"))
     stats["output"] = out.count()
     walls["output"] = time.monotonic() - t

@@ -3,10 +3,12 @@ Jaccard. Designed for the 100 TB path:
 
 - exact: one hash-aggregate shuffle on a 16-byte digest (never the
   full text) — partial aggregation map-side, AQE handles skew.
-- MinHash+LSH: signatures are pure JVM column expressions (xxhash64
-  over character shingles — no Python, whole-stage codegen); banding
-  explodes to (band, key) and one groupBy finds candidate buckets;
-  hot buckets are capped to bound the quadratic pair expansion.
+- MinHash+LSH: signatures come from one vectorized pandas UDF that
+  shingles and hashes each Arrow batch (a per-permutation HOF-lambda
+  expression is interpreted, not codegen'd, and measured ~50x
+  slower); banding explodes to (band, key) and one groupBy finds
+  candidate buckets; hot buckets are capped to bound the quadratic
+  pair expansion.
 - SimHash: one vectorized Pandas UDF (numpy bit-twiddling — the only
   place Python genuinely beats a 64-lambda expression tree), then
   block-index on 16-bit chunks (pigeonhole: hamming ≤ 3 ⇒ one of 4
@@ -78,22 +80,6 @@ def shingles(text_col: str, k: int = 3, mode: str = "word") -> Column:
         f"array_distinct(transform("
         f"sequence(1, greatest(size(ws) - {k} + 1, 1)),"
         f" i -> array_join(slice(ws, i, {k}), ' '))))[0]"
-    )
-
-
-def minhash_signature_expr(shingle_col: str, num_perm: int = 64) -> Column:
-    """Signature as ONE array<long> expression: sig[j] = min over
-    shingles of xxhash64(shingle, j).
-
-    KEPT FOR REFERENCE, NOT THE DEFAULT PATH: Spark evaluates higher-
-    order-function lambdas interpreted (not codegen) — measured ~48s
-    for 5000 docs × 52 shingles × 32 perms on 16 cores (~10k lambda
-    evals/s/core), vs <1s for the vectorized numpy UDF below. This is
-    the documented exception to "stay JVM-side": nested HOF lambdas
-    are NOT the fast path in Spark."""
-    return F.expr(
-        f"transform(sequence(0, {num_perm - 1}), "
-        f"j -> array_min(transform({shingle_col}, s -> xxhash64(s, j))))"
     )
 
 
@@ -281,8 +267,6 @@ def minhash_band_memberships(
     # exchanges (plan pinned by test_memberships_single_udf_eval; the
     # removed repartition was the funnel's largest shuffle, ~40% of
     # the memberships wall at 1.2M docs — round-5 scaling profile).
-    # The JVM-expression variant (minhash_signature_expr) WOULD be
-    # inlined per band; that is one more reason it is not the default.
     # Small single-row-group inputs would otherwise run the signature
     # UDF on 1-2 scan tasks (round-6 profile: 4.5s of a 13s query on a
     # 94%-idle box) — fan out first when, and only when, the exchange
@@ -380,7 +364,6 @@ def jaccard_verify(
     mode: str = "word",
     prune_to_candidates: bool | str = False,
     corpus_n_rows: int | None = None,
-    _prune_path_out: list | None = None,
 ) -> DataFrame:
     """Exact shingle-Jaccard on candidate pairs (JVM array set ops);
     keeps pairs ≥ threshold. The default builds a fully LAZY plan
@@ -411,8 +394,8 @@ def jaccard_verify(
     (``corpus_n_rows`` hint, or a clamped count probe) AND the
     candidate ids are a small minority of it (8·n_pairs ≤ n) — below
     either bound the lazy plan's two cheap corpus shingle passes beat
-    the prune's extra joins. The chosen path is surfaced via
-    ``_prune_path_out`` ("prune" / "lazy") for tests."""
+    the prune's extra joins. The prune path shows in the returned
+    plan as the corpus ``LeftSemi`` join."""
     extra = ["max_dropped"] if "max_dropped" in pairs.columns else []
     pairs_cache = None
     if prune_to_candidates == "auto":
@@ -450,8 +433,6 @@ def jaccard_verify(
         )
     else:
         base = df
-    if _prune_path_out is not None:
-        _prune_path_out.append("prune" if prune_to_candidates else "lazy")
     # the shingle projection below is interpreted HOF-lambda work (no
     # codegen) — the priciest per-row compute in the funnel; fan out an
     # under-parallel small scan before paying it twice (round-6
@@ -487,7 +468,6 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", threshold: float = 0.7,
                         prune_verify: bool | str = False,
                         corpus_n_rows: int | None = None,
-                        _prune_path_out: list | None = None,
                         **lsh_kwargs) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard verify.
     ``prune_verify=True`` is the eager jobs-path shape (see
@@ -502,8 +482,7 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
                           k=lsh_kwargs.get("k", 3), threshold=threshold,
                           mode=lsh_kwargs.get("mode", "word"),
                           prune_to_candidates=prune_verify,
-                          corpus_n_rows=corpus_n_rows,
-                          _prune_path_out=_prune_path_out)
+                          corpus_n_rows=corpus_n_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -552,7 +531,6 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 def connected_components(pairs: DataFrame, max_iters: int = 20,
-                         _iters_out: list | None = None,
                          metrics_dir: str | None = None) -> DataFrame:
     """Cluster ids over near-dup pair edges: (id, cluster_id) where
     cluster_id = min member id of the connected component.
@@ -571,15 +549,15 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
     analysis cost explodes by iteration ~10. Every checkpoint but the
     returned one is released before returning; release that one with
     :func:`release_checkpoint` once the actions that read it have run.
-    ``_iters_out`` (tests)
-    receives the executed round count; ``metrics_dir`` (production)
-    receives one JSON lineage record (rounds, n_edges, labels changed
-    in the last round, converged flag) so a run can ALARM on
+    ``metrics_dir`` receives one JSON lineage record,
+    ``cc_metrics.json`` (rounds executed, n_edges, labels changed in
+    the last round, converged flag), so a run can ALARM on
     non-convergence instead of silently shipping under-merged
     clusters."""
-    import json
     import logging
     import os
+
+    from ..sources.io import write_json_atomic
 
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -601,26 +579,11 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
     # edges are already materialized, so this probe is a metadata-cheap
     # count over the checkpoint, and it saves ~4-7s of driver-round
     # latency per funnel run (round-5 curation scaling profile)
-    if edges.isEmpty():
-        if _iters_out is not None:
-            _iters_out.append(0)
-        if metrics_dir is not None:
-            os.makedirs(metrics_dir, exist_ok=True)
-            rec = {
-                "op": "connected_components",
-                "rounds": 0,
-                "n_edges": 0,
-                "labels_changed_last_round": 0,
-                "converged": True,
-            }
-            tmp = os.path.join(metrics_dir, ".cc_metrics.json.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(json.dumps(rec) + "\n")
-            os.replace(tmp, os.path.join(metrics_dir, "cc_metrics.json"))
-        # built from the schema alone, so the edges can go now
-        empty = labels.sparkSession.createDataFrame([], labels.schema)
-        release_checkpoint(edges)
-        return empty
+    empty = edges.isEmpty()
+    if empty:
+        # built from the schema alone, so it outlives the edges
+        labels = labels.sparkSession.createDataFrame([], labels.schema)
+        max_iters = 0
     rounds, changed = 0, 0
     previous = None  # the last round's checkpoint, superseded below
     for rounds in range(1, max_iters + 1):
@@ -666,7 +629,7 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
         previous = updated
         if changed == 0:
             break
-    converged = changed == 0 and rounds > 0
+    converged = changed == 0 and (empty or rounds > 0)
     if not converged:
         logging.getLogger(__name__).warning(
             "connected_components did NOT converge in %d rounds "
@@ -674,21 +637,14 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
             "raise max_iters", rounds, changed,
         )
     if metrics_dir is not None:
-        os.makedirs(metrics_dir, exist_ok=True)
-        rec = {
+        write_json_atomic(os.path.join(metrics_dir, "cc_metrics.json"), [{
             "op": "connected_components",
             "rounds": rounds,
-            "n_edges": edges.count(),
+            "n_edges": 0 if empty else edges.count(),
             "labels_changed_last_round": changed,
             "converged": converged,
-        }
-        tmp = os.path.join(metrics_dir, ".cc_metrics.json.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(rec) + "\n")
-        os.replace(tmp, os.path.join(metrics_dir, "cc_metrics.json"))
+        }])
     release_checkpoint(edges)
-    if _iters_out is not None:
-        _iters_out.append(rounds)
     return labels
 
 
@@ -927,12 +883,15 @@ SIMHASH_INDEX_FORMAT = "inxs_spark-simhash-index-v1"
 
 
 def _write_index_meta(index_dir: str, meta: dict) -> None:
-    import json
+    """Commit ``meta.json`` atomically: an append that dies mid-write
+    leaves the previous meta (and so a readable index) in place."""
     import os
 
-    os.makedirs(index_dir, exist_ok=True)
-    with open(os.path.join(index_dir, "meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=1, sort_keys=True)
+    from ..sources.io import write_json_atomic
+
+    write_json_atomic(
+        os.path.join(index_dir, "meta.json"), meta, indent=1, sort_keys=True
+    )
 
 
 def _read_index_meta(index_dir: str, expected_format: str) -> dict:

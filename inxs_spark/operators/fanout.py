@@ -3,7 +3,8 @@
 A parquet scan's parallelism is bounded by row-group count, not bytes or
 cores: a single-row-group file runs EVERY downstream per-row computation
 on one core no matter the cluster size. Observed on the round-6 profile
-(tools/profile_minhash.py): the 50k-doc bench table at sf1.0 is one
+(OPTIMIZATION_r06.md; ``perfbench/run.py --trace 1`` now records
+whether fan-out fired): the 50k-doc bench table at sf1.0 is one
 5.7 MB file with ONE row group, so the MinHash signature UDF and the
 shingle HOF passes planned 1-2 scan tasks on local[32] — ~94% of the box
 idle through a 13 s query (optimization guide §2.5 "input skew" /
@@ -70,9 +71,12 @@ def ensure_compute_fanout(
     total = 0
     for uri in files:
         path = _local_path(uri)
-        if path is None or not os.path.exists(path):
+        if path is None:
             return df  # remote FS: cannot size cheaply — leave alone
-        total += os.path.getsize(path)
+        try:
+            total += os.path.getsize(path)
+        except OSError:
+            return df  # vanished or unreadable since the listing
         if total > max_input_bytes:
             return df
     return df.repartition(target)

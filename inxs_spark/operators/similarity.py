@@ -800,8 +800,9 @@ def pq_write_index(
     between scanning the corpus's embedding bytes and scanning ~3% of
     them. Codebooks are written LAST as the commit marker (a partial
     codes write without codebooks.json is unreadable, not wrong)."""
-    import json
     import os
+
+    from ..sources.io import write_json_atomic
 
     pq_encode(df, codebooks, id_col, vec_col).write.mode(
         "overwrite"
@@ -812,10 +813,7 @@ def pq_write_index(
         "sub": int(codebooks.shape[2]),
         "codebooks": codebooks.tolist(),
     }
-    tmp = os.path.join(path, "codebooks.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, "codebooks.json"))
+    write_json_atomic(os.path.join(path, "codebooks.json"), meta)
 
 
 def pq_read_codebooks(path: str) -> np.ndarray:
@@ -953,10 +951,11 @@ def ivfpq_write_index(
     embedding bytes). Metadata (centroids + codebooks) is written LAST
     as the atomic commit marker, same contract as
     :func:`pq_write_index`."""
-    import json
     import os
 
     from inxs_spark.operators.fanout import ensure_compute_fanout
+
+    from ..sources.io import write_json_atomic
 
     df = ensure_compute_fanout(df)  # round 6: see cosine_topk
     if centroids.size > _LITERAL_BUDGET:
@@ -978,10 +977,7 @@ def ivfpq_write_index(
         "codebooks": codebooks.tolist(),
         "centroids": centroids.tolist(),
     }
-    tmp = os.path.join(path, "ivfpq.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, "ivfpq.json"))
+    write_json_atomic(os.path.join(path, "ivfpq.json"), meta)
 
 
 def ivfpq_read_meta(path: str) -> tuple[np.ndarray, np.ndarray]:

@@ -429,7 +429,6 @@ def remove_boilerplate_lines(
     sep: str = "\n",
     min_docs: int = 10,
     broadcast_max_lines: int = 1_000_000,
-    _join_path_out: list | None = None,
 ) -> DataFrame:
     """CCNet/RefinedWeb-style line-level boilerplate removal: drop
     every line that appears (byte-identical) in ≥ ``min_docs``
@@ -460,9 +459,10 @@ def remove_boilerplate_lines(
     ``broadcast_max_lines`` rows it broadcasts as before; above, the
     anti-join falls back to a digest-keyed SHUFFLE_HASH join — both
     sides exchange only 16-byte keys, still cheap. Which path ran is
-    surfaced via the log line (and ``_join_path_out`` for tests). The
-    probe's aggregation pass doubles as the cache materialization the
-    join needs anyway, so the guard adds no extra corpus scan. The
+    surfaced via the log line and in the returned plan (a broadcast
+    or a shuffled-hash LeftAnti join). The probe's aggregation pass
+    doubles as the cache materialization the join needs anyway, so
+    the guard adds no extra corpus scan. The
     blacklist cache must stay alive for the caller's action, so it is
     hung on the returned DataFrame as ``_blacklist_cache`` (the
     ``_candidate_pairs_cache`` pattern from minhash_dedup_pairs):
@@ -496,8 +496,6 @@ def remove_boilerplate_lines(
         ">=" if not use_broadcast else "", n_black,
         "broadcast" if use_broadcast else "shuffle_hash",
     )
-    if _join_path_out is not None:
-        _join_path_out.append("broadcast" if use_broadcast else "shuffle_hash")
     bl = F.broadcast(blacklist) if use_broadcast else blacklist.hint("shuffle_hash")
     lines = df.select(
         F.col(id_col),

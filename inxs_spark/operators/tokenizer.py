@@ -271,19 +271,18 @@ class BpeTokenizer:
         tokenizer — the persisted-index discipline, so a growing
         corpus can be encoded batch-by-batch with a FROZEN tokenizer
         instead of retraining per batch."""
-        import json
+        from ..sources.io import write_json_atomic
 
-        with open(path, "w", encoding="utf-8") as fh:
-            json.dump(
-                {
-                    "format": "inxs_spark-bpe-v1",
-                    "eow": EOW,
-                    "alphabet": self.alphabet,
-                    "merges": [list(m) for m in self.merges],
-                },
-                fh,
-                ensure_ascii=False,
-            )
+        write_json_atomic(
+            path,
+            {
+                "format": "inxs_spark-bpe-v1",
+                "eow": EOW,
+                "alphabet": self.alphabet,
+                "merges": [list(m) for m in self.merges],
+            },
+            ensure_ascii=False,
+        )
 
     @classmethod
     def load(cls, path: str) -> "BpeTokenizer":

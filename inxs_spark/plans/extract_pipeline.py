@@ -30,10 +30,8 @@ the sandbox stand-in for a metrics Iceberg table append
 
 from __future__ import annotations
 
-import json
 import os
 import time
-import uuid
 from typing import Iterator, Optional
 
 import pyarrow as pa
@@ -43,6 +41,7 @@ from pyspark.sql.types import DataType
 
 from ..extract import MAIN_CONTENT, extract_turn
 from ..kernel.transformation import Transformation
+from ..sources.io import write_json_atomic
 
 OUTPUT_SPARK_SCHEMA = (
     "conv_id string, turn_idx int, extracted_text string, "
@@ -193,13 +192,11 @@ def _write_partition_metrics(
         "failures": failures,
         "wall_ms": wall_ms,
     }
-    os.makedirs(metrics_dir, exist_ok=True)
-    final = os.path.join(metrics_dir, f"c{chunk_id:04d}-p{pid:05d}.json")
-    tmp = os.path.join(metrics_dir, f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as fh:
-        json.dump(record, fh)
-    os.replace(tmp, final)  # atomic on POSIX; speculative retries
-    # overwrite with identical deterministic content (except wall_ms)
+    # atomic: speculative retries overwrite with identical
+    # deterministic content (except wall_ms)
+    write_json_atomic(
+        os.path.join(metrics_dir, f"c{chunk_id:04d}-p{pid:05d}.json"), record
+    )
 
 
 def default_fanout_partitions(df: DataFrame) -> int:

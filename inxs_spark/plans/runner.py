@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..extract import MAIN_CONTENT
 from ..kernel.transformation import Transformation
-from ..sources.io import input_fingerprint
+from ..sources.io import compact_records, input_fingerprint, write_json_atomic
 from .extract_pipeline import extract_df
 
 METRICS_SCHEMA = (
@@ -59,12 +59,7 @@ def _manifest_path(out_root: str, chunk_id: int) -> str:
 
 
 def _write_manifest(out_root: str, record: dict) -> None:
-    path = _manifest_path(out_root, record["chunk_id"])
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(record, fh)
-    os.replace(tmp, path)
+    write_json_atomic(_manifest_path(out_root, record["chunk_id"]), record)
 
 
 def _manifest_records(out_root: str) -> list[dict]:
@@ -195,7 +190,7 @@ def run_extraction(
                 "completed_at": time.time(),
             },
         )
-    compact_metrics(spark, out_root)
+    compact_records(spark, out_root, METRICS_SCHEMA)
     return {
         "run_id": run_id,
         "chunks_total": n_chunks,
@@ -355,7 +350,7 @@ def run_extraction_incremental(
                 "completed_at": time.time(),
             },
         )
-    compact_metrics(spark, out_root)
+    compact_records(spark, out_root, METRICS_SCHEMA)
     return {
         "run_id": run_id,
         "groups_total": len(group_files),
@@ -366,25 +361,6 @@ def run_extraction_incremental(
         "wall_s": round(time.monotonic() - t0, 3),
         "output": os.path.join(out_root, "extracted"),
     }
-
-
-def compact_metrics(spark: SparkSession, out_root: str) -> None:
-    """Fold per-partition metrics JSONs into the metrics Parquet table
-    (sandbox stand-in for the metrics Iceberg table append)."""
-    metrics_dir = os.path.join(out_root, "metrics")
-    if not os.path.isdir(metrics_dir):
-        return
-    paths = [
-        os.path.join(metrics_dir, n)
-        for n in sorted(os.listdir(metrics_dir))
-        if n.endswith(".json")
-    ]
-    if not paths:
-        return
-    df = spark.read.schema(METRICS_SCHEMA).json(paths)
-    df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_root, "metrics_table")
-    )
 
 
 def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:

@@ -6,12 +6,21 @@ that a config switch (SURVEY.md §0 environment constraints; no Iceberg
 jars locally). ``input_fingerprint`` stands in for the Iceberg snapshot
 id in lineage rows (BASELINE.json:6): a hash over the input files'
 (path, size, mtime) — stable for an immutable input.
+
+Small JSON files (run records, manifests, index metadata, codebooks,
+tokenizer models) go through the same seam: :func:`write_json_atomic`
+is the package's one write-then-rename, and :func:`compact_records`
+folds a run's ``metrics/*.json`` records into its queryable
+``metrics_table``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
+import json
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -65,3 +74,50 @@ def input_fingerprint(location: str) -> str:
         entries.append(f"{os.path.basename(location)}:{stat.st_size}")
     digest = hashlib.sha256("\n".join(sorted(entries)).encode()).hexdigest()
     return f"files-{digest[:24]}"
+
+
+def write_json_atomic(path: str, obj_or_lines, **dump_kwargs) -> None:
+    """Write ``obj_or_lines`` as JSON to ``path`` atomically: readers see
+    the old file or the new one, never a torn write. A list is written
+    as JSON Lines (one value per line, Spark's JSON reader layout); any
+    other value as one JSON document, with ``dump_kwargs`` passed to
+    :func:`json.dumps`. The bytes go to a uniquely named temp file in
+    the same directory (created if missing), which is then renamed
+    onto ``path``; on any error the temp file is removed and ``path``
+    is left untouched. Temp names start with "." and end in ".tmp",
+    so ``*.json`` listings never pick one up."""
+    if isinstance(obj_or_lines, list):
+        text = "".join(json.dumps(r, **dump_kwargs) + "\n" for r in obj_or_lines)
+    else:
+        text = json.dumps(obj_or_lines, **dump_kwargs)
+    parent, name = os.path.split(path)
+    os.makedirs(parent or ".", exist_ok=True)
+    tmp = os.path.join(parent, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "x", encoding="utf-8") as fh:
+            fh.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+
+
+def compact_records(spark: SparkSession, root: str, schema: str) -> None:
+    """Fold every ``<root>/metrics/*.json`` record into the
+    ``<root>/metrics_table`` parquet, read with the fixed ``schema``
+    (the sandbox stand-in for a metrics Iceberg table append). One
+    pass over all records: call it once per run, or once at stream
+    shutdown, not per record. No-op when there are no records."""
+    mdir = os.path.join(root, "metrics")
+    if not os.path.isdir(mdir):
+        return
+    paths = [
+        os.path.join(mdir, n) for n in sorted(os.listdir(mdir))
+        if n.endswith(".json")
+    ]
+    if not paths:
+        return
+    spark.read.schema(schema).json(paths).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(root, "metrics_table"))

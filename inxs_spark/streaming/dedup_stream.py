@@ -58,8 +58,8 @@ def streaming_minhash_dedup(
     from ..jobs.curate import write_curate_metrics
     from ..jobs.dedup import _incremental_survivors
     from ..operators.dedup import (
-        MINHASH_INDEX_FORMAT, _read_index_meta,
-        minhash_dedup_pairs_incremental,
+        MINHASH_INDEX_FORMAT, _read_index_meta, connected_components,
+        minhash_dedup_pairs_incremental, release_checkpoint,
     )
 
     _read_index_meta(index_dir, MINHASH_INDEX_FORMAT)  # fail fast
@@ -86,9 +86,11 @@ def streaming_minhash_dedup(
         pairs_dir = os.path.join(pairs_root, f"batch_id={batch_id}")
         pairs.write.mode("overwrite").parquet(pairs_dir)
         pairs_read = sess.read.parquet(pairs_dir)
-        survivors = _incremental_survivors(batch_df, pairs_read, id_col)
+        clusters = connected_components(pairs_read)
+        survivors = _incremental_survivors(batch_df, clusters, id_col)
         surv_dir = os.path.join(surv_root, f"batch_id={batch_id}")
         survivors.write.mode("overwrite").parquet(surv_dir)
+        release_checkpoint(clusters)
         rows_kept = sess.read.parquet(surv_dir).count()
         write_curate_metrics(
             sess, out_root,

@@ -191,11 +191,11 @@ def streaming_curate(
     microbatch appends one attrition-lineage row (rows_in after the
     streaming dedup → rows_kept past extraction+quality gate) to
     ``out_root/metrics`` — O(1) per batch; call
-    ``compact_curate_metrics(spark, out_root)`` once after the stream
-    stops to fold them into the queryable ``metrics_table`` parquet
-    (the streaming counterpart of the batch curate() metrics table,
-    round-3 verdict task 8; recompacting per batch would be O(N²)
-    over the stream's life). The per-batch count actions are bounded
+    ``compact_records(spark, out_root, CURATE_METRICS_SCHEMA)`` once
+    after the stream stops to fold them into the queryable
+    ``metrics_table`` parquet (the streaming counterpart of the batch
+    curate() metrics table, round-3 verdict task 8; recompacting per
+    batch would be O(N²) over the stream's life). The per-batch count actions are bounded
     by microbatch size, never corpus size."""
     from ..jobs.curate import write_curate_metrics
     from ..operators.text import quality_score

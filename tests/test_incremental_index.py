@@ -3,6 +3,8 @@ against an indexed corpus must equal a full recompute over the grown
 corpus (round-5; closes the round-4 'growing-corpus ingestion recomputes
 the corpus side' gap)."""
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -14,6 +16,13 @@ def _release(df):
         c = getattr(df, attr, None)
         if c is not None:
             c.unpersist()
+
+
+def _path(df):
+    """Which verify plan jaccard_verify built: "prune" semi-joins the
+    corpus to the candidate ids, "lazy" does not."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "prune" if "LeftSemi" in plan else "lazy"
 
 
 def _mk_docs(spark, rows):
@@ -255,15 +264,13 @@ class TestAutoPruneVerify:
         from inxs_spark.operators.dedup import minhash_dedup_pairs
 
         docs = _mk_docs(spark, _corpus_rows())
-        path = []
         auto = minhash_dedup_pairs(
             docs, threshold=THRESH, max_bucket=10_000,
-            prune_verify="auto", corpus_n_rows=30,
-            _prune_path_out=path, **PARAMS,
+            prune_verify="auto", corpus_n_rows=30, **PARAMS,
         )
         got = _pairset(auto.collect())
         _release(auto)
-        assert path == ["lazy"]
+        assert _path(auto) == "lazy"
         lazy = minhash_dedup_pairs(
             docs, threshold=THRESH, max_bucket=10_000, **PARAMS
         )
@@ -275,15 +282,13 @@ class TestAutoPruneVerify:
         from inxs_spark.operators.dedup import minhash_dedup_pairs
 
         docs = _mk_docs(spark, _corpus_rows())
-        path = []
         auto = minhash_dedup_pairs(
             docs, threshold=THRESH, max_bucket=10_000,
-            prune_verify="auto", corpus_n_rows=1_000_000,
-            _prune_path_out=path, **PARAMS,
+            prune_verify="auto", corpus_n_rows=1_000_000, **PARAMS,
         )
         got = _pairset(auto.collect())
         _release(auto)
-        assert path == ["prune"]
+        assert _path(auto) == "prune"
         lazy = minhash_dedup_pairs(
             docs, threshold=THRESH, max_bucket=10_000, **PARAMS
         )
@@ -294,14 +299,13 @@ class TestAutoPruneVerify:
         from inxs_spark.operators.dedup import minhash_dedup_pairs
 
         docs = _mk_docs(spark, _corpus_rows())
-        path = []
         auto = minhash_dedup_pairs(
             docs, threshold=THRESH, max_bucket=10_000,
-            prune_verify="auto", _prune_path_out=path, **PARAMS,
+            prune_verify="auto", **PARAMS,
         )
         auto.collect()
         _release(auto)
-        assert path == ["lazy"]
+        assert _path(auto) == "lazy"
 
 
 class TestMembershipsPlan:
@@ -355,6 +359,23 @@ class TestReplaySafety:
         assert not [p for p in got if p[0] == p[1]]
         assert _read_index_meta(idx, MINHASH_INDEX_FORMAT) == meta1
         assert spark.read.parquet(idx + "/bands").count() == n_memb1
+
+    def test_meta_write_failure_keeps_previous_meta(self, tmp_path):
+        """A meta.json write that fails part-way (here: a value json
+        cannot serialize) leaves the previous meta readable and no
+        temp file behind — the index stays usable after a crashed
+        append."""
+        from inxs_spark.operators.dedup import (
+            MINHASH_INDEX_FORMAT, _read_index_meta, _write_index_meta,
+        )
+
+        idx = str(tmp_path / "idx")
+        good = {"format": MINHASH_INDEX_FORMAT, "n_docs": 30}
+        _write_index_meta(idx, good)
+        with pytest.raises(TypeError):
+            _write_index_meta(idx, {**good, "n_docs": 45, "bad": object()})
+        assert _read_index_meta(idx, MINHASH_INDEX_FORMAT) == good
+        assert os.listdir(idx) == ["meta.json"]
 
     def test_streaming_minhash_dedup(self, spark, tmp_path):
         """End-to-end streaming dedup against the persisted index:

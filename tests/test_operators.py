@@ -138,21 +138,24 @@ class TestDedup:
         kept = {r.doc_id for r in dedup_keep_one_per_cluster(docs, pairs).collect()}
         assert kept == {1, 10, 20}
 
-    def test_connected_components_long_chain_converges(self, spark):
+    def test_connected_components_long_chain_converges(self, spark, tmp_path):
         """Pointer jumping makes chain convergence logarithmic: a
         60-hop chain must resolve well within 10 rounds (hash-min
         alone would need 60)."""
+        import json
+
         from inxs_spark.operators.dedup import connected_components
 
         n = 60
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(n)], "id_a long, id_b long"
         )
-        iters: list = []
+        mdir = str(tmp_path / "metrics")
         got = {r.id: r.cluster_id
-               for r in connected_components(pairs, _iters_out=iters).collect()}
+               for r in connected_components(pairs, metrics_dir=mdir).collect()}
         assert set(got.values()) == {0} and len(got) == n + 1
-        assert iters[0] <= 10, iters
+        rec = json.loads(open(f"{mdir}/cc_metrics.json").read())
+        assert rec["converged"] is True and rec["rounds"] <= 10, rec
 
     def test_connected_components_metrics_lineage(self, spark, tmp_path):
         """Production lineage: the CC run writes a metrics record with
@@ -362,6 +365,25 @@ class TestDedup:
                spark.read.parquet(out + "/survivors").collect()}
         assert 4 in ids and 2 not in ids  # norm-dup always hamming 0
 
+    def test_dedup_job_releases_its_checkpoints(self, spark, tmp_path):
+        """dedup_job(method="minhash") leaves no new persisted RDD: the
+        input cache and every connected-components checkpoint are gone
+        once it returns (a set difference, as in the curate test)."""
+        from inxs_spark.jobs.dedup import dedup_job
+
+        rows = [
+            (1, "the quick brown fox jumps over the lazy dog and runs on"),
+            (2, "the quick brown fox jumps over the lazy dog and runs off"),
+            (3, "a completely different document about other things here"),
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        jsc = spark.sparkContext._jsc
+        held = set(jsc.getPersistentRDDs().keySet())
+        stats = dedup_job(df, str(tmp_path / "o"), method="minhash",
+                          threshold=0.6)
+        assert stats == {"input": 3, "output": 2}
+        assert set(jsc.getPersistentRDDs().keySet()) - held == set()
+
     def test_curate_writes_metrics_table(self, spark, tmp_path):
         """out=/metrics_out= write the curated parquet plus a
         QUERYABLE per-stage attrition table (stage order, rows,
@@ -452,21 +474,23 @@ class TestDedup:
         ]
         df = spark.createDataFrame(rows, "doc_id long, text string")
 
-        path_b, path_s = [], []
-        wide = remove_boilerplate_lines(
-            df, min_docs=2, _join_path_out=path_b
-        )
+        def anti_joins(out):
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            anti = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
+            assert anti, plan[:2000]
+            return anti
+
+        wide = remove_boilerplate_lines(df, min_docs=2)
         got_b = sorted(map(tuple, wide.collect()))
         forced = remove_boilerplate_lines(
-            df, min_docs=2, broadcast_max_lines=8, _join_path_out=path_s
+            df, min_docs=2, broadcast_max_lines=8
         )
         got_s = sorted(map(tuple, forced.collect()))
-        assert path_b == ["broadcast"] and path_s == ["shuffle_hash"]
+        assert all("BroadcastHashJoin" in ln for ln in anti_joins(wide))
+        assert all("ShuffledHashJoin" in ln and "Broadcast" not in ln
+                   for ln in anti_joins(forced))
         assert got_b == got_s
         assert all(r[1] == f"unique to doc {r[0]}" for r in got_s)
-        plan = forced._jdf.queryExecution().executedPlan().toString()
-        anti = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
-        assert anti and all("Broadcast" not in ln for ln in anti), plan[:2000]
 
     def test_containment_pairs(self, spark):
         """A doc whose text is an offset substring of another is

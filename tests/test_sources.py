@@ -6,6 +6,7 @@ import zipfile
 import pytest
 
 from inxs_spark.sources import session, worker_daemon
+from inxs_spark.sources.io import write_json_atomic
 from inxs_spark.sources.transcripts import tier_for_sf_dir
 
 
@@ -98,3 +99,20 @@ def test_tier_for_sf_dir():
     assert tier_for_sf_dir("/data/sf1.0") == "scale"
     with pytest.raises(ValueError, match="sf10.*known.*sf1.0"):
         tier_for_sf_dir("/data/sf10")
+
+
+def test_write_json_atomic_lines_and_failed_replace(tmp_path, monkeypatch):
+    """A list is written as JSON Lines; when the final rename fails the
+    old file is untouched and the temp file is removed."""
+    path = str(tmp_path / "m" / "rec.json")
+    write_json_atomic(path, [{"a": 1}, {"a": 2}])
+    assert open(path).read() == '{"a": 1}\n{"a": 2}\n'
+
+    def fail(src, dst):
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(os, "replace", fail)
+    with pytest.raises(OSError, match="disk gone"):
+        write_json_atomic(path, {"a": 3})
+    assert open(path).read() == '{"a": 1}\n{"a": 2}\n'
+    assert os.listdir(tmp_path / "m") == ["rec.json"]

@@ -10,7 +10,6 @@ import pytest
 from inxs_spark.extract import MAIN_CONTENT, extract_turn
 from inxs_spark.plans.extract_pipeline import extract_df
 from inxs_spark.plans.runner import (
-    compact_metrics,
     pending_chunks,
     read_extracted,
     run_extraction,
@@ -447,6 +446,23 @@ def _exchange_outputs(df):
 
     walk(df._jdf.queryExecution().executedPlan())
     return out
+
+
+def test_compute_fanout_fails_closed_on_stat_error(spark, tmp_out, monkeypatch):
+    """A file that cannot be stat-ed (e.g. removed between the listing
+    and the size check) leaves the scan as it is instead of raising."""
+    from inxs_spark.operators import fanout
+
+    path = os.path.join(tmp_out, "one_file")
+    spark.range(10).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert fanout.ensure_compute_fanout(df, target=2) is not df
+
+    def gone(p):
+        raise FileNotFoundError(p)
+
+    monkeypatch.setattr(fanout.os.path, "getsize", gone)
+    assert fanout.ensure_compute_fanout(df, target=2) is df
 
 
 def test_containment_exchanges_are_digest_only(spark):

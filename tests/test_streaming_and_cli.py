@@ -201,9 +201,10 @@ def test_streaming_curate(spark, tiny_transcripts, tmp_out):
     # per-batch attrition lineage: O(1) JSON appends during the
     # stream, one compaction at shutdown into the queryable metrics
     # table (round-3 verdict task 8); rows_kept sums back to the sink
-    from inxs_spark.jobs.curate import compact_curate_metrics
+    from inxs_spark.jobs.curate import CURATE_METRICS_SCHEMA
+    from inxs_spark.sources.io import compact_records
 
-    compact_curate_metrics(spark, out_root)
+    compact_records(spark, out_root, CURATE_METRICS_SCHEMA)
     mt = spark.read.parquet(os.path.join(out_root, "metrics_table"))
     mrows = mt.filter(F.col("op") == "streaming_curate").collect()
     assert mrows and {r.stage for r in mrows} == {"input", "output"}
