@@ -661,14 +661,6 @@ def release_checkpoint(df: DataFrame) -> None:
             leaf.rdd().unpersist(False)
 
 
-def dedup_keep_one_per_cluster(df: DataFrame, pairs: DataFrame,
-                               id_col: str = "doc_id") -> DataFrame:
-    """Component-correct near-dup removal: keep exactly the min-id
-    document of every connected near-dup cluster (singletons —
-    documents in no pair — always survive)."""
-    return keep_cluster_min(df, connected_components(pairs), id_col)
-
-
 def keep_cluster_min(df: DataFrame, clusters: DataFrame,
                      id_col: str = "doc_id") -> DataFrame:
     """``df`` minus every document that is in a cluster of

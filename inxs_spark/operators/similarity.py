@@ -2,10 +2,7 @@
 
 - ``cosine_topk`` — brute-force cosine top-k against a query vector.
   The correctness baseline: one scan, one narrow top-k (TakeOrdered),
-  no shuffle of the embedding column. Pure-JVM dot/norm expression at
-  toy dims, one vectorized Arrow hop at production dims (the dot/norm
-  higher-order functions are interpreted per row, not codegen'd — see
-  the ``_COSINE_EXPR_MAX_DIM`` note).
+  no shuffle of the embedding column.
 - ``hyperplane_lsh_buckets`` / ``ann_topk`` — the scale path: random-
   hyperplane LSH (sign bits of H dot products → bucket key). At 100 TB
   you pre-bucket once (one shuffle, or bucketed table layout), then a
@@ -13,6 +10,14 @@
   everything. Planes are seeded numpy → deterministic.
 - ``pairwise_ann_candidates`` — all-pairs near-neighbor candidates via
   shared bucket, for embedding-cosine near-dup detection.
+
+Every per-row vector computation (query cosine, pair cosine, LSH
+bucket, IVF cell, PQ code, k-means partial sums) is a NumPy kernel
+run once per Arrow batch. The public ``dot`` / ``norm`` / ``cosine``
+Column helpers are higher-order functions that Spark interprets per
+row and never codegens (measured 2.6-40x slower, PLANS.md §15); they
+stay for ad-hoc queries only. Every kernel maps a null or wrong-dim
+vector to NULL — never NaN, never a crashed batch.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import DoubleType
 
 logger = logging.getLogger(__name__)
 
@@ -41,10 +47,6 @@ def derive_n_planes(n_rows: int, target_bucket: int = 32,
     else:
         planes = math.ceil(math.log2(n_rows / target_bucket))
     return min(max(planes, lo), hi)
-
-
-def _lit_vec(vec: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -65,42 +67,43 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-#: dot/norm over array columns are HIGHER-ORDER functions — Spark
-#: interprets them per row (no whole-stage codegen), so their cost is
-#: ~dim interpreted closure calls per row. Above this dim the Arrow
-#: matmul variants win (measured dim 64 / 1M rows: 9.3s expr vs 3.5s
-#: UDF for cosine_topk); at or below it the expression avoids the
-#: Arrow hop's fixed cost and the plan stays pure-JVM. Rounding to 4
-#: decimals makes the two paths value-identical (accumulation-order
-#: drift is ~1e-15 relative).
-_COSINE_EXPR_MAX_DIM = 16
+def _stack_valid(vals: np.ndarray, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(mask of the rows holding a ``dim``-long vector, those rows as
+    one float64 matrix) for one Arrow batch. Null and wrong-dim rows
+    are masked out: one of them would crash ``np.vstack`` for the
+    whole batch. Arrow hands list cells over as per-row ndarrays, and
+    vstack assembles them without a Python loop over elements.
+
+    The kernels mark a NULL result as NaN; pyspark sends every NaN of
+    a pandas UDF's result to Spark as NULL. That matters: Spark orders
+    NaN above every double, so a NaN cosine would win a top-k and pass
+    any ``>=`` threshold."""
+    valid = np.array([v is not None and len(v) == dim for v in vals], dtype=bool)
+    if not valid.any():
+        return valid, np.empty((0, dim))
+    return valid, np.vstack(vals[valid]).astype(np.float64, copy=False)
+
+
+def _cosines(num: np.ndarray, den: np.ndarray) -> np.ndarray:
+    """num / den with a zero denominator (a zero vector) giving NaN."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den > 0, num / den, np.nan)
 
 
 def _query_cos_udf(query_vec: np.ndarray):
     """cos(query, v) as one (batch x dim) @ dim matmul per Arrow
-    batch — the scale path for production dims."""
+    batch."""
     q = np.asarray(query_vec, dtype=np.float64)
     qn = float(np.sqrt(q @ q))
     dim = len(q)
 
     @F.pandas_udf("double")
     def qcos(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype="float64")
         vals = vecs.to_numpy()
-        valid = np.array(
-            [v is not None and len(v) == dim for v in vals], dtype=bool
-        )
+        valid, X = _stack_valid(vals, dim)
         out = np.full(len(vals), np.nan)
-        if valid.any():
-            X = np.vstack(vals[valid]).astype(np.float64, copy=False)
-            out[valid] = (X @ q) / (np.sqrt((X * X).sum(axis=1)) * qn)
-        # invalid rows must surface as NULL, not NaN — Spark orders NaN
-        # ABOVE every double, so a NaN would win the top-k; the expr
-        # path yields NULL for these rows (desc puts nulls last)
-        ser = pd.Series(out, dtype="Float64")
-        ser[~valid] = pd.NA
-        return ser
+        out[valid] = _cosines(X @ q, np.sqrt((X * X).sum(axis=1)) * qn)
+        return pd.Series(out)
 
     return qcos
 
@@ -114,28 +117,15 @@ def cosine_topk(
     exclude_id: Optional[int] = None,
 ) -> DataFrame:
     """Brute-force cosine top-k. The plan is scan → project → TakeOrdered
-    (no full sort, no shuffle of embeddings). The projection is the
-    pure-JVM dot/norm expression at toy dims and ONE vectorized Arrow
-    hop above ``_COSINE_EXPR_MAX_DIM`` (the dim is known from the
-    query, so the switch needs no corpus probe); both round to 4
-    decimals, so the paths are value-identical (test-pinned)."""
-    import math
-
+    (no full sort, no shuffle of embeddings); the projection is one
+    vectorized Arrow hop, rounded to 4 decimals. Rows whose vector is
+    null or not query-dim score NULL and sort last."""
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     # round 6: a small single-row-group embeddings file plans ONE scan
     # task — fan out before the per-row vector math (no-op at scale)
     df = ensure_compute_fanout(df)
-    qv = [float(x) for x in query_vec]
-    if len(qv) > _COSINE_EXPR_MAX_DIM:
-        raw = _query_cos_udf(np.asarray(qv))(F.col(vec_col))
-    else:
-        q = _lit_vec(qv)
-        # query norm folded driver-side — visible in .explain as a
-        # literal instead of a per-row aggregate over the literal array
-        qnorm = math.sqrt(sum(x * x for x in qv))
-        v = F.col(vec_col).cast("array<double>")
-        raw = dot(v, q) / (norm(v) * F.lit(qnorm))
+    raw = _query_cos_udf(np.asarray(query_vec, dtype=np.float64))(F.col(vec_col))
     out = df.select(F.col(id_col), F.round(raw, 4).alias("cos"))
     if exclude_id is not None:
         out = out.filter(F.col(id_col) != exclude_id)
@@ -147,52 +137,12 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def bucket_key(vec_col: str, planes: np.ndarray) -> Column:
-    """Sign-bit bucket id: bit h set iff dot(vec, plane_h) > 0.
-
-    Literal-tree variant: emits n_planes x dim scalar literals into
-    one Catalyst expression — fine at test dims, but at production
-    dim (768 x 24 planes ≈ 18k literal nodes) planning+codegen cost
-    dominates (measured: tools/stress_dim768.py, PLANS.md).
-    :func:`hyperplane_lsh_buckets` auto-selects the vectorized
-    matmul UDF (:func:`bucket_key_udf`) above ``_LITERAL_BUDGET``
-    total literals."""
-    key = F.lit(0).cast("long")
-    v = F.col(vec_col).cast("array<double>")
-    for h, plane in enumerate(planes):
-        bit = F.when(dot(v, _lit_vec(plane)) > 0, F.lit(1)).otherwise(F.lit(0))
-        key = key + (bit.cast("long") * F.lit(int(2 ** h)))
-    # null / wrong-dim rows get a NULL bucket (dirty data must not
-    # silently land in bucket 0 — and the matmul UDF variant can't
-    # compute them at all, so both paths agree on the contract)
-    return F.when(
-        v.isNotNull() & (F.size(v) == planes.shape[1]), key
-    ).otherwise(F.lit(None).cast("long"))
-
-
-# above this many embedded scalar literals (planes: n_planes x dim;
-# centroids: n_cells x dim) the expression-tree variants lose to the
-# Arrow hop. Round 5 re-measurement moved this from 4096 to 256: the
-# dot/aggregate kernels are HIGHER-ORDER functions, which Spark
-# evaluates as interpreted closures per row (never whole-stage
-# codegen), so the expr cost is per-ROW, not just per-plan — at 256k
-# rows a 1024-literal cell assignment ran 47s vs 1.1s for the matmul
-# UDF (40x; tools/pq_scale_bench.py exposed it via a 109s IVF-PQ
-# build). Small trees (toy dims, few cells) stay pure-JVM where the
-# Arrow hop's fixed cost would dominate; result equality across the
-# switch is pinned by test_bucket_key_udf_matches_literal_tree.
-_LITERAL_BUDGET = 256
-
-
 def bucket_key_udf(vec_col: str, planes: np.ndarray) -> Column:
-    """Sign-bit bucket id as ONE vectorized matrix multiply per Arrow
-    batch (the MinHash precedent: numpy beats a giant expression
-    tree). Same planes, same >0 test on float64 as
-    :func:`bucket_key`; summation order differs, so a vector whose
-    dot product is within float rounding of zero may land one bucket
-    over — irrelevant to LSH semantics (bucket boundaries are
-    arbitrary), and the driver-side query bucket in :func:`ann_topk`
-    uses the same numpy order."""
+    """Sign-bit bucket id: bit h set iff dot(vec, plane_h) > 0, as ONE
+    vectorized matrix multiply per Arrow batch (the MinHash precedent:
+    numpy beats a giant expression tree). The driver-side query bucket
+    in :func:`ann_topk` uses the same float64 numpy dot. Null and
+    wrong-dim rows get a NULL bucket, never a silent bucket 0."""
     from pyspark.sql.types import LongType
 
     P = np.ascontiguousarray(planes, dtype=np.float64)
@@ -202,24 +152,11 @@ def bucket_key_udf(vec_col: str, planes: np.ndarray) -> Column:
 
     @F.pandas_udf(LongType())
     def key(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype="int64")
         vals = vecs.to_numpy()
-        # null / wrong-dim rows → NULL bucket (matches the literal
-        # path's guard); np.vstack would crash the whole Arrow batch
-        valid = np.array(
-            [v is not None and len(v) == dim for v in vals], dtype=bool
-        )
+        valid, X = _stack_valid(vals, dim)
         out = np.full(len(vals), np.nan)
-        if valid.any():
-            # Arrow hands list<float> cells over as per-row ndarrays;
-            # vstack is the no-python-loop batch assembly (tolist()
-            # was 6x slower at dim 768 — see tools/stress_dim768.py)
-            X = np.vstack(vals[valid]).astype(np.float64, copy=False)
-            bits = (X @ P.T) > 0
-            out[valid] = (bits.astype(np.uint64) * weights).sum(axis=1).astype(
-                np.int64
-            )
+        bits = (X @ P.T) > 0
+        out[valid] = (bits.astype(np.uint64) * weights).sum(axis=1)
         return pd.Series(out).astype("Int64")
 
     return key(F.col(vec_col))
@@ -236,12 +173,7 @@ def hyperplane_lsh_buckets(
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     df = ensure_compute_fanout(df)  # round 6: see cosine_topk
-    planes = hyperplanes(dim, n_planes, seed)
-    key = (
-        bucket_key_udf(vec_col, planes)
-        if planes.size > _LITERAL_BUDGET
-        else bucket_key(vec_col, planes)
-    )
+    key = bucket_key_udf(vec_col, hyperplanes(dim, n_planes, seed))
     return df.select(F.col(id_col), F.col(vec_col), key.alias("bucket"))
 
 
@@ -329,29 +261,29 @@ def pairwise_ann_candidates(
         )
     bucketed = hyperplane_lsh_buckets(df, dim, n_planes, id_col, vec_col, seed)
     return _within_group_cosine_pairs(
-        bucketed, "bucket", id_col, vec_col, min_cos, dim=dim
+        bucketed, "bucket", id_col, vec_col, min_cos
     ).distinct()
 
 
-def _pair_cos_udf():
-    """cos(v_a, v_b) rowwise as vectorized numpy per Arrow batch —
-    the scale path for the within-group pair joins (the dot/norm
-    expressions are interpreted higher-order functions; see the
-    ``_COSINE_EXPR_MAX_DIM`` note)."""
-
-    @F.pandas_udf("double")
-    def pcos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if not len(va):
-            return pd.Series([], dtype="Float64")
-        A = np.vstack(va.to_numpy()).astype(np.float64, copy=False)
-        B = np.vstack(vb.to_numpy()).astype(np.float64, copy=False)
-        num = (A * B).sum(axis=1)
-        den = np.sqrt((A * A).sum(axis=1) * (B * B).sum(axis=1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = num / den
-        return pd.Series(out, dtype="Float64")
-
-    return pcos
+@F.pandas_udf(DoubleType())  # a DDL string would need a session at import
+def _pair_cos_udf(va: pd.Series, vb: pd.Series) -> pd.Series:
+    """cos(v_a, v_b) rowwise as vectorized numpy per Arrow batch. A
+    pair whose vectors are null or differ in length scores NULL."""
+    a, b = va.to_numpy(), vb.to_numpy()
+    lens = np.array([
+        -1 if x is None or y is None or len(x) != len(y) else len(x)
+        for x, y in zip(a, b)
+    ], dtype=np.int64)
+    out = np.full(len(a), np.nan)
+    for dim in set(lens[lens >= 0].tolist()):  # one length on clean data
+        sel = lens == dim
+        A = np.vstack(a[sel]).astype(np.float64, copy=False)
+        B = np.vstack(b[sel]).astype(np.float64, copy=False)
+        out[sel] = _cosines(
+            (A * B).sum(axis=1),
+            np.sqrt((A * A).sum(axis=1) * (B * B).sum(axis=1)),
+        )
+    return pd.Series(out)
 
 
 def _within_group_cosine_pairs(
@@ -360,17 +292,14 @@ def _within_group_cosine_pairs(
     id_col: str,
     vec_col: str,
     min_cos: float,
-    dim: Optional[int] = None,
 ) -> DataFrame:
     """Shared within-group pair machinery for every bucketed/celled
     cosine near-dup path: self-join on the group key, id_a < id_b,
     threshold on the RAW cosine (rounding before the filter would
     flip pairs at e.g. the 0.44995 boundary — round-4 review
     finding; the rounded value is emitted for display/oracle only).
-    Above ``_COSINE_EXPR_MAX_DIM`` (when the caller knows ``dim``)
-    the per-pair cosine runs as ONE vectorized Arrow hop instead of
-    the interpreted dot/norm expression — at scale the pair count is
-    the hot loop of semantic dedup."""
+    The per-pair cosine is one vectorized Arrow hop — at scale the
+    pair count is the hot loop of semantic dedup."""
     a = grouped.select(
         F.col(key_col), F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("v_a"),
@@ -379,14 +308,9 @@ def _within_group_cosine_pairs(
         F.col(key_col), F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("v_b"),
     )
-    if dim is not None and dim > _COSINE_EXPR_MAX_DIM:
-        raw = _pair_cos_udf()(
-            F.col("v_a").cast("array<double>"),
-            F.col("v_b").cast("array<double>"),
-        )
-    else:
-        raw = cosine(F.col("v_a").cast("array<double>"),
-                     F.col("v_b").cast("array<double>"))
+    raw = _pair_cos_udf(
+        F.col("v_a").cast("array<double>"), F.col("v_b").cast("array<double>")
+    )
     return (
         a.join(b, key_col)
         .filter(F.col("id_a") < F.col("id_b"))
@@ -438,26 +362,10 @@ def ivf_train_centroids(
     return cents
 
 
-def _cell_expr(vec_col: str, centroids: np.ndarray) -> Column:
-    """argmin_c ||v - c||^2 == argmax_c (dot(v, c) - ||c||^2 / 2),
-    computed JVM-side (codegen'd expression, no Python hop)."""
-    v = F.col(vec_col).cast("array<double>")
-    scores = F.array(*[
-        dot(v, _lit_vec(c)) - F.lit(float(np.dot(c, c)) / 2.0)
-        for c in centroids
-    ])
-    cell = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-    # null / wrong-dim rows → NULL cell (same contract as _cell_udf)
-    return F.when(
-        v.isNotNull() & (F.size(v) == centroids.shape[1]), cell
-    ).otherwise(F.lit(None).cast("int"))
-
-
 def _cell_udf(centroids: np.ndarray):
-    """Vectorized cell assignment: one (batch x dim) @ (dim x cells)
-    matmul per Arrow batch — the scale path for production dims where
-    :func:`_cell_expr`'s n_cells x dim literal tree is codegen-hostile
-    (measured in tools/stress_dim768.py)."""
+    """Nearest-centroid cell, argmin_c ||v - c||^2 == argmax_c
+    (dot(v, c) - ||c||^2 / 2): one (batch x dim) @ (dim x cells)
+    matmul per Arrow batch. Null and wrong-dim rows get a NULL cell."""
     from pyspark.sql.types import IntegerType
 
     C = np.ascontiguousarray(centroids, dtype=np.float64)
@@ -467,17 +375,10 @@ def _cell_udf(centroids: np.ndarray):
 
     @F.pandas_udf(IntegerType())
     def cell(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype="int32")
         vals = vecs.to_numpy()
-        valid = np.array(
-            [v is not None and len(v) == dim for v in vals], dtype=bool
-        )
+        valid, X = _stack_valid(vals, dim)
         out = np.full(len(vals), np.nan)
-        if valid.any():
-            X = np.vstack(vals[valid]).astype(np.float64, copy=False)
-            scores = X @ C.T - half_norms[None, :]
-            out[valid] = scores.argmax(axis=1).astype(np.int32)
+        out[valid] = (X @ C.T - half_norms[None, :]).argmax(axis=1)
         return pd.Series(out).astype("Int32")
 
     return cell
@@ -492,16 +393,11 @@ def ivf_assign(
     """Assign every vector to its nearest centroid cell. At scale,
     write this out partitioned by `cell` (or bucketed) so queries
     prune to nprobe cells at the SCAN — the IVF inverted lists ARE the
-    partition layout; no shuffle at query time. Auto-selects the
-    vectorized matmul UDF above ``_LITERAL_BUDGET`` total centroid
-    literals (production dims), the codegen expression below it."""
+    partition layout; no shuffle at query time."""
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     df = ensure_compute_fanout(df)  # round 6: see cosine_topk
-    if centroids.size > _LITERAL_BUDGET:
-        cell = _cell_udf(centroids)(F.col(vec_col))
-    else:
-        cell = _cell_expr(vec_col, centroids)
+    cell = _cell_udf(centroids)(F.col(vec_col))
     return df.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
 
 
@@ -596,15 +492,12 @@ def semantic_dedup_pairs(
     boundary are missed by design — the paper's documented trade,
     acceptable because semantic duplicates sit deep inside clusters
     at the 0.95+ cosine band this targets. One shuffle on the cell
-    key; cell assignment is JVM codegen below the literal budget and
-    the vectorized matmul UDF above it (same plumbing as IVF)."""
+    key; cell assignment is the IVF matmul UDF."""
     cents = ivf_train_centroids(
         df, dim, n_cells=n_cells, vec_col=vec_col, seed=seed
     )
     assigned = ivf_assign(df, cents, id_col, vec_col)
-    return _within_group_cosine_pairs(
-        assigned, "cell", id_col, vec_col, min_cos, dim=dim
-    )
+    return _within_group_cosine_pairs(assigned, "cell", id_col, vec_col, min_cos)
 
 
 def semantic_dedup(
@@ -627,10 +520,16 @@ def semantic_dedup(
     ran once per join side) and released as soon as connected
     components has materialized the edge set; the survivor anti-join
     then reads the input once more — two passes over the corpus
-    total, matching curate()'s staged-cache discipline."""
+    total, matching curate()'s staged-cache discipline.
+
+    The result is lazy over the component labels, which
+    :func:`~inxs_spark.operators.dedup.connected_components` holds in
+    a local checkpoint: once every action on the result has run, the
+    caller releases them with ``release_checkpoint(result)`` (from
+    :mod:`inxs_spark.operators.dedup`)."""
     from pyspark import StorageLevel
 
-    from .dedup import dedup_keep_one_per_cluster
+    from .dedup import connected_components, keep_cluster_min
 
     cents = ivf_train_centroids(
         df, dim, n_cells=n_cells, vec_col=vec_col, seed=seed
@@ -638,15 +537,13 @@ def semantic_dedup(
     assigned = ivf_assign(df, cents, id_col, vec_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    pairs = _within_group_cosine_pairs(
-        assigned, "cell", id_col, vec_col, min_cos, dim=dim
-    )
-    # dedup_keep_one_per_cluster materializes the edge set eagerly
-    # (localCheckpoint inside connected_components), so the assigned
-    # cache has served its purpose once it returns
-    survivors = dedup_keep_one_per_cluster(df, pairs, id_col)
+    pairs = _within_group_cosine_pairs(assigned, "cell", id_col, vec_col, min_cos)
+    # connected_components materializes the edge set eagerly (local
+    # checkpoint), so the assigned cache has served its purpose once
+    # it returns
+    clusters = connected_components(pairs)
     assigned.unpersist()
-    return survivors
+    return keep_cluster_min(df, clusters, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -708,31 +605,11 @@ def pq_train_codebooks(
     return books
 
 
-def _pq_code_expr(vec_col: str, codebooks: np.ndarray) -> Column:
-    """Per-subspace argmin, JVM-side: same dot-minus-half-norm argmax
-    trick as :func:`_cell_expr`, over ``slice()``s of the vector."""
-    m, k, sub = codebooks.shape
-    v = F.col(vec_col).cast("array<double>")
-    cells = []
-    for j in range(m):
-        vj = F.slice(v, j * sub + 1, sub)
-        scores = F.array(*[
-            dot(vj, _lit_vec(c)) - F.lit(float(np.dot(c, c)) / 2.0)
-            for c in codebooks[j]
-        ])
-        cells.append(
-            (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-        )
-    code = F.array(*cells)
-    return F.when(
-        v.isNotNull() & (F.size(v) == m * sub), code
-    ).otherwise(F.lit(None).cast("array<int>"))
-
-
 def _pq_code_udf(codebooks: np.ndarray):
-    """Vectorized encode for production dims where the literal tree is
-    codegen-hostile: one (batch x sub) @ (sub x k) matmul per subspace
-    per Arrow batch."""
+    """Per-subspace nearest sub-centroid codes, one Arrow batch per
+    call: each row's ``m`` subvectors are scored against their
+    codebooks with one ``einsum`` (m x k scores) in a Python loop over
+    the batch's rows. Null and wrong-dim rows get a NULL code."""
     from pyspark.sql.types import ArrayType, IntegerType
 
     C = np.ascontiguousarray(codebooks, dtype=np.float64)
@@ -763,28 +640,15 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode every vector to its ``m`` nearest-sub-centroid codes:
-    ``(id, pq_code array<int>)``. Auto-selects the pure-JVM expression
-    below ``_LITERAL_BUDGET`` total codebook literals and the
-    vectorized matmul UDF (one Arrow hop) above it — same plumbing and
-    same interpreted-higher-order-function rationale as ``ivf_assign``
-    (see the budget note; PQ measured 0.43s vs 1.65s on 2k rows even
-    before the per-row cost dominates).
+    ``(id, pq_code array<int>)`` through one Arrow hop.
     Narrow output on purpose — the codes table IS the index; the
     embedding column never travels with it."""
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     df = ensure_compute_fanout(df)  # round 6: see cosine_topk
     return df.select(
-        F.col(id_col), _pq_code_col(codebooks, vec_col).alias("pq_code")
+        F.col(id_col), _pq_code_udf(codebooks)(F.col(vec_col)).alias("pq_code")
     )
-
-
-def _pq_code_col(codebooks: np.ndarray, vec_col: str) -> Column:
-    """The code column with the expr/UDF auto-switch — shared by
-    :func:`pq_encode` and the IVF-PQ layout below."""
-    if codebooks.size > _LITERAL_BUDGET:
-        return _pq_code_udf(codebooks)(F.col(vec_col))
-    return _pq_code_expr(vec_col, codebooks)
 
 
 def pq_write_index(
@@ -958,14 +822,10 @@ def ivfpq_write_index(
     from ..sources.io import write_json_atomic
 
     df = ensure_compute_fanout(df)  # round 6: see cosine_topk
-    if centroids.size > _LITERAL_BUDGET:
-        cell = _cell_udf(centroids)(F.col(vec_col))
-    else:
-        cell = _cell_expr(vec_col, centroids)
     coded = df.select(
         F.col(id_col),
-        _pq_code_col(codebooks, vec_col).alias("pq_code"),
-        cell.alias("cell"),
+        _pq_code_udf(codebooks)(F.col(vec_col)).alias("pq_code"),
+        _cell_udf(centroids)(F.col(vec_col)).alias("cell"),
     )
     coded.write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(path, "codes")
@@ -1031,64 +891,29 @@ def ivfpq_topk(
 
 # -- full-corpus k-means refinement + cluster-balanced sampling ----------
 
-#: above this dim the per-cell mean is computed via mapInPandas
-#: partial sums instead of `dim` avg() columns — a groupBy with
-#: hundreds of aggregate expressions exceeds Spark's codegen field
-#: budget (spark.sql.codegen.maxFields = 100) and runs interpreted,
-#: while the partial-sum path does one numpy matmul per Arrow batch
-#: and shuffles only (cell, pos, partial_sum) narrow rows
-_KMEANS_AVG_COLS_MAX_DIM = 64
-
-
-def _kmeans_stats_exprs(
-    df: DataFrame, centroids: np.ndarray, vec_col: str
-) -> list:
-    """Per-cell (count, elementwise mean) via `dim` avg() columns —
-    the pure-JVM path for modest dims. Map-side partial aggregation:
-    the shuffle carries k x dim doubles per map task, never vectors."""
-    dim = centroids.shape[1]
-    from inxs_spark.operators.fanout import ensure_compute_fanout
-
-    df = ensure_compute_fanout(df)  # round 6: see cosine_topk
-    if centroids.size > _LITERAL_BUDGET:
-        cell = _cell_udf(centroids)(F.col(vec_col))
-    else:
-        cell = _cell_expr(vec_col, centroids)
-    assigned = df.select(F.col(vec_col), cell.alias("cell"))
-    v = F.col(vec_col).cast("array<double>")
-    return (
-        assigned.filter(F.col("cell").isNotNull())
-        .groupBy("cell")
-        .agg(
-            F.count("*").alias("n"),
-            *[F.avg(v[i]).alias(f"m{i}") for i in range(dim)],
-        )
-        .collect()
-    )
-
-
 def _kmeans_stats_partials(
     df: DataFrame, centroids: np.ndarray, vec_col: str
 ) -> list:
     """Per-cell (count, elementwise mean) via mapInPandas partial
-    sums — the production-dim path. Each Arrow batch contributes at
-    most k rows of (cell, n, sum-vector); the combine explodes those
-    FEW partial rows to (cell, pos, s) narrow rows and sums — the
-    full vectors never shuffle, and the driver collects only
-    k + k x dim scalars."""
+    sums. Each Arrow batch contributes at most k rows of (cell, n,
+    sum-vector); the combine explodes those FEW partial rows to
+    (cell, pos, s) narrow rows and sums — the full vectors never
+    shuffle, no aggregate grows with dim (a groupBy with one avg()
+    per dim runs interpreted past spark.sql.codegen.maxFields), and
+    the driver collects only k + k x dim scalars. Null and wrong-dim
+    rows belong to no cell."""
+    from inxs_spark.operators.fanout import ensure_compute_fanout
+
+    df = ensure_compute_fanout(df)  # round 6: see cosine_topk
     C = np.ascontiguousarray(centroids, dtype=np.float64)
     half = 0.5 * (C * C).sum(axis=1)
     k, dim = C.shape
 
     def gen(batches):
         for pdf in batches:
-            vals = pdf[vec_col].to_numpy()
-            valid = np.array(
-                [v is not None and len(v) == dim for v in vals], dtype=bool
-            )
+            valid, X = _stack_valid(pdf[vec_col].to_numpy(), dim)
             if not valid.any():
                 continue
-            X = np.vstack(vals[valid]).astype(np.float64, copy=False)
             cells = (X @ C.T - half[None, :]).argmax(axis=1)
             rows = []
             for c in np.unique(cells):
@@ -1133,24 +958,17 @@ def kmeans_refine(
 ) -> tuple[np.ndarray, dict[int, int]]:
     """Full-corpus Lloyd refinement of (sample-trained) centroids —
     the step :func:`ivf_train_centroids` deliberately skips (its
-    training is O(sample)). Per iteration: ONE assignment pass (the
-    shared expr/UDF switch) and ONE aggregation computing per-cell
-    counts + elementwise means; the driver holds only k x dim. Empty
-    cells keep their previous centroid (no re-seeding — deterministic
-    across engines). Returns (refined centroids, final cell sizes).
-
-    At 100 TB each iteration is one corpus scan; dims above
-    ``_KMEANS_AVG_COLS_MAX_DIM`` use the mapInPandas partial-sum
-    combine (full vectors never shuffle), smaller dims stay pure-JVM
-    as `dim` avg() columns with map-side partial aggregation."""
+    training is O(sample)). Per iteration: ONE pass that assigns
+    cells and sums vectors per Arrow batch, and ONE combine of those
+    partials (:func:`_kmeans_stats_partials`); the driver holds only
+    k x dim. Empty cells keep their previous centroid (no re-seeding
+    — deterministic across engines). Returns (refined centroids,
+    final cell sizes). At 100 TB each iteration is one corpus scan."""
     C = np.array(centroids, dtype=np.float64, copy=True)
     k, dim = C.shape
     sizes: dict[int, int] = {}
     for _ in range(max(1, iters)):
-        if dim > _KMEANS_AVG_COLS_MAX_DIM:
-            stats = _kmeans_stats_partials(df, C, vec_col)
-        else:
-            stats = _kmeans_stats_exprs(df, C, vec_col)
+        stats = _kmeans_stats_partials(df, C, vec_col)
         sizes = {int(r["cell"]): int(r["n"]) for r in stats}
         for r in stats:
             C[int(r["cell"])] = [float(r[f"m{i}"]) for i in range(dim)]
@@ -1179,11 +997,7 @@ def cluster_balanced_sample(
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     df = ensure_compute_fanout(df)  # round 6: see cosine_topk
-    if centroids.size > _LITERAL_BUDGET:
-        cell = _cell_udf(centroids)(F.col(vec_col))
-    else:
-        cell = _cell_expr(vec_col, centroids)
-    assigned = df.withColumn("cell", cell)
+    assigned = df.withColumn("cell", _cell_udf(centroids)(F.col(vec_col)))
     return deterministic_quota(
         assigned.filter(F.col("cell").isNotNull()), "cell", id_col, quota
     )

@@ -36,7 +36,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..extract import MAIN_CONTENT
 from ..kernel.transformation import Transformation
-from ..sources.io import compact_records, input_fingerprint, write_json_atomic
+from ..sources.io import (
+    compact_records,
+    input_fingerprint,
+    local_path,
+    write_json_atomic,
+)
 from .extract_pipeline import extract_df
 
 METRICS_SCHEMA = (
@@ -47,6 +52,10 @@ METRICS_SCHEMA = (
 
 
 def _chunk_files(df: DataFrame, chunks: int) -> list[list[str]]:
+    """The listed input file URIs dealt round-robin into ``chunks``
+    groups. Spark lists percent-encoded ``file:`` URIs and would encode
+    them again if read back as is: read a group through
+    :func:`~inxs_spark.sources.io.local_path`."""
     files = sorted(df.inputFiles())
     if not files:
         raise ValueError("input has no files")
@@ -158,7 +167,7 @@ def run_extraction(
     t0 = time.monotonic()
     rows_total = 0
     for chunk_id in todo:
-        chunk_df = spark.read.parquet(*file_groups[chunk_id])
+        chunk_df = spark.read.parquet(*map(local_path, file_groups[chunk_id]))
         out_path = os.path.join(out_root, "extracted", f"chunk={chunk_id}")
         extracted = extract_df(
             chunk_df,
@@ -223,12 +232,6 @@ def _chunk_rows_out(metrics_dir: str, chunk_id: int, run_id: str) -> int:
     return total
 
 
-def _strip_scheme(path: str) -> str:
-    return path[7:] if path.startswith("file://") else (
-        path[5:] if path.startswith("file:") else path
-    )
-
-
 def _group_fingerprint(files: list[str], stat_fn=None) -> str:
     """Change-detection key for a file group: (path, size, mtime_ns)
     per file. mtime is included so an in-place rewrite that happens to
@@ -245,7 +248,7 @@ def _group_fingerprint(files: list[str], stat_fn=None) -> str:
         if stat_fn is not None:
             size, mtime_ns = stat_fn(f)
         else:
-            local = _strip_scheme(f)
+            local = local_path(f)
             if "://" in local:
                 raise ValueError(
                     f"cannot stat non-local input file {f!r}: incremental "
@@ -324,7 +327,7 @@ def run_extraction_incremental(
         ran.append(k)
         out_path = os.path.join(out_root, "extracted", f"group={k}")
         extracted = extract_df(
-            spark.read.parquet(*group_files[k]),
+            spark.read.parquet(*map(local_path, group_files[k])),
             transformation,
             num_partitions=num_partitions,
             salt_buckets=salt_buckets,

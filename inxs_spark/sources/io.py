@@ -20,6 +20,7 @@ import contextlib
 import hashlib
 import json
 import os
+import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,9 +58,22 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
     writer.saveAsTable(table)
 
 
+def local_path(uri: str) -> str:
+    """The local filesystem path of a ``file:`` URI as Spark lists
+    input files (``file:/a%20b/x``, ``file:///a%20b/x``): scheme
+    stripped, percent-escapes decoded. Any other string — a plain
+    path, or a remote URI such as ``s3://b/k`` — comes back as is."""
+    parts = urllib.parse.urlsplit(uri)
+    if parts.scheme != "file":
+        return uri
+    return urllib.parse.unquote(parts.path)
+
+
 def input_fingerprint(location: str) -> str:
     """Deterministic fingerprint of an on-disk input table — the
-    sandbox stand-in for an Iceberg snapshot id."""
+    sandbox stand-in for an Iceberg snapshot id: (path, size,
+    mtime_ns) per data file, so a same-size in-place rewrite changes
+    it too."""
     entries = []
     if os.path.isdir(location):
         for dirpath, _dirnames, filenames in os.walk(location):
@@ -68,10 +82,15 @@ def input_fingerprint(location: str) -> str:
                     continue
                 full = os.path.join(dirpath, name)
                 stat = os.stat(full)
-                entries.append(f"{os.path.relpath(full, location)}:{stat.st_size}")
+                entries.append(
+                    f"{os.path.relpath(full, location)}:{stat.st_size}"
+                    f":{stat.st_mtime_ns}"
+                )
     elif os.path.exists(location):
         stat = os.stat(location)
-        entries.append(f"{os.path.basename(location)}:{stat.st_size}")
+        entries.append(
+            f"{os.path.basename(location)}:{stat.st_size}:{stat.st_mtime_ns}"
+        )
     digest = hashlib.sha256("\n".join(sorted(entries)).encode()).hexdigest()
     return f"files-{digest[:24]}"
 

@@ -122,21 +122,24 @@ class TestDedup:
         min-id cluster label; keep-one keeps exactly one per component."""
         from inxs_spark.operators.dedup import (
             connected_components,
-            dedup_keep_one_per_cluster,
+            keep_cluster_min,
+            release_checkpoint,
         )
 
         # components: {1,2,3,4} (a chain), {10,11}, 20 is a singleton
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
         )
-        got = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
+        clusters = connected_components(pairs)
+        got = {r.id: r.cluster_id for r in clusters.collect()}
         assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
         docs = spark.createDataFrame(
             [(i, f"d{i}") for i in (1, 2, 3, 4, 10, 11, 20)],
             "doc_id long, text string",
         )
-        kept = {r.doc_id for r in dedup_keep_one_per_cluster(docs, pairs).collect()}
+        kept = {r.doc_id for r in keep_cluster_min(docs, clusters).collect()}
         assert kept == {1, 10, 20}
+        release_checkpoint(clusters)
 
     def test_connected_components_long_chain_converges(self, spark, tmp_path):
         """Pointer jumping makes chain convergence logarithmic: a
@@ -1268,15 +1271,14 @@ class TestSimilarity:
                [tuple(r) for r in want.collect()]
 
     def test_bucket_key_udf_matches_literal_tree(self, spark):
-        """The production-dim matmul UDF and the codegen literal tree
-        must assign identical LSH buckets and IVF cells (the auto-
-        switch at _LITERAL_BUDGET must not change results)."""
+        """The LSH bucket and IVF cell kernels assign what a NumPy
+        brute force over the same planes / centroids assigns (the
+        reference was the deleted literal-tree expression; the test
+        keeps its name)."""
         import numpy as np
 
         from inxs_spark.operators.similarity import (
-            _cell_expr,
             _cell_udf,
-            bucket_key,
             bucket_key_udf,
             hyperplanes,
         )
@@ -1289,30 +1291,27 @@ class TestSimilarity:
             ).alias("embedding"),
         )
         planes = hyperplanes(16, 10, seed=42)
-        both = df.select(
-            "vec_id",
-            bucket_key("embedding", planes).alias("lit"),
-            bucket_key_udf("embedding", planes).alias("udf"),
-        ).collect()
-        assert all(r.lit == r.udf for r in both)
         cents = np.random.default_rng(3).standard_normal((8, 16))
-        cells = df.select(
-            "vec_id",
-            _cell_expr("embedding", cents).alias("lit"),
-            _cell_udf(cents)(F.col("embedding")).alias("udf"),
+        rows = df.select(
+            "vec_id", "embedding",
+            bucket_key_udf("embedding", planes).alias("bucket"),
+            _cell_udf(cents)(F.col("embedding")).alias("cell"),
         ).collect()
-        assert all(r.lit == r.udf for r in cells)
+        assert len(rows) == 200
+        for r in rows:
+            x = np.asarray(r.embedding)
+            want_bucket = sum(1 << h for h, p in enumerate(planes) if x @ p > 0)
+            want_cell = int(((cents - x) ** 2).sum(axis=1).argmin())
+            assert (r.bucket, r.cell) == (want_bucket, want_cell), r.vec_id
 
     def test_bucket_and_cell_null_ragged_rows(self, spark):
-        """Dirty data (null or wrong-dim embeddings) must yield NULL
-        bucket/cell in BOTH the literal-tree and the matmul-UDF paths
-        — never a batch-killing exception, never a silent bucket 0."""
+        """Dirty data (null or wrong-dim embeddings) must yield a NULL
+        bucket/cell — never a batch-killing exception, never a silent
+        bucket 0."""
         import numpy as np
 
         from inxs_spark.operators.similarity import (
-            _cell_expr,
             _cell_udf,
-            bucket_key,
             bucket_key_udf,
             hyperplanes,
         )
@@ -1325,17 +1324,13 @@ class TestSimilarity:
         cents = np.random.default_rng(2).standard_normal((4, 4))
         rows = df.select(
             "vec_id",
-            bucket_key("embedding", planes).alias("b_lit"),
-            bucket_key_udf("embedding", planes).alias("b_udf"),
-            _cell_expr("embedding", cents).alias("c_lit"),
-            _cell_udf(cents)(F.col("embedding")).alias("c_udf"),
+            bucket_key_udf("embedding", planes).alias("b"),
+            _cell_udf(cents)(F.col("embedding")).alias("c"),
         ).collect()
         got = {r.vec_id: r for r in rows}
-        assert got[0].b_lit is not None and got[0].b_lit == got[0].b_udf
-        assert got[0].c_lit is not None and got[0].c_lit == got[0].c_udf
+        assert got[0].b is not None and got[0].c is not None
         for bad in (1, 2):
-            assert got[bad].b_lit is None and got[bad].b_udf is None
-            assert got[bad].c_lit is None and got[bad].c_udf is None
+            assert got[bad].b is None and got[bad].c is None
 
     def test_cosine_topk_exact(self, spark):
         from inxs_spark.operators.similarity import cosine_topk
@@ -1670,6 +1665,23 @@ class TestIVF:
         paired = {i for p in got for i in p}
         assert {i for i in range(240) if i not in paired} <= survivors
 
+    def test_semantic_dedup_caller_releases_labels(self, spark, clustered):
+        """semantic_dedup's result reads the component labels' local
+        checkpoint until the caller releases it: after an action the
+        labels are the only new persisted RDD (the assigned-cells cache
+        is already gone), and release_checkpoint leaves none."""
+        from inxs_spark.operators.dedup import release_checkpoint
+        from inxs_spark.operators.similarity import semantic_dedup
+
+        jsc = spark.sparkContext._jsc
+        held = set(jsc.getPersistentRDDs().keySet())
+        survivors = semantic_dedup(clustered, dim=8, min_cos=0.9, n_cells=3)
+        n = survivors.count()
+        assert 0 < n < 240
+        assert len(set(jsc.getPersistentRDDs().keySet()) - held) == 1
+        release_checkpoint(survivors)
+        assert set(jsc.getPersistentRDDs().keySet()) - held == set()
+
     def test_ivf_assignment_separates_clusters(self, spark, clustered):
         from inxs_spark.operators.similarity import ivf_assign, ivf_train_centroids
 
@@ -1694,15 +1706,24 @@ class TestIVF:
         # the query lies inside one cluster
         assert set(approx) == set(brute)
 
-    def test_ivf_assignment_is_jvm_side(self, spark, clustered):
-        """Cell assignment must plan as pure expressions — no
-        Python/Arrow eval node."""
+    def test_ivf_assignment_plan_is_dim_independent(self, spark, clustered):
+        """Cell assignment plans as ONE vectorized Arrow hop at a toy
+        dim and at production dim alike: no dim-based plan switch."""
+        import numpy as np
+
         from inxs_spark.operators.similarity import ivf_assign, ivf_train_centroids
 
-        cents = ivf_train_centroids(clustered, dim=8, n_cells=3)
-        plan = ivf_assign(clustered, cents)._jdf.queryExecution(
-        ).executedPlan().toString()
-        assert "Python" not in plan and "Arrow" not in plan, plan
+        wide = spark.createDataFrame(
+            [(i, [float(x) for x in np.random.default_rng(i).standard_normal(64)])
+             for i in range(20)],
+            "vec_id long, embedding array<double>",
+        )
+        for df, dim in ((clustered, 8), (wide, 64)):
+            cents = ivf_train_centroids(df, dim=dim, n_cells=3)
+            plan = ivf_assign(df, cents)._jdf.queryExecution(
+            ).executedPlan().toString()
+            assert plan.count("ArrowEvalPython") == 1, plan
+            assert "BatchEvalPython" not in plan, plan
 
 
 class TestMultimodalReal:
@@ -1816,33 +1837,26 @@ class TestPQ:
         assert np.array_equal(a, b)
 
     def test_encode_expr_matches_udf_and_serial(self, spark, clustered):
-        """The auto-switch at _LITERAL_BUDGET must not change codes:
-        codegen-expression path == vectorized-matmul path == a serial
-        numpy re-derivation on the driver."""
+        """pq_encode's codes equal a serial numpy nearest-sub-centroid
+        re-derivation on the driver, for every row (the deleted
+        expression path was the second reference; the test keeps its
+        name)."""
         import numpy as np
 
-        from inxs_spark.operators.similarity import (
-            _pq_code_udf,
-            pq_encode,
-            pq_train_codebooks,
-        )
+        from inxs_spark.operators.similarity import pq_encode, pq_train_codebooks
 
         books = pq_train_codebooks(clustered, dim=8, m=4, k=8)
-        expr_codes = {
+        codes = {
             r.vec_id: list(r.pq_code)
             for r in pq_encode(clustered, books).collect()
         }
-        udf_codes = {
-            r.vec_id: list(r.c) for r in clustered.select(
-                "vec_id", _pq_code_udf(books)(F.col("embedding")).alias("c")
-            ).collect()
-        }
-        assert expr_codes == udf_codes
         m, k, sub = books.shape
-        for r in clustered.collect():
+        rows = clustered.collect()
+        assert len(codes) == len(rows)
+        for r in rows:
             x = np.asarray(r.embedding).reshape(m, sub)
             d2 = ((x[:, None, :] - books) ** 2).sum(axis=2)
-            assert list(d2.argmin(axis=1)) == expr_codes[r.vec_id], r.vec_id
+            assert list(d2.argmin(axis=1)) == codes[r.vec_id], r.vec_id
 
     def test_null_and_wrong_dim_rows_get_null_codes(self, spark):
         from inxs_spark.operators.similarity import (
@@ -2033,9 +2047,9 @@ class TestIVFPQ:
 
 
 class TestCosineImplSwitch:
-    """The dim-based expr/Arrow switch in cosine_topk and the pair
-    cosine must not change results (values round to 4 decimals on
-    both paths)."""
+    """The Arrow cosine kernels of cosine_topk and of the within-group
+    pair join agree with a NumPy brute force at production dim (values
+    rounded to 4 decimals), and score dirty rows NULL."""
 
     def test_query_paths_agree_at_production_dim(self, spark):
         import numpy as np
@@ -2048,20 +2062,21 @@ class TestCosineImplSwitch:
         rows.append((900, None))
         rows.append((901, [1.0, 2.0]))  # wrong dim
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        q = [float(x) for x in rng.standard_normal(64)]
-        assert 64 > S._COSINE_EXPR_MAX_DIM
-        got = [tuple(r) for r in S.cosine_topk(df, q, k=15).collect()]
-        # force the expression path for the same corpus
-        try:
-            S._COSINE_EXPR_MAX_DIM = 1024
-            want = [tuple(r) for r in S.cosine_topk(df, q, k=15).collect()]
-        finally:
-            S._COSINE_EXPR_MAX_DIM = 16
-        assert got == want
-        ids = [t[0] for t in got]
-        assert 900 not in ids and 901 not in ids
+        q = np.asarray(rng.standard_normal(64))
+        got = [tuple(r) for r in S.cosine_topk(df, list(q), k=15).collect()]
+        X = np.array([v for _i, v in rows[:300]])
+        cos = np.round(X @ q / (np.linalg.norm(X, axis=1) * np.linalg.norm(q)), 4)
+        want = sorted(((i, float(c)) for i, c in enumerate(cos)),
+                      key=lambda t: (-t[1], t[0]))[:15]
+        assert [t[0] for t in got] == [t[0] for t in want]
+        assert np.allclose([t[1] for t in got], [t[1] for t in want], atol=1e-12)
+        # dirty rows score NULL (sorted last), never NaN (sorted first)
+        scores = {r.vec_id: r.cos for r in S.cosine_topk(df, list(q), k=302).collect()}
+        assert scores[900] is None and scores[901] is None
 
     def test_pair_paths_agree_at_production_dim(self, spark):
+        import itertools
+
         import numpy as np
 
         from inxs_spark.operators import similarity as S
@@ -2075,15 +2090,26 @@ class TestCosineImplSwitch:
         grouped = df.withColumn("g", F.lit(1))
         got = sorted(
             tuple(r) for r in S._within_group_cosine_pairs(
-                grouped, "g", "vec_id", "embedding", 0.9, dim=64
+                grouped, "g", "vec_id", "embedding", 0.9
             ).collect()
         )
-        want = sorted(
-            tuple(r) for r in S._within_group_cosine_pairs(
-                grouped, "g", "vec_id", "embedding", 0.9, dim=None
-            ).collect()
-        )
-        assert got and got == want
+        want = []
+        for (ia, va), (ib, vb) in itertools.combinations(rows, 2):
+            a, b = np.asarray(va), np.asarray(vb)
+            c = a @ b / (np.linalg.norm(a) * np.linalg.norm(b))
+            if c >= 0.9:
+                want.append((ia, ib, round(float(c), 4)))
+        assert got and [t[:2] for t in got] == [t[:2] for t in sorted(want)]
+        assert np.allclose([t[2] for t in got], [t[2] for t in sorted(want)],
+                           atol=1e-12)
+        # null, mismatched-length and zero vectors pair to NULL, not NaN
+        dirty = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, None), (2, [1.0, 0.0, 0.0]), (3, [0.0, 0.0]),
+             (4, [2.0, 0.0])],
+            "vec_id long, embedding array<double>",
+        ).withColumn("g", F.lit(1))
+        pairs = S._within_group_cosine_pairs(dirty, "g", "vec_id", "embedding", -1.0)
+        assert [tuple(r) for r in pairs.collect()] == [(0, 4, 1.0)]
 
 
 class TestKMeans:
@@ -2122,26 +2148,28 @@ class TestKMeans:
         assert sizes == {0: 40, 1: 40, 2: 40}
 
     def test_partials_path_matches_expr_path(self, spark):
+        """One refinement step equals a NumPy Lloyd step over the clean
+        rows; null and wrong-dim rows belong to no cell (the reference
+        was the deleted avg()-columns path; the test keeps its name)."""
         import numpy as np
 
-        from inxs_spark.operators import similarity as S
+        from inxs_spark.operators.similarity import kmeans_refine
 
         centers, df = self._planted(spark)
-        df = df.unionByName(  # null + wrong-dim rows must be ignored
+        clean = np.array([r.embedding for r in df.orderBy("vec_id").collect()])
+        df = df.unionByName(
             spark.createDataFrame(
                 [(900, None), (901, [1.0])],
                 "vec_id long, embedding array<double>",
             )
         )
         seeds = centers + 0.5
-        a, sa = S.kmeans_refine(df, seeds, iters=1)
-        try:
-            S._KMEANS_AVG_COLS_MAX_DIM = 0   # force partial-sum path
-            b, sb = S.kmeans_refine(df, seeds, iters=1)
-        finally:
-            S._KMEANS_AVG_COLS_MAX_DIM = 64
-        assert sa == sb == {0: 40, 1: 40, 2: 40}
-        assert np.allclose(a, b, atol=1e-9)
+        got, sizes = kmeans_refine(df, seeds, iters=1)
+        cells = ((clean[:, None, :] - seeds[None]) ** 2).sum(axis=2).argmin(axis=1)
+        assert sizes == {c: int((cells == c).sum()) for c in range(3)}
+        assert sizes == {0: 40, 1: 40, 2: 40}
+        for c in range(3):
+            assert np.allclose(got[c], clean[cells == c].mean(axis=0), atol=1e-9)
 
     def test_empty_cell_keeps_previous_centroid(self, spark):
         import numpy as np

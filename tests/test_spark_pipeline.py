@@ -199,6 +199,56 @@ def test_incremental_extraction_on_growing_input(spark, tiny_transcripts, tmp_ou
                                    transformation=other)
 
 
+def test_incremental_extraction_under_a_spaced_directory(spark, tiny_transcripts,
+                                                         tmp_out):
+    """Spark lists input files as percent-encoded ``file:`` URIs
+    (``a%20b``); both runners must stat and read the decoded local
+    path."""
+    from inxs_spark.plans.runner import run_extraction_incremental
+
+    src = os.path.join(tmp_out, "a b", "input")
+    spark.read.parquet(tiny_transcripts).limit(100).repartition(2) \
+        .write.parquet(src)
+    assert any("%20" in f for f in spark.read.parquet(src).inputFiles())
+
+    s1 = run_extraction_incremental(spark, src, tmp_out, groups=2)
+    assert s1["groups_run"] == s1["groups_total"] > 0
+    assert read_extracted(spark, tmp_out).count() == 100
+    s2 = run_extraction_incremental(spark, src, tmp_out, groups=2)
+    assert s2["groups_run"] == 0 and s2["groups_skipped"] == s2["groups_total"]
+
+    chunked = os.path.join(tmp_out, "chunked")
+    assert run_extraction(spark, src, chunked, chunks=2)["chunks_run"] == 2
+    assert read_extracted(spark, chunked).count() == 100
+
+
+def test_resume_rejects_same_size_rewrite(spark, tiny_transcripts, tmp_out):
+    """An input file rewritten in place with the same byte size but a
+    new mtime is a new snapshot: resuming over it must fail instead of
+    keeping chunks extracted from the old file."""
+    from inxs_spark.plans.runner import ResumeMismatch
+
+    src = os.path.join(tmp_out, "src")
+    spark.read.parquet(tiny_transcripts).limit(100).repartition(2) \
+        .write.parquet(src)
+    out = os.path.join(tmp_out, "out")
+    run_extraction(spark, src, out, chunks=2, num_partitions=2)
+
+    victim = next(
+        os.path.join(src, n) for n in sorted(os.listdir(src))
+        if n.endswith(".parquet")
+    )
+    st = os.stat(victim)
+    with open(victim, "rb") as fh:
+        data = fh.read()
+    with open(victim, "wb") as fh:
+        fh.write(data)
+    os.utime(victim, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert os.stat(victim).st_size == st.st_size
+    with pytest.raises(ResumeMismatch, match="input_snapshot_id"):
+        run_extraction(spark, src, out, chunks=2, num_partitions=2)
+
+
 def test_midjob_failure_then_resume(spark, tiny_transcripts, tmp_out, monkeypatch):
     """Driver-loss simulation WITHOUT manifest surgery: the job dies
     mid-run (injected failure on chunk 2); chunks committed before it
@@ -414,9 +464,37 @@ def test_contract_registry_within_driver_cap(spark):
     )
 
 
+#: plan nodes that pass the file scan's rows through unchanged in
+#: content (row filters and codegen/columnar wrappers)
+_SCAN_PASSTHROUGH = {
+    "FilterExec", "ColumnarToRowExec", "InputAdapter", "WholeStageCodegenExec",
+}
+
+
+def _reads_file_scan(node) -> bool:
+    """True iff ``node`` is the file scan, possibly under row filters."""
+    while node.getClass().getSimpleName() in _SCAN_PASSTHROUGH:
+        if node.children().size() != 1:
+            return False
+        node = node.children().apply(0)
+    return node.getClass().getSimpleName() == "FileSourceScanExec"
+
+
+def _is_scan_fanout(part: str, node) -> bool:
+    """The guarded compute fan-out (fanout.ensure_compute_fanout): a
+    ROUND-ROBIN exchange straight over the file scan. A round-robin
+    exchange anywhere else gets no exemption."""
+    return (
+        "RoundRobinPartitioning" in part
+        and node.children().size() == 1
+        and _reads_file_scan(node.children().apply(0))
+    )
+
+
 def _exchange_outputs(df):
-    """Attribute names carried by every (shuffle/broadcast) Exchange in
-    the FINAL executed plan (AQE-resolved, so run an action first)."""
+    """(name, partitioning, attribute names, is the scan fan-out) of
+    every (shuffle/broadcast) Exchange in the FINAL executed plan
+    (AQE-resolved, so run an action first)."""
     df.write.format("noop").mode("overwrite").save()
     out = []
 
@@ -431,7 +509,7 @@ def _exchange_outputs(df):
                 part = node.outputPartitioning().toString()
             except Exception:
                 part = ""
-            out.append((name, part, attrs))
+            out.append((name, part, attrs, _is_scan_fanout(part, node)))
         n = node.children().size()
         for i in range(n):
             walk(node.children().apply(i))
@@ -469,8 +547,8 @@ def test_containment_exchanges_are_digest_only(spark):
     """containment_pairs at any tier must shuffle DIGESTS, never window
     or document text, across any KEYED exchange (round-3 verdict task 9
     plan assert). The one permitted text-bearing exchange is the
-    round-6 compute fan-out: a ROUND-ROBIN repartition of a small
-    file scan whose size guards (fanout.ensure_compute_fanout) cap it
+    round-6 compute fan-out: a ROUND-ROBIN repartition directly over a
+    small file scan, whose size guards (fanout.ensure_compute_fanout) cap it
     at provably-cheap inputs and disable it entirely at scale — keyed,
     data-proportional exchanges remain digest-only."""
     from inxs_spark.operators.text import containment_pairs
@@ -479,8 +557,8 @@ def test_containment_exchanges_are_digest_only(spark):
     ex = _exchange_outputs(containment_pairs(docs))
     assert ex, "expected at least one exchange"
     forbidden = {"text", "line", "__t", "__toks"}
-    for name, part, attrs in ex:
-        if "RoundRobinPartitioning" in part:
+    for name, part, attrs, scan_fanout in ex:
+        if scan_fanout:
             continue  # the guarded fan-out; never fires at scale
         assert not (forbidden & set(attrs)), (name, part, attrs)
 
@@ -496,12 +574,12 @@ def test_boilerplate_exchanges_never_carry_documents(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ex = _exchange_outputs(remove_boilerplate_lines(docs, min_docs=5))
     assert ex, "expected at least one exchange"
-    for name, part, attrs in ex:
-        if "RoundRobinPartitioning" in part:
+    for name, part, attrs, scan_fanout in ex:
+        if scan_fanout:
             continue  # round-6 guarded fan-out (see containment test)
         assert "text" not in attrs, (name, part, attrs)
     digest_ex = [
-        attrs for _n, _p, attrs in ex
+        attrs for _n, _p, attrs, _f in ex
         if "line_md5" in attrs or any(a.startswith("n_docs") for a in attrs)
     ]
     assert any("line" not in attrs for attrs in digest_ex), ex

@@ -3,6 +3,8 @@ dir, compare row-count / column names / order-insensitive values
 against oracle_sql() via DuckDB — a local mimic of CORRECTNESS_r{N}.
 
 Usage: python tools/check_contract.py [sf_dir] [query ...]
+Spark runs on get_spark()'s default master: local[$SPARK_GRAFT_CPUS],
+or every core when it is unset.
 Set SPARK_GRAFT_EXTRAS=1 to also run extra_queries() (rows-only demo
 set — printed as ROWS lines, never compared).
 Set SPARK_GRAFT_EXTRAS_JSON=/path/EXTRAS_rN.json to persist the demo
@@ -50,12 +52,23 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    from inxs_spark.sources.session import get_spark
+
+    spark = get_spark()
+    try:
+        failures = _check(spark, sf_dir, only)
+    finally:
+        spark.stop()
+    return 1 if failures else 0
+
+
+def _check(spark, sf_dir: str, only: set[str]) -> int:
+    """Run the queries against their oracles; returns the failure count."""
     import duckdb
 
     import __spark_entry__ as entrymod
-    from inxs_spark.sources.session import get_spark
+    from inxs_spark.sources.io import write_json_atomic
 
-    spark = get_spark(master="local[8]")
     con = duckdb.connect()
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
@@ -120,7 +133,6 @@ def main() -> int:
             failures += 1
         else:
             print(f"OK   {name}: {sn} rows match ({wall:.1f}s)")
-    spark.stop()
     if extras_json and extras_evidence:
         import json
 
@@ -134,15 +146,14 @@ def main() -> int:
                 merged = {**prior, **extras_evidence}
             except Exception:
                 pass
-        with open(extras_json, "w") as fh:
-            json.dump({
-                "sf_dir": sf_dir,
-                "n_demos": len(merged),
-                "n_errs": sum(1 for v in merged.values() if v["err"]),
-                "demos": dict(sorted(merged.items())),
-            }, fh, indent=1, sort_keys=False)
+        write_json_atomic(extras_json, {
+            "sf_dir": sf_dir,
+            "n_demos": len(merged),
+            "n_errs": sum(1 for v in merged.values() if v["err"]),
+            "demos": dict(sorted(merged.items())),
+        }, indent=1)
         print(f"WROTE {extras_json}: {len(merged)} demos")
-    return 1 if failures else 0
+    return failures
 
 
 if __name__ == "__main__":
