@@ -74,20 +74,11 @@ def q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     nation = F.broadcast(_t(spark, sf_dir, "nation"))
     region = F.broadcast(_t(spark, sf_dir, "region"))
-    # round 6: resolve the dimension chain to one (o_orderkey, r_name)
-    # map BEFORE touching the fact table, so lineitem is probed by ONE
-    # broadcast join instead of four (inner joins are associative —
-    # result-identical, re-verified row-for-row at sf1.0; partial
-    # aggregation still accumulates in scan order, so float sums are
-    # byte-identical too). 2.06s -> 1.69s at sf1.0 min-of-3.
-    omap = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
+    return (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .join(nation, cust.c_nationkey == nation.n_nationkey)
         .join(region, nation.n_regionkey == region.r_regionkey)
-        .select("o_orderkey", "r_name")
-    )
-    return (
-        li.join(omap, li.l_orderkey == omap.o_orderkey)
         .groupBy("r_name")
         .agg(
             F.round(
@@ -226,17 +217,12 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 against vec_id=0 (self excluded)."""
     from inxs_spark.operators.similarity import cosine
 
-    from inxs_spark.operators.fanout import ensure_compute_fanout
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_emb")
     )
-    # round 6: the embeddings table is a single-row-group file — the
-    # brute-force cosine pass planned ONE scan task; fan out the cheap
-    # scan so the vector math uses every core. 0.66s -> 0.44s at sf1.0.
     return (
-        ensure_compute_fanout(emb).crossJoin(F.broadcast(q))
+        emb.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != 0)
         .select(
             "vec_id",
@@ -499,9 +485,10 @@ def _pref_turns_and_scores(
     exercising the identical-completion filter). The score is the
     user's event count (integer, so ties are common and the
     conv_id tie-break is exercised cross-engine). conv ids zero-pad
-    the user id so lexicographic string comparison matches numeric
-    order in BOTH engines. The identical construction is embedded in
-    the DuckDB oracle."""
+    the user id to 19 digits (every non-negative int64; a shorter pad
+    would truncate larger ids) so lexicographic string comparison
+    matches numeric order in BOTH engines. The identical construction
+    is embedded in the DuckDB oracle."""
     ev = _t(spark, sf_dir, "events")
     packed = F.struct("ts", "event_id", F.col("event_type").alias("et"))
     conv = (
@@ -515,7 +502,7 @@ def _pref_turns_and_scores(
                 F.lit("f"),
                 (F.col("user_id") % 5).cast("string"),
                 F.lit("-u"),
-                F.lpad(F.col("user_id").cast("string"), 6, "0"),
+                F.lpad(F.col("user_id").cast("string"), 19, "0"),
             ).alias("conv_id"),
             (F.col("user_id") % 5).cast("string").alias("family"),
             F.expr("array_join(transform(seq, s -> s.et), '>')").alias(
@@ -2146,13 +2133,11 @@ def x_extract_failure_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x_minhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inxs_spark.operators.dedup import minhash_dedup_pairs
 
-    # prune_verify="auto": above the (round-6 re-measured) corpus
-    # crossover the exact-Jaccard verify shingles candidate documents
-    # only instead of the whole corpus twice — identical pairs, ~30%
-    # less wall at the 50k-doc tier; tiny tiers keep the lazy plan
+    # the lazy verify plan: it persists nothing, so the ordered frame
+    # leaves no cache behind for its caller to release
     return minhash_dedup_pairs(
         _t(spark, sf_dir, "documents"), threshold=0.5,
-        num_perm=32, bands=8, prune_verify="auto",
+        num_perm=32, bands=8,
     ).orderBy("id_a", "id_b")
 
 
@@ -3321,7 +3306,7 @@ def oracle_sql() -> dict[str, str]:
             -- completion pairs dropped
             WITH conv AS (
               SELECT 'f' || CAST(user_id % 5 AS VARCHAR)
-                         || '-u' || lpad(CAST(user_id AS VARCHAR), 6, '0')
+                         || '-u' || lpad(CAST(user_id AS VARCHAR), 19, '0')
                        AS conv_id,
                      CAST(user_id % 5 AS VARCHAR) AS family,
                      string_agg(event_type, '>' ORDER BY ts, event_id)

@@ -199,6 +199,8 @@ def dedup_job(
             cache = getattr(pairs, attr, None)
             if cache is not None:
                 cache.unpersist()
+        if index_dir is not None:
+            release_checkpoint(pairs)
         pairs_read = df.sparkSession.read.parquet(
             os.path.join(out_root, "pairs")
         )

@@ -268,9 +268,8 @@ def minhash_band_memberships(
     # removed repartition was the funnel's largest shuffle, ~40% of
     # the memberships wall at 1.2M docs — round-5 scaling profile).
     # Small single-row-group inputs would otherwise run the signature
-    # UDF on 1-2 scan tasks (round-6 profile: 4.5s of a 13s query on a
-    # 94%-idle box) — fan out first when, and only when, the exchange
-    # is provably cheap (see fanout.ensure_compute_fanout's guards).
+    # UDF on one scan task — fan out first (a measured win, see the
+    # rule in fanout.py; a no-op unless the exchange is provably cheap).
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     df = ensure_compute_fanout(df)
@@ -435,8 +434,8 @@ def jaccard_verify(
         base = df
     # the shingle projection below is interpreted HOF-lambda work (no
     # codegen) — the priciest per-row compute in the funnel; fan out an
-    # under-parallel small scan before paying it twice (round-6
-    # profile: 12s/corpus-pass on 2 of 32 cores at sf1.0)
+    # under-parallel small scan before paying it twice (a measured win,
+    # see the rule in fanout.py)
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     base = ensure_compute_fanout(base)
@@ -731,11 +730,6 @@ def _simhash64(texts: pd.Series) -> pd.Series:
 
 def simhash(df: DataFrame, id_col: str = "doc_id",
             text_col: str = "text") -> DataFrame:
-    # same under-parallel-scan discipline as the MinHash signature UDF
-    # (round 6): no-op unless the input is a small file-backed scan
-    from inxs_spark.operators.fanout import ensure_compute_fanout
-
-    df = ensure_compute_fanout(df)
     return df.select(F.col(id_col), _simhash64(F.col(text_col)).alias("simhash"))
 
 
@@ -1010,8 +1004,10 @@ def minhash_dedup_pairs_incremental(
     streaming.streaming_minhash_dedup).
 
     Cache contract: with ``append=True`` the returned frame is a
-    localCheckpoint — every working cache is already released, nothing
-    to manage. With ``append=False`` (lazy mode) release BOTH caches
+    localCheckpoint and every working cache is already released; the
+    checkpoint itself stays persisted, so call
+    ``release_checkpoint(result)`` once every action that reads it has
+    run. With ``append=False`` (lazy mode) release BOTH caches
     after your action: ``._candidate_pairs_cache`` (as
     minhash_dedup_pairs, when prune_verify ran eager) and
     ``._batch_memberships_cache`` (the batch's one signature pass)."""
@@ -1095,8 +1091,8 @@ def minhash_dedup_pairs_incremental(
     # against a REFRESHED parquet listing — candidate caching alone
     # does not shield it (observed as every batch id self-pairing
     # once its own membership append became visible). The checkpoint
-    # severs the lineage, so both working caches release right here
-    # and the returned frame carries nothing for the caller to manage.
+    # severs the lineage, so both working caches release right here;
+    # the caller releases the checkpoint (see docstring).
     out = out_ck = verified.localCheckpoint()
     cache = getattr(verified, "_candidate_pairs_cache", None)
     if cache is not None:
@@ -1166,7 +1162,8 @@ def simhash_dup_pairs_incremental(
     incremental: the index only grows once this batch's pairs exist,
     and the meta write is the commit marker. With ``append=True`` the
     returned frame is a localCheckpoint and every working cache is
-    already released; with ``append=False`` release
+    already released; call ``release_checkpoint(result)`` once every
+    action that reads it has run. With ``append=False`` release
     ``result._batch_sigs_cache`` after your action (the batch's one
     signature pass)."""
     import os

@@ -193,11 +193,7 @@ def extract_features(
                 }
             )
 
-    from .fanout import ensure_compute_fanout
-
-    # round 6: decode is per-row Python — fan out an under-parallel
-    # small file scan first (no-op for derived or large inputs)
-    return ensure_compute_fanout(df).mapInPandas(batches, FEATURE_SCHEMA)
+    return df.mapInPandas(batches, FEATURE_SCHEMA)
 
 
 def frame_sample(df: DataFrame, every_ms: int = 500) -> DataFrame:

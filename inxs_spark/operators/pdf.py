@@ -164,11 +164,7 @@ def parse_layout(df: DataFrame, parser: str = "mini") -> DataFrame:
                     )
             yield pd.DataFrame(rows, columns=cols)
 
-    from .fanout import ensure_compute_fanout
-
-    # round 6: layout parsing is per-row Python — fan out an
-    # under-parallel small file scan first (no-op otherwise)
-    return ensure_compute_fanout(df).mapInPandas(batches, BLOCK_SCHEMA)
+    return df.mapInPandas(batches, BLOCK_SCHEMA)
 
 
 def extract_pdf_text(blocks: DataFrame) -> DataFrame:

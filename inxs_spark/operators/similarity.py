@@ -120,11 +120,6 @@ def cosine_topk(
     (no full sort, no shuffle of embeddings); the projection is one
     vectorized Arrow hop, rounded to 4 decimals. Rows whose vector is
     null or not query-dim score NULL and sort last."""
-    from inxs_spark.operators.fanout import ensure_compute_fanout
-
-    # round 6: a small single-row-group embeddings file plans ONE scan
-    # task — fan out before the per-row vector math (no-op at scale)
-    df = ensure_compute_fanout(df)
     raw = _query_cos_udf(np.asarray(query_vec, dtype=np.float64))(F.col(vec_col))
     out = df.select(F.col(id_col), F.round(raw, 4).alias("cos"))
     if exclude_id is not None:
@@ -170,9 +165,6 @@ def hyperplane_lsh_buckets(
     vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
-    from inxs_spark.operators.fanout import ensure_compute_fanout
-
-    df = ensure_compute_fanout(df)  # round 6: see cosine_topk
     key = bucket_key_udf(vec_col, hyperplanes(dim, n_planes, seed))
     return df.select(F.col(id_col), F.col(vec_col), key.alias("bucket"))
 
@@ -394,9 +386,6 @@ def ivf_assign(
     write this out partitioned by `cell` (or bucketed) so queries
     prune to nprobe cells at the SCAN — the IVF inverted lists ARE the
     partition layout; no shuffle at query time."""
-    from inxs_spark.operators.fanout import ensure_compute_fanout
-
-    df = ensure_compute_fanout(df)  # round 6: see cosine_topk
     cell = _cell_udf(centroids)(F.col(vec_col))
     return df.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
 
@@ -643,9 +632,6 @@ def pq_encode(
     ``(id, pq_code array<int>)`` through one Arrow hop.
     Narrow output on purpose — the codes table IS the index; the
     embedding column never travels with it."""
-    from inxs_spark.operators.fanout import ensure_compute_fanout
-
-    df = ensure_compute_fanout(df)  # round 6: see cosine_topk
     return df.select(
         F.col(id_col), _pq_code_udf(codebooks)(F.col(vec_col)).alias("pq_code")
     )
@@ -817,11 +803,8 @@ def ivfpq_write_index(
     :func:`pq_write_index`."""
     import os
 
-    from inxs_spark.operators.fanout import ensure_compute_fanout
-
     from ..sources.io import write_json_atomic
 
-    df = ensure_compute_fanout(df)  # round 6: see cosine_topk
     coded = df.select(
         F.col(id_col),
         _pq_code_udf(codebooks)(F.col(vec_col)).alias("pq_code"),
@@ -902,9 +885,6 @@ def _kmeans_stats_partials(
     per dim runs interpreted past spark.sql.codegen.maxFields), and
     the driver collects only k + k x dim scalars. Null and wrong-dim
     rows belong to no cell."""
-    from inxs_spark.operators.fanout import ensure_compute_fanout
-
-    df = ensure_compute_fanout(df)  # round 6: see cosine_topk
     C = np.ascontiguousarray(centroids, dtype=np.float64)
     half = 0.5 * (C * C).sum(axis=1)
     k, dim = C.shape
@@ -994,9 +974,6 @@ def cluster_balanced_sample(
     row sampler, not a projection."""
     from inxs_spark.operators.text import deterministic_quota
 
-    from inxs_spark.operators.fanout import ensure_compute_fanout
-
-    df = ensure_compute_fanout(df)  # round 6: see cosine_topk
     assigned = df.withColumn("cell", _cell_udf(centroids)(F.col(vec_col)))
     return deterministic_quota(
         assigned.filter(F.col("cell").isNotNull()), "cell", id_col, quota

@@ -477,12 +477,7 @@ def remove_boilerplate_lines(
     from pyspark import StorageLevel
 
     from .dedup import clamped_count
-    from .fanout import ensure_compute_fanout
 
-    # the line explode + md5 run at scan parallelism, which for small
-    # single-row-group files is 1-2 tasks (round-6 profile) — fan out
-    # first when the exchange is provably cheap (no-op at scale)
-    df = ensure_compute_fanout(df)
     freq = line_doc_freq(df, id_col, text_col, sep)
     blacklist = (
         freq.filter(F.col("n_docs") >= min_docs)
@@ -981,12 +976,6 @@ def containment_pairs(
     then emits sliding windows for exactly those lengths in the same
     single pass — cost is one extra (n−L+1)-row stream per present
     short length, so keep window_tokens small when enabling it."""
-    from .fanout import ensure_compute_fanout
-
-    # the sliding-window branch emits one md5 row per TOKEN — at scan
-    # parallelism that is single-threaded for small single-row-group
-    # files (round-6 profile); fan out first (no-op at scale)
-    df = ensure_compute_fanout(df)
     toks = F.split(F.col(text_col), " ")
     # inner: non-overlapping FULL-LENGTH windows only (a short tail
     # window could never match an outer sliding window and would cap

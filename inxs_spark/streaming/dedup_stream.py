@@ -85,6 +85,7 @@ def streaming_minhash_dedup(
         )
         pairs_dir = os.path.join(pairs_root, f"batch_id={batch_id}")
         pairs.write.mode("overwrite").parquet(pairs_dir)
+        release_checkpoint(pairs)
         pairs_read = sess.read.parquet(pairs_dir)
         clusters = connected_components(pairs_read)
         survivors = _incremental_survivors(batch_df, clusters, id_col)

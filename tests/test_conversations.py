@@ -388,3 +388,53 @@ def test_preference_pairs_tie_and_identical_filters(spark):
     )
     p = preference_pairs(turns, scores2, k_turns=2).collect()[0]
     assert (p.chosen_conv_id, p.rejected_conv_id) == ("f2", "f1")
+
+
+def test_preference_pairs_query_orders_ids_past_six_digits(spark, tmp_path):
+    """q_preference_pairs ties on score and breaks the tie by conv id,
+    which zero-pads the user id. With user ids 999999 and 1000000 (and
+    one fork partner each, every score tied) the higher user id wins
+    chosen in both engines: conv-id order is numeric order, and the
+    Spark result equals the DuckDB oracle."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    # families: user_id % 5 — {999995, 1000000} and {999999, 1000004};
+    # two events each (tied scores), sequences differ within a family
+    seqs = {999995: ("click", "view"), 1000000: ("view", "click"),
+            999999: ("click", "view"), 1000004: ("view", "click")}
+    rows = [(uid, et) for uid, seq in seqs.items() for et in seq]
+    t0 = datetime.datetime(2024, 1, 1)
+    events = pa.table({
+        "event_id": pa.array(range(len(rows)), pa.int64()),
+        "ts": pa.array(
+            [t0 + datetime.timedelta(minutes=i) for i in range(len(rows))],
+            pa.timestamp("us"),
+        ),
+        "user_id": pa.array([uid for uid, _ in rows], pa.int64()),
+        "event_type": pa.array([et for _, et in rows], pa.string()),
+    })
+    pq.write_table(events, str(tmp_path / "events.parquet"))
+
+    sdf = E.queries()["q_preference_pairs"](spark, str(tmp_path))
+    got = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM read_parquet("
+        f"'{tmp_path / 'events.parquet'}')"
+    )
+    rel = con.sql(E.oracle_sql()["q_preference_pairs"])
+    assert [c.lower() for c in sdf.columns] == rel.columns
+    assert got == rel.fetchall()
+
+    def uid(conv_id):
+        return int(conv_id.split("-u")[1])
+
+    winners = {(uid(r.chosen_conv_id), uid(r.rejected_conv_id))
+               for r in sdf.collect()}
+    assert winners == {(1000000, 999995), (1000004, 999999)}

@@ -387,6 +387,50 @@ class TestDedup:
         assert stats == {"input": 3, "output": 2}
         assert set(jsc.getPersistentRDDs().keySet()) - held == set()
 
+    @pytest.mark.parametrize("method", ["minhash", "simhash"])
+    def test_incremental_dedup_job_releases_its_checkpoints(
+        self, spark, tmp_path, method
+    ):
+        """The incremental dedup_job (a batch against a persisted index)
+        releases the pairs checkpoint the incremental operator returns,
+        as well as its own caches and component labels."""
+        from inxs_spark.jobs.dedup import dedup_job
+
+        text = "the quick brown fox jumps over the lazy dog and runs onward today"
+        first = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        batch = spark.createDataFrame(
+            [(3, text),
+             (4, "a completely different document about other things entirely here")],
+            "doc_id long, text string",
+        )
+        index_dir = str(tmp_path / "index")
+        dedup_job(first, str(tmp_path / "o1"), method=method,
+                  threshold=0.6, index_dir=index_dir)
+        jsc = spark.sparkContext._jsc
+        held = set(jsc.getPersistentRDDs().keySet())
+        stats = dedup_job(batch, str(tmp_path / "o2"), method=method,
+                          threshold=0.6, index_dir=index_dir)
+        assert stats == {"input": 2, "output": 1}
+        assert set(jsc.getPersistentRDDs().keySet()) - held == set()
+
+    def test_minhash_demo_leaves_no_cache(self, spark, tmp_path):
+        """Collecting the x_minhash_dup_pairs demo persists nothing: its
+        ordered result could not hand a cache back to be released."""
+        import __spark_entry__ as E
+
+        text = "the quick brown fox jumps over the lazy dog and runs onward today"
+        spark.createDataFrame(
+            [(1, text), (2, text + " again"), (3, "an unrelated short note")],
+            "doc_id long, text string",
+        ).write.parquet(str(tmp_path / "documents.parquet"))
+        jsc = spark.sparkContext._jsc
+        held = set(jsc.getPersistentRDDs().keySet())
+        pairs = E.extra_queries()["x_minhash_dup_pairs"](
+            spark, str(tmp_path)
+        ).collect()
+        assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
+        assert set(jsc.getPersistentRDDs().keySet()) - held == set()
+
     def test_curate_writes_metrics_table(self, spark, tmp_path):
         """out=/metrics_out= write the curated parquet plus a
         QUERYABLE per-stage attrition table (stage order, rows,

@@ -464,37 +464,10 @@ def test_contract_registry_within_driver_cap(spark):
     )
 
 
-#: plan nodes that pass the file scan's rows through unchanged in
-#: content (row filters and codegen/columnar wrappers)
-_SCAN_PASSTHROUGH = {
-    "FilterExec", "ColumnarToRowExec", "InputAdapter", "WholeStageCodegenExec",
-}
-
-
-def _reads_file_scan(node) -> bool:
-    """True iff ``node`` is the file scan, possibly under row filters."""
-    while node.getClass().getSimpleName() in _SCAN_PASSTHROUGH:
-        if node.children().size() != 1:
-            return False
-        node = node.children().apply(0)
-    return node.getClass().getSimpleName() == "FileSourceScanExec"
-
-
-def _is_scan_fanout(part: str, node) -> bool:
-    """The guarded compute fan-out (fanout.ensure_compute_fanout): a
-    ROUND-ROBIN exchange straight over the file scan. A round-robin
-    exchange anywhere else gets no exemption."""
-    return (
-        "RoundRobinPartitioning" in part
-        and node.children().size() == 1
-        and _reads_file_scan(node.children().apply(0))
-    )
-
-
 def _exchange_outputs(df):
-    """(name, partitioning, attribute names, is the scan fan-out) of
-    every (shuffle/broadcast) Exchange in the FINAL executed plan
-    (AQE-resolved, so run an action first)."""
+    """(name, partitioning, attribute names) of every (shuffle/
+    broadcast) Exchange in the FINAL executed plan (AQE-resolved, so
+    run an action first)."""
     df.write.format("noop").mode("overwrite").save()
     out = []
 
@@ -509,7 +482,7 @@ def _exchange_outputs(df):
                 part = node.outputPartitioning().toString()
             except Exception:
                 part = ""
-            out.append((name, part, attrs, _is_scan_fanout(part, node)))
+            out.append((name, part, attrs))
         n = node.children().size()
         for i in range(n):
             walk(node.children().apply(i))
@@ -534,32 +507,38 @@ def test_compute_fanout_fails_closed_on_stat_error(spark, tmp_out, monkeypatch):
     path = os.path.join(tmp_out, "one_file")
     spark.range(10).coalesce(1).write.parquet(path)
     df = spark.read.parquet(path)
-    assert fanout.ensure_compute_fanout(df, target=2) is not df
+    assert fanout.ensure_compute_fanout(df) is not df
 
     def gone(p):
         raise FileNotFoundError(p)
 
     monkeypatch.setattr(fanout.os.path, "getsize", gone)
-    assert fanout.ensure_compute_fanout(df, target=2) is df
+    assert fanout.ensure_compute_fanout(df) is df
+
+
+def test_compute_fanout_sizes_percent_encoded_paths(spark, tmp_out):
+    """Spark lists a file under a directory with a space in its name
+    as ``file:/…/a%20b/part-….parquet``; the size guard decodes that
+    URI, so the single-file scan still fans out."""
+    from inxs_spark.operators.fanout import ensure_compute_fanout
+
+    path = os.path.join(tmp_out, "a b", "one_file")
+    spark.range(10).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert any("%20" in uri for uri in df.inputFiles())
+    assert ensure_compute_fanout(df) is not df
 
 
 def test_containment_exchanges_are_digest_only(spark):
     """containment_pairs at any tier must shuffle DIGESTS, never window
-    or document text, across any KEYED exchange (round-3 verdict task 9
-    plan assert). The one permitted text-bearing exchange is the
-    round-6 compute fan-out: a ROUND-ROBIN repartition directly over a
-    small file scan, whose size guards (fanout.ensure_compute_fanout) cap it
-    at provably-cheap inputs and disable it entirely at scale — keyed,
-    data-proportional exchanges remain digest-only."""
+    or document text, across any exchange."""
     from inxs_spark.operators.text import containment_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ex = _exchange_outputs(containment_pairs(docs))
     assert ex, "expected at least one exchange"
     forbidden = {"text", "line", "__t", "__toks"}
-    for name, part, attrs, scan_fanout in ex:
-        if scan_fanout:
-            continue  # the guarded fan-out; never fires at scale
+    for name, part, attrs in ex:
         assert not (forbidden & set(attrs)), (name, part, attrs)
 
 
@@ -574,12 +553,10 @@ def test_boilerplate_exchanges_never_carry_documents(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ex = _exchange_outputs(remove_boilerplate_lines(docs, min_docs=5))
     assert ex, "expected at least one exchange"
-    for name, part, attrs, scan_fanout in ex:
-        if scan_fanout:
-            continue  # round-6 guarded fan-out (see containment test)
+    for name, part, attrs in ex:
         assert "text" not in attrs, (name, part, attrs)
     digest_ex = [
-        attrs for _n, _p, attrs, _f in ex
+        attrs for _n, _p, attrs in ex
         if "line_md5" in attrs or any(a.startswith("n_docs") for a in attrs)
     ]
     assert any("line" not in attrs for attrs in digest_ex), ex
