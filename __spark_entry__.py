@@ -2559,6 +2559,7 @@ def x_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inxs_spark.operators.dedup import (
         minhash_dedup_pairs_incremental,
         minhash_write_index,
+        release_checkpoint,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -2567,15 +2568,19 @@ def x_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = tempfile.mkdtemp(prefix="inxs_demo_mhidx_")
     try:
         minhash_write_index(corpus, index_dir, num_perm=32, bands=8)
-        # append=True exercises the crash-safe append path too; the
-        # returned frame is a localCheckpoint, so the index dir can
-        # be deleted before the caller's action
+        # append=True exercises the crash-safe append path too
         pairs = minhash_dedup_pairs_incremental(
             batch, index_dir, threshold=0.5, append=True
         )
+        # the verified pairs are few: hand them back as local rows,
+        # so the returned checkpoint is released here and neither it
+        # nor the index dir outlives this call
+        rows = pairs.orderBy("id_a", "id_b").collect()
+        schema = pairs.schema
+        release_checkpoint(pairs)
     finally:
         shutil.rmtree(index_dir, ignore_errors=True)
-    return pairs.orderBy("id_a", "id_b")
+    return spark.createDataFrame(rows, schema)
 
 
 def x_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

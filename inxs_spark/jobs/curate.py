@@ -106,6 +106,7 @@ def curate(
 
     from ..operators.dedup import (
         connected_components,
+        derive_max_bucket,
         exact_dedup,
         keep_cluster_min,
         minhash_dedup_pairs,
@@ -155,19 +156,22 @@ def curate(
         c0.unpersist()
 
     t = time.monotonic()
-    # prune_verify: the eager jobs-path verify (candidates materialize
-    # once, verify touches candidate docs only); the cache it pins is
-    # released right after connected components consumes the edges,
-    # keeping this function's release-everything contract
+    # prune_verify="auto": the candidate pairs are cached and counted,
+    # and the verify touches candidate docs only once the corpus is
+    # large. The hot-bucket cap comes from the count this stage
+    # already took, so the LSH step runs no corpus count of its own.
     pairs = minhash_dedup_pairs(
         deduped, id_col=id_col, text_col=dd_col,
         threshold=jaccard_threshold, prune_verify="auto",
         corpus_n_rows=stats["after_exact_dedup"],
+        max_bucket=derive_max_bucket(stats["after_exact_dedup"]),
     )
     # component-correct: keep the min id of every CONNECTED near-dup
-    # cluster (pairwise loser-dropping over-deletes on chains A~B~C);
-    # connected_components materializes the edge set eagerly — those
-    # bounded jobs read the deduped CACHE, not the input
+    # cluster (pairwise loser-dropping over-deletes on chains A~B~C).
+    # connected_components scans the verified pairs once, inside the
+    # call: its edge count materializes the edge checkpoint, so the
+    # verify runs exactly once and reads the deduped CACHE, not the
+    # input
     clusters = connected_components(pairs)
     pruned = keep_cluster_min(deduped, clusters, id_col)
     if normalize:
@@ -175,12 +179,10 @@ def curate(
     pruned = pruned.persist(lvl)
     stats["after_near_dup_prune"] = pruned.count()
     walls["after_near_dup_prune"] = time.monotonic() - t
-    # release the candidate-pairs cache only AFTER pruned.count() has
-    # materialized: releasing it earlier was safe only because
-    # connected_components eagerly localCheckpoints the edge set — an
-    # implicit cross-module coupling; if that eagerness ever changed,
-    # the verify stage would silently re-execute from the source scan
-    # (round-4 advice)
+    # every reader of the candidate cache, the CC labels and the
+    # deduped cache has run once pruned.count() has materialized, so
+    # all three are released here, keeping this function's
+    # release-everything contract
     if getattr(pairs, "_candidate_pairs_cache", None) is not None:
         pairs._candidate_pairs_cache.unpersist()
     release_checkpoint(clusters)

@@ -33,11 +33,6 @@ FRAGMENT_TAG = "#fragment"
 _NON_TEXT_TAGS = (COMMENT_TAG, PI_TAG)
 
 
-def is_element(node: "Node") -> bool:
-    """True for real elements; False for comment/PI/fragment nodes."""
-    return not node.tag.startswith("#")
-
-
 #: Global structural-mutation version, bumped whenever an element is
 #: DETACHED from a tree (Node.remove, lib._remove_one). The executor
 #: snapshots it at walk start: while unchanged, every materialized node

@@ -344,10 +344,11 @@ def _pairs_from_memberships(exploded: DataFrame, max_bucket: int) -> DataFrame:
 
 
 #: below this corpus size the lazy verify plan wins: the semi-prune's
-#: extra joins cost more than just shingling a small corpus twice.
-#: Re-measured in round 6 after the compute fan-out landed: at 50k docs
-#: / 2.6k candidate pairs the pruned plan beat the lazy one by ~2s
-#: (5.5 vs 7.7s warm, tools/exp notes in OPTIMIZATION_r06.md), so the
+#: extra joins cost more than just shingling a small corpus.
+#: Measured in round 6, after the compute fan-out landed and while the
+#: lazy plan still shingled the corpus twice: at 50k docs / 2.6k
+#: candidate pairs the pruned plan beat the lazy one by ~2s (5.5 vs
+#: 7.7s warm, tools/exp notes in OPTIMIZATION_r06.md), so the
 #: crossover sits well below the old 200k estimate; 20k keeps tiny
 #: corpora (sf0.001/0.01, unit tests) on the cheaper lazy plan.
 AUTO_PRUNE_MIN_CORPUS = 20_000
@@ -366,8 +367,8 @@ def jaccard_verify(
 ) -> DataFrame:
     """Exact shingle-Jaccard on candidate pairs (JVM array set ops);
     keeps pairs ≥ threshold. The default builds a fully LAZY plan
-    whose id→shingle joins compute the shingle projection over the
-    whole corpus (cheap JVM passes; AQE broadcasts the small pairs
+    whose one id→shingle join computes the shingle projection over
+    the whole corpus (a cheap JVM pass; AQE broadcasts the small pairs
     side).
 
     ``prune_to_candidates=True`` is the jobs-path shape for huge
@@ -392,8 +393,8 @@ def jaccard_verify(
     anyway), then the corpus is semi-pruned ONLY when it is large
     (``corpus_n_rows`` hint, or a clamped count probe) AND the
     candidate ids are a small minority of it (8·n_pairs ≤ n) — below
-    either bound the lazy plan's two cheap corpus shingle passes beat
-    the prune's extra joins. The prune path shows in the returned
+    either bound the lazy plan's cheap corpus shingle pass beats the
+    prune's extra joins. The prune path shows in the returned
     plan as the corpus ``LeftSemi`` join."""
     extra = ["max_dropped"] if "max_dropped" in pairs.columns else []
     pairs_cache = None
@@ -434,20 +435,32 @@ def jaccard_verify(
         base = df
     # the shingle projection below is interpreted HOF-lambda work (no
     # codegen) — the priciest per-row compute in the funnel; fan out an
-    # under-parallel small scan before paying it twice (a measured win,
-    # see the rule in fanout.py)
+    # under-parallel small scan before paying it (a measured win, see
+    # the rule in fanout.py)
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     base = ensure_compute_fanout(base)
     sh = base.select(
         F.col(id_col).alias("id"), shingles(text_col, k, mode).alias("sh")
     )
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    # dropped-coverage column (if present) rides through the verify so
-    # downstream consumers see where the hot-bucket cap bound
+    # each pair's two ids meet the shingle projection in ONE join (a
+    # join per side would plan the projection twice); regrouping by
+    # pair lines the two sets up again. The dropped-coverage column
+    # (if present) rides through so downstream consumers see where the
+    # hot-bucket cap bound
+    key = ["id_a", "id_b", *extra]
+    ends = pairs.select(*key, F.explode(F.array(
+        F.struct(F.lit(True).alias("is_a"), F.col("id_a").alias("id")),
+        F.struct(F.lit(False).alias("is_a"), F.col("id_b").alias("id")),
+    )).alias("end")).select(*key, "end.is_a", "end.id")
     out = (
-        pairs.join(a, "id_a").join(b, "id_b")
+        ends.join(sh, "id")
+        .groupBy(*key)
+        .agg(
+            F.max(F.when(F.col("is_a"), F.col("sh"))).alias("sh_a"),
+            F.max(F.when(~F.col("is_a"), F.col("sh"))).alias("sh_b"),
+        )
+        .filter(F.col("sh_a").isNotNull() & F.col("sh_b").isNotNull())
         .withColumn(
             "jaccard",
             F.round(
@@ -541,45 +554,54 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
     travels 2^k hops after k rounds → convergence in O(log diameter)
     shuffles, not O(diameter) (union-find path halving, the same trick
     large-star/small-star exploits). Worst case: a 1M-node chain
-    converges in ~20 rounds instead of 1M.
+    converges in ~20 rounds instead of 1M. The starting labels are
+    already one hop of hash-min (each node's min over itself and its
+    neighbors), so two-member clusters, the common near-dup case,
+    converge in the first round.
 
-    Each iteration checkpoints via localCheckpoint() to cut the plan
-    lineage — without it the join tree doubles per round and Catalyst
-    analysis cost explodes by iteration ~10. Every checkpoint but the
-    returned one is released before returning; release that one with
-    :func:`release_checkpoint` once the actions that read it have run.
-    ``metrics_dir`` receives one JSON lineage record,
-    ``cc_metrics.json`` (rounds executed, n_edges, labels changed in
-    the last round, converged flag), so a run can ALARM on
-    non-convergence instead of silently shipping under-merged
-    clusters."""
+    Every step runs once. ``pairs`` is read in ONE scan that emits
+    both edge directions; the edge set is checkpointed and its count
+    (``n_edges``, which also decides the empty case) is the action
+    that materializes it, so a lazy ``pairs`` lineage (the verify
+    joins) executes exactly once. Each round carries the previous
+    label beside the new one and checkpoints with
+    ``localCheckpoint(eager=False)``, which cuts the plan lineage
+    (without it the join tree doubles per round and Catalyst analysis
+    cost explodes by iteration ~10); the round's change count, a
+    filter ``old != new`` over that checkpoint, is the one action that
+    materializes it. Every checkpoint but the returned one is released
+    before returning; release that one with :func:`release_checkpoint`
+    once the actions that read it have run. ``metrics_dir`` receives
+    one JSON lineage record, ``cc_metrics.json`` (rounds executed,
+    n_edges, labels changed in the last round, converged flag), so a
+    run can ALARM on non-convergence instead of silently shipping
+    under-merged clusters."""
     import logging
     import os
 
     from ..sources.io import write_json_atomic
 
     edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        pairs.select(F.explode(F.array(
+            F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+            F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+        )).alias("e"))
+        .select("e.src", "e.dst")
         .distinct()
-        # materialize ONCE: every iteration joins against edges, and
-        # without the checkpoint each round (plus the metrics count)
-        # re-executes the full upstream candidate-pair lineage — LSH
-        # explode, window cap, verify joins — from the source scan
-        .localCheckpoint()
+        # every round joins against the edges: checkpointed, so no
+        # round re-executes the upstream candidate-pair lineage (LSH
+        # explode, window cap, verify joins); the count materializes it
+        .localCheckpoint(eager=False)
     )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
+    n_edges = edges.count()
+    # the starting labels already take one hash-min hop: grouping the
+    # edges by source is the shuffle that lists the nodes anyway
+    labels = edges.groupBy("src").agg(F.min("dst").alias("nbr_min")).select(
+        F.col("src").alias("id"), F.least("src", "nbr_min").alias("cluster_id")
     )
     # empty edge set (clean corpus / clean batch — the COMMON case in
-    # production re-runs): skip the iteration machinery entirely. The
-    # edges are already materialized, so this probe is a metadata-cheap
-    # count over the checkpoint, and it saves ~4-7s of driver-round
-    # latency per funnel run (round-5 curation scaling profile)
-    empty = edges.isEmpty()
-    if empty:
+    # production re-runs): skip the iteration machinery entirely
+    if n_edges == 0:
         # built from the schema alone, so it outlives the edges
         labels = labels.sparkSession.createDataFrame([], labels.schema)
         max_iters = 0
@@ -595,40 +617,38 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
             labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
             .select(
                 "id",
+                F.col("cluster_id").alias("old"),
                 F.least(
                     F.col("cluster_id"),
                     F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
+                ).alias("hashmin"),
             )
         )
         # pointer jumping: chase one level of indirection — labels now
         # reach 2^round hops, turning chain convergence logarithmic
         parents = hashmin.select(
-            F.col("id").alias("p_id"), F.col("cluster_id").alias("p_cluster")
+            F.col("id").alias("p_id"), F.col("hashmin").alias("p_cluster")
         )
         updated = (
-            hashmin.join(parents, hashmin.cluster_id == parents.p_id, "left")
+            hashmin.join(parents, hashmin.hashmin == parents.p_id, "left")
             .select(
                 "id",
+                "old",
                 F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("p_cluster"), F.col("cluster_id")),
-                ).alias("new_cluster"),
+                    F.col("hashmin"),
+                    F.coalesce(F.col("p_cluster"), F.col("hashmin")),
+                ).alias("cluster_id"),
             )
+            .localCheckpoint(eager=False)
         )
-        updated = updated.localCheckpoint()
-        changed = (
-            updated.join(labels, "id")
-            .filter(F.col("new_cluster") != F.col("cluster_id"))
-            .count()
-        )
-        labels = updated.withColumnRenamed("new_cluster", "cluster_id")
+        changed = updated.filter(F.col("old") != F.col("cluster_id")).count()
+        labels = updated.select("id", "cluster_id")
         if previous is not None:
             release_checkpoint(previous)
         previous = updated
         if changed == 0:
             break
-    converged = changed == 0 and (empty or rounds > 0)
+    converged = changed == 0 and (n_edges == 0 or rounds > 0)
     if not converged:
         logging.getLogger(__name__).warning(
             "connected_components did NOT converge in %d rounds "
@@ -639,7 +659,7 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
         write_json_atomic(os.path.join(metrics_dir, "cc_metrics.json"), [{
             "op": "connected_components",
             "rounds": rounds,
-            "n_edges": 0 if empty else edges.count(),
+            "n_edges": n_edges,
             "labels_changed_last_round": changed,
             "converged": converged,
         }])

@@ -188,6 +188,73 @@ class TestDedup:
         assert rec2["converged"] is False
         assert rec2["labels_changed_last_round"] > 0
 
+    def test_connected_components_reads_pairs_once(self, spark):
+        """Both edge directions come from ONE scan of the pairs: a
+        per-row tap on the pairs frame fires once per pair, so a lazy
+        pairs lineage (curate's verify joins) executes once, not
+        twice."""
+        from pyspark.sql import functions as F
+
+        from inxs_spark.operators.dedup import (
+            connected_components,
+            release_checkpoint,
+        )
+
+        acc = spark.sparkContext.accumulator(0)
+
+        @F.udf("long")
+        def tap(x):
+            acc.add(1)
+            return x
+
+        rows = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)]
+        pairs = spark.createDataFrame(
+            rows, "id_a long, id_b long"
+        ).withColumn("id_a", tap("id_a"))
+        clusters = connected_components(pairs)
+        got = {r.id: r.cluster_id for r in clusters.collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
+                       20: 20, 21: 20}
+        assert acc.value == len(rows), acc.value
+        release_checkpoint(clusters)
+
+    def test_connected_components_job_count(self, spark, tmp_path):
+        """One edge scan whose count materializes the edge checkpoint,
+        then one action per round: the Spark jobs the call runs on the
+        3-pair lineage fixture (2 rounds) are pinned, counted by job
+        group. The empty edge set runs no round and still records a
+        converged run over 0 edges."""
+        import json
+
+        from inxs_spark.operators.dedup import (
+            connected_components,
+            release_checkpoint,
+        )
+
+        sc = spark.sparkContext
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+        )
+        mdir = str(tmp_path / "metrics")
+        group = "test_connected_components_job_count"
+        sc.setJobGroup(group, group)
+        try:
+            clusters = connected_components(pairs, metrics_dir=mdir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        rec = json.loads(open(f"{mdir}/cc_metrics.json").read())
+        assert rec["rounds"] == 2 and rec["n_edges"] == 6, rec
+        assert n_jobs <= 20, n_jobs
+        release_checkpoint(clusters)
+
+        empty = spark.createDataFrame([], "id_a long, id_b long")
+        assert connected_components(empty, metrics_dir=mdir).count() == 0
+        rec = json.loads(open(f"{mdir}/cc_metrics.json").read())
+        assert rec == {"op": "connected_components", "rounds": 0,
+                       "n_edges": 0, "labels_changed_last_round": 0,
+                       "converged": True}
+
     def test_normalize_text(self, spark):
         from inxs_spark.operators.text import normalize_text
 
@@ -429,6 +496,26 @@ class TestDedup:
             spark, str(tmp_path)
         ).collect()
         assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
+        assert set(jsc.getPersistentRDDs().keySet()) - held == set()
+
+    def test_incremental_demo_leaves_no_cache(self, spark, tmp_path):
+        """Collecting the x_incremental_dedup demo persists nothing:
+        the incremental pairs checkpoint is released inside the demo,
+        because its ordered result could not hand it back."""
+        import __spark_entry__ as E
+
+        text = "the quick brown fox jumps over the lazy dog and runs onward today"
+        spark.createDataFrame(
+            [(1, text), (2, "an unrelated short note about the weather"),
+             (5, text + " again"), (10, "a different batch document entirely")],
+            "doc_id long, text string",
+        ).write.parquet(str(tmp_path / "documents.parquet"))
+        jsc = spark.sparkContext._jsc
+        held = set(jsc.getPersistentRDDs().keySet())
+        pairs = E.extra_queries()["x_incremental_dedup"](
+            spark, str(tmp_path)
+        ).collect()
+        assert [(p.id_a, p.id_b) for p in pairs] == [(1, 5)]
         assert set(jsc.getPersistentRDDs().keySet()) - held == set()
 
     def test_curate_writes_metrics_table(self, spark, tmp_path):
