@@ -180,12 +180,6 @@ def fused_main_content(root: Node) -> Node:
 _BOILERPLATE_SET = frozenset(BOILERPLATE_TAGS)
 _INLINE_JUNK_SET = frozenset(INLINE_JUNK_TAGS)
 
-#: the fused fast path runs whenever extraction uses the unmodified
-#: flagship preset; flip off to force the generic interpreter (the
-#: equivalence tests exercise both regardless)
-USE_FUSED_MAIN_CONTENT = True
-
-
 def text_with_spans(root: Node) -> tuple[str, list[tuple[int, int, str]]]:
     """Document-order text walk over the FINAL DOM. Returns the
     concatenated text and per-segment (start, end, path) spans.
@@ -274,7 +268,7 @@ def extract_turn(
         root, kind = parse_payload(payload)
         if root is None:  # plain text passthrough
             return payload, [(0, len(payload), "/")], None
-        if transformation is MAIN_CONTENT and USE_FUSED_MAIN_CONTENT:
+        if transformation is MAIN_CONTENT:
             transformed = fused_main_content(root)
         else:
             transformed = transformation(root)

@@ -14,8 +14,11 @@ Local smoke:
 
     python -m inxs_spark.jobs.extract --tier tiny --out /tmp/extract_out
 
-Rerunning with the same --output resumes: completed chunks are skipped
-via the manifest anti-join (exact resume, BASELINE.json:6/14).
+Rerunning with the same --output resumes: a chunk (a group of input
+files) whose manifest matches its files' (path, size, mtime_ns)
+fingerprint is skipped; new or changed chunks are recomputed, and
+chunks whose files are all gone are deleted (exact resume,
+BASELINE.json:6/14; see ``inxs_spark.plans.runner``).
 """
 
 from __future__ import annotations

@@ -817,7 +817,24 @@ def _worst_key_width(n_blocks: int, q: int) -> int:
     return q * base + max(0, q - n_narrow)
 
 
-def _simhash_block_vals(n_blocks: int) -> list[Column]:
+def _simhash_block_keys(max_hamming: int, n_blocks: int | None) -> Column:
+    """The combined-block keys of one ``simhash`` column, as an array:
+    64 bits split into ``n_blocks`` near-equal blocks, one key per
+    q-subset of blocks (q = n_blocks − max_hamming, at least 1), key =
+    xxhash64(subset index, the subset's block values). Equal subsets
+    always collide, so two signatures within ``max_hamming`` bits share
+    a key whenever n_blocks > max_hamming (pigeonhole); hash collisions
+    only ever ADD candidates. ``n_blocks=None`` derives the plan from
+    :func:`derive_simhash_blocks`. The one key builder of both the
+    batch and the incremental pair search."""
+    from itertools import combinations
+
+    if n_blocks is None:
+        n_blocks, q = derive_simhash_blocks(max_hamming)
+    else:
+        if not 1 <= n_blocks <= 64:
+            raise ValueError(f"n_blocks must be in [1, 64], got {n_blocks}")
+        q = max(n_blocks - max_hamming, 1)
     base, extra = divmod(64, n_blocks)
     widths = [base + (1 if b < extra else 0) for b in range(n_blocks)]
     offsets = [sum(widths[:b]) for b in range(n_blocks)]
@@ -828,7 +845,10 @@ def _simhash_block_vals(n_blocks: int) -> list[Column]:
             # shift already isolated a full-width block
             v = v.bitwiseAND(F.lit((1 << widths[b]) - 1))
         vals.append(v)
-    return vals
+    return F.array(*[
+        F.xxhash64(F.lit(t), *[vals[i] for i in combo])
+        for t, combo in enumerate(combinations(range(n_blocks), q))
+    ])
 
 
 def simhash_candidates(sigs: DataFrame, max_hamming: int,
@@ -836,22 +856,8 @@ def simhash_candidates(sigs: DataFrame, max_hamming: int,
     """Candidate pairs (id_a, id_b, sh_a, sh_b) sharing at least one
     combined-block key — the pre-verification stage, factored out so
     candidate VOLUME (the scale cost) is testable separately from
-    recall. Key = xxhash64(table_id, block values of that table's
-    block subset): equal subsets always collide (recall preserved);
-    hash collisions only ever ADD candidates."""
-    from itertools import combinations
-
-    if n_blocks is None:
-        n_blocks, q = derive_simhash_blocks(max_hamming)
-    else:
-        if not 1 <= n_blocks <= 64:
-            raise ValueError(f"n_blocks must be in [1, 64], got {n_blocks}")
-        q = max(n_blocks - max_hamming, 1)
-    vals = _simhash_block_vals(n_blocks)
-    keys = F.array(*[
-        F.xxhash64(F.lit(t), *[vals[i] for i in combo])
-        for t, combo in enumerate(combinations(range(n_blocks), q))
-    ])
+    recall (keys: :func:`_simhash_block_keys`)."""
+    keys = _simhash_block_keys(max_hamming, n_blocks)
     keyed = sigs.select("id", "simhash", F.explode(keys).alias("key"))
     a = keyed.select("key", F.col("id").alias("id_a"),
                      F.col("simhash").alias("sh_a"))
@@ -1187,10 +1193,10 @@ def simhash_dup_pairs_incremental(
     ``result._batch_sigs_cache`` after your action (the batch's one
     signature pass)."""
     import os
-    from itertools import combinations
 
     from pyspark import StorageLevel
 
+    keys = _simhash_block_keys(max_hamming, n_blocks)
     meta = _read_index_meta(index_dir, SIMHASH_INDEX_FORMAT)
     spark = new_df.sparkSession
     new_sigs = simhash(new_df, id_col, text_col).withColumnRenamed(
@@ -1200,15 +1206,6 @@ def simhash_dup_pairs_incremental(
     # index side read BEFORE any append (listing pinned pre-append)
     old_sigs = spark.read.parquet(os.path.join(index_dir, "sigs"))
 
-    if n_blocks is None:
-        n_blocks, q = derive_simhash_blocks(max_hamming)
-    else:
-        q = max(n_blocks - max_hamming, 1)
-    vals = _simhash_block_vals(n_blocks)
-    keys = F.array(*[
-        F.xxhash64(F.lit(t), *[vals[i] for i in combo])
-        for t, combo in enumerate(combinations(range(n_blocks), q))
-    ])
     new_keyed = new_sigs.select(
         "id", "simhash", F.explode(keys).alias("key")
     )

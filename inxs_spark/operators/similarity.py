@@ -408,6 +408,15 @@ def ivf_write_index(
     ).partitionBy("cell").parquet(path)
 
 
+def _nearest_cells(centroids: np.ndarray, qv: np.ndarray,
+                   nprobe: int) -> list[int]:
+    """The ``nprobe`` cells whose centroids are nearest the query by
+    squared Euclidean distance, nearest first — the driver-side probe
+    ranking of every IVF search."""
+    d2 = ((centroids - qv[None, :]) ** 2).sum(axis=1)
+    return [int(c) for c in d2.argsort()[:nprobe]]
+
+
 def ivf_topk_indexed(
     spark,
     index_path: str,
@@ -423,8 +432,7 @@ def ivf_topk_indexed(
     matching partition directories (PartitionFilters — test-asserted),
     exact cosine inside."""
     qv = np.asarray(list(query_vec), dtype=np.float64)
-    d2 = ((centroids - qv[None, :]) ** 2).sum(axis=1)
-    probes = [int(c) for c in d2.argsort()[:nprobe]]
+    probes = _nearest_cells(centroids, qv, nprobe)
     cands = spark.read.parquet(index_path).filter(F.col("cell").isin(probes))
     return cosine_topk(cands, qv, k, id_col, vec_col)
 
@@ -450,8 +458,7 @@ def ivf_topk(
         centroids = ivf_train_centroids(
             df, len(qv), n_cells, vec_col=vec_col, seed=seed
         )
-    d2 = ((centroids - qv[None, :]) ** 2).sum(axis=1)
-    probes = [int(c) for c in d2.argsort()[:nprobe]]
+    probes = _nearest_cells(centroids, qv, nprobe)
     assigned = ivf_assign(df, centroids, id_col, vec_col)
     cands = assigned.filter(F.col("cell").isin(probes))
     return cosine_topk(cands, qv, k, id_col, vec_col)
@@ -649,7 +656,9 @@ def pq_write_index(
     read ONLY ``(id, pq_code)`` — at 100 TB that is the difference
     between scanning the corpus's embedding bytes and scanning ~3% of
     them. Codebooks are written LAST as the commit marker (a partial
-    codes write without codebooks.json is unreadable, not wrong)."""
+    codes write without codebooks.json is unreadable, not wrong).
+    Query it with ``pq_topk(spark.read.parquet(<path>/codes),
+    pq_read_codebooks(<path>), query_vec)``."""
     import os
 
     from ..sources.io import write_json_atomic
@@ -734,22 +743,6 @@ def pq_topk(
         .orderBy(F.desc("approx_cos"), F.col(id_col))
         .limit(k)
     )
-
-
-def pq_topk_indexed(
-    spark,
-    path: str,
-    query_vec: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k against a materialized PQ index (:func:`pq_write_index`):
-    read codebooks.json, scan only the codes parquet."""
-    import os
-
-    books = pq_read_codebooks(path)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    return pq_topk(codes, books, query_vec, k, id_col)
 
 
 def pq_topk_reranked(
@@ -856,8 +849,7 @@ def ivfpq_topk(
     production recipe; without it the raw ADC ranking is returned."""
     cents, books = ivfpq_read_meta(path)
     qv = np.asarray(list(query_vec), dtype=np.float64)
-    d2 = ((cents - qv[None, :]) ** 2).sum(axis=1)
-    probes = [int(c) for c in d2.argsort()[:nprobe]]
+    probes = _nearest_cells(cents, qv, nprobe)
     import os
 
     codes = spark.read.parquet(os.path.join(path, "codes")).filter(

@@ -3,9 +3,9 @@
 In this sandbox tables are Parquet; in production the same calls target
 Iceberg (``format("iceberg")`` + snapshot pinning) — the seam keeps
 that a config switch (SURVEY.md §0 environment constraints; no Iceberg
-jars locally). ``input_fingerprint`` stands in for the Iceberg snapshot
-id in lineage rows (BASELINE.json:6): a hash over the input files'
-(path, size, mtime) — stable for an immutable input.
+jars locally). ``input_fingerprint`` stands in for an Iceberg snapshot
+id (BASELINE.json:6): a hash over a table's files' (path, size, mtime)
+— stable for an immutable table.
 
 Small JSON files (run records, manifests, index metadata, codebooks,
 tokenizer models) go through the same seam: :func:`write_json_atomic`

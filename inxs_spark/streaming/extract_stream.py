@@ -200,16 +200,9 @@ def streaming_curate(
     from ..jobs.curate import write_curate_metrics
     from ..operators.text import quality_score
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SPARK_SCHEMA)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(input_path)
-    )
-    deduped = (
-        stream.withColumn("__fp", F.md5(F.col("text")))
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["__fp"])
-        .drop("__fp")
+    deduped = streaming_exact_dedup(
+        spark, input_path, watermark,
+        reader_options={"maxFilesPerTrigger": "8"},
     )
     out_path = os.path.join(out_root, "curated_stream")
     checkpoint = os.path.join(out_root, "checkpoint")

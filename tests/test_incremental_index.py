@@ -203,6 +203,26 @@ class TestSimhashIncremental:
             SIMHASH_INDEX_FORMAT
         assert _read_index_meta(idx, SIMHASH_INDEX_FORMAT)["n_docs"] == 45
 
+    @pytest.mark.parametrize("n_blocks", [0, 70])
+    def test_incremental_rejects_out_of_range_n_blocks(self, spark, tmp_path,
+                                                       n_blocks):
+        """The incremental search builds its keys with the batch
+        search's key builder, so it range-checks ``n_blocks`` the same
+        way, before the batch's signature pass is cached."""
+        from inxs_spark.operators.dedup import (
+            simhash_dup_pairs_incremental, simhash_write_index,
+        )
+
+        idx = str(tmp_path / "sh_index")
+        simhash_write_index(_mk_docs(spark, _corpus_rows()), idx)
+        batch = _mk_docs(spark, _batch_rows(100))
+        cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+        with pytest.raises(ValueError, match="n_blocks"):
+            simhash_dup_pairs_incremental(
+                batch, idx, n_blocks=n_blocks, append=False,
+            )
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+
 
 class TestIncrementalDedupJob:
     def test_job_bootstrap_then_incremental(self, spark, tmp_path):

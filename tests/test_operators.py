@@ -2057,16 +2057,17 @@ class TestPQ:
         assert "Python" not in plan and "Arrow" not in plan, plan
 
     def test_index_roundtrip_scans_codes_only(self, spark, clustered, tmp_path):
-        """pq_write_index → pq_topk_indexed returns exactly the inline
-        result, reads only (vec_id, pq_code), and round-trips the
-        codebooks bit-exactly."""
+        """pq_write_index → pq_topk over the written codes and codebooks
+        returns exactly the inline result, reads only (vec_id,
+        pq_code), and round-trips the codebooks bit-exactly."""
+        import os
+
         import numpy as np
 
         from inxs_spark.operators.similarity import (
             pq_encode,
             pq_read_codebooks,
             pq_topk,
-            pq_topk_indexed,
             pq_train_codebooks,
             pq_write_index,
         )
@@ -2076,7 +2077,8 @@ class TestPQ:
         pq_write_index(clustered, books, idx)
         assert np.array_equal(pq_read_codebooks(idx), books)
         q = [0.0, 10.0, 0.0, 0.0, 0.0, 0.0, 0.5, 0.0]
-        got = pq_topk_indexed(spark, idx, q, k=7)
+        got = pq_topk(spark.read.parquet(os.path.join(idx, "codes")),
+                      pq_read_codebooks(idx), q, k=7)
         plan = got._jdf.queryExecution().executedPlan().toString()
         assert "ReadSchema" in plan and "embedding" not in plan, plan
         inline = pq_topk(pq_encode(clustered, books), books, q, k=7)

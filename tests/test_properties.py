@@ -207,20 +207,18 @@ def test_fused_main_content_equals_interpreter_on_random_doms(root):
 
 
 def test_fused_main_content_equals_interpreter_on_corpus():
-    """Every synthetic payload kind through both paths, byte-equal."""
-    import inxs_spark.extract as X
+    """Every synthetic payload kind through both paths, byte-equal: the
+    fused path runs only for the ``MAIN_CONTENT`` object itself, so a
+    fresh copy of the preset takes the generic interpreter."""
+    from inxs_spark.extract import extract_turn, main_content_transformation
     from inxs_spark.sources import synth
 
     payloads = [synth.payload(o, t) for o in range(300)
                 for t in range(min(synth.conv_length(o), 6))]
     assert len(payloads) > 1000
-    try:
-        X.USE_FUSED_MAIN_CONTENT = False
-        want = [X.extract_turn(p) for p in payloads]
-        X.USE_FUSED_MAIN_CONTENT = True
-        got = [X.extract_turn(p) for p in payloads]
-    finally:
-        X.USE_FUSED_MAIN_CONTENT = True
+    interpreter = main_content_transformation()
+    want = [extract_turn(p, interpreter) for p in payloads]
+    got = [extract_turn(p) for p in payloads]
     assert got == want
 
 

@@ -4,16 +4,13 @@ determinism across parallelism, resume exactness, lineage."""
 import json
 import os
 import shutil
+import zlib
 
 import pytest
 
 from inxs_spark.extract import MAIN_CONTENT, extract_turn
 from inxs_spark.plans.extract_pipeline import extract_df
-from inxs_spark.plans.runner import (
-    pending_chunks,
-    read_extracted,
-    run_extraction,
-)
+from inxs_spark.plans.runner import read_extracted, run_extraction
 from inxs_spark.sources import synth
 
 
@@ -86,41 +83,73 @@ def test_determinism_across_partitioning(spark, tiny_transcripts):
     assert h1 == h2 == h3
 
 
+def _manifests(out_root):
+    """chunk_id → manifest, for every group a run has committed."""
+    mdir = os.path.join(out_root, "manifests")
+    found = {}
+    for name in sorted(os.listdir(mdir)):
+        with open(os.path.join(mdir, name)) as fh:
+            rec = json.load(fh)
+        found[rec["chunk_id"]] = rec
+    return found
+
+
+def _extracted(spark, out_root):
+    return {(r.conv_id, r.turn_idx): (r.extracted_text, r.failure)
+            for r in read_extracted(spark, out_root).collect()}
+
+
+def _lineage_totals(spark, out_root):
+    rows = spark.read.parquet(os.path.join(out_root, "metrics_table")).collect()
+    return sum(r.rows_in for r in rows), sum(r.rows_out for r in rows)
+
+
+def _drop_group(out_root, k):
+    shutil.rmtree(os.path.join(out_root, "extracted", f"chunk={k}"))
+    os.remove(os.path.join(out_root, "manifests", f"chunk-{k:04d}.json"))
+
+
+def _file_groups(spark, path, chunks):
+    """The runner's grouping rule, replayed: group → local file paths."""
+    from inxs_spark.sources.io import local_path
+
+    groups = {}
+    for f in spark.read.parquet(path).inputFiles():
+        groups.setdefault(zlib.crc32(f.encode()) % chunks, []).append(
+            local_path(f))
+    return groups
+
+
 def test_resume_recomputes_only_missing_chunks(spark, tiny_transcripts, tmp_out):
     summary1 = run_extraction(
         spark, tiny_transcripts, tmp_out, chunks=4, num_partitions=4
     )
     assert summary1["chunks_run"] == summary1["chunks_total"]
-    full = {
-        (r.conv_id, r.turn_idx): (r.extracted_text, r.failure)
-        for r in read_extracted(spark, tmp_out).collect()
-    }
+    full = _extracted(spark, tmp_out)
 
-    # simulate partial loss: drop two chunks' data + manifests
-    for k in (1, 3):
-        shutil.rmtree(os.path.join(tmp_out, "extracted", f"chunk={k}"))
-        os.remove(os.path.join(tmp_out, "manifests", f"chunk-{k:04d}.json"))
-
-    assert pending_chunks(spark, tmp_out, summary1["chunks_total"]) == [1, 3]
-    # marker files to detect recomputation of completed chunks
+    # simulate partial loss: drop some groups' data + manifests (group
+    # ids come from the run: file names, hence groups, vary per input)
+    ids = sorted(_manifests(tmp_out))
+    assert len(ids) == summary1["chunks_total"]
+    lost, kept = ids[::2], ids[1::2]
+    for k in lost:
+        _drop_group(tmp_out, k)
+    # manifest mtimes detect recomputation of completed groups
     untouched = {
         k: os.path.getmtime(os.path.join(tmp_out, "manifests", f"chunk-{k:04d}.json"))
-        for k in (0, 2)
+        for k in kept
     }
 
     summary2 = run_extraction(
         spark, tiny_transcripts, tmp_out, chunks=4, num_partitions=4
     )
-    assert summary2["chunks_run"] == 2 and summary2["chunks_skipped"] == 2
+    assert summary2["chunks_run"] == len(lost)
+    assert summary2["chunks_skipped"] == len(kept)
     for k, mtime in untouched.items():
         path = os.path.join(tmp_out, "manifests", f"chunk-{k:04d}.json")
         assert os.path.getmtime(path) == mtime  # not recomputed
-
-    resumed = {
-        (r.conv_id, r.turn_idx): (r.extracted_text, r.failure)
-        for r in read_extracted(spark, tmp_out).collect()
-    }
-    assert resumed == full  # exact resume (BASELINE.json:14)
+    assert sorted(_manifests(tmp_out)) == ids
+    assert _extracted(spark, tmp_out) == full  # exact resume (BASELINE.json:14)
 
 
 def test_resume_rejects_incompatible_manifests(spark, tiny_transcripts, tmp_out):
@@ -142,13 +171,22 @@ def test_resume_rejects_incompatible_manifests(spark, tiny_transcripts, tmp_out)
                        num_partitions=2, transformation=other_rules)
 
 
-def test_incremental_extraction_on_growing_input(spark, tiny_transcripts, tmp_out):
-    """Append-corpus mode: new input files recompute only the groups
-    they land in; the final table equals a full recompute."""
+def _append_file(spark, path, n):
+    """Append ONE parquet file of ``n`` new rows to the input at path."""
     from pyspark.sql import functions as F
 
-    from inxs_spark.plans.runner import run_extraction_incremental
+    extra = spark.createDataFrame(
+        [("newconv", i, f"<p>appended {i}</p>") for i in range(n)],
+        "conv_id string, turn_idx int, text string",
+    ).withColumn("role", F.lit("user")).withColumn("tool", F.lit(None).cast("string")) \
+     .withColumn("ts", F.current_timestamp()) \
+     .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    extra.coalesce(1).write.mode("append").parquet(path)
 
+
+def test_incremental_extraction_on_growing_input(spark, tiny_transcripts, tmp_out):
+    """Append-corpus mode: new input files recompute only the groups
+    they land in; untouched rows stay as they were."""
     src = os.path.join(tmp_out, "growing_input")
     base = spark.read.parquet(tiny_transcripts).limit(400)
     # repartition, not coalesce: coalesce cannot RAISE the partition
@@ -156,32 +194,22 @@ def test_incremental_extraction_on_growing_input(spark, tiny_transcripts, tmp_ou
     # could hash into one group)
     base.repartition(4).write.mode("overwrite").parquet(src)
 
-    s1 = run_extraction_incremental(spark, src, tmp_out, groups=4)
-    assert s1["groups_run"] == s1["groups_total"]
-    first = {(r.conv_id, r.turn_idx): (r.extracted_text, r.failure)
-             for r in read_extracted(spark, tmp_out).collect()}
+    s1 = run_extraction(spark, src, tmp_out, chunks=4)
+    assert s1["chunks_run"] == s1["chunks_total"]
+    first = _extracted(spark, tmp_out)
     assert len(first) == 400
 
     # rerun without changes: everything skips
-    s2 = run_extraction_incremental(spark, src, tmp_out, groups=4)
-    assert s2["groups_run"] == 0 and s2["groups_skipped"] == s2["groups_total"]
+    s2 = run_extraction(spark, src, tmp_out, chunks=4)
+    assert s2["chunks_run"] == 0 and s2["chunks_skipped"] == s2["chunks_total"]
 
-    # append new rows (new parquet files) → only affected groups rerun
-    extra = spark.createDataFrame(
-        [("newconv", i, f"<p>appended {i}</p>") for i in range(5)],
-        "conv_id string, turn_idx int, text string",
-    ).withColumn("role", F.lit("user")).withColumn("tool", F.lit(None).cast("string")) \
-     .withColumn("ts", F.current_timestamp()) \
-     .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    extra.coalesce(1).write.mode("append").parquet(src)
-
-    s3 = run_extraction_incremental(spark, src, tmp_out, groups=4)
+    _append_file(spark, src, 5)
+    s3 = run_extraction(spark, src, tmp_out, chunks=4)
     # exactly ONE file appended → exactly one group's fingerprint
     # changed → exactly one group reruns (group placement of the file
     # is hash-random, the rerun count is not)
-    assert s3["groups_run"] == 1
-    resumed = {(r.conv_id, r.turn_idx): (r.extracted_text, r.failure)
-               for r in read_extracted(spark, tmp_out).collect()}
+    assert s3["chunks_run"] == 1
+    resumed = _extracted(spark, tmp_out)
     assert len(resumed) == 405
     assert resumed[("newconv", 0)] == ("appended 0", None)
     for key, val in first.items():
@@ -195,44 +223,93 @@ def test_incremental_extraction_on_growing_input(spark, tiny_transcripts, tmp_ou
         Rule("tr", (lib.get_text, lib.append("rows"))), name="other",
     )
     with pytest.raises(ResumeMismatch, match="rule_set_hash"):
-        run_extraction_incremental(spark, src, tmp_out, groups=4,
-                                   transformation=other)
+        run_extraction(spark, src, tmp_out, chunks=4, transformation=other)
+
+
+def test_append_reruns_one_group_and_equals_fresh_run(spark, tiny_transcripts,
+                                                      tmp_out):
+    """Resuming over an input that grew by one file reruns exactly one
+    group, and the resumed output and lineage equal a fresh run's."""
+    src = os.path.join(tmp_out, "src")
+    spark.read.parquet(tiny_transcripts).limit(100).repartition(2) \
+        .write.parquet(src)
+    out = os.path.join(tmp_out, "out")
+    run_extraction(spark, src, out, chunks=4, num_partitions=2)
+
+    _append_file(spark, src, 3)
+    resumed = run_extraction(spark, src, out, chunks=4, num_partitions=2)
+    assert resumed["chunks_run"] == 1
+    assert resumed["chunks_skipped"] == resumed["chunks_total"] - 1
+
+    fresh = os.path.join(tmp_out, "fresh")
+    run_extraction(spark, src, fresh, chunks=4, num_partitions=2)
+    assert _extracted(spark, out) == _extracted(spark, fresh)
+    assert _lineage_totals(spark, out) == _lineage_totals(spark, fresh) \
+        == (103, 103)
+
+
+def test_deleted_group_drops_its_output(spark, tiny_transcripts, tmp_out):
+    """When every file of one group is deleted, the resume deletes that
+    group's output, lineage records and manifest: output rows equal
+    the input's rows, never more."""
+    src = os.path.join(tmp_out, "src")
+    spark.read.parquet(tiny_transcripts).limit(240).repartition(12) \
+        .write.parquet(src)
+    out = os.path.join(tmp_out, "out")
+    s1 = run_extraction(spark, src, out, chunks=3, num_partitions=2)
+    ids = sorted(_manifests(out))
+    assert len(ids) == s1["chunks_total"] >= 2
+    for path in _file_groups(spark, src, 3)[ids[0]]:
+        os.remove(path)
+    n_input = spark.read.parquet(src).count()
+    assert n_input < 240
+
+    s2 = run_extraction(spark, src, out, chunks=3, num_partitions=2)
+    assert s2["chunks_dropped"] == 1 and s2["chunks_run"] == 0
+    assert sorted(_manifests(out)) == ids[1:]
+    assert read_extracted(spark, out).count() == n_input
+    assert _lineage_totals(spark, out) == (n_input, n_input)
 
 
 def test_incremental_extraction_under_a_spaced_directory(spark, tiny_transcripts,
                                                          tmp_out):
     """Spark lists input files as percent-encoded ``file:`` URIs
-    (``a%20b``); both runners must stat and read the decoded local
+    (``a%20b``); the runner must stat and read the decoded local
     path."""
-    from inxs_spark.plans.runner import run_extraction_incremental
-
     src = os.path.join(tmp_out, "a b", "input")
     spark.read.parquet(tiny_transcripts).limit(100).repartition(2) \
         .write.parquet(src)
     assert any("%20" in f for f in spark.read.parquet(src).inputFiles())
 
-    s1 = run_extraction_incremental(spark, src, tmp_out, groups=2)
-    assert s1["groups_run"] == s1["groups_total"] > 0
+    s1 = run_extraction(spark, src, tmp_out, chunks=2)
+    assert s1["chunks_run"] == s1["chunks_total"] > 0
     assert read_extracted(spark, tmp_out).count() == 100
-    s2 = run_extraction_incremental(spark, src, tmp_out, groups=2)
-    assert s2["groups_run"] == 0 and s2["groups_skipped"] == s2["groups_total"]
+    s2 = run_extraction(spark, src, tmp_out, chunks=2)
+    assert s2["chunks_run"] == 0 and s2["chunks_skipped"] == s2["chunks_total"]
 
-    chunked = os.path.join(tmp_out, "chunked")
-    assert run_extraction(spark, src, chunked, chunks=2)["chunks_run"] == 2
-    assert read_extracted(spark, chunked).count() == 100
+
+def test_non_local_input_fails_closed():
+    """A file the runner cannot stat (any non-local URI) must fail the
+    run, never be fingerprinted as unchanged."""
+    from inxs_spark.plans.runner import _group_fingerprint
+
+    with pytest.raises(ValueError, match="non-local"):
+        _group_fingerprint(["s3://bucket/t/part-0.parquet"])
 
 
 def test_resume_rejects_same_size_rewrite(spark, tiny_transcripts, tmp_out):
     """An input file rewritten in place with the same byte size but a
-    new mtime is a new snapshot: resuming over it must fail instead of
-    keeping chunks extracted from the old file."""
-    from inxs_spark.plans.runner import ResumeMismatch
+    new mtime is a changed file: its group reruns and no other group
+    does. Once its content changes, the output follows the new file:
+    no row extracted from the old file is kept."""
+    from pyspark.sql import functions as F
 
     src = os.path.join(tmp_out, "src")
     spark.read.parquet(tiny_transcripts).limit(100).repartition(2) \
         .write.parquet(src)
     out = os.path.join(tmp_out, "out")
     run_extraction(spark, src, out, chunks=2, num_partitions=2)
+    before = _manifests(out)
 
     victim = next(
         os.path.join(src, n) for n in sorted(os.listdir(src))
@@ -245,63 +322,115 @@ def test_resume_rejects_same_size_rewrite(spark, tiny_transcripts, tmp_out):
         fh.write(data)
     os.utime(victim, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
     assert os.stat(victim).st_size == st.st_size
-    with pytest.raises(ResumeMismatch, match="input_snapshot_id"):
-        run_extraction(spark, src, out, chunks=2, num_partitions=2)
+    s2 = run_extraction(spark, src, out, chunks=2, num_partitions=2)
+    assert s2["chunks_run"] == 1
+    assert s2["chunks_skipped"] == s2["chunks_total"] - 1
+    after = _manifests(out)
+    rerun = [k for k in after if after[k] != before[k]]
+    assert len(rerun) == 1
+    assert after[rerun[0]]["input_snapshot_id"] != \
+        before[rerun[0]]["input_snapshot_id"]
+
+    # new content under the same name: rows with new keys replace it
+    # (with its checksum sidecar, which Hadoop's local reader verifies)
+    repl = os.path.join(tmp_out, "repl")
+    spark.read.parquet(tiny_transcripts).limit(30) \
+        .withColumn("conv_id", F.concat(F.lit("new-"), "conv_id")) \
+        .coalesce(1).write.parquet(repl)
+    name = next(n for n in os.listdir(repl) if n.endswith(".parquet"))
+    shutil.copyfile(os.path.join(repl, name), victim)
+    head, tail = os.path.split(victim)
+    shutil.copyfile(os.path.join(repl, f".{name}.crc"),
+                    os.path.join(head, f".{tail}.crc"))
+    assert run_extraction(spark, src, out, chunks=2,
+                          num_partitions=2)["chunks_run"] == 1
+    fresh = os.path.join(tmp_out, "fresh")
+    run_extraction(spark, src, fresh, chunks=2, num_partitions=2)
+    assert _extracted(spark, out) == _extracted(spark, fresh)
 
 
 def test_midjob_failure_then_resume(spark, tiny_transcripts, tmp_out, monkeypatch):
     """Driver-loss simulation WITHOUT manifest surgery: the job dies
-    mid-run (injected failure on chunk 2); chunks committed before it
-    keep their manifests, and the plain rerun recomputes ONLY the
-    missing chunks, converging to the full result."""
+    mid-run (injected failure on the second group); the group
+    committed before it keeps its manifest, and the plain rerun
+    recomputes ONLY the missing groups, converging to the full
+    result."""
     import inxs_spark.plans.runner as R
 
     src = os.path.join(tmp_out, "src")
     base = spark.read.parquet(tiny_transcripts).limit(300)
-    base.repartition(3).write.mode("overwrite").parquet(src)
+    # 12 files in 3 groups: all 12 hashing into one group (no second
+    # group to fail on) has probability 3**-11
+    base.repartition(12).write.mode("overwrite").parquet(src)
 
     orig = R.extract_df
+    calls = []
 
     def boom(df, *a, **kw):
-        if kw.get("chunk_id") == 2:
+        calls.append(kw["chunk_id"])
+        if len(calls) == 2:
             raise RuntimeError("injected driver loss")
         return orig(df, *a, **kw)
 
     monkeypatch.setattr(R, "extract_df", boom)
     with pytest.raises(RuntimeError, match="injected driver loss"):
         run_extraction(spark, src, tmp_out, chunks=3, num_partitions=2)
-    done_before = len(os.listdir(os.path.join(tmp_out, "manifests")))
-    assert done_before == 2  # chunks 0 and 1 committed before the crash
+    assert sorted(_manifests(tmp_out)) == calls[:1]  # committed before the crash
 
     monkeypatch.setattr(R, "extract_df", orig)
     summary = run_extraction(spark, src, tmp_out, chunks=3, num_partitions=2)
-    assert summary["chunks_skipped"] == 2 and summary["chunks_run"] == 1
+    assert summary["chunks_skipped"] == 1
+    assert summary["chunks_run"] == summary["chunks_total"] - 1
     assert read_extracted(spark, tmp_out).count() == 300
+    assert _lineage_totals(spark, tmp_out) == (300, 300)
 
 
 def test_lineage_metrics(spark, tiny_transcripts, tmp_out):
-    summary = run_extraction(
-        spark, tiny_transcripts, tmp_out, chunks=2, num_partitions=4
-    )
+    run_extraction(spark, tiny_transcripts, tmp_out, chunks=2, num_partitions=4)
     metrics = spark.read.parquet(os.path.join(tmp_out, "metrics_table"))
     rows = metrics.collect()
     assert rows, "metrics table empty"
-    total_in = sum(r.rows_in for r in rows)
-    total_out = sum(r.rows_out for r in rows)
     n_input = spark.read.parquet(tiny_transcripts).count()
-    assert total_in == total_out == n_input
+    assert _lineage_totals(spark, tmp_out) == (n_input, n_input)
     hashes = {r.rule_set_hash for r in rows}
     assert hashes == {MAIN_CONTENT.fingerprint()}
-    snapshots = {r.input_snapshot_id for r in rows}
-    assert snapshots == {summary["input_snapshot_id"]}
+    # each record carries its group's input fingerprint
+    manifests = _manifests(tmp_out)
+    for r in rows:
+        assert r.input_snapshot_id == manifests[r.chunk_id]["input_snapshot_id"]
     # failures are counted (synthetic mix includes ~3% malformed)
     assert sum(r.failures for r in rows) > 0
 
 
+def test_resume_with_new_partitioning_keeps_lineage_exact(spark, tiny_transcripts,
+                                                          tmp_out):
+    """A group recomputed with fewer partitions must not leave its old
+    per-partition lineage records behind: the metrics table still sums
+    to the input row count."""
+    run_extraction(spark, tiny_transcripts, tmp_out, chunks=2, num_partitions=4)
+    _drop_group(tmp_out, min(_manifests(tmp_out)))
+    summary = run_extraction(spark, tiny_transcripts, tmp_out, chunks=2,
+                             num_partitions=2)
+    assert summary["chunks_run"] == 1
+    n_input = spark.read.parquet(tiny_transcripts).count()
+    assert _lineage_totals(spark, tmp_out) == (n_input, n_input)
+
+
 def test_manifest_contents(spark, tiny_transcripts, tmp_out):
-    run_extraction(spark, tiny_transcripts, tmp_out, chunks=2, num_partitions=2)
-    with open(os.path.join(tmp_out, "manifests", "chunk-0000.json")) as fh:
-        manifest = json.load(fh)
+    summary = run_extraction(spark, tiny_transcripts, tmp_out, chunks=2,
+                             num_partitions=2)
+    manifests = _manifests(tmp_out)
+    assert len(manifests) == summary["chunks_total"]
+    assert sum(m["n_files"] for m in manifests.values()) == \
+        len(spark.read.parquet(tiny_transcripts).inputFiles())
+    k, manifest = next(iter(manifests.items()))
+    assert set(manifest) == {
+        "run_id", "chunk_id", "n_chunks", "status", "rows_out",
+        "rule_set_hash", "n_files", "output_fingerprint", "completed_at",
+        "input_snapshot_id",
+    }
+    assert manifest["chunk_id"] == k and manifest["n_chunks"] == 2
+    assert manifest["run_id"] == summary["run_id"]
     assert manifest["status"] == "completed"
     assert manifest["rows_out"] > 0
     assert manifest["rule_set_hash"] == MAIN_CONTENT.fingerprint()

@@ -294,7 +294,8 @@ def test_jobs_extract_cli(tmp_out):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert summary["chunks_run"] == 2
+    assert summary["chunks_run"] == summary["chunks_total"] >= 1
+    assert summary["chunks_skipped"] == 0
     assert os.path.isdir(os.path.join(out_dir, "extracted"))
 
 
