@@ -17,20 +17,15 @@ gate is a codegen projection, quota sampling is a hash-ordered window.
 Dropped rows are COUNTED per stage (no silent attrition — the stats
 line and the metrics table are the lineage record).
 
-SINGLE-PASS LINEAGE (round-3 verdict finding #2): the previous
-implementation ran five uncached ``.count()`` actions, each of which
-re-executed the whole upstream lineage from the input scan, and the
-final write recomputed everything once more — a ~5-6× work multiplier
-at scale. Stage outputs are now persisted (MEMORY_AND_DISK — spills,
-never OOMs) at each boundary: every stage computes EXACTLY ONCE, the
-input is scanned EXACTLY ONCE (test-asserted via a row-tap
-accumulator), each stage count reads its own cache, and earlier
-caches are released as soon as the next stage materializes. The FINAL
-stage stays cached so the caller's action (or the ``out=`` write this
-function performs) is a cache read, not a recompute; pass ``out=`` to
-have the write + full unpersist handled here, or call
-``spark.catalog.clearCache()`` when done in library use. At
-petabyte scale the same boundaries would be checkpoint TABLES rather
+SINGLE-PASS LINEAGE: every stage computes exactly once and the input
+is scanned exactly once (test-asserted via a row-tap accumulator).
+A frame is persisted (MEMORY_AND_DISK) only when two actions read it:
+the input and ``after_exact_dedup``, whose counts size the LSH step.
+The last three stage counts ride ``DataFrame.observe`` on the one
+final action: the ``out=`` write, or with ``out=None`` one count that
+leaves the final frame cached for the caller's action (release it
+with ``spark.catalog.clearCache()`` in library use). At petabyte
+scale the persisted boundaries would be checkpoint TABLES rather
 than caches — the staging seam is this function.
 
 Local smoke:
@@ -47,7 +42,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..sources.io import compact_records, write_json_atomic
 
@@ -96,11 +91,10 @@ def curate(
     the gate stays a codegen projection either way; defaults are
     unchanged (the curation-parity oracle pins the heuristic path).
 
-    ``out=`` writes the curated parquet here (the write is a cache
-    read) and releases every cache before returning. ``metrics_out=``
-    additionally writes the per-stage attrition lineage as a QUERYABLE
-    parquet metrics table (same pattern as the extraction runner's
-    metrics_table) plus one JSON line per stage under
+    ``out=`` writes the curated parquet here and releases every cache
+    before returning. ``metrics_out=`` additionally writes the
+    per-stage attrition lineage as a QUERYABLE parquet metrics table
+    (as the extraction runner does) plus one JSON line per stage under
     ``<metrics_out>/metrics/``."""
     from pyspark import StorageLevel
 
@@ -115,7 +109,7 @@ def curate(
     from ..operators.text import (
         language_id_expr,
         normalize_expr,
-        pii_scrub,
+        pii_scrub_expr,
         quality_score_expr,
     )
 
@@ -141,9 +135,7 @@ def curate(
     # (normalize=False passes it through unchanged), do NOT
     # persist/unpersist it here: our unpersist would silently evict
     # the caller's cache entry (round-4 review finding)
-    caller_cached = (
-        df.storageLevel.useMemory or df.storageLevel.useDisk
-    )
+    caller_cached = df.storageLevel.useMemory or df.storageLevel.useDisk
     c0 = df if caller_cached else df.persist(lvl)
     stats["input"] = c0.count()
     walls["input"] = time.monotonic() - t0
@@ -171,29 +163,25 @@ def curate(
     # connected_components scans the verified pairs once, inside the
     # call: its edge count materializes the edge checkpoint, so the
     # verify runs exactly once and reads the deduped CACHE, not the
-    # input
+    # input. That checkpoint was the candidate cache's only reader.
     clusters = connected_components(pairs)
+    if getattr(pairs, "_candidate_pairs_cache", None) is not None:
+        pairs._candidate_pairs_cache.unpersist()
+    walls["after_near_dup_prune"] = time.monotonic() - t
+
+    # the last three stages run no action of their own (so the gate's
+    # wall_s is 0.0): each is counted by an Observation that the final
+    # action fills
+    obs = {s: Observation() for s in CURATE_STAGES[2:]}
+    n_rows = F.count(F.lit(1)).alias("n")
     pruned = keep_cluster_min(deduped, clusters, id_col)
     if normalize:
         pruned = pruned.drop(dd_col)
-    pruned = pruned.persist(lvl)
-    stats["after_near_dup_prune"] = pruned.count()
-    walls["after_near_dup_prune"] = time.monotonic() - t
-    # every reader of the candidate cache, the CC labels and the
-    # deduped cache has run once pruned.count() has materialized, so
-    # all three are released here, keeping this function's
-    # release-everything contract
-    if getattr(pairs, "_candidate_pairs_cache", None) is not None:
-        pairs._candidate_pairs_cache.unpersist()
-    release_checkpoint(clusters)
-    deduped.unpersist()
+    pruned = pruned.observe(obs["after_near_dup_prune"], n_rows)
 
-    t = time.monotonic()
-    # quality and language are pure column expressions — attach them
-    # with withColumn instead of the two id-joins the frame helpers
-    # would force: at 2.4M docs those joins were two full shuffles of
-    # the text frame for zero semantic difference (round-5 scaling
-    # profile of this funnel)
+    # quality, language and the scrub are column expressions attached
+    # with withColumn, never a join of the frame to its own projection
+    # (at 2.4M docs each such join was a full shuffle of the text)
     q_expr = (
         quality_model.score_expr(text_col)
         if quality_model is not None else quality_score_expr(text_col)
@@ -205,16 +193,9 @@ def curate(
     )
     if langs:
         gated = gated.filter(F.col("lang_pred").isin(list(langs)))
-    gated = gated.persist(lvl)
-    stats["after_quality_lang_gate"] = gated.count()
-    walls["after_quality_lang_gate"] = time.monotonic() - t
-    pruned.unpersist()
+    gated = gated.observe(obs["after_quality_lang_gate"], n_rows)
 
-    t = time.monotonic()
-    scrubbed = gated.join(
-        pii_scrub(gated, id_col, text_col).select(id_col, "scrubbed"), id_col
-    ).withColumn(text_col, F.col("scrubbed")).drop("scrubbed")
-
+    scrubbed = gated.withColumn(text_col, pii_scrub_expr(text_col))
     if quota_per_lang is not None:
         # shared keyed-quota primitive — same md5-hash-order selection
         # rule as the per-domain quota (one definition, no drift)
@@ -223,23 +204,26 @@ def curate(
         scrubbed = deterministic_quota(
             scrubbed, "lang_pred", id_col, quota_per_lang
         )
-    # final stage cached too: the output count AND the caller's action
-    # (or the out= write below) both read it instead of re-running
-    # scrub+quota
-    scrubbed = scrubbed.persist(lvl)
-    stats["output"] = scrubbed.count()
-    walls["output"] = time.monotonic() - t
-    gated.unpersist()
+    scrubbed = scrubbed.observe(obs["output"], n_rows)
 
+    # the final action: the write, or one count that leaves the frame
+    # cached so the caller's action reads the cache
+    t = time.monotonic()
     if out is not None:
         scrubbed.write.mode("overwrite").parquet(out)
+    else:
+        scrubbed = scrubbed.persist(lvl)
+        scrubbed.count()
+    walls["output"] = time.monotonic() - t
+    stats.update((s, int(o.get["n"])) for s, o in obs.items())
+    release_checkpoint(clusters)
+    deduped.unpersist()
+
     if metrics_out is not None:
         write_curate_metrics(
             df.sparkSession, metrics_out, stats, walls,
             run_id=run_id or uuid.uuid4().hex[:12],
         )
-    if out is not None:
-        scrubbed.unpersist()
     return scrubbed, stats
 
 
@@ -265,7 +249,12 @@ def write_curate_metrics(
     (appending is O(1) per call) and compact once at the end with
     ``compact_records(spark, metrics_out, CURATE_METRICS_SCHEMA)`` —
     recompacting every call would re-read every prior record, O(N²)
-    over a stream's lifetime (round-4 review finding)."""
+    over a stream's lifetime (round-4 review finding).
+
+    A stage's ``wall_s`` is the wall time of the Spark actions run in
+    it: for :func:`curate`, ``after_near_dup_prune`` ends when
+    connected components returns, ``after_quality_lang_gate`` is 0.0,
+    and ``output`` (the final action) also computes the gate and scrub."""
     walls = walls or {}
     stages = [s for s in CURATE_STAGES if s in stats]
     rows = []

@@ -38,7 +38,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 def _incremental_survivors(batch: DataFrame, clusters: DataFrame,
@@ -192,7 +192,7 @@ def dedup_job(
         # write the evidence pairs ONCE, then cluster from the written
         # parquet — re-deriving the pairs for connected components
         # would execute the verify joins a second time (round-4
-        # review); the same read-back pattern the survivors count uses
+        # review)
         pairs.write.mode("overwrite").parquet(os.path.join(out_root, "pairs"))
         for attr in ("_candidate_pairs_cache", "_batch_memberships_cache",
                      "_batch_sigs_cache"):
@@ -212,13 +212,13 @@ def dedup_job(
     if normalize:
         survivors = survivors.drop(dd_col)
 
-    survivors.write.mode("overwrite").parquet(
-        os.path.join(out_root, "survivors")
-    )
+    obs = Observation()
+    survivors.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(out_root, "survivors"))
     if clusters is not None:
         release_checkpoint(clusters)
-    out = df.sparkSession.read.parquet(os.path.join(out_root, "survivors"))
-    stats["output"] = out.count()
+    stats["output"] = int(obs.get["n"])
     walls["output"] = time.monotonic() - t
     if not caller_cached:
         c0.unpersist()

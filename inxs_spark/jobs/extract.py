@@ -8,7 +8,7 @@ Cluster (BASELINE.json:14):
         --conf spark.sql.execution.arrow.maxRecordsPerBatch=4096 \
         inxs_spark/jobs/extract.py \
         --input <iceberg-table-or-parquet-path> --output <out_root> \
-        --chunks 256 --salt-buckets 256
+        --chunks 256
 
 Local smoke:
 
@@ -38,7 +38,6 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--master", default=None, help="spark master (default local[*])")
     parser.add_argument("--chunks", type=int, default=8)
     parser.add_argument("--partitions", type=int, default=None)
-    parser.add_argument("--salt-buckets", type=int, default=64)
     parser.add_argument("--run-id", default=None)
     args = parser.parse_args(argv)
 
@@ -55,7 +54,6 @@ def main(argv: list[str] | None = None) -> int:
             args.out,
             chunks=args.chunks,
             num_partitions=args.partitions,
-            salt_buckets=args.salt_buckets,
             run_id=args.run_id,
         )
         print(json.dumps(summary))

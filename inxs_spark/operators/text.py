@@ -156,14 +156,20 @@ def pii_scrub(df: DataFrame, id_col: str = "doc_id",
     constructs with identical semantics in Java regex and RE2 so the
     DuckDB oracle can verify values exactly."""
     t = F.col(text_col)
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(t, EMAIL_RE, "<EMAIL>"), LONG_NUMBER_RE, "<NUM>"
-    )
     return df.select(
         F.col(id_col),
         F.regexp_count(t, F.lit(EMAIL_RE)).cast("long").alias("n_emails"),
         F.regexp_count(t, F.lit(LONG_NUMBER_RE)).cast("long").alias("n_long_numbers"),
-        scrubbed.alias("scrubbed"),
+        pii_scrub_expr(text_col).alias("scrubbed"),
+    )
+
+
+def pii_scrub_expr(text_col: str = "text") -> Column:
+    """:func:`pii_scrub`'s redacted text as a bare column expression:
+    e-mails become ``<EMAIL>``, then 7+ digit runs ``<NUM>``."""
+    return F.regexp_replace(
+        F.regexp_replace(F.col(text_col), EMAIL_RE, "<EMAIL>"),
+        LONG_NUMBER_RE, "<NUM>",
     )
 
 

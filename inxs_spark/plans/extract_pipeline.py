@@ -64,7 +64,8 @@ _OUT_ARROW = pa.schema(
     ]
 )
 
-DEFAULT_SALT_BUCKETS = 64
+#: salt width S of the repartition key; the transform pipeline uses it too
+SALT_BUCKETS = 64
 
 
 def make_extract_fn(
@@ -265,7 +266,6 @@ def extract_df(
     df: DataFrame,
     transformation: Transformation = MAIN_CONTENT,
     num_partitions: Optional[int] = None,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
     metrics_dir: Optional[str] = None,
     run_id: str = "",
     chunk_id: int = -1,
@@ -307,7 +307,7 @@ def extract_df(
     pruned = df.select("conv_id", "turn_idx", "text", *passthrough_cols)
     salted = pruned.withColumn(
         "salt",
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets)).cast("int"),
+        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(SALT_BUCKETS)).cast("int"),
     )
     return (
         salted.repartition(num_partitions, "conv_id", "salt")

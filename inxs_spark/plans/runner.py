@@ -142,7 +142,6 @@ def run_extraction(
     transformation: Transformation = MAIN_CONTENT,
     chunks: int = 8,
     num_partitions: Optional[int] = None,
-    salt_buckets: int = 64,
     run_id: Optional[str] = None,
 ) -> dict:
     """Run (or resume) the extraction job. Returns a summary dict."""
@@ -150,7 +149,8 @@ def run_extraction(
         raise ValueError(f"chunks must be >= 1, got {chunks}")
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
     rule_hash = transformation.fingerprint()
-    files = sorted(spark.read.parquet(input_path).inputFiles())
+    listing = spark.read.parquet(input_path)
+    files = sorted(listing.inputFiles())
     if not files:
         raise ValueError("input has no files")
     groups: dict[int, list[str]] = {}
@@ -190,11 +190,12 @@ def run_extraction(
     rows_total = 0
     for k in todo:
         out_path = _output_path(out_root, k)
+        # the listing's schema: no schema-inference job per group
         extract_df(
-            spark.read.parquet(*map(local_path, groups[k])),
+            spark.read.schema(listing.schema)
+            .parquet(*map(local_path, groups[k])),
             transformation,
             num_partitions=num_partitions,
-            salt_buckets=salt_buckets,
             metrics_dir=metrics_dir,
             run_id=run_id,
             chunk_id=k,

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.parse import ParseError, parse_payload
 from ..kernel.transformation import Transformation
-from .extract_pipeline import default_fanout_partitions
+from .extract_pipeline import SALT_BUCKETS, default_fanout_partitions
 
 
 def transform_df(
@@ -48,7 +48,6 @@ def transform_df(
     id_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     payload_col: str = "text",
     num_partitions: Optional[int] = None,
-    salt_buckets: int = 64,
     on_error: str = "skip",
 ) -> DataFrame:
     """Run ``transformation`` over every payload; explode each result
@@ -102,7 +101,7 @@ def transform_df(
     pruned = df.select(*id_cols, payload_col)
     salted = pruned.withColumn(
         "__salt",
-        F.pmod(F.xxhash64(*id_list), F.lit(salt_buckets)).cast("int"),
+        F.pmod(F.xxhash64(*id_list), F.lit(SALT_BUCKETS)).cast("int"),
     )
     return (
         salted.repartition(num_partitions, *id_list[:1], "__salt")

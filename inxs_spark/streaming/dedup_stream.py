@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 def streaming_minhash_dedup(
@@ -90,12 +90,14 @@ def streaming_minhash_dedup(
         clusters = connected_components(pairs_read)
         survivors = _incremental_survivors(batch_df, clusters, id_col)
         surv_dir = os.path.join(surv_root, f"batch_id={batch_id}")
-        survivors.write.mode("overwrite").parquet(surv_dir)
+        obs_kept = Observation()
+        survivors.observe(obs_kept, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(surv_dir)
         release_checkpoint(clusters)
-        rows_kept = sess.read.parquet(surv_dir).count()
         write_curate_metrics(
             sess, out_root,
-            {"input": rows_in, "output": rows_kept},
+            {"input": rows_in, "output": int(obs_kept.get["n"])},
             run_id=f"batch{batch_id}", op="streaming_minhash_dedup",
             compact=False,
         )

@@ -74,12 +74,12 @@ def _sorted_hash(df):
 
 
 def test_determinism_across_partitioning(spark, tiny_transcripts):
-    """Same input at different parallelism / salt widths → identical
-    sorted output hash (SURVEY.md §6.2 item 3)."""
+    """Same input at different parallelism → identical sorted output
+    hash (SURVEY.md §6.2 item 3)."""
     df = spark.read.parquet(tiny_transcripts)
-    h1 = _sorted_hash(extract_df(df, num_partitions=2, salt_buckets=4))
-    h2 = _sorted_hash(extract_df(df, num_partitions=16, salt_buckets=64))
-    h3 = _sorted_hash(extract_df(df, num_partitions=7, salt_buckets=1))
+    h1 = _sorted_hash(extract_df(df, num_partitions=2))
+    h2 = _sorted_hash(extract_df(df, num_partitions=16))
+    h3 = _sorted_hash(extract_df(df, num_partitions=7))
     assert h1 == h2 == h3
 
 
@@ -150,6 +150,44 @@ def test_resume_recomputes_only_missing_chunks(spark, tiny_transcripts, tmp_out)
         assert os.path.getmtime(path) == mtime  # not recomputed
     assert sorted(_manifests(tmp_out)) == ids
     assert _extracted(spark, tmp_out) == full  # exact resume (BASELINE.json:14)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_recomputed_group_runs_only_its_write_jobs(spark, tiny_transcripts, tmp_out):
+    """A recomputed group costs the Spark jobs of its extraction write
+    and nothing more: its read takes the schema of the input listing,
+    so no group runs a parquet schema-inference job."""
+    def run():
+        run_extraction(spark, tiny_transcripts, tmp_out, chunks=4,
+                       num_partitions=4)
+
+    run()
+    ids = sorted(_manifests(tmp_out))
+    skipped = _jobs_in_group(spark, "runner_all_skipped", run)
+    for k in ids:
+        _drop_group(tmp_out, k)
+    recomputed = _jobs_in_group(spark, "runner_all_recomputed", run)
+
+    files = _file_groups(spark, tiny_transcripts, 4)[ids[0]]
+    schema = spark.read.parquet(tiny_transcripts).schema
+    write = _jobs_in_group(
+        spark, "runner_one_group_write",
+        lambda: extract_df(
+            spark.read.schema(schema).parquet(*files), num_partitions=4
+        ).write.mode("overwrite").parquet(os.path.join(tmp_out, "ref")),
+    )
+    assert recomputed - skipped == len(ids) * write, (
+        recomputed, skipped, len(ids), write)
 
 
 def test_resume_rejects_incompatible_manifests(spark, tiny_transcripts, tmp_out):

@@ -238,6 +238,43 @@ def test_streaming_curate(spark, tiny_transcripts, tmp_out):
     assert len(rows) == want, (len(rows), want)
 
 
+
+def test_streaming_curate_runs_kernel_once_per_row(
+    spark, tiny_transcripts, tmp_out, monkeypatch
+):
+    """Each microbatch row reaches the extraction kernel once: the
+    quality gate is a column of the extracted frame, not a join of the
+    frame to its own projection, and both lineage counts ride the one
+    partition write."""
+    from inxs_spark.extract import extract_turn
+    from inxs_spark.jobs.curate import CURATE_METRICS_SCHEMA
+    from inxs_spark.sources.io import compact_records
+    from inxs_spark.streaming import extract_stream
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def counting_extract(payload):
+        acc.add(1)
+        return extract_turn(payload)
+
+    extract_df = extract_stream.extract_df
+    monkeypatch.setattr(
+        extract_stream, "extract_df",
+        lambda df, **kw: extract_df(df, row_fn=counting_extract, **kw),
+    )
+    src = os.path.join(tmp_out, "turns")
+    spark.read.parquet(tiny_transcripts).limit(200).write.parquet(src)
+    out_root = os.path.join(tmp_out, "curate_stream")
+    extract_stream.streaming_curate(spark, src, out_root).awaitTermination(300)
+
+    compact_records(spark, out_root, CURATE_METRICS_SCHEMA)
+    rows_in = sum(
+        r.rows for r in
+        spark.read.parquet(os.path.join(out_root, "metrics_table")).collect()
+        if r.stage == "input"
+    )
+    assert rows_in > 0 and acc.value == rows_in, (acc.value, rows_in)
+
 def test_kernel_cli_roundtrip(tmp_out):
     doc = os.path.join(tmp_out, "doc.xml")
     with open(doc, "w") as fh:
