@@ -5,8 +5,8 @@ Layers:
 - :mod:`inxs_spark.kernel`    — pure-Python rules kernel (reference
   semantics; parity oracle)
 - :mod:`inxs_spark.extract`   — text+span extraction presets
-- :mod:`inxs_spark.plans`     — Spark pipelines (salted repartition →
-  sortWithinPartitions → mapInArrow kernel executor)
+- :mod:`inxs_spark.plans`     — Spark pipelines (pruned scan →
+  mapInArrow kernel executor, no exchange and no sort)
 - :mod:`inxs_spark.sources`   — table I/O seam (parquet now, Iceberg
   via config in production) + deterministic transcript synthesis
 - :mod:`inxs_spark.operators` — training-data pipeline operators

@@ -10,8 +10,8 @@ DataFrame pipeline::
 The UDF is a pandas_udf (Arrow-batched, no per-row Python at the Spark
 API level — BASELINE.json:15); it is the same kernel the pipeline's
 mapInArrow runs, so results are byte-identical to ``extract_df``. Note
-the pipeline remains the scale path (it also salts, sorts, and writes
-lineage); the SQL function is the ad-hoc/interactive surface.
+the pipeline remains the scale path (it also writes lineage); the SQL
+function is the ad-hoc/interactive surface.
 """
 
 from __future__ import annotations

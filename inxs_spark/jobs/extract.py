@@ -37,7 +37,11 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--out", required=True, help="output root directory")
     parser.add_argument("--master", default=None, help="spark master (default local[*])")
     parser.add_argument("--chunks", type=int, default=8)
-    parser.add_argument("--partitions", type=int, default=None)
+    parser.add_argument(
+        "--partitions", type=int, default=None,
+        help="hash-repartition each group to N kernel tasks "
+        "(default: the kernel maps over the scan's own splits)",
+    )
     parser.add_argument("--run-id", default=None)
     args = parser.parse_args(argv)
 

@@ -16,7 +16,7 @@
 This is the composed job a training-data team would ship for the
 "turn a 10^12-turn transcript lake into an SFT dataset" flow; every
 stage is one of the repo's tested operators. Stage shapes: extraction
-is the salted-repartition mapInArrow pipeline (plans/
+is the scan-direct mapInArrow pipeline (plans/
 extract_pipeline.py), the loop drop is a left_anti join on a
 conv-id set produced by one window pass, the assembly is two windows
 + one conv-keyed equi-join (operators/conversations.py). Stage

@@ -4,17 +4,22 @@ Plan shape::
 
     scan (column-pruned to conv_id, turn_idx, text — Catalyst pushes
           the projection into the Parquet/Iceberg scan)
-      → withColumn(salt = xxhash64(conv_id, turn_idx) % S)
-      → repartition(P, conv_id, salt)          [one Exchange]
-      → sortWithinPartitions(conv_id, turn_idx) [Tungsten sort, no shuffle]
       → mapInArrow(kernel executor)             [the only Python hop]
 
-Skew: conversation lengths are Zipf-distributed (up to 2000 turns per
-conv_id); hashing conv_id alone would send whole conversations to one
-task. The salt spreads each conversation over ≤S partitions while the
-per-partition sort restores stable (conv_id, turn_idx) runs — per-turn
-extraction is row-independent, so correctness never depends on whole-
-conversation locality (SURVEY.md §5.2 ordering invariant).
+No exchange and no sort: per-turn extraction is row-independent, so
+neither correctness nor any consumer depends on which task sees a row
+or in what order (SURVEY.md §5.2 ordering invariant). Task balance
+comes from the scan's own splits: ``sources.session.get_spark`` asks
+for two per core (``spark.sql.files.minPartitionNum``). Spark's
+default of one per core packs small files by count, because each file
+is charged the 4 MB ``openCostInBytes`` on top of its real size, and
+one uneven split then stalls the stage; with two per core the early
+finishers take up the slack (A/B in BENCH.md "Extraction maps the
+kernel straight over the scan").
+
+``num_partitions=n`` plans one ``repartition(n, conv_id, turn_idx)``
+before the hop instead: for frames that are not file scans (built on
+the driver, or already shuffled) and for callers that ask for a width.
 
 Vectorization: ``mapInArrow`` moves batches JVM→Python via Arrow IPC
 once per ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows — no
@@ -63,10 +68,6 @@ _OUT_ARROW = pa.schema(
         ("failure", pa.string()),
     ]
 )
-
-#: salt width S of the repartition key; the transform pipeline uses it too
-SALT_BUCKETS = 64
-
 
 def make_extract_fn(
     transformation: Transformation,
@@ -201,56 +202,17 @@ def _write_partition_metrics(
 
 
 def default_fanout_partitions(df: DataFrame) -> int:
-    """Round-3 re-swept default for the per-row Python-UDF fan-out.
+    """The number of kernel tasks ``extract_df(df)`` runs: the partition
+    count of ``df``'s planned scan, read without running a Spark job.
 
-    Rule: ``cores`` (ONE wave of Python workers) when the input is at
-    most two waves of files; the input's own file count — capped at
-    32 waves — when it is bigger; ``max(cores,
-    spark.sql.shuffle.partitions)`` when the plan is not file-backed
-    (volume unknowable without running a job). The rule is
-    parallelism-RELATIVE: the same input can resolve to one wave at
-    high core counts and to the file layout at low ones — the
-    adaptive default is part of the job, including in the N-vs-4N
-    scaling evidence (each level runs its own default).
-
-    Why, measured (BASELINE.md partition-count tables): fixed
-    per-task + Python-worker-switch overhead dominates below ~25-50k
-    turns/partition, so one wave beat the old 3x-cores default by
-    28-55% on the 601k-turn tier; oversized partitions lose
-    pipelining overlap and pay n·log n sort cost, worth ~8-10% back
-    on the 2.4M-turn tier. That sweep ran while every Python task also
-    paid ~0.3 CPU-s re-reading Spark's pyspark archives on each
-    ``importlib.invalidate_caches()``, a cost the worker daemon
-    (``sources/worker_daemon.py``) now removes; the ~25-50k crossover
-    has not been re-measured without it. Following the file layout on
-    big inputs bounds partitions near the writer's granularity (at 100 TB,
-    ~800k files → ~800k partitions, not total-cores partitions of
-    30M turns). The probes here NEVER run a Spark job —
-    ``inputFiles()`` is a listing; ``df.rdd.getNumPartitions()``
-    (the round-3 first attempt) materializes every upstream shuffle
-    stage under AQE, silently doubling a derived input's most
-    expensive stages. Callers that know their row counts can pass
-    ``num_partitions`` explicitly (~25-50k turns/partition is the
-    sweet spot)."""
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())  # file listing — never a job
-    except Exception:
-        n_files = 0
-    if n_files == 0:
-        # non-file-backed plan (createDataFrame, pure-shuffle input):
-        # keep the user-tuned shuffle floor — on a dynamic-allocation
-        # cluster defaultParallelism can be tiny at session start
-        return max(cores, _shuffle_floor(spark))
-    if n_files <= 2 * cores:
-        return cores  # small input: one wave, the measured winner
-    # follow the file layout, but cap at 32 waves: file COUNT is not
-    # split count — a streaming-written corpus of 100k tiny files must
-    # not become 100k near-empty fan-out partitions (the per-task-
-    # overhead regime the re-sweep removed); 32 waves bounds task
-    # count while keeping partitions ≤ input-file granularity
-    return min(n_files, 32 * cores)
+    With no exchange in ``df``'s plan, building its RDD only lists and
+    splits the input files. A plan that already shuffles would run its
+    upstream stages under AQE to build one, so it reports the partition
+    count its final exchange asks for, before AQE coalescing."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return plan.executedPlan().outputPartitioning().numPartitions()
+    return plan.execute().getNumPartitions()
 
 
 def _shuffle_floor(spark) -> int:
@@ -279,9 +241,6 @@ def extract_df(
     source columns, e.g. ``("role",)``) ride the Arrow batch through
     the kernel hop 1:1, saving the full-corpus join-back a caller
     would otherwise need (see make_extract_fn)."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = default_fanout_partitions(df)
     passthrough_cols = tuple(passthrough_cols)
     # round-5 advice: a passthrough column colliding with the fixed
     # output schema (or the key/text inputs) used to fail deep inside
@@ -305,16 +264,9 @@ def extract_df(
             for c in passthrough_cols
         )
     pruned = df.select("conv_id", "turn_idx", "text", *passthrough_cols)
-    salted = pruned.withColumn(
-        "salt",
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(SALT_BUCKETS)).cast("int"),
-    )
-    return (
-        salted.repartition(num_partitions, "conv_id", "salt")
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .drop("salt")
-        .mapInArrow(fn, out_schema)
-    )
+    if num_partitions is not None:
+        pruned = pruned.repartition(num_partitions, "conv_id", "turn_idx")
+    return pruned.mapInArrow(fn, out_schema)
 
 
 def extract_df_deduped(
@@ -352,12 +304,9 @@ def extract_df_deduped(
     """
     spark = df.sparkSession
     if num_partitions is None:
-        # NOT the file-layout rule: this repartition carries the
-        # DISTINCT payload set, whose size is unrelated to the raw
-        # input's file count (billions of duplicate turns → thousands
-        # of fingerprints; input-splits-many near-empty partitions
-        # would reintroduce exactly the per-task overhead the
-        # partition re-sweep removed)
+        # not the scan's splits: this repartition carries the DISTINCT
+        # payload set, whose size is unrelated to the raw input's
+        # (billions of duplicate turns → thousands of fingerprints)
         num_partitions = max(
             spark.sparkContext.defaultParallelism, _shuffle_floor(spark)
         )
@@ -403,7 +352,5 @@ def extract_df_deduped(
         keyed.drop("text")
         .join(extracted_distinct, "fp")
         .drop("fp")
-        .repartition(num_partitions, "conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx")
         .select("conv_id", "turn_idx", "extracted_text", "spans", "failure")
     )

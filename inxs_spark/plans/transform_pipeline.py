@@ -9,8 +9,9 @@ MORE output records (fan-out — e.g. the reference's table-extraction
 example emits one record per table row). Output rows carry the id
 columns of their input row plus the caller's fields.
 
-Same engine discipline as the extraction pipeline: one salted
-repartition, one Arrow hop, pathological payloads contained (a
+Same engine discipline as the extraction pipeline: the Arrow hop maps
+straight over the scan (``num_partitions=n`` adds one
+``repartition(n, *id_cols)``), pathological payloads contained (a
 document that fails to parse/transform is skipped and counted, or
 raises under ``on_error='raise'``).
 
@@ -33,11 +34,10 @@ from typing import Callable, Iterator, Optional
 
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..kernel.parse import ParseError, parse_payload
 from ..kernel.transformation import Transformation
-from .extract_pipeline import SALT_BUCKETS, default_fanout_partitions
 
 
 def transform_df(
@@ -54,10 +54,6 @@ def transform_df(
     into records via ``result_fn(result, root) -> list[dict]``."""
     if on_error not in ("skip", "raise"):
         raise ValueError("on_error must be 'skip' or 'raise'")
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = default_fanout_partitions(df)
-
     out_schema_str = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in df.select(*id_cols).schema.fields
@@ -99,12 +95,6 @@ def transform_df(
             yield pa.RecordBatch.from_pylist(out_rows, schema=arrow_schema)
 
     pruned = df.select(*id_cols, payload_col)
-    salted = pruned.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(*id_list), F.lit(SALT_BUCKETS)).cast("int"),
-    )
-    return (
-        salted.repartition(num_partitions, *id_list[:1], "__salt")
-        .drop("__salt")
-        .mapInArrow(run_batches, out_schema_str)
-    )
+    if num_partitions is not None:
+        pruned = pruned.repartition(num_partitions, *id_list)
+    return pruned.mapInArrow(run_batches, out_schema_str)

@@ -3,9 +3,14 @@
 Local mode here; on a real cluster the same configs ship via
 ``spark-submit --conf`` (BASELINE.json:14). AQE stays on for runtime
 skew/coalesce re-planning; Arrow batch size bounds Python-worker memory
-per batch (SURVEY.md §5.2). Local Python workers start through
-:mod:`inxs_spark.sources.worker_daemon`, which removes the per-task cost
-of re-reading Spark's pyspark archives.
+per batch (SURVEY.md §5.2). File scans split into at least two tasks
+per core: Spark's default of one per core packs small files by count
+(each is charged the 4 MB ``openCostInBytes``), so one uneven split
+stalls a stage that runs the extraction kernel straight over the
+scan. Inputs above ``maxPartitionBytes`` × 2 × cores split as before.
+Local Python workers start through
+:mod:`inxs_spark.sources.worker_daemon`, which removes the per-task
+cost of re-reading Spark's pyspark archives.
 """
 
 from __future__ import annotations
@@ -16,6 +21,8 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS_PER_BATCH = 4096
+#: file-scan splits asked for per core (``spark.sql.files.minPartitionNum``)
+SCAN_SPLITS_PER_CORE = 2
 WORKER_DAEMON_MODULE = "inxs_spark.sources.worker_daemon"
 
 
@@ -60,4 +67,9 @@ def get_spark(
     daemon = worker_daemon_module(master)
     if daemon is not None:
         builder = builder.config("spark.python.daemon.module", daemon)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.files.minPartitionNum",
+        str(SCAN_SPLITS_PER_CORE * spark.sparkContext.defaultParallelism),
+    )
+    return spark

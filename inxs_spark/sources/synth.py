@@ -10,7 +10,7 @@ Every value is a pure function of (seed, conv_ordinal, turn_idx), so
 any process — Spark executors generating in parallel, or a serial test
 oracle — recomputes identical rows without coordination. Conversation
 lengths follow Zipf(a=1.5) clipped to [1, 2000]: the long-conversation
-skew profile the salted repartition must defuse (FIXTURES.md §1).
+skew profile the extraction stage must balance (FIXTURES.md §1).
 """
 
 from __future__ import annotations

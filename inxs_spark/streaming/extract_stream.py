@@ -3,12 +3,9 @@ pipeline → append sink; plus event-time windowed aggregation with
 watermarked late-data handling.
 
 Design: ``foreachBatch`` reuses :func:`inxs_spark.plans.extract_
-pipeline.extract_df` unchanged — salting, per-partition sort and the
-Arrow kernel UDF are identical code paths to the batch job, so batch/
-stream parity is structural, not re-implemented. (A direct
-``mapInArrow`` on the stream would also work but would lose the
-within-microbatch sort, which Structured Streaming forbids outside
-foreachBatch.)
+pipeline.extract_df` unchanged — the Arrow kernel UDF is the identical
+code path to the batch job, so batch/stream parity is structural, not
+re-implemented.
 
 Sink semantics: ``foreachBatch`` gives at-least-once REPLAY of a
 microbatch after failure, so a blind ``mode('append')`` write would

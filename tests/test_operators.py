@@ -1,6 +1,8 @@
 """Operator tests: dedup, similarity, text analysis, multimodal
 plumbing — plus plan-shape assertions (column pruning, broadcast)."""
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -1617,6 +1619,52 @@ class TestPlanShape:
         # role/tool/ts never reach the scan output
         assert "role" not in read_schema and "tool" not in read_schema
         assert "conv_id" in read_schema and "text" in read_schema
+
+    @staticmethod
+    def _kernel_plans(df, num_partitions=None):
+        """Executed plans of extract_df and transform_df over ``df``."""
+        from inxs_spark.kernel import Rule, Transformation, lib
+        from inxs_spark.plans.extract_pipeline import extract_df
+        from inxs_spark.plans.transform_pipeline import transform_df
+
+        t = Transformation(Rule("p", lib.append("ps")), result_object="context.ps")
+        frames = [
+            extract_df(df, num_partitions=num_partitions),
+            transform_df(df, t, result_schema="n int",
+                         result_fn=lambda ps, _r: [{"n": len(ps)}],
+                         num_partitions=num_partitions),
+        ]
+        return [f._jdf.queryExecution().executedPlan().toString() for f in frames]
+
+    def test_kernel_maps_over_the_scan(self, spark, tiny_transcripts):
+        """By default the Arrow hop reads the scan directly: no Exchange
+        and no Sort anywhere in either pipeline's plan."""
+        df = spark.read.parquet(tiny_transcripts)
+        assert len(df.inputFiles()) > 1
+        for plan in self._kernel_plans(df):
+            assert "FileScan parquet" in plan, plan
+            assert "Exchange" not in plan and "Sort" not in plan, plan
+
+    def test_num_partitions_plans_one_hash_exchange(self, spark, tiny_transcripts):
+        """An explicit width is one hashpartitioning on the id columns
+        with that many partitions, and still no Sort."""
+        df = spark.read.parquet(tiny_transcripts)
+        for plan in self._kernel_plans(df, num_partitions=5):
+            assert plan.count("hashpartitioning(") == 1, plan
+            assert re.search(
+                r"hashpartitioning\(conv_id#\d+, turn_idx#\d+, 5\)", plan), plan
+            assert "Sort" not in plan, plan
+
+    def test_session_splits_small_input_twice_per_core(self, spark, tmp_path):
+        """get_spark splits a small multi-file input into at least two
+        scan partitions per core (Spark's default packs it into one per
+        core: each file is charged the 4 MB open cost)."""
+        cores = spark.sparkContext.defaultParallelism
+        path = str(tmp_path / "small")
+        spark.range(1000).repartition(6 * cores).write.parquet(path)
+        df = spark.read.parquet(path)
+        assert len(df.inputFiles()) == 6 * cores
+        assert df.rdd.getNumPartitions() >= 2 * cores
 
     def test_filter_pushdown_reaches_scan(self, spark, tiny_transcripts):
         df = spark.read.parquet(tiny_transcripts).filter(F.col("role") == "tool").select("conv_id")

@@ -524,33 +524,28 @@ def test_contract_deduped_equals_plain(spark, tiny_transcripts):
 
 
 def test_default_fanout_partitions_rule(spark, tiny_transcripts, tmp_out):
-    """The three branches + boundary of the fan-out default: one wave
-    for ≤ 2-waves-of-files inputs, file layout (capped at 32 waves)
-    beyond, shuffle-conf floor for non-file-backed plans."""
+    """The reported count is the number of kernel tasks extract_df runs
+    (one lineage record each), read from the planned scan with no
+    Spark job; a plan that already shuffles reports its exchange's
+    width."""
     from inxs_spark.plans.extract_pipeline import default_fanout_partitions
 
-    cores = spark.sparkContext.defaultParallelism
-    conf_floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = spark.read.parquet(tiny_transcripts)
+    assert len(df.inputFiles()) > 1
+    got = []
+    assert _jobs_in_group(
+        spark, "fanout-count", lambda: got.append(default_fanout_partitions(df))
+    ) == 0
+    metrics = os.path.join(tmp_out, "metrics")
+    extract_df(df, metrics_dir=metrics).write.format("noop").mode(
+        "overwrite").save()
+    assert got == [len(os.listdir(metrics))]
 
-    # file-backed, few files → one wave of cores
-    few = spark.read.parquet(tiny_transcripts)
-    n_files = len(few.inputFiles())
-    if n_files <= 2 * cores:
-        assert default_fanout_partitions(few) == cores
-
-    # many files (> 2*cores) → the file layout
-    many_path = os.path.join(tmp_out, "many_files")
-    spark.range(2 * cores + 8).repartition(2 * cores + 8).write.mode(
-        "overwrite"
-    ).parquet(many_path)
-    many = spark.read.parquet(many_path)
-    got = default_fanout_partitions(many)
-    assert got == min(len(many.inputFiles()), 32 * cores)
-    assert got > 2 * cores
-
-    # non-file-backed plan → max(cores, shuffle conf), and never a job
-    derived = spark.range(10).selectExpr("id")
-    assert default_fanout_partitions(derived) == max(cores, conf_floor)
+    derived = spark.range(10).repartition(7)
+    assert _jobs_in_group(
+        spark, "fanout-derived", lambda: got.append(default_fanout_partitions(derived))
+    ) == 0
+    assert got[-1] == 7
 
 
 def test_transform_df_matches_serial_kernel(spark, tiny_transcripts):
@@ -833,4 +828,4 @@ def test_passthrough_cols_equal_join_back(spark, tiny_transcripts):
     assert "Join" not in plan
     # AQE prints final + initial sections; count the final one only
     final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange") == 1  # the salt repartition only
+    assert final.count("Exchange") == 0  # the kernel maps over the scan
