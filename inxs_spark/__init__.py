@@ -6,7 +6,8 @@ Layers:
   semantics; parity oracle)
 - :mod:`inxs_spark.extract`   — text+span extraction presets
 - :mod:`inxs_spark.plans`     — Spark pipelines (pruned scan →
-  mapInArrow kernel executor, no exchange and no sort)
+  mapInArrow kernel executor, no sort; one hash exchange only for an
+  input with fewer splits than cores)
 - :mod:`inxs_spark.sources`   — table I/O seam (parquet now, Iceberg
   via config in production) + deterministic transcript synthesis
 - :mod:`inxs_spark.operators` — training-data pipeline operators

@@ -40,7 +40,8 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument(
         "--partitions", type=int, default=None,
         help="hash-repartition each group to N kernel tasks "
-        "(default: the kernel maps over the scan's own splits)",
+        "(default: the scan's own splits, or one task per core for a "
+        "group with fewer splits than cores)",
     )
     parser.add_argument("--run-id", default=None)
     args = parser.parse_args(argv)

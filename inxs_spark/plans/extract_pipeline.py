@@ -17,9 +17,12 @@ one uneven split then stalls the stage; with two per core the early
 finishers take up the slack (A/B in BENCH.md "Extraction maps the
 kernel straight over the scan").
 
-``num_partitions=n`` plans one ``repartition(n, conv_id, turn_idx)``
-before the hop instead: for frames that are not file scans (built on
-the driver, or already shuffled) and for callers that ask for a width.
+An input with fewer splits than cores (one or two small files: a file
+group of the resumable runner, a streaming microbatch) gets one
+``repartition(cores, conv_id, turn_idx)`` before the hop instead, so
+no core idles (:func:`fanout_repartition`). ``num_partitions=n``
+plans that one repartition at width ``n``, for callers that ask for a
+width. Still no sort.
 
 Vectorization: ``mapInArrow`` moves batches JVM→Python via Arrow IPC
 once per ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows — no
@@ -201,18 +204,43 @@ def _write_partition_metrics(
     )
 
 
-def default_fanout_partitions(df: DataFrame) -> int:
-    """The number of kernel tasks ``extract_df(df)`` runs: the partition
-    count of ``df``'s planned scan, read without running a Spark job.
+def fanout_repartition(df: DataFrame) -> Optional[int]:
+    """The width ``extract_df(df)`` hash-repartitions to when it is
+    given none, or None when the kernel maps straight over ``df``.
+    Read from the planned input, never a Spark job.
 
-    With no exchange in ``df``'s plan, building its RDD only lists and
-    splits the input files. A plan that already shuffles would run its
-    upstream stages under AQE to build one, so it reports the partition
-    count its final exchange asks for, before AQE coalescing."""
+    A scan with fewer splits than cores leaves cores idle: Spark does
+    not split a file below its row group, nor a small file below the
+    4 MB ``openCostInBytes``, so an input of one or two small files
+    runs one or two tasks. A file group of the resumable runner, a
+    streaming microbatch and a single small file can be that narrow.
+    Such an input gets one hash-repartitioned task per core instead
+    (A/B in BENCH.md "Narrow inputs"). A plan that already shuffles
+    maps straight over its own partitions: building its RDD would run
+    the upstream stages under AQE."""
+    if df.isStreaming:
+        return None
     plan = df._jdf.queryExecution().executedPlan()
     if plan.nodeName() == "AdaptiveSparkPlan":
-        return plan.executedPlan().outputPartitioning().numPartitions()
-    return plan.execute().getNumPartitions()
+        return None
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if plan.execute().getNumPartitions() < cores:
+        return cores
+    return None
+
+
+def default_fanout_partitions(df: DataFrame) -> int:
+    """The number of kernel tasks ``extract_df(df)`` runs over a file
+    scan or a driver-built frame, read without running a Spark job.
+    Raises ValueError for a plan that already shuffles (see
+    :func:`fanout_repartition`)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        raise ValueError(
+            "default_fanout_partitions reads a planned scan; this plan "
+            "already shuffles"
+        )
+    return fanout_repartition(df) or plan.execute().getNumPartitions()
 
 
 def _shuffle_floor(spark) -> int:
@@ -264,6 +292,8 @@ def extract_df(
             for c in passthrough_cols
         )
     pruned = df.select("conv_id", "turn_idx", "text", *passthrough_cols)
+    if num_partitions is None:
+        num_partitions = fanout_repartition(pruned)
     if num_partitions is not None:
         pruned = pruned.repartition(num_partitions, "conv_id", "turn_idx")
     return pruned.mapInArrow(fn, out_schema)

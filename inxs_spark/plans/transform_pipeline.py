@@ -10,10 +10,11 @@ example emits one record per table row). Output rows carry the id
 columns of their input row plus the caller's fields.
 
 Same engine discipline as the extraction pipeline: the Arrow hop maps
-straight over the scan (``num_partitions=n`` adds one
-``repartition(n, *id_cols)``), pathological payloads contained (a
-document that fails to parse/transform is skipped and counted, or
-raises under ``on_error='raise'``).
+straight over the scan (an input with fewer splits than cores, or
+``num_partitions=n``, adds one ``repartition(n, *id_cols)``; see
+``extract_pipeline.fanout_repartition``), pathological payloads
+contained (a document that fails to parse/transform is skipped and
+counted, or raises under ``on_error='raise'``).
 
 Example — the reference's table-extraction shape::
 
@@ -38,6 +39,7 @@ from pyspark.sql import DataFrame
 
 from ..kernel.parse import ParseError, parse_payload
 from ..kernel.transformation import Transformation
+from .extract_pipeline import fanout_repartition
 
 
 def transform_df(
@@ -95,6 +97,8 @@ def transform_df(
             yield pa.RecordBatch.from_pylist(out_rows, schema=arrow_schema)
 
     pruned = df.select(*id_cols, payload_col)
+    if num_partitions is None:
+        num_partitions = fanout_repartition(pruned)
     if num_partitions is not None:
         pruned = pruned.repartition(num_partitions, *id_list)
     return pruned.mapInArrow(run_batches, out_schema_str)

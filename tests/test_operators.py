@@ -1655,6 +1655,20 @@ class TestPlanShape:
                 r"hashpartitioning\(conv_id#\d+, turn_idx#\d+, 5\)", plan), plan
             assert "Sort" not in plan, plan
 
+    def test_narrow_scan_plans_one_exchange_per_core(self, spark, tiny_transcripts):
+        """A scan with fewer splits than cores (one small file) is
+        hash-repartitioned on the id columns to one task per core, with
+        no Sort."""
+        cores = spark.sparkContext.defaultParallelism
+        one_file = spark.read.parquet(
+            spark.read.parquet(tiny_transcripts).inputFiles()[0])
+        for plan in self._kernel_plans(one_file):
+            assert plan.count("hashpartitioning(") == 1, plan
+            assert re.search(
+                rf"hashpartitioning\(conv_id#\d+, turn_idx#\d+, {cores}\)",
+                plan), plan
+            assert "Sort" not in plan, plan
+
     def test_session_splits_small_input_twice_per_core(self, spark, tmp_path):
         """get_spark splits a small multi-file input into at least two
         scan partitions per core (Spark's default packs it into one per

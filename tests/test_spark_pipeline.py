@@ -526,26 +526,32 @@ def test_contract_deduped_equals_plain(spark, tiny_transcripts):
 def test_default_fanout_partitions_rule(spark, tiny_transcripts, tmp_out):
     """The reported count is the number of kernel tasks extract_df runs
     (one lineage record each), read from the planned scan with no
-    Spark job; a plan that already shuffles reports its exchange's
-    width."""
+    Spark job: the scan's own splits, or one task per core for a scan
+    with fewer splits than cores. A plan that already shuffles is
+    refused."""
     from inxs_spark.plans.extract_pipeline import default_fanout_partitions
+    from inxs_spark.sources.io import local_path
 
-    df = spark.read.parquet(tiny_transcripts)
-    assert len(df.inputFiles()) > 1
-    got = []
-    assert _jobs_in_group(
-        spark, "fanout-count", lambda: got.append(default_fanout_partitions(df))
-    ) == 0
-    metrics = os.path.join(tmp_out, "metrics")
-    extract_df(df, metrics_dir=metrics).write.format("noop").mode(
-        "overwrite").save()
-    assert got == [len(os.listdir(metrics))]
+    cores = spark.sparkContext.defaultParallelism
+    wide = spark.read.parquet(tiny_transcripts)
+    assert len(wide.inputFiles()) > 1
+    largest = max(wide.inputFiles(), key=lambda f: os.path.getsize(local_path(f)))
+    narrow = spark.read.parquet(largest)
+    for name, df in (("wide", wide), ("narrow", narrow)):
+        got = []
+        assert _jobs_in_group(
+            spark, f"fanout-{name}",
+            lambda: got.append(default_fanout_partitions(df)),
+        ) == 0
+        metrics = os.path.join(tmp_out, f"metrics-{name}")
+        extract_df(df, metrics_dir=metrics).write.format("noop").mode(
+            "overwrite").save()
+        assert got == [len(os.listdir(metrics))]
+        if name == "narrow":
+            assert got == [cores]
 
-    derived = spark.range(10).repartition(7)
-    assert _jobs_in_group(
-        spark, "fanout-derived", lambda: got.append(default_fanout_partitions(derived))
-    ) == 0
-    assert got[-1] == 7
+    with pytest.raises(ValueError, match="already shuffles"):
+        default_fanout_partitions(spark.range(10).repartition(7))
 
 
 def test_transform_df_matches_serial_kernel(spark, tiny_transcripts):

@@ -183,8 +183,12 @@ def main() -> int:
             if job["kernel"]:
                 from inxs_spark.plans.extract_pipeline import extract_df
 
-                extract_df(spark.read.parquet(path).limit(20000)).agg(
-                    F.count("*")).collect()
+                # num_partitions=cores: limit() leaves one partition, and
+                # the warm-up must start one Python worker per core
+                extract_df(
+                    spark.read.parquet(path).limit(20000),
+                    num_partitions=cores,
+                ).agg(F.count("*")).collect()
             loads.append(round(os.getloadavg()[0], 2))
             wall, stats = timed(job, spark, path)
             walls[cores].append(wall)
