@@ -268,8 +268,11 @@ def minhash_band_memberships(
     # removed repartition was the funnel's largest shuffle, ~40% of
     # the memberships wall at 1.2M docs — round-5 scaling profile).
     # Small single-row-group inputs would otherwise run the signature
-    # UDF on one scan task — fan out first (a measured win, see the
-    # rule in fanout.py; a no-op unless the exchange is provably cheap).
+    # UDF on one scan task — fan out first (a measured win; a no-op
+    # unless the input plans fewer partitions than cores and does not
+    # shuffle yet, see fanout.py). Round-robin, not a hash on the id:
+    # over a few thousand documents a hash leaves the largest of four
+    # tasks about 7% above the mean, and this stage is Python compute.
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     df = ensure_compute_fanout(df)
@@ -435,8 +438,9 @@ def jaccard_verify(
         base = df
     # the shingle projection below is interpreted HOF-lambda work (no
     # codegen) — the priciest per-row compute in the funnel; fan out an
-    # under-parallel small scan before paying it (a measured win, see
-    # the rule in fanout.py)
+    # input that plans fewer partitions than cores before paying it
+    # (a measured win, see the rule in fanout.py; round-robin for the
+    # same balance as in minhash_band_memberships)
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     base = ensure_compute_fanout(base)

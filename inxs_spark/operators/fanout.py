@@ -1,75 +1,61 @@
-"""Compute fan-out for under-parallel file scans, kept only where a
-local A/B shows it helps.
+"""One fan-out rule for every Python stage.
 
-A parquet scan's parallelism is bounded by row-group count, not bytes or
-cores: a single-row-group file runs every downstream per-row
-computation on one scan task. :func:`ensure_compute_fanout` inserts a
-round-robin repartition to ``defaultParallelism`` ahead of such work,
-and only when the exchange is provably cheap and the scan provably
-under-parallel:
+A Python stage (an Arrow hop, a pandas UDF, an interpreted lambda) runs
+one task per input partition, and Spark splits no file below its row
+group nor a small file below the 4 MB ``openCostInBytes``: one or two
+small files run the stage on one or two tasks while the other cores
+idle. :func:`ensure_compute_fanout` places at most one exchange before
+such a stage, decided from the planned input alone:
 
-- the input is file-backed (``df.inputFiles()`` — a listing, never a
-  job; cached, shuffled or driver-built frames list nothing and are
-  left alone),
-- it lists fewer files than the target parallelism,
-- every file is a ``file:`` URI whose decoded path stats, and the total
-  stays under :data:`MAX_INPUT_BYTES`.
+- read the partition count ``df`` plans, without a Spark job
+  (:func:`planned_partitions`);
+- a streaming frame, a plan that already shuffles (``AdaptiveSparkPlan``)
+  or one with at least ``defaultParallelism`` partitions comes back
+  unchanged;
+- anything narrower gets ``df.repartition(cores, *keys)``: hashed on the
+  caller's id columns, round-robin when it passes none.
 
-Any other scheme, a failed stat or a large input fails closed: the
-frame comes back unchanged, so nothing tuned to one box leaks into
-cluster plans.
+Callers: ``plans.extract_pipeline.extract_df`` (``conv_id, turn_idx``),
+``plans.transform_pipeline.transform_df`` (its ``id_cols``), and
+``dedup.minhash_band_memberships`` and ``dedup.jaccard_verify`` with no
+keys: over a few thousand documents a hash on the id leaves the
+largest of four tasks about 7% above the mean, which costs the Python
+stage more than the local sort Spark puts before a round-robin
+repartition (BENCH.md "One fan-out rule").
 
-The measured rule (BENCH.md, "Compute fan-out per call site"): every
-call site was timed with fan-out on and off, local[4], sf0.1, 10
-interleaved pairs through the registry query that reaches it. A site
-keeps the call only where fan-out won at least 9 of 10 pairs and the
-median gap exceeded the off arm's interquartile range. Two sites pass,
-both in MinHash dedup, whose per-row work is a Python signature UDF and
-an interpreted shingle lambda over every document:
-
-- ``dedup.minhash_band_memberships`` (2.61 s on vs 3.40 s off, 10/10),
-- ``dedup.jaccard_verify`` (2.44 s vs 2.68 s, 10/10).
-
-SimHash, boilerplate removal, containment, every similarity operator,
-media features, PDF layout and ``q_cosine_topk`` lost or tied, and no
-longer call it.
+Measured in BENCH.md: "Compute fan-out per call site" kept only the two
+MinHash sites (the other 13 lost or tied with fan-out on), "Narrow
+inputs" timed the planned-count rule through the resumable runner, and
+the probe costs a median 38 ms per call warm. A floor on rows or bytes
+per split is still open: the small tier through the runner takes
+18.4 s with this rule against 16.0 s with no exchange.
 """
 
 from __future__ import annotations
 
-import os
+from typing import Optional
 
 from pyspark.sql import DataFrame
 
-from ..sources.io import local_path
 
-#: Above this input size the exchange is no longer "provably cheap" and
-#: the scan almost certainly has enough row groups anyway (writers cap
-#: row groups well below 256 MB).
-MAX_INPUT_BYTES = 256 * 1024 * 1024
+def planned_partitions(df: DataFrame) -> Optional[int]:
+    """The partition count ``df`` plans, read without a Spark job, or
+    None for a streaming frame or a plan that already shuffles
+    (building an adaptive plan's RDD would run its upstream stages)."""
+    if df.isStreaming:
+        return None
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return None
+    return plan.execute().getNumPartitions()
 
 
-def ensure_compute_fanout(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a small, under-parallel file-backed scan
-    to ``defaultParallelism`` so downstream per-row compute uses the
-    whole cluster; no-op (and fails closed) everywhere else."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if target <= 1:
+def ensure_compute_fanout(df: DataFrame, *keys) -> DataFrame:
+    """``df.repartition(cores, *keys)`` when ``df`` plans fewer
+    partitions than ``defaultParallelism`` and does not shuffle yet;
+    ``df`` itself otherwise."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    planned = planned_partitions(df)
+    if planned is None or planned >= cores:
         return df
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    if not files or len(files) >= target:
-        return df
-    total = 0
-    for uri in files:
-        if not uri.startswith("file:"):
-            return df  # remote FS: cannot size cheaply — leave alone
-        try:
-            total += os.path.getsize(local_path(uri))
-        except OSError:
-            return df  # vanished or unreadable since the listing
-        if total > MAX_INPUT_BYTES:
-            return df
-    return df.repartition(target)
+    return df.repartition(cores, *keys)

@@ -17,10 +17,11 @@ one uneven split then stalls the stage; with two per core the early
 finishers take up the slack (A/B in BENCH.md "Extraction maps the
 kernel straight over the scan").
 
-An input with fewer splits than cores (one or two small files: a file
-group of the resumable runner, a streaming microbatch) gets one
-``repartition(cores, conv_id, turn_idx)`` before the hop instead, so
-no core idles (:func:`fanout_repartition`). ``num_partitions=n``
+An input with fewer planned partitions than cores (one or two small
+files: a file group of the resumable runner, a streaming microbatch)
+gets one ``repartition(cores, conv_id, turn_idx)`` before the hop
+instead, so no core idles: the package's one fan-out rule,
+``operators.fanout.ensure_compute_fanout``. ``num_partitions=n``
 plans that one repartition at width ``n``, for callers that ask for a
 width. Still no sort.
 
@@ -49,6 +50,7 @@ from pyspark.sql.types import DataType
 
 from ..extract import MAIN_CONTENT, extract_turn
 from ..kernel.transformation import Transformation
+from ..operators.fanout import ensure_compute_fanout, planned_partitions
 from ..sources.io import write_json_atomic
 
 OUTPUT_SPARK_SCHEMA = (
@@ -204,43 +206,19 @@ def _write_partition_metrics(
     )
 
 
-def fanout_repartition(df: DataFrame) -> Optional[int]:
-    """The width ``extract_df(df)`` hash-repartitions to when it is
-    given none, or None when the kernel maps straight over ``df``.
-    Read from the planned input, never a Spark job.
-
-    A scan with fewer splits than cores leaves cores idle: Spark does
-    not split a file below its row group, nor a small file below the
-    4 MB ``openCostInBytes``, so an input of one or two small files
-    runs one or two tasks. A file group of the resumable runner, a
-    streaming microbatch and a single small file can be that narrow.
-    Such an input gets one hash-repartitioned task per core instead
-    (A/B in BENCH.md "Narrow inputs"). A plan that already shuffles
-    maps straight over its own partitions: building its RDD would run
-    the upstream stages under AQE."""
-    if df.isStreaming:
-        return None
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        return None
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if plan.execute().getNumPartitions() < cores:
-        return cores
-    return None
-
-
 def default_fanout_partitions(df: DataFrame) -> int:
     """The number of kernel tasks ``extract_df(df)`` runs over a file
     scan or a driver-built frame, read without running a Spark job.
-    Raises ValueError for a plan that already shuffles (see
-    :func:`fanout_repartition`)."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
+    Raises ValueError for a plan that already shuffles."""
+    planned = planned_partitions(df)
+    if planned is None:
         raise ValueError(
             "default_fanout_partitions reads a planned scan; this plan "
             "already shuffles"
         )
-    return fanout_repartition(df) or plan.execute().getNumPartitions()
+    if ensure_compute_fanout(df) is df:
+        return planned
+    return df.sparkSession.sparkContext.defaultParallelism
 
 
 def _shuffle_floor(spark) -> int:
@@ -293,8 +271,8 @@ def extract_df(
         )
     pruned = df.select("conv_id", "turn_idx", "text", *passthrough_cols)
     if num_partitions is None:
-        num_partitions = fanout_repartition(pruned)
-    if num_partitions is not None:
+        pruned = ensure_compute_fanout(pruned, "conv_id", "turn_idx")
+    else:
         pruned = pruned.repartition(num_partitions, "conv_id", "turn_idx")
     return pruned.mapInArrow(fn, out_schema)
 

@@ -10,9 +10,9 @@ example emits one record per table row). Output rows carry the id
 columns of their input row plus the caller's fields.
 
 Same engine discipline as the extraction pipeline: the Arrow hop maps
-straight over the scan (an input with fewer splits than cores, or
-``num_partitions=n``, adds one ``repartition(n, *id_cols)``; see
-``extract_pipeline.fanout_repartition``), pathological payloads
+straight over the scan (an input with fewer planned partitions than
+cores, or ``num_partitions=n``, adds one ``repartition(n, *id_cols)``;
+see ``operators.fanout.ensure_compute_fanout``), pathological payloads
 contained (a document that fails to parse/transform is skipped and
 counted, or raises under ``on_error='raise'``).
 
@@ -37,9 +37,9 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from ..kernel.parse import ParseError, parse_payload
+from ..kernel.parse import parse_payload
 from ..kernel.transformation import Transformation
-from .extract_pipeline import fanout_repartition
+from ..operators.fanout import ensure_compute_fanout
 
 
 def transform_df(
@@ -81,10 +81,6 @@ def transform_df(
                         continue  # empty/plain payloads carry no DOM
                     result = transformation(root)
                     records = result_fn(result, root)
-                except ParseError:
-                    if on_error == "raise":
-                        raise
-                    continue
                 except Exception:
                     if on_error == "raise":
                         raise
@@ -98,7 +94,7 @@ def transform_df(
 
     pruned = df.select(*id_cols, payload_col)
     if num_partitions is None:
-        num_partitions = fanout_repartition(pruned)
-    if num_partitions is not None:
+        pruned = ensure_compute_fanout(pruned, *id_list)
+    else:
         pruned = pruned.repartition(num_partitions, *id_list)
     return pruned.mapInArrow(run_batches, out_schema_str)

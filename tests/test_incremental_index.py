@@ -344,6 +344,32 @@ class TestMembershipsPlan:
         assert plan.count("sig_udf") == 1, plan
         assert "Exchange" not in plan, plan
 
+    def test_memberships_fan_out_on_narrow_input_only(self, spark, tmp_path):
+        """One small file plans fewer partitions than cores, so the
+        signature stage gets exactly one round-robin exchange to one
+        partition per core; a scan with at least one split per core
+        plans no exchange at all."""
+        from inxs_spark.operators.dedup import minhash_band_memberships
+
+        cores = spark.sparkContext.defaultParallelism
+        rows = spark.range(200).select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("doc body number "), F.col("id")).alias("text"))
+        one = str(tmp_path / "one")
+        rows.coalesce(1).write.parquet(one)
+        many = str(tmp_path / "many")
+        rows.repartition(2 * cores).write.parquet(many)
+
+        def plan(path):
+            memb = minhash_band_memberships(spark.read.parquet(path))
+            return memb._jdf.queryExecution().executedPlan().toString()
+
+        narrow = plan(one)
+        assert narrow.count("Exchange") == 1, narrow
+        assert f"RoundRobinPartitioning({cores})" in narrow, narrow
+        assert spark.read.parquet(many).rdd.getNumPartitions() >= cores
+        assert "Exchange" not in plan(many)
+
 
 class TestReplaySafety:
     def test_append_tag_ledger_and_self_exclusion(self, spark, tmp_path):

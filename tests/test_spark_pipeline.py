@@ -667,21 +667,33 @@ def _exchange_outputs(df):
     return out
 
 
-def test_compute_fanout_fails_closed_on_stat_error(spark, tmp_out, monkeypatch):
-    """A file that cannot be stat-ed (e.g. removed between the listing
-    and the size check) leaves the scan as it is instead of raising."""
-    from inxs_spark.operators import fanout
+def test_compute_fanout_runs_no_spark_job(spark, tmp_out):
+    """The fan-out rule reads the planned partition count only: no
+    Spark job on a scan, on a persisted frame that is not materialized
+    yet (with and without a shuffle in its plan) or on a driver-built
+    frame. Narrow inputs fan out; a plan that already shuffles does
+    not."""
+    from inxs_spark.operators.fanout import ensure_compute_fanout
 
     path = os.path.join(tmp_out, "one_file")
     spark.range(10).coalesce(1).write.parquet(path)
-    df = spark.read.parquet(path)
-    assert fanout.ensure_compute_fanout(df) is not df
-
-    def gone(p):
-        raise FileNotFoundError(p)
-
-    monkeypatch.setattr(fanout.os.path, "getsize", gone)
-    assert fanout.ensure_compute_fanout(df) is df
+    scan = spark.read.parquet(path)
+    cached = spark.read.parquet(path).persist()
+    shuffled = spark.read.parquet(path).repartition(3, "id").persist()
+    built = spark.createDataFrame([(1, "a")], "id long, text string").coalesce(1)
+    try:
+        for name, df, fires in (("scan", scan, True), ("cached", cached, True),
+                                ("shuffled", shuffled, False),
+                                ("built", built, True)):
+            got = []
+            assert _jobs_in_group(
+                spark, f"fanout-probe-{name}",
+                lambda: got.append(ensure_compute_fanout(df, "id")),
+            ) == 0, name
+            assert (got[0] is not df) == fires, name
+    finally:
+        cached.unpersist()
+        shuffled.unpersist()
 
 
 def test_compute_fanout_sizes_percent_encoded_paths(spark, tmp_out):
