@@ -9,23 +9,29 @@ and compiled once; the per-turn executor is pure Python and runs
 identically inside Spark Arrow batches and serially in tests (parity
 oracle, SURVEY.md §0).
 
-Span semantics: after the transformation mutates the DOM, ONE document-
-order walk concatenates text/tail segments into ``extracted_text`` and
-records for each non-empty segment its [start, end) offsets plus the
-path of the owning element (the element whose ``.text`` it is, or whose
-``.tail`` it is). Spans are computed on the FINAL DOM, never
-incrementally (SURVEY.md §8 hard-part 5).
+Span semantics: ``extracted_text`` concatenates the text/tail segments
+of the FINAL DOM in document order, and each non-empty segment gets its
+[start, end) offsets plus the path of the owning element (the element
+whose ``.text`` it is, or whose ``.tail`` it is), never computed
+incrementally (SURVEY.md §8 hard-part 5). For a generic rule set the
+payload is copied into a ``Node`` tree, the transformation mutates it,
+and ONE document-order walk (:func:`text_with_spans`) reads the result.
+For the ``MAIN_CONTENT`` object the same walk reads the parser's
+ElementTree (``main_content=True``) and emits the segments of the same
+final DOM without building or mutating it.
 """
 
 from __future__ import annotations
 
+import functools
 import re
+import xml.etree.ElementTree as ET
 from typing import Optional
 
 from .kernel import lib
 from .kernel.conditions import Any
 from .kernel.nodes import COMMENT_TAG, PI_TAG, Node
-from .kernel.parse import ParseError, parse_payload
+from .kernel.parse import ParseError, parse_payload, parse_payload_etree, sniff
 from .kernel.transformation import Ref, Rule, Transformation
 
 # payloads beyond this many characters fail fast with
@@ -106,137 +112,166 @@ def main_content_transformation() -> Transformation:
 MAIN_CONTENT = main_content_transformation()
 
 
-def fused_main_content(root: Node) -> Node:
-    """Hand-fused physical operator for the MAIN_CONTENT logical plan —
-    the kernel's analogue of a database shipping a specialized operator
-    for a hot plan shape. ONE iterative walk replaces the generic
-    condition/DI machinery; the removal steps reuse the exact lib
-    internals, in the same bucket order, so semantics are identical BY
-    CONSTRUCTION where possible and BY TEST everywhere (the equivalence
-    suite runs every corpus payload plus hypothesis-random DOMs through
-    both paths). The declarative ``MAIN_CONTENT`` object remains the
-    source of truth and the lineage ``rule_set_hash``.
-
-    Faithfulness notes mirroring the interpreter's rule order
-    (collect-boilerplate, collect-inline-junk, collect-junk-classed,
-    collect-cites/stdout, format-td/th/tr; then the four removal
-    steps):
-    - a node can enter ``trash`` twice (boilerplate AND junk-classed) —
-      harmless, the second removal is a no-op, same as the interpreter
-    - an inline-junk node with a junk class lands in BOTH lists; trash
-      removes first (tail dropped), the inline pass no-ops — exactly
-      the interpreter's outcome
-    """
-    from .kernel.lib import _remove_one
-
-    trash: list[Node] = []
-    inline: list[Node] = []
-    cites: list[Node] = []
-    unwraps: list[Node] = []
-    bo = _BOILERPLATE_SET
-    ij = _INLINE_JUNK_SET
-    junk_search = _JUNK_CLASS.search
-    stack = [root]
-    while stack:
-        node = stack.pop()
-        tag = node.tag
-        # tag conditions match qualified OR local name (MatchesTag
-        # semantics); rules use plain names, so match on the localname
-        if tag[0] == "{":
-            tag = tag[tag.index("}") + 1:]
-        if tag in bo:
-            trash.append(node)
-        if tag in ij:
-            inline.append(node)
-        attrib = node.attrib
-        if attrib:
-            cls = attrib.get("class")
-            if cls is not None and junk_search(cls):
-                trash.append(node)
-        if tag == "ref":
-            cites.append(node)
-        elif tag == "stdout":
-            unwraps.append(node)
-        elif tag == "td" or tag == "th":
-            if node.tail is None:
-                node.tail = "\t"
-        elif tag == "tr":
-            if node.tail is None:
-                node.tail = "\n"
-        children = node.children
-        if children:
-            stack.extend(reversed(children))
-    for e in trash:
-        _remove_one(e)
-    for e in inline:
-        _remove_one(e, preserve_tail=True)
-    for e in cites:
-        _remove_one(e, preserve_tail=True)
-    for e in unwraps:
-        _remove_one(e, keep_children=True, preserve_text=True, preserve_tail=True)
-    return root
+#: what the MAIN_CONTENT walk does with an element, by local name (a
+#: junk class drops any element, as boilerplate does)
+_DROP, _KEEP_TAIL, _UNWRAP = 1, 2, 3
+_ACTION = {
+    **dict.fromkeys(BOILERPLATE_TAGS, _DROP),
+    **dict.fromkeys(INLINE_JUNK_TAGS, _KEEP_TAIL),
+    "ref": _KEEP_TAIL,
+    "stdout": _UNWRAP,
+}
+#: tail a table cell/row gets when it has none (format-td/th/tr)
+_CELL_TAIL = {"td": "\t", "th": "\t", "tr": "\n"}
+#: comment/PI content is not body text (their tails are), in the Node
+#: and in the ElementTree spelling
+_NO_TEXT = frozenset((COMMENT_TAG, PI_TAG, ET.Comment, ET.ProcessingInstruction))
 
 
-_BOILERPLATE_SET = frozenset(BOILERPLATE_TAGS)
-_INLINE_JUNK_SET = frozenset(INLINE_JUNK_TAGS)
+def _junk_classed(attrib: dict, lower: bool) -> bool:
+    if lower:  # as the lowercased attribute dict of the Node copy reads
+        attrib = {k.lower(): v for k, v in attrib.items()}
+    cls = attrib.get("class")
+    return cls is not None and _JUNK_CLASS.search(cls) is not None
 
-def text_with_spans(root: Node) -> tuple[str, list[tuple[int, int, str]]]:
-    """Document-order text walk over the FINAL DOM. Returns the
-    concatenated text and per-segment (start, end, path) spans.
 
-    Iterative (explicit event stack) — document depth never recurses,
-    so arbitrarily deep payloads extract instead of failing. Paths are
-    built incrementally during the walk (equivalent to Node.path_from
-    but O(1) per node instead of an upward walk per text segment)."""
+def text_with_spans(
+    root, main_content: bool = False, lower: bool = False
+) -> tuple[str, list[tuple[int, int, str]]]:
+    """Document-order text of the FINAL DOM under ``root`` and one
+    (start, end, path) span per non-empty slot: an element's text or
+    its tail, owned by that element (``[n]`` counts same-tag siblings).
+
+    Without ``main_content`` the final DOM is ``root`` itself, the Node
+    tree a transformation left. With it, ``root`` is the parser's
+    ElementTree, read in one pass (no Node, no mutation) as the DOM the
+    ``MAIN_CONTENT`` rules leave of it; PLANS.md §9 lists the rules and
+    how kept text of dropped or unwrapped elements joins the slot before
+    them. ``lower`` reads names lowercased, as the HTML parse does.
+    Iterative: document depth never recurses."""
+    actions = _ACTION if main_content else {}
+    cell_tail = _CELL_TAIL if main_content else {}
+    no_text = _NO_TEXT
+    comment = ET.Comment
+
+    tag = root.tag
+    if type(tag) is not str:
+        tag = COMMENT_TAG if tag is comment else PI_TAG
+    elif lower:
+        tag = tag.lower()
+    local = tag[tag.index("}") + 1:] if tag[:1] == "{" else tag
+    if main_content and (actions.get(local) in (_DROP, _KEEP_TAIL)
+                         or (root.attrib and _junk_classed(root.attrib, lower))):
+        return "", []
     parts: list[str] = []
     spans: list[tuple[int, int, str]] = []
-    offset = 0
-
-    def child_paths(node: Node, path: str) -> list:
-        children = node.children
-        if len(children) == 1:
-            child = children[0]
-            return [(child, f"{path}/{child.localname}")]
-        counts: dict[str, int] = {}
-        for child in children:
-            counts[child.tag] = counts.get(child.tag, 0) + 1
-        seen: dict[str, int] = {}
-        out = []
-        for child in children:
-            if counts[child.tag] > 1:
-                nth = seen.get(child.tag, 0) + 1
-                seen[child.tag] = nth
-                out.append((child, f"{path}/{child.localname}[{nth}]"))
-            else:
-                out.append((child, f"{path}/{child.localname}"))
-        return out
-
-    # event stack: (is_tail, node, path). A child pushes its tail
-    # event BELOW its node event so the tail emits after the subtree.
-    stack: list[tuple[bool, Node, str]] = [(False, root, "/" + root.localname)]
+    offset = slot_start = 0
+    slot_path = ""
+    # events: (element, path, tail) opens the element's text slot, walks
+    # its children, then opens its tail slot; (None, path, tail) opens a
+    # tail slot; (None, None, text) adds to the open slot
+    stack: list[tuple] = [(root, "/" + local, None)]
     while stack:
-        is_tail, node, path = stack.pop()
-        if is_tail:
-            tail = node.tail
+        el, path, tail = stack.pop()
+        if path is not None:
+            if offset > slot_start:
+                spans.append((slot_start, offset, slot_path))
+                slot_start = offset
+            slot_path = path
+        if el is None:
             if tail:
-                start = offset
-                offset += len(tail)
                 parts.append(tail)
-                spans.append((start, offset, path))
+                offset += len(tail)
             continue
-        text = node.text
-        # comment/PI content is not body text; their TAILS are (the
-        # is_tail branch above handles those like any other node)
-        if text and node.tag not in (COMMENT_TAG, PI_TAG):
-            start = offset
-            offset += len(text)
+        text = el.text
+        if text and el.tag not in no_text:
             parts.append(text)
-            spans.append((start, offset, path))
-        if node.children:
-            for child, cpath in reversed(child_paths(node, path)):
-                stack.append((True, child, cpath))
-                stack.append((False, child, cpath))
+            offset += len(text)
+        if len(el):
+            # the children of the final DOM: a kept child as (child, tag,
+            # local), kept text of the others as (None, text, None)
+            kids: list[tuple] = []
+            n_kept = 0
+            it = iter(el)
+            unwrapped: list[tuple] = []  # (outer iterator, tail) per open stdout
+            while True:
+                for child in it:
+                    tag = child.tag
+                    if type(tag) is not str:
+                        tag = local = COMMENT_TAG if tag is comment else PI_TAG
+                    else:
+                        if lower:
+                            tag = tag.lower()
+                        local = tag[tag.index("}") + 1:] if tag[:1] == "{" else tag
+                        action = actions.get(local)
+                        if action == _DROP or (main_content and child.attrib
+                                               and _junk_classed(child.attrib, lower)):
+                            continue
+                        if action == _KEEP_TAIL:
+                            if child.tail:
+                                kids.append((None, child.tail, None))
+                            continue
+                        if action == _UNWRAP:
+                            if child.text:
+                                kids.append((None, child.text, None))
+                            unwrapped.append((it, child.tail))
+                            it = iter(child)
+                            break
+                    kids.append((child, tag, local))
+                    n_kept += 1
+                else:
+                    if not unwrapped:
+                        break
+                    it, text = unwrapped.pop()
+                    if text:
+                        kids.append((None, text, None))
+            if n_kept > 1:
+                counts: dict[str, int] = {}
+                for child, tag, _ in kids:
+                    if child is not None:
+                        counts[tag] = counts.get(tag, 0) + 1
+                seen: dict[str, int] = {}
+            events: list[tuple] = []
+            for child, tag, local in kids:
+                if child is None:
+                    # text ahead of the first kept child joins this
+                    # element's own text slot, which is open right now
+                    if events:
+                        events.append((None, None, tag))
+                    else:
+                        parts.append(tag)
+                        offset += len(tag)
+                    continue
+                if n_kept > 1 and counts[tag] > 1:
+                    nth = seen[tag] = seen.get(tag, 0) + 1
+                    cpath = f"{path}/{local}[{nth}]"
+                else:
+                    cpath = f"{path}/{local}"
+                text = child.tail
+                events.append((child, cpath, cell_tail.get(local) if text is None else text))
+            if events:
+                events.append((None, path, tail))
+                stack.extend(reversed(events))
+                continue
+        # no kept child: the tail slot follows at once
+        if offset > slot_start:
+            spans.append((slot_start, offset, path))
+            slot_start = offset
+        if tail:
+            parts.append(tail)
+            offset += len(tail)
+    if offset > slot_start:
+        spans.append((slot_start, offset, slot_path))
     return "".join(parts), spans
+
+
+def turn_extractor(transformation: Transformation):
+    """``payload → extract_turn(payload, transformation)``, picked before
+    pickling: a worker unpickles a COPY of ``MAIN_CONTENT``, which would
+    take the generic interpreter instead of the one-pass walk."""
+    if transformation is MAIN_CONTENT:
+        return extract_turn
+    return functools.partial(extract_turn, transformation=transformation)
 
 
 def extract_turn(
@@ -265,14 +300,15 @@ def extract_turn(
     # an escaping exception would kill the whole Arrow batch / Spark
     # task (observed: RecursionError on ~2000-deep nesting)
     try:
-        root, kind = parse_payload(payload)
-        if root is None:  # plain text passthrough
+        kind = sniff(payload)
+        if kind == "text":  # plain text passthrough
             return payload, [(0, len(payload), "/")], None
         if transformation is MAIN_CONTENT:
-            transformed = fused_main_content(root)
+            root, kind = parse_payload_etree(payload, kind)
+            text, spans = text_with_spans(root, main_content=True, lower=kind == "html")
         else:
-            transformed = transformation(root)
-        text, spans = text_with_spans(transformed)
+            root, _ = parse_payload(payload, kind)
+            text, spans = text_with_spans(transformation(root))
         return text, spans, None
     except ParseError:
         return None, [], "parse_error"

@@ -16,7 +16,7 @@ function is the ad-hoc/interactive surface.
 
 from __future__ import annotations
 
-from ..extract import MAIN_CONTENT, extract_turn
+from ..extract import MAIN_CONTENT, turn_extractor
 from ..kernel.transformation import Transformation
 
 EXTRACT_RESULT_TYPE = (
@@ -36,10 +36,12 @@ def extract_udf(transformation: Transformation = MAIN_CONTENT):
     # no type hints: Spark 4's hint inference does not accept the
     # Series -> DataFrame (struct result) shape; the explicit
     # returnType makes it a SCALAR Arrow-batched UDF
+    extract = turn_extractor(transformation)
+
     def _extract_main_content(payload):
         texts, spans, fails = [], [], []
         for p in payload:
-            t, s, f = extract_turn(p, transformation)
+            t, s, f = extract(p)
             texts.append(t)
             spans.append([
                 {"start": a, "end": b, "path": path} for a, b, path in s

@@ -98,9 +98,6 @@ def _remove_one(
         # unwrap: text folds before, children splice in, tail folds
         # after the last spliced child
         _fold_text_before(parent, idx, element.text)
-        if element.text:
-            # after folding text, the splice position is still idx
-            pass
         children = element.children
         for offset, child in enumerate(children):
             child.parent = parent

@@ -130,28 +130,6 @@ class Node:
     def full_text(self) -> str:
         return "".join(self.itertext())
 
-    # -- paths -------------------------------------------------------
-
-    def path_from(self, root: "Node") -> str:
-        """Simple absolute path like ``/article/p[2]`` (1-indexed among
-        same-tag siblings), used in extraction spans."""
-        if self is root:
-            return "/" + root.localname
-        parts: list[str] = []
-        node: Node = self
-        while node is not root:
-            parent = node.parent
-            if parent is None:  # detached from root; best-effort
-                break
-            same = [c for c in parent.children if c.tag == node.tag]
-            if len(same) > 1:
-                parts.append(f"{node.localname}[{same.index(node) + 1}]")
-            else:
-                parts.append(node.localname)
-            node = parent
-        parts.append(root.localname)
-        return "/" + "/".join(reversed(parts))
-
     # -- copies ------------------------------------------------------
 
     def deepcopy(self) -> "Node":

@@ -2,14 +2,16 @@
 
 The reference library parses documents with ``lxml.etree`` / an HTML
 parser (SURVEY.md §2.1; lxml is unavailable in this environment —
-SURVEY.md §0). This module provides the same capability on the stdlib:
+SURVEY.md §0). This module provides the same capability on the stdlib.
+Every payload becomes an ``xml.etree`` tree: well-formed markup through
+one C-accelerated expat parse, tag soup through ``html.parser`` driving
+the same ``ET.TreeBuilder`` with void-element and implied-end-tag
+handling (``<p>``, ``<li>``, ``<td>`` …), since tag-soup HTML is a
+first-class payload kind (FIXTURES.md §2).
 
-- ``parse_xml``  — C-accelerated ``xml.etree.ElementTree`` parse,
-  converted to kernel :class:`~inxs_spark.kernel.nodes.Node` trees.
-- ``parse_html`` — ``html.parser.HTMLParser`` tree builder with
-  void-element and implied-end-tag handling (``<p>``, ``<li>``,
-  ``<td>`` …), since tag-soup HTML is a first-class payload kind
-  (FIXTURES.md §2).
+- ``parse_payload_etree`` — that tree (the MAIN_CONTENT walk reads it).
+- ``parse_xml`` / ``parse_html`` / ``parse_payload`` — copied into kernel
+  :class:`~inxs_spark.kernel.nodes.Node` trees for the rule interpreter.
 - ``sniff``      — classify a payload as xml / html / text / empty.
 - ``serialize``  — Node tree → markup string (round-trip for goldens).
 
@@ -24,7 +26,7 @@ from html import escape
 from html.parser import HTMLParser
 from typing import Optional
 
-from .nodes import COMMENT_TAG, PI_TAG, Node
+from .nodes import COMMENT_TAG, FRAGMENT_TAG, PI_TAG, Node
 
 
 class ParseError(Exception):
@@ -39,30 +41,11 @@ def _from_etree(el: ET.Element, lower: bool = False) -> Node:
     # iterative (deep documents must not recurse). The child loop is
     # INLINED rather than calling a per-node helper — one Python call
     # frame per element was ~23% of conversion time (profiled); this
-    # runs once per DOM node on every turn, the hottest loop in parse.
-    comment_t, pi_t = ET.Comment, ET.ProcessingInstruction
-
-    def mk(src: ET.Element) -> Node:
-        tag = src.tag
-        if type(tag) is not str:
-            # TreeBuilder(insert_comments/pis) emits nodes whose tag is
-            # the ET.Comment / ET.ProcessingInstruction function
-            if tag is comment_t:
-                return Node(COMMENT_TAG, {}, src.text, src.tail)
-            # ET folds a PI into text='target data'; split back so the
-            # node mirrors lxml's .target/.text model
-            target, _, data = (src.text or "").partition(" ")
-            return Node(PI_TAG, {"target": target}, data, src.tail)
-        attrib = src.attrib
-        if lower:
-            tag = tag.lower()
-            attrib = {k.lower(): v for k, v in attrib.items()} if attrib else {}
-        else:
-            attrib = dict(attrib) if attrib else {}
-        return Node(tag, attrib, src.text, src.tail)
-
-    root = mk(el)
-    stack: list[tuple[ET.Element, Node]] = [(el, root)]
+    # runs once per DOM node on every turn of a generic rule set. The
+    # root is built as the one child of a throwaway holder.
+    comment_t = ET.Comment
+    holder = Node(FRAGMENT_TAG)
+    stack: list[tuple] = [((el,), holder)]
     while stack:
         src, dst = stack.pop()
         children = dst.children
@@ -79,31 +62,43 @@ def _from_etree(el: ET.Element, lower: bool = False) -> Node:
                 else:
                     c = Node(tag, dict(attrib) if attrib else {},
                              child.text, child.tail)
+            # TreeBuilder(insert_comments/pis) emits nodes whose tag is
+            # the ET.Comment / ET.ProcessingInstruction function
             elif tag is comment_t:
                 c = Node(COMMENT_TAG, {}, child.text, child.tail)
             else:
+                # ET folds a PI into text='target data'; split back so
+                # the node mirrors lxml's .target/.text model
                 target, _, data = (child.text or "").partition(" ")
                 c = Node(PI_TAG, {"target": target}, data, child.tail)
             c.parent = dst
             children.append(c)
             if len(child):
                 stack.append((child, c))
+    root = holder.children[0]
+    root.parent = None
     return root
 
 
-def _et_parser() -> ET.XMLParser:
+def _parse_et(payload: str) -> tuple[Optional[ET.Element], str]:
+    """(root, "") from expat, or (None, message). Callers raise once
+    this frame is gone: raising in the handler would leave a reference
+    cycle (frame → caught error → traceback → frame) per failure."""
     # comment/PI nodes kept in the tree (lxml tree-shape parity);
     # parsers are single-use, so build one per parse (cheap C object)
-    return ET.XMLParser(
-        target=ET.TreeBuilder(insert_comments=True, insert_pis=True)
-    )
+    parser = ET.XMLParser(
+        target=ET.TreeBuilder(insert_comments=True, insert_pis=True))
+    try:
+        parser.feed(payload)
+        return parser.close(), ""
+    except ET.ParseError as exc:
+        return None, f"xml parse error: {exc}"
 
 
 def parse_xml(payload: str) -> Node:
-    try:
-        root = ET.fromstring(payload, parser=_et_parser())
-    except ET.ParseError as exc:
-        raise ParseError(f"xml parse error: {exc}") from exc
+    root, error = _parse_et(payload)
+    if root is None:
+        raise ParseError(error)
     return _from_etree(root)
 
 
@@ -152,101 +147,77 @@ _IMPLIED_END: dict[str, frozenset] = {
 }
 
 
-class _TreeBuilder(HTMLParser):
+class _SoupParser(HTMLParser):
+    """Tag-soup HTML → ElementTree: the ``HTMLParser`` callbacks (tag and
+    attribute names already lowercased) drive the ``ET.TreeBuilder``
+    expat feeds, which puts text on the open element's text until a
+    child closes, then on that child's tail — the ElementTree model."""
+
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self.root = Node("#fragment")
-        self.stack: list[Node] = [self.root]
-        self._last_closed: Optional[Node] = None
-
-    # text goes to the open element's text (if no children yet) or the
-    # last child's tail — the ElementTree text/tail model.
-    def _add_text(self, data: str) -> None:
-        if not data:
-            return
-        top = self.stack[-1]
-        if top.children:
-            last = top.children[-1]
-            last.tail = (last.tail or "") + data
-        else:
-            top.text = (top.text or "") + data
+        self.target = ET.TreeBuilder(insert_comments=True, insert_pis=True)
+        self.target.start(FRAGMENT_TAG, {})
+        self.open: list[str] = [FRAGMENT_TAG]  # tags of the open elements
 
     def handle_data(self, data: str) -> None:
-        self._add_text(data)
+        if data:
+            self.target.data(data)
 
-    def handle_entityref(self, name: str) -> None:  # pragma: no cover
-        self._add_text(f"&{name};")
-
-    def _close_implied(self, tag: str) -> None:
+    def handle_starttag(self, tag: str, attrs: list, closed: bool = False) -> None:
         closers = _IMPLIED_END.get(tag)
-        if not closers:
-            return
-        while len(self.stack) > 1 and self.stack[-1].tag in closers:
-            self.stack.pop()
-
-    def handle_starttag(self, tag: str, attrs: list) -> None:
-        tag = tag.lower()
-        self._close_implied(tag)
-        node = Node(tag, {k: (v if v is not None else "") for k, v in attrs})
-        self.stack[-1].append(node)
-        if tag not in VOID_ELEMENTS:
-            self.stack.append(node)
+        while closers and len(self.open) > 1 and self.open[-1] in closers:
+            self.target.end(self.open.pop())
+        self.target.start(tag, {k: (v if v is not None else "") for k, v in attrs})
+        if closed or tag in VOID_ELEMENTS:
+            self.target.end(tag)
+        else:
+            self.open.append(tag)
 
     def handle_startendtag(self, tag: str, attrs: list) -> None:
-        tag = tag.lower()
-        self._close_implied(tag)
-        node = Node(tag, {k: (v if v is not None else "") for k, v in attrs})
-        self.stack[-1].append(node)
+        self.handle_starttag(tag, attrs, closed=True)
 
     def handle_comment(self, data: str) -> None:
-        # comments become tree nodes (never pushed — they have no
-        # children); following text lands on their TAIL via _add_text,
-        # matching the lxml comment-node model
-        self.stack[-1].append(Node(COMMENT_TAG, {}, data))
+        # text after a comment lands on its tail, as in lxml
+        self.target.comment(data)
 
     def handle_pi(self, data: str) -> None:
         target, _, rest = data.partition(" ")
-        self.stack[-1].append(Node(PI_TAG, {"target": target.rstrip("?")},
-                                   rest.rstrip("?") or None))
+        self.target.pi(target.rstrip("?"), rest.rstrip("?") or None)
 
     def handle_endtag(self, tag: str) -> None:
-        tag = tag.lower()
-        if tag in VOID_ELEMENTS:
-            return
-        # close up to the matching open tag; ignore stray end tags
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                del self.stack[i:]
-                return
+        # close up to the innermost open element of this name; a stray
+        # end tag (void elements are never open) closes nothing
+        if tag in self.open:
+            while self.open[-1] != tag:
+                self.target.end(self.open.pop())
+            self.target.end(self.open.pop())
+
+    def root(self) -> ET.Element:
+        for tag in reversed(self.open):
+            self.target.end(tag)
+        return self.target.close()
 
 
-def parse_html(payload: str) -> Node:
-    # fast path: much real-world (and most synthetic) HTML is well-
-    # formed XML — the C-accelerated ElementTree parse is ~3x faster
-    # than the pure-Python tag-soup builder. Tags/attrs are lowercased
-    # to match HTMLParser semantics; any soup (void elements, implied
-    # end tags, unquoted attrs, bare entities) raises and falls back.
+def _parse_soup(payload: str) -> ET.Element:
+    parser = _SoupParser()
     try:
-        return _from_etree(ET.fromstring(payload, parser=_et_parser()), lower=True)
-    except ET.ParseError:
-        pass
-    builder = _TreeBuilder()
-    try:
-        builder.feed(payload)
-        builder.close()
+        parser.feed(payload)
+        parser.close()
     except Exception as exc:  # HTMLParser rarely raises, but be safe
         raise ParseError(f"html parse error: {exc}") from exc
-    root = builder.root
+    root = parser.root()
     # unwrap the synthetic fragment root when there is exactly one
-    # element child and no stray top-level text
-    elems = root.children
-    if len(elems) == 1 and not (root.text and root.text.strip()):
-        only = elems[0]
+    # child and no stray top-level text
+    if len(root) == 1 and not (root.text and root.text.strip()):
+        only = root[0]
         if not (only.tail and only.tail.strip()):
-            only.parent = None
             only.tail = None
             return only
     return root
+
+
+def parse_html(payload: str) -> Node:
+    return parse_payload(payload, "html")[0]
 
 
 # ---------------------------------------------------------------------------
@@ -277,27 +248,43 @@ def sniff(payload: Optional[str]) -> str:
     return "xml"
 
 
-def parse_payload(payload: str, kind: Optional[str] = None) -> tuple[Optional[Node], str]:
-    """Parse by sniffed kind. Returns (root_or_None, kind).
+def parse_payload_etree(
+    payload: str, kind: Optional[str] = None
+) -> tuple[Optional[ET.Element], str]:
+    """Parse by sniffed kind into an ElementTree. Returns (root_or_None,
+    kind); for kind 'html' tag and attribute names are to be read
+    lowercased (the soup parser already lowercases them).
 
     'empty' and 'text' return (None, kind) — callers handle them
     without a DOM. A payload sniffed as XML that fails to parse falls
     back to the tag-soup HTML parser UNLESS it carries an explicit
     ``<?xml`` declaration (those are real XML and must fail loudly):
     web-scale soup using tags outside the sniffer's hint list (e.g.
-    ``<select><option>a<option>b``) must still extract.
+    ``<select><option>a<option>b``) must still extract. Either way
+    expat runs once per payload.
     """
     k = kind or sniff(payload)
     if k in ("empty", "text"):
         return None, k
-    if k == "xml":
-        try:
-            return parse_xml(payload), k
-        except ParseError:
-            if _XML_DECL.match(payload):
-                raise
-            return parse_html(payload), "html"
-    return parse_html(payload), k
+    # fast path: much real-world (and most synthetic) HTML is well-
+    # formed XML — the C-accelerated expat parse is ~3x faster than the
+    # pure-Python tag-soup parser. Any soup (void elements, implied
+    # end tags, unquoted attrs, bare entities) fails it and falls back.
+    root, error = _parse_et(payload)
+    if root is not None:
+        return root, k
+    if k == "xml" and _XML_DECL.match(payload):
+        raise ParseError(error)
+    return _parse_soup(payload), "html"
+
+
+def parse_payload(payload: str, kind: Optional[str] = None) -> tuple[Optional[Node], str]:
+    """:func:`parse_payload_etree` copied into kernel :class:`Node`
+    trees for the rule interpreter."""
+    root, k = parse_payload_etree(payload, kind)
+    if root is None:
+        return None, k
+    return _from_etree(root, lower=k == "html"), k
 
 
 # ---------------------------------------------------------------------------

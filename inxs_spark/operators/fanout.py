@@ -8,7 +8,8 @@ idle. :func:`ensure_compute_fanout` places at most one exchange before
 such a stage, decided from the planned input alone:
 
 - read the partition count ``df`` plans, without a Spark job
-  (:func:`planned_partitions`);
+  (:func:`planned_partitions`: the RDD of the plan, or of the child of
+  a top ``WholeStageCodegen`` stage, whose code then is not compiled);
 - a streaming frame, a plan that already shuffles (``AdaptiveSparkPlan``)
   or one with at least ``defaultParallelism`` partitions comes back
   unchanged;
@@ -26,7 +27,9 @@ repartition (BENCH.md "One fan-out rule").
 Measured in BENCH.md: "Compute fan-out per call site" kept only the two
 MinHash sites (the other 13 lost or tied with fan-out on), "Narrow
 inputs" timed the planned-count rule through the resumable runner, and
-the probe costs a median 38 ms per call warm. A floor on rows or bytes
+"MAIN_CONTENT in one pass" timed the probe on the sf0.1 documents scan:
+a median 27–30 ms per call warm (7 ms of it planning), 0.44–0.74 s for
+the first call in a session. A floor on rows or bytes
 per split is still open: the small tier through the runner takes
 18.4 s with this rule against 16.0 s with no exchange.
 """
@@ -45,8 +48,13 @@ def planned_partitions(df: DataFrame) -> Optional[int]:
     if df.isStreaming:
         return None
     plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
         return None
+    if name.startswith("WholeStageCodegen"):
+        # the stage maps its child's partitions one to one; building
+        # the child's RDD skips compiling the stage's generated code
+        plan = plan.children().head()
     return plan.execute().getNumPartitions()
 
 

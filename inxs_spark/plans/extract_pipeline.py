@@ -48,7 +48,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DataType
 
-from ..extract import MAIN_CONTENT, extract_turn
+from ..extract import MAIN_CONTENT, turn_extractor
 from ..kernel.transformation import Transformation
 from ..operators.fanout import ensure_compute_fanout, planned_partitions
 from ..sources.io import write_json_atomic
@@ -101,6 +101,7 @@ def make_extract_fn(
 
     if row_fn is None:
         rule_set_hash = transformation.fingerprint()
+        row_fn = turn_extractor(transformation)
     else:
         rule_set_hash = _hashlib.sha256(
             f"row_fn:{getattr(row_fn, '__module__', '')}."
@@ -126,10 +127,7 @@ def make_extract_fn(
             s_ends: list[int] = []
             s_paths: list[str] = []
             for payload in texts:
-                if row_fn is not None:
-                    text, spans, failure = row_fn(payload)
-                else:
-                    text, spans, failure = extract_turn(payload, transformation)
+                text, spans, failure = row_fn(payload)
                 extracted.append(text)
                 for s, e, p in spans:
                     s_starts.append(s)

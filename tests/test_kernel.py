@@ -684,3 +684,61 @@ def test_inline_tag_soup_sniffs_as_html():
     assert f is None and t == "xdone"
     t, _, f = extract_turn('<a href="/y">link</a> trail')
     assert f is None and t == "link trail"
+
+
+def test_deep_payloads_extract():
+    """3,000 levels parse and extract on every path: a well-formed
+    ``<div>`` chain, a ``<stdout>`` chain that unwraps into its root and
+    an unclosed chain that takes the tag-soup parser. Every walk is
+    iterative."""
+    deep = 3000
+    assert extract_turn("<div>" * deep + "x" + "</div>" * deep) == (
+        "x", [(0, 1, "/div" * deep)], None)
+    assert extract_turn("<stdout>" * deep + "x" + "</stdout>" * deep) == (
+        "x", [(0, 1, "/stdout")], None)
+    assert extract_turn("<div>" * deep + "x") == ("x", [(0, 1, "/div" * deep)], None)
+
+
+def test_extract_turn_leaves_no_cyclic_garbage():
+    """A turn's trees are freed by reference counting alone: no
+    ``Node`` parent/child cycles on the MAIN_CONTENT path, for
+    well-formed payloads, tag soup and parse failures alike."""
+    import gc
+
+    from inxs_spark.kernel.parse import sniff
+    from inxs_spark.sources import synth
+
+    payloads = [synth.payload(o, t) for o in range(300)
+                for t in range(min(synth.conv_length(o), 6))]
+    failures = [extract_turn(p)[2] for p in payloads]  # warm-up
+    assert "parse_error" in failures
+    assert any(sniff(p) == "xml" and p.startswith("<doc><para>") for p in payloads)
+    assert any("<p>" in p and "</p>" not in p for p in payloads)
+    gc.collect()
+    gc.disable()
+    try:
+        for p in payloads:
+            extract_turn(p)
+        assert gc.collect() == 0
+    finally:
+        gc.enable()
+
+
+def test_turn_extractor_keeps_the_walk_through_pickling():
+    """Spark ships the row function to its workers with cloudpickle. An
+    unpickled copy of MAIN_CONTENT is not MAIN_CONTENT and would take
+    the generic interpreter, so the preset ships as ``extract_turn``
+    itself, pickled by reference."""
+    from pyspark import cloudpickle
+
+    from inxs_spark.extract import main_content_transformation, turn_extractor
+
+    def shipped(obj):
+        return cloudpickle.loads(cloudpickle.dumps(obj))
+
+    assert shipped(MAIN_CONTENT) is not MAIN_CONTENT
+    assert shipped(turn_extractor(MAIN_CONTENT)) is extract_turn
+    payload = "<p>a<nav>n</nav>b<stdout>c</stdout></p>"
+    other = main_content_transformation()
+    assert shipped(turn_extractor(other))(payload) == extract_turn(payload, other) == (
+        "ac", [(0, 2, "/p")], None)

@@ -167,7 +167,7 @@ def test_density_extract_never_raises_on_garbage(payload):
 
 
 # ---------------------------------------------------------------------------
-# fused flagship operator ≡ declarative interpreter (extract.py)
+# MAIN_CONTENT walk over the ElementTree ≡ declarative interpreter (extract.py)
 # ---------------------------------------------------------------------------
 
 _FLAGSHIP_TAGS = (
@@ -195,31 +195,58 @@ def flagship_node(draw, depth=0):
     return node
 
 
+def _assert_walk_equals_interpreter(payloads):
+    """The one-pass walk runs only for the ``MAIN_CONTENT`` object
+    itself, so a fresh copy of the preset takes the generic path:
+    Node copy, interpreter, ``text_with_spans``."""
+    from inxs_spark.extract import extract_turn, main_content_transformation
+
+    interpreter = main_content_transformation()
+    for payload in payloads:
+        assert extract_turn(payload) == extract_turn(payload, interpreter), payload
+
+
 @settings(max_examples=250, deadline=None)
 @given(flagship_node())
-def test_fused_main_content_equals_interpreter_on_random_doms(root):
-    from inxs_spark.extract import MAIN_CONTENT, fused_main_content, text_with_spans
-
-    a = fused_main_content(root.deepcopy())
-    b = MAIN_CONTENT(root.deepcopy())
-    assert text_with_spans(a) == text_with_spans(b)
-    assert serialize(a) == serialize(b)
+def test_main_content_walk_equals_interpreter_on_random_doms(root):
+    _assert_walk_equals_interpreter([serialize(root)])
 
 
-def test_fused_main_content_equals_interpreter_on_corpus():
-    """Every synthetic payload kind through both paths, byte-equal: the
-    fused path runs only for the ``MAIN_CONTENT`` object itself, so a
-    fresh copy of the preset takes the generic interpreter."""
-    from inxs_spark.extract import extract_turn, main_content_transformation
+def test_main_content_walk_equals_interpreter_on_corpus():
+    """Every synthetic payload kind through both paths, byte-equal."""
     from inxs_spark.sources import synth
 
     payloads = [synth.payload(o, t) for o in range(300)
                 for t in range(min(synth.conv_length(o), 6))]
     assert len(payloads) > 1000
-    interpreter = main_content_transformation()
-    want = [extract_turn(p, interpreter) for p in payloads]
-    got = [extract_turn(p) for p in payloads]
-    assert got == want
+    _assert_walk_equals_interpreter(payloads)
+
+
+_SOUP = (
+    "<main><p>one.<p>two.<span>w</span></main>",
+    "<ul><li>a<li>b<ref>[1]</ref>c<li>d</ul>tail",
+    "<table><tr><td>a<td>b<tr><td>c<th>d</table>",
+    "<div><p>a<!-- c -->b<br>c<?php echo 1 ?>d</div>",
+    "<div class=ads>x</div><p>kept<script>s</script>after",
+    "<div><stdout>o<td>t</stdout>u<nav>n</nav>v<p>w</div>",
+    "<body><stdout><stdout>in<p>p</stdout>mid</stdout>end<footer>f",
+    "<!-- lead --><section><h1>T</h1><p>a &amp b<iframe>i</iframe>c",
+    "<DIV CLASS='Promo'>x</DIV><P>kept<STYLE>s</STYLE>t",
+    "<doc><para>truncated <ref>r</ref>tail",
+)
+
+
+def test_main_content_walk_equals_interpreter_on_soup():
+    """Tag soup (unclosed ``<p>``/``<li>``/``<td>``, comments, a PI)
+    takes the ``HTMLParser``-driven ``TreeBuilder`` on both paths."""
+    import xml.etree.ElementTree as ET
+
+    import pytest
+
+    for payload in _SOUP:
+        with pytest.raises(ET.ParseError):
+            ET.fromstring(payload)
+    _assert_walk_equals_interpreter(_SOUP)
 
 
 # ---------------------------------------------------------------------------

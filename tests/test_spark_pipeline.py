@@ -698,8 +698,9 @@ def test_compute_fanout_runs_no_spark_job(spark, tmp_out):
 
 def test_compute_fanout_sizes_percent_encoded_paths(spark, tmp_out):
     """Spark lists a file under a directory with a space in its name
-    as ``file:/…/a%20b/part-….parquet``; the size guard decodes that
-    URI, so the single-file scan still fans out."""
+    as ``file:/…/a%20b/part-….parquet``; the planned partition count
+    does not depend on that URI, so the single-file scan still fans
+    out."""
     from inxs_spark.operators.fanout import ensure_compute_fanout
 
     path = os.path.join(tmp_out, "a b", "one_file")
