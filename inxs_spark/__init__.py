@@ -8,8 +8,8 @@ Layers:
 - :mod:`inxs_spark.plans`     — Spark pipelines (pruned scan →
   mapInArrow kernel executor, no sort; one hash exchange only for an
   input with fewer splits than cores)
-- :mod:`inxs_spark.sources`   — table I/O seam (parquet now, Iceberg
-  via config in production) + deterministic transcript synthesis
+- :mod:`inxs_spark.sources`   — session defaults, storage helpers
+  (input fingerprints, atomic JSON) + deterministic transcript synthesis
 - :mod:`inxs_spark.operators` — training-data pipeline operators
   (dedup, similarity search, text analysis, multimodal plumbing)
 """

@@ -7,51 +7,36 @@ DataFrame pipeline::
     spark.sql("SELECT conv_id, extract_main_content(text).extracted_text
                FROM transcripts")
 
-The UDF is a pandas_udf (Arrow-batched, no per-row Python at the Spark
-API level — BASELINE.json:15); it is the same kernel the pipeline's
-mapInArrow runs, so results are byte-identical to ``extract_df``. Note
-the pipeline remains the scale path (it also writes lineage); the SQL
-function is the ad-hoc/interactive surface.
+The UDF is an ``arrow_udf`` (Arrow-batched, no per-row Python at the
+Spark API level — BASELINE.json:15): each batch of payloads goes
+through the pipeline's own encoder (``plans.extract_pipeline.
+encode_turns``) and comes back as one ``StructArray`` of the
+``RESULT_FIELDS`` contract, so results are byte-identical to
+``extract_df``. Note the pipeline remains the scale path (it also
+writes lineage); the SQL function is the ad-hoc/interactive surface.
 """
 
-from __future__ import annotations
+import pyarrow as pa
 
 from ..extract import MAIN_CONTENT, turn_extractor
 from ..kernel.transformation import Transformation
-
-EXTRACT_RESULT_TYPE = (
-    "struct<extracted_text:string,"
-    "spans:array<struct<start:int,end:int,path:string>>,"
-    "failure:string>"
-)
+from ..plans.extract_pipeline import RESULT_DDL, RESULT_NAMES, encode_turns
 
 
 def extract_udf(transformation: Transformation = MAIN_CONTENT):
     """Arrow-batched scalar UDF: payload → struct(extracted_text,
     spans, failure)."""
-    import pandas as pd
+    from pyspark.sql.functions import arrow_udf
 
-    from pyspark.sql.functions import pandas_udf
+    row_fn = turn_extractor(transformation)
 
-    # no type hints: Spark 4's hint inference does not accept the
-    # Series -> DataFrame (struct result) shape; the explicit
-    # returnType makes it a SCALAR Arrow-batched UDF
-    extract = turn_extractor(transformation)
+    # real annotations (no ``from __future__ import annotations`` in
+    # this module): arrow_udf reads the SCALAR type from the hints
+    def extract_main_content(payload: pa.Array) -> pa.Array:
+        arrays, _ = encode_turns(payload.to_pylist(), row_fn)
+        return pa.StructArray.from_arrays(arrays, names=RESULT_NAMES)
 
-    def _extract_main_content(payload):
-        texts, spans, fails = [], [], []
-        for p in payload:
-            t, s, f = extract(p)
-            texts.append(t)
-            spans.append([
-                {"start": a, "end": b, "path": path} for a, b, path in s
-            ])
-            fails.append(f)
-        return pd.DataFrame(
-            {"extracted_text": texts, "spans": spans, "failure": fails}
-        )
-
-    return pandas_udf(_extract_main_content, EXTRACT_RESULT_TYPE)
+    return arrow_udf(extract_main_content, RESULT_DDL)
 
 
 def register_sql_functions(spark, transformation: Transformation = MAIN_CONTENT):

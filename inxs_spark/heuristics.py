@@ -4,21 +4,21 @@ that finds the main content container WITHOUT site-specific rules —
 the complement to the declarative rule-set in :mod:`.extract`.
 
 Score(node) = subtree_text_len × (1 − link_density) × depth_bonus,
-maximized over container elements. The winner is cleaned (script/
-style/nav dropped via a normal kernel Transformation) and fed through
-the same (text, spans, failure) contract, so the Spark plane is
-identical — only the per-turn function changes.
+maximized over container elements. The extractor is a kernel rule set,
+``DENSITY``: it drops script/style/nav noise, and its last step picks
+the winning container, which ``extract_turn`` reads into the same
+(text, spans, failure) contract under the same failure guards — the
+Spark plane is identical, only the rule set changes.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-from .extract import INLINE_JUNK_TAGS, MAX_PAYLOAD_CHARS, text_with_spans
+from .extract import INLINE_JUNK_TAGS, extract_turn
 from .kernel import lib
 from .kernel.conditions import Any
 from .kernel.nodes import Node
-from .kernel.parse import ParseError, parse_payload
 from .kernel.transformation import Ref, Rule, Transformation
 
 CONTAINER_TAGS = frozenset(
@@ -116,43 +116,29 @@ def pick_main_node(root: Node, tie_band: float = 0.75) -> Node:
     return near_best[0][3]
 
 
-_CLEANUP = Transformation(
+#: the density extractor as a kernel rule set: drop the noise, then
+#: the winning container is the result, which ``extract_turn`` walks
+#: under the same guard chain as every other rule set
+DENSITY = Transformation(
     [
         Rule(Any(*NOISE_TAGS), (lib.append("trash", Ref("element")),)),
         Rule(Any(*INLINE_JUNK_TAGS), (lib.append("inline_junk", Ref("element")),)),
     ],
     lib.remove_elements("trash"),
     lib.remove_elements("inline_junk", preserve_tail=True),
-    name="density-cleanup-v2",
+    pick_main_node,
+    name="density-v1",
     copy=False,
+    result_object="previous_result",
 )
 
 
 def density_extract_turn(
     payload: Optional[str],
 ) -> tuple[Optional[str], list[tuple[int, int, str]], Optional[str]]:
-    """Per-turn heuristic extraction — same contract as
-    :func:`inxs_spark.extract.extract_turn`, pluggable into the same
-    mapInArrow pipeline via ``extract_df(..., extract_fn=...)``."""
-    if payload is None:
-        return "", [], None
-    if len(payload) > MAX_PAYLOAD_CHARS:
-        # size gate BEFORE the strip: .strip() on a pathological row
-        # would allocate another multi-MB string first
-        return None, [], "payload_too_large"
-    if payload.strip() == "":
-        return "", [], None
-    try:
-        root, kind = parse_payload(payload)
-        if root is None:
-            return payload, [(0, len(payload), "/")], None
-        cleaned = _CLEANUP(root)
-        main = pick_main_node(cleaned)
-        text, spans = text_with_spans(main)
-        return text, spans, None
-    except ParseError:
-        return None, [], "parse_error"
-    except RecursionError:
-        return None, [], "payload_too_deep"
-    except Exception:
-        return None, [], "transform_error"
+    """Per-turn heuristic extraction: ``extract_turn(payload, DENSITY)``,
+    pluggable into the mapInArrow pipeline via
+    ``extract_df(..., row_fn=density_extract_turn)``. A named module
+    function, so the pipeline's lineage ``rule_set_hash`` (taken from
+    the row function's qualified name) is the same in every process."""
+    return extract_turn(payload, DENSITY)

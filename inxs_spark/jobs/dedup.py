@@ -194,11 +194,9 @@ def dedup_job(
         # would execute the verify joins a second time (round-4
         # review)
         pairs.write.mode("overwrite").parquet(os.path.join(out_root, "pairs"))
-        for attr in ("_candidate_pairs_cache", "_batch_memberships_cache",
-                     "_batch_sigs_cache"):
-            cache = getattr(pairs, attr, None)
-            if cache is not None:
-                cache.unpersist()
+        cache = getattr(pairs, "_candidate_pairs_cache", None)
+        if cache is not None:
+            cache.unpersist()
         if index_dir is not None:
             release_checkpoint(pairs)
         pairs_read = df.sparkSession.read.parquet(

@@ -59,10 +59,10 @@ def _g_root(s: "_Execution"):
     return r
 
 
-#: direct getters for the core DI symbols — replaces the _lookup
-#: if-chain in the hot kwargs-building loop (profiled; core symbols
-#: cover ~95% of handler parameters). Names absent here fall back to
-#: the full _lookup (context attributes, base-context keys).
+#: direct getters for the core DI symbols, read by _lookup and bound
+#: straight into the param plans of the hot kwargs-building loop
+#: (profiled; core symbols cover ~95% of handler parameters). Other
+#: names are context attributes or base-context keys.
 _CORE_GETTERS: dict = {
     "_symbols": lambda s: s._resolve,
     "element": _g_element,
@@ -93,6 +93,13 @@ def _describe_callable(fn: Callable) -> str:
     return getattr(fn, "_describe", None) or getattr(fn, "__qualname__", repr(fn))
 
 
+def _as_conditions(conditions) -> list[Condition]:
+    """One condition, or a sequence of them, as a normalized list."""
+    if isinstance(conditions, (str, dict, Condition)) or callable(conditions):
+        conditions = (conditions,)
+    return [normalize_condition(c) for c in conditions]
+
+
 class Rule:
     """Ordered condition list (AND-ed) + handler chain (A2)."""
 
@@ -103,11 +110,7 @@ class Rule:
         name: Optional[str] = None,
         traversal_order: Optional[int] = None,
     ) -> None:
-        if isinstance(conditions, (str, dict)) or callable(conditions) or isinstance(
-            conditions, Condition
-        ):
-            conditions = (conditions,)
-        self.conditions: list[Condition] = [normalize_condition(c) for c in conditions]
+        self.conditions: list[Condition] = _as_conditions(conditions)
         if callable(handlers):
             handlers = (handlers,)
         self.handlers: tuple[Callable, ...] = tuple(handlers)
@@ -167,14 +170,9 @@ class Transformation:
         self.copy: bool = config.pop("copy", True)
         self.result_object: Optional[str] = config.pop("result_object", "tree")
         common = config.pop("common_rule_conditions", None)
-        if common is None:
-            self.common_rule_conditions: list[Condition] = []
-        else:
-            if isinstance(common, (str, dict)) or callable(common) or isinstance(
-                common, Condition
-            ):
-                common = (common,)
-            self.common_rule_conditions = [normalize_condition(c) for c in common]
+        self.common_rule_conditions: list[Condition] = (
+            [] if common is None else _as_conditions(common)
+        )
         self.traversal_order: int = config.pop("traversal_order", DEFAULT_TRAVERSAL)
         self.nsmap: Optional[dict] = config.pop("nsmap", None)
         if config:
@@ -187,15 +185,20 @@ class Transformation:
         # compiled per-callable invokers (positional fast path), id-keyed
         self._callers: dict = {}
         # per-step dispatch precomputed once: rule steps → (rules,
-        # tag_map, generic, merged-plan dict persisted across documents)
+        # tag_map, generic, merged-plan dict persisted across documents,
+        # traversal order: the first rule's own, else the default)
         self._step_plans: list = []
         for step in self.steps:
-            if isinstance(step, Rule):
-                self._step_plans.append(([step], *_dispatch([step]), {}))
-            elif isinstance(step, list):
-                self._step_plans.append((step, *_dispatch(step), {}))
-            else:
+            if not isinstance(step, (Rule, list)):  # a bare callable
                 self._step_plans.append(None)
+                continue
+            rules = [step] if isinstance(step, Rule) else step
+            order = next(
+                (r.traversal_order for r in rules if r.traversal_order), None
+            )
+            self._step_plans.append(
+                (rules, *_dispatch(rules), {}, order or self.traversal_order)
+            )
         self._config_kwargs: dict = dict(
             name=self.name,
             copy=self.copy,
@@ -252,26 +255,9 @@ class _Execution:
     # -- symbol table --------------------------------------------------
 
     def _lookup(self, name: str):
-        if name == "_symbols":
-            return self._resolve
-        if name == "element":
-            if self.element is None:
-                raise KeyError("element")
-            return self.element
-        if name == "previous_result":
-            return self.previous_result
-        if name == "context":
-            return self.context
-        if name == "config":
-            return self.config
-        if name in ("root", "tree"):
-            if self.root is None:
-                raise KeyError(name)
-            return self.root
-        if name == "transformation":
-            return self.transformation
-        if name == "nsmap":
-            return self.transformation.nsmap
+        getter = _CORE_GETTERS.get(name)
+        if getter is not None:
+            return getter(self)
         if hasattr(self.context, name):
             return getattr(self.context, name)
         if name in self.transformation.base_context:
@@ -285,21 +271,8 @@ class _Execution:
             return self._lookup(target.name)
         if isinstance(target, str):
             return self._lookup(target)
-        plan = self._param_plans.get(id(target))
-        if plan is None:
-            plan = []
-            for pname, param in inspect.signature(target).parameters.items():
-                if param.kind in (
-                    inspect.Parameter.VAR_POSITIONAL,
-                    inspect.Parameter.VAR_KEYWORD,
-                ):
-                    continue
-                plan.append(
-                    (pname, param.default is not _EMPTY, _CORE_GETTERS.get(pname))
-                )
-            self._param_plans[id(target)] = plan
         kwargs = {}
-        for pname, has_default, getter in plan:
+        for pname, has_default, getter in self._param_plan(target):
             try:
                 kwargs[pname] = (
                     getter(self) if getter is not None else self._lookup(pname)
@@ -312,6 +285,23 @@ class _Execution:
                     ) from None
         return kwargs
 
+    def _param_plan(self, fn: Callable) -> list:
+        """[(name, has_default, core getter or None)] per parameter of
+        ``fn``, built once per callable and shared by every execution
+        of the transformation."""
+        plan = self._param_plans.get(id(fn))
+        if plan is None:
+            plan = [
+                (pname, param.default is not _EMPTY, _CORE_GETTERS.get(pname))
+                for pname, param in inspect.signature(fn).parameters.items()
+                if param.kind not in (
+                    inspect.Parameter.VAR_POSITIONAL,
+                    inspect.Parameter.VAR_KEYWORD,
+                )
+            ]
+            self._param_plans[id(fn)] = plan
+        return plan
+
     # -- run -----------------------------------------------------------
 
     def run(self):
@@ -320,14 +310,7 @@ class _Execution:
                 self.transformation.steps, self.transformation._step_plans
             ):
                 if splan is not None:
-                    if isinstance(step, Rule):
-                        order = step.traversal_order
-                    else:
-                        order = next(
-                            (r.traversal_order for r in step if r.traversal_order),
-                            None,
-                        )
-                    self._apply_rules(splan, order)
+                    self._apply_rules(splan)
                 else:
                     self.previous_result = self._call(step)
         except AbortTransformation:
@@ -343,19 +326,7 @@ class _Execution:
         :meth:`_resolve`."""
         caller = self.transformation._callers.get(id(fn))
         if caller is None:
-            plan = self._param_plans.get(id(fn))
-            if plan is None:
-                plan = []
-                for pname, param in inspect.signature(fn).parameters.items():
-                    if param.kind in (
-                        inspect.Parameter.VAR_POSITIONAL,
-                        inspect.Parameter.VAR_KEYWORD,
-                    ):
-                        continue
-                    plan.append(
-                        (pname, param.default is not _EMPTY, _CORE_GETTERS.get(pname))
-                    )
-                self._param_plans[id(fn)] = plan
+            plan = self._param_plan(fn)
             if any(has_default for _, has_default, _ in plan):
                 def caller(ex, _fn=fn):
                     return _fn(**ex._resolve(_fn))
@@ -374,10 +345,10 @@ class _Execution:
     def _call(self, fn: Callable):
         return self._caller_for(fn)(self)
 
-    def _apply_rules(self, splan: tuple, traversal_order: Optional[int]) -> None:
+    def _apply_rules(self, splan: tuple) -> None:
         if self.root is None:
             return
-        order = traversal_order or self.transformation.traversal_order
+        rules, tag_map, generic, merged, order = splan
         nodes = traversal_nodes(self.root, order)
         # tag-bucket dispatch (SURVEY.md §5.2): only rules whose leading
         # condition can match this tag are evaluated; rule order is
@@ -385,7 +356,6 @@ class _Execution:
         # condition is ALREADY satisfied by the bucket hit, so the plan
         # stores only the remaining conditions. Plans persist across
         # documents on the (immutable) transformation.
-        rules, tag_map, generic, merged = splan
         active = set(range(len(rules)))
         common = self.transformation.common_rule_conditions
 

@@ -57,18 +57,17 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id",
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH (character shingles)
+# MinHash + LSH (word shingles)
 # ---------------------------------------------------------------------------
 
-def shingles(text_col: str, k: int = 3, mode: str = "word") -> Column:
-    """Distinct k-shingles, JVM-side. mode='word' (default: k-word
-    grams — the standard for document-level near-dup; ~6x fewer
-    shingles than char mode at equal recall) or mode='char'."""
-    if mode == "char":
-        return F.expr(
-            f"array_distinct(transform(sequence(1, greatest(length({text_col}) - {k} + 1, 1)),"
-            f" i -> substring({text_col}, i, {k})))"
-        )
+#: the shingle unit, recorded in every MinHash index's meta.json: k-word
+#: grams (the standard for document-level near-dup; ~6x fewer shingles
+#: than k-character grams at equal recall)
+SHINGLE_MODE = "word"
+
+
+def shingles(text_col: str, k: int = 3) -> Column:
+    """Distinct k-word shingles (``SHINGLE_MODE``), JVM-side."""
     # Bind split({text_col}, ' ') ONCE via the single-element-array
     # transform trick (SQL has no let): the previous form re-ran the
     # regex split inside every lambda element — O(words) splits per doc
@@ -103,7 +102,7 @@ def _memo_fill(memo: dict, keys: list, vals: list, cap: int) -> None:
         memo.update(zip(keys[:room], vals[:room]))
 
 
-def _make_minhash_udf(num_perm: int, k: int, mode: str):
+def _make_minhash_udf(num_perm: int, k: int):
     """Vectorized MinHash signatures: per batch, shingle → 64-bit base
     hash (blake2b, process-independent), then all permutations at once
     via numpy broadcast (a_j * h + b_j) mod M31. Arrow-batched — no
@@ -131,12 +130,9 @@ def _make_minhash_udf(num_perm: int, k: int, mode: str):
         def one(text):
             if not text:
                 return [int(_MERSENNE31)] * num_perm
-            if mode == "char":
-                items = {text[i:i + k] for i in range(max(len(text) - k + 1, 1))}
-            else:
-                words = text.split(" ")
-                n = max(len(words) - k + 1, 1)
-                items = {" ".join(words[i:i + k]) for i in range(n)}
+            words = text.split(" ")
+            n = max(len(words) - k + 1, 1)
+            items = {" ".join(words[i:i + k]) for i in range(n)}
             vals = []
             miss = []
             for s in items:
@@ -207,7 +203,6 @@ def minhash_lsh_candidates(
     num_perm: int = 64,
     bands: int = 16,
     max_bucket: int | None = None,
-    mode: str = "word",
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) from banded MinHash.
 
@@ -238,7 +233,7 @@ def minhash_lsh_candidates(
             f">={n}" if n >= saturation else n, max_bucket, saturation,
         )
     exploded = minhash_band_memberships(
-        df, id_col, text_col, k=k, num_perm=num_perm, bands=bands, mode=mode
+        df, id_col, text_col, k=k, num_perm=num_perm, bands=bands
     )
     return _pairs_from_memberships(exploded, max_bucket)
 
@@ -250,14 +245,13 @@ def minhash_band_memberships(
     k: int = 3,
     num_perm: int = 64,
     bands: int = 16,
-    mode: str = "word",
 ) -> DataFrame:
     """(id, band, key) LSH band memberships — the unit the persisted
     incremental index stores (16 narrow rows/doc beats re-running the
     signature UDF over the corpus text on every new batch)."""
     r = num_perm // bands
     assert bands * r == num_perm, "bands must divide num_perm"
-    sig_udf = _make_minhash_udf(num_perm, k, mode)
+    sig_udf = _make_minhash_udf(num_perm, k)
     # No exchange barrier here (rounds 2-4 repartitioned on id to stop
     # the signature re-running once per band): on Spark 4's planner,
     # ExtractPythonUDFs materializes the pandas UDF as ONE
@@ -364,7 +358,6 @@ def jaccard_verify(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.7,
-    mode: str = "word",
     prune_to_candidates: bool | str = False,
     corpus_n_rows: int | None = None,
 ) -> DataFrame:
@@ -445,7 +438,7 @@ def jaccard_verify(
 
     base = ensure_compute_fanout(base)
     sh = base.select(
-        F.col(id_col).alias("id"), shingles(text_col, k, mode).alias("sh")
+        F.col(id_col).alias("id"), shingles(text_col, k).alias("sh")
     )
     # each pair's two ids meet the shingle projection in ONE join (a
     # join per side would plan the projection twice); regrouping by
@@ -496,7 +489,6 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
     cands = minhash_lsh_candidates(df, id_col, text_col, **lsh_kwargs)
     return jaccard_verify(df, cands, id_col, text_col,
                           k=lsh_kwargs.get("k", 3), threshold=threshold,
-                          mode=lsh_kwargs.get("mode", "word"),
                           prune_to_candidates=prune_verify,
                           corpus_n_rows=corpus_n_rows)
 
@@ -931,7 +923,6 @@ def minhash_write_index(
     k: int = 3,
     num_perm: int = 64,
     bands: int = 16,
-    mode: str = "word",
 ) -> dict:
     """Materialize the MinHash LSH index for a corpus:
 
@@ -946,12 +937,13 @@ def minhash_write_index(
       the explicit price of O(batch) incremental dedup instead of
       O(corpus) per batch.
     * ``meta.json`` — parameters; a batch deduped against the index
-      MUST use the same (k, num_perm, bands, mode), enforced on read.
+      MUST use the same (k, num_perm, bands), enforced on read; the
+      shingle mode is recorded as ``SHINGLE_MODE``.
 
     Returns {n_docs, n_memberships}. Ids must be unique; later
     appended batches must use ids disjoint from the index."""
     memb = minhash_band_memberships(
-        df, id_col, text_col, k=k, num_perm=num_perm, bands=bands, mode=mode
+        df, id_col, text_col, k=k, num_perm=num_perm, bands=bands
     )
     import os
 
@@ -966,7 +958,7 @@ def minhash_write_index(
     n_memb = spark.read.parquet(os.path.join(index_dir, "bands")).count()
     _write_index_meta(index_dir, {
         "format": MINHASH_INDEX_FORMAT,
-        "k": k, "num_perm": num_perm, "bands": bands, "mode": mode,
+        "k": k, "num_perm": num_perm, "bands": bands, "mode": SHINGLE_MODE,
         "n_docs": n_docs,
     })
     return {"n_docs": n_docs, "n_memberships": n_memb}
@@ -980,7 +972,6 @@ def minhash_dedup_pairs_incremental(
     threshold: float = 0.7,
     max_bucket: int | None = None,
     append: bool = True,
-    prune_verify: bool = True,
     append_tag: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs of a NEW batch against an indexed corpus —
@@ -1011,11 +1002,11 @@ def minhash_dedup_pairs_incremental(
     re-emitted: they were produced when their batches were indexed.
 
     ``append=True`` ships the new batch into the index AFTER the pair
-    search has materialized (append forces the eager verify path):
-    the index is only ever extended once this batch's pairs exist, so
-    a crash mid-run leaves the index untouched and a plain rerun is
-    correct — appending first would make the rerun see the batch as
-    already-indexed and silently emit none of its pairs. The meta
+    search has materialized (the verify is always the eager, pruned
+    one): the index is only ever extended once this batch's pairs
+    exist, so a crash mid-run leaves the index untouched and a plain
+    rerun is correct — appending first would make the rerun see the
+    batch as already-indexed and silently emit none of its pairs. The meta
     update is written last (the commit marker); a crash between the
     parquet appends and the meta write leaves extra membership/doc
     rows that a rerun re-appends — duplicate membership rows only add
@@ -1033,26 +1024,27 @@ def minhash_dedup_pairs_incremental(
     foreachBatch exactly-once ledger (see
     streaming.streaming_minhash_dedup).
 
-    Cache contract: with ``append=True`` the returned frame is a
-    localCheckpoint and every working cache is already released; the
-    checkpoint itself stays persisted, so call
-    ``release_checkpoint(result)`` once every action that reads it has
-    run. With ``append=False`` (lazy mode) release BOTH caches
-    after your action: ``._candidate_pairs_cache`` (as
-    minhash_dedup_pairs, when prune_verify ran eager) and
-    ``._batch_memberships_cache`` (the batch's one signature pass)."""
+    Cache contract, the same in every mode (append, ``append=False``,
+    tag replay): the pairs are computed at call time into a
+    localCheckpoint, every working cache is released before the call
+    returns, and the caller calls ``release_checkpoint(result)`` once
+    every action that reads the result has run."""
     import os
 
     from pyspark import StorageLevel
 
     meta = _read_index_meta(index_dir, MINHASH_INDEX_FORMAT)
     k, num_perm = meta["k"], meta["num_perm"]
-    bands, mode = meta["bands"], meta["mode"]
+    bands = meta["bands"]
+    if meta.get("mode") != SHINGLE_MODE:
+        raise ValueError(
+            f"{index_dir} shingles by {meta.get('mode')!r}, "
+            f"expected {SHINGLE_MODE!r}"
+        )
     spark = new_df.sparkSession
 
     new_memb = minhash_band_memberships(
-        new_df, id_col, text_col,
-        k=k, num_perm=num_perm, bands=bands, mode=mode,
+        new_df, id_col, text_col, k=k, num_perm=num_perm, bands=bands,
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # ONE signature pass: this job populates the cache; every later
     # consumer (key probe, pair search, append write) reads the cache
@@ -1091,8 +1083,7 @@ def minhash_dedup_pairs_incremental(
     )
 
     # verify corpus: the new batch plus the index docs (old side read
-    # pruned to candidate ids by jaccard_verify's semi-join when
-    # prune_verify is on)
+    # pruned to candidate ids by jaccard_verify's semi-join)
     old_docs = spark.read.parquet(os.path.join(index_dir, "docs"))
     # anti-join on batch ids: belt-and-braces against a file-listing
     # refresh picking up this run's own doc append (which would put
@@ -1103,46 +1094,40 @@ def minhash_dedup_pairs_incremental(
     combined = new_df.select(
         F.col(id_col).alias("id"), F.col(text_col).alias("text")
     ).unionByName(old_docs)
-    already_appended = (
-        append_tag is not None
-        and append_tag in meta.get("appended_tags", [])
-    )
-    do_append = append and not already_appended
     verified = jaccard_verify(
         combined, pairs, id_col="id", text_col="text",
-        k=k, threshold=threshold, mode=mode,
-        prune_to_candidates=True if do_append else prune_verify,
+        k=k, threshold=threshold, prune_to_candidates=True,
     )
-    if not do_append:
-        verified._batch_memberships_cache = new_memb
-        return verified
     # fully materialize the VERIFIED pairs (small by construction)
     # before the index grows: the caller's later action re-plans
     # against a REFRESHED parquet listing — candidate caching alone
     # does not shield it (observed as every batch id self-pairing
     # once its own membership append became visible). The checkpoint
-    # severs the lineage, so both working caches release right here;
-    # the caller releases the checkpoint (see docstring).
-    out = out_ck = verified.localCheckpoint()
-    cache = getattr(verified, "_candidate_pairs_cache", None)
-    if cache is not None:
-        cache.unpersist()
-    new_memb.write.partitionBy("band").mode("append").parquet(
-        os.path.join(index_dir, "bands")
+    # severs the lineage, so both working caches release in this
+    # call, whether or not it appends.
+    out = verified.localCheckpoint()
+    verified._candidate_pairs_cache.unpersist()
+    already_appended = (
+        append_tag is not None
+        and append_tag in meta.get("appended_tags", [])
     )
-    new_df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    ).write.mode("append").parquet(os.path.join(index_dir, "docs"))
-    # meta last: the commit marker (see docstring failure contract);
-    # the n_docs bump and the tag ledger commit in ONE atomic replace
-    new_meta = {**meta, "n_docs": meta["n_docs"] + n_new}
-    if append_tag is not None:
-        new_meta["appended_tags"] = list(
-            meta.get("appended_tags", [])
-        ) + [append_tag]
-    _write_index_meta(index_dir, new_meta)
+    if append and not already_appended:
+        new_memb.write.partitionBy("band").mode("append").parquet(
+            os.path.join(index_dir, "bands")
+        )
+        new_df.select(
+            F.col(id_col).alias("id"), F.col(text_col).alias("text")
+        ).write.mode("append").parquet(os.path.join(index_dir, "docs"))
+        # meta last: the commit marker (see docstring failure contract);
+        # the n_docs bump and the tag ledger commit in ONE atomic replace
+        new_meta = {**meta, "n_docs": meta["n_docs"] + n_new}
+        if append_tag is not None:
+            new_meta["appended_tags"] = list(
+                meta.get("appended_tags", [])
+            ) + [append_tag]
+        _write_index_meta(index_dir, new_meta)
     new_memb.unpersist()
-    return out_ck
+    return out
 
 
 def simhash_write_index(
@@ -1187,15 +1172,14 @@ def simhash_dup_pairs_incremental(
     keys are a pure function of the signature, and every new-old /
     new-new key collision involves a new-side key by definition).
 
-    ``append=True`` materializes the pair set (localCheckpoint)
-    BEFORE touching the index — same crash contract as the MinHash
-    incremental: the index only grows once this batch's pairs exist,
-    and the meta write is the commit marker. With ``append=True`` the
-    returned frame is a localCheckpoint and every working cache is
-    already released; call ``release_checkpoint(result)`` once every
-    action that reads it has run. With ``append=False`` release
-    ``result._batch_sigs_cache`` after your action (the batch's one
-    signature pass)."""
+    The pair set is materialized (localCheckpoint) BEFORE
+    ``append=True`` touches the index — same crash contract as the
+    MinHash incremental: the index only grows once this batch's pairs
+    exist, and the meta write is the commit marker. Cache contract,
+    as there: in either mode the result is a localCheckpoint, the
+    batch's signature cache is released before the call returns, and
+    the caller calls ``release_checkpoint(result)`` once every action
+    that reads the result has run."""
     import os
 
     from pyspark import StorageLevel
@@ -1236,18 +1220,16 @@ def simhash_dup_pairs_incremental(
         .select("id_a", "id_b", "hamming")
         .distinct()
     )
+    # materialize the pairs before the index grows (crash safety, see
+    # docstring); the pair set is small by construction, and the
+    # checkpoint lets the batch-sigs cache release right here
+    pairs = pairs.localCheckpoint()
     if append:
-        # materialize the pairs before the index grows (crash safety,
-        # see docstring); the pair set is small by construction, and
-        # the checkpoint lets the batch-sigs cache release right here
-        pairs = pairs.localCheckpoint()
         new_sigs.write.mode("append").parquet(
             os.path.join(index_dir, "sigs")
         )
         _write_index_meta(index_dir, {
             **meta, "n_docs": meta["n_docs"] + n_new,
         })
-        new_sigs.unpersist()
-        return pairs
-    pairs._batch_sigs_cache = new_sigs
+    new_sigs.unpersist()
     return pairs

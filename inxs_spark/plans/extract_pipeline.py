@@ -31,6 +31,14 @@ per-row Python at the Spark API level (BASELINE.json:15). Inside the
 batch the kernel runs per document, exactly like the reference library
 would, minus lxml (SURVEY.md §0).
 
+One contract, one encoder: a row function maps a payload to
+``(extracted_text, spans, failure)``, declared once as
+``RESULT_FIELDS``, and :func:`encode_turns` turns a batch of payloads
+into those Arrow columns. Every kernel hop goes through it: this
+module's mapInArrow, :func:`extract_df_deduped` (which is
+:func:`extract_df` over the distinct payloads) and the SQL function
+(``functions.sql``, an ``arrow_udf``).
+
 Lineage: each task writes a per-partition metrics JSON (rows in/out,
 failures, wall ms, rule-set hash, input snapshot) via atomic rename —
 the sandbox stand-in for a metrics Iceberg table append
@@ -46,33 +54,71 @@ from typing import Iterator, Optional
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import DataType
 
 from ..extract import MAIN_CONTENT, turn_extractor
 from ..kernel.transformation import Transformation
 from ..operators.fanout import ensure_compute_fanout, planned_partitions
 from ..sources.io import write_json_atomic
 
-OUTPUT_SPARK_SCHEMA = (
-    "conv_id string, turn_idx int, extracted_text string, "
-    "spans array<struct<start:int,end:int,path:string>>, failure string"
+#: the per-turn result contract, declared once: (name, Spark DDL type)
+#: of each column ``row_fn`` fills. The pipeline's output schema, the
+#: SQL function's struct and the Arrow names are all built from it.
+RESULT_FIELDS = (
+    ("extracted_text", "string"),
+    ("spans", "array<struct<start:int,end:int,path:string>>"),
+    ("failure", "string"),
 )
+RESULT_NAMES = [name for name, _ in RESULT_FIELDS]
+#: ``name type, ...``: a schema for mapInArrow, a struct for a UDF
+RESULT_DDL = ", ".join(f"{name} {ddl}" for name, ddl in RESULT_FIELDS)
+KEY_NAMES = ["conv_id", "turn_idx"]
+OUTPUT_SPARK_SCHEMA = "conv_id string, turn_idx int, " + RESULT_DDL
 
-SPAN_TYPE = pa.list_(
-    pa.struct(
-        [("start", pa.int32()), ("end", pa.int32()), ("path", pa.string())]
+
+def encode_turns(texts: list, row_fn) -> tuple[list, int]:
+    """``row_fn`` (payload → (text, spans, failure)) over one batch of
+    payloads → (the ``RESULT_FIELDS`` columns as Arrow arrays, number
+    of failed turns). The one place payloads become Arrow columns:
+    the pipeline's mapInArrow and the SQL function both call it."""
+    extracted: list[Optional[str]] = []
+    fails: list[Optional[str]] = []
+    n_failed = 0
+    # spans build FLAT (offsets + three value arrays) — pyarrow
+    # converts flat primitive lists far faster than nested
+    # list-of-tuples (profiled ~half the wrapper overhead)
+    offsets = [0]
+    s_starts: list[int] = []
+    s_ends: list[int] = []
+    s_paths: list[str] = []
+    for payload in texts:
+        text, spans, failure = row_fn(payload)
+        extracted.append(text)
+        for s, e, p in spans:
+            s_starts.append(s)
+            s_ends.append(e)
+            s_paths.append(p)
+        offsets.append(len(s_starts))
+        fails.append(failure)
+        if failure is not None:
+            n_failed += 1
+    spans_arr = pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int32()),
+        pa.StructArray.from_arrays(
+            [
+                pa.array(s_starts, type=pa.int32()),
+                pa.array(s_ends, type=pa.int32()),
+                pa.array(s_paths, type=pa.string()),
+            ],
+            names=["start", "end", "path"],
+        ),
     )
-)
-
-_OUT_ARROW = pa.schema(
-    [
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("extracted_text", pa.string()),
-        ("spans", SPAN_TYPE),
-        ("failure", pa.string()),
+    arrays = [
+        pa.array(extracted, type=pa.string()),
+        spans_arr,
+        pa.array(fails, type=pa.string()),
     ]
-)
+    return arrays, n_failed
+
 
 def make_extract_fn(
     transformation: Transformation,
@@ -107,70 +153,29 @@ def make_extract_fn(
             f"row_fn:{getattr(row_fn, '__module__', '')}."
             f"{getattr(row_fn, '__qualname__', repr(row_fn))}".encode()
         ).hexdigest()
+    names = KEY_NAMES + RESULT_NAMES + list(passthrough_cols)
 
     def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         start = time.monotonic()
-        rows_in = rows_out = failures = 0
+        rows = failures = 0
         for batch in batches:
             schema = batch.schema
-            conv = batch.column(schema.get_field_index("conv_id"))
-            turn = batch.column(schema.get_field_index("turn_idx"))
             texts = batch.column(schema.get_field_index("text")).to_pylist()
-            rows_in += len(texts)
-            extracted: list[Optional[str]] = []
-            fails: list[Optional[str]] = []
-            # spans build FLAT (offsets + three value arrays) — pyarrow
-            # converts flat primitive lists far faster than nested
-            # list-of-tuples (profiled ~half the wrapper overhead)
-            offsets = [0]
-            s_starts: list[int] = []
-            s_ends: list[int] = []
-            s_paths: list[str] = []
-            for payload in texts:
-                text, spans, failure = row_fn(payload)
-                extracted.append(text)
-                for s, e, p in spans:
-                    s_starts.append(s)
-                    s_ends.append(e)
-                    s_paths.append(p)
-                offsets.append(len(s_starts))
-                fails.append(failure)
-                if failure is not None:
-                    failures += 1
-            rows_out += len(texts)
-            spans_arr = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()),
-                pa.StructArray.from_arrays(
-                    [
-                        pa.array(s_starts, type=pa.int32()),
-                        pa.array(s_ends, type=pa.int32()),
-                        pa.array(s_paths, type=pa.string()),
-                    ],
-                    names=["start", "end", "path"],
-                ),
-            )
-            out_arrays = [
-                conv.cast(pa.string()),
-                turn.cast(pa.int32()),
-                pa.array(extracted, type=pa.string()),
-                spans_arr,
-                pa.array(fails, type=pa.string()),
+            arrays, n_failed = encode_turns(texts, row_fn)
+            rows += len(texts)
+            failures += n_failed
+            keys = [
+                batch.column(schema.get_field_index("conv_id")).cast(pa.string()),
+                batch.column(schema.get_field_index("turn_idx")).cast(pa.int32()),
             ]
-            if passthrough_cols:
-                yield pa.RecordBatch.from_arrays(
-                    out_arrays
-                    + [
-                        batch.column(schema.get_field_index(c))
-                        for c in passthrough_cols
-                    ],
-                    names=list(_OUT_ARROW.names) + list(passthrough_cols),
-                )
-            else:
-                yield pa.RecordBatch.from_arrays(out_arrays, schema=_OUT_ARROW)
+            passthrough = [
+                batch.column(schema.get_field_index(c)) for c in passthrough_cols
+            ]
+            yield pa.RecordBatch.from_arrays(keys + arrays + passthrough, names=names)
         if metrics_dir:
             _write_partition_metrics(
                 metrics_dir, run_id, chunk_id, input_snapshot_id,
-                rule_set_hash, rows_in, rows_out, failures,
+                rule_set_hash, rows, rows, failures,
                 int((time.monotonic() - start) * 1000),
             )
 
@@ -250,7 +255,7 @@ def extract_df(
     # output schema (or the key/text inputs) used to fail deep inside
     # mapInArrow with a confusing duplicate-field error — reject it
     # up front with the actual offender named
-    reserved = {"text", *DataType.fromDDL(OUTPUT_SPARK_SCHEMA).names}
+    reserved = {"text", *KEY_NAMES, *RESULT_NAMES}
     clash = [c for c in passthrough_cols if c in reserved]
     if clash:
         raise ValueError(
@@ -267,7 +272,7 @@ def extract_df(
             f"{c} {df.schema[c].dataType.simpleString()}"
             for c in passthrough_cols
         )
-    pruned = df.select("conv_id", "turn_idx", "text", *passthrough_cols)
+    pruned = df.select(*KEY_NAMES, "text", *passthrough_cols)
     if num_partitions is None:
         pruned = ensure_compute_fanout(pruned, "conv_id", "turn_idx")
     else:
@@ -294,8 +299,8 @@ def extract_df_deduped(
 
     Plan shape::
 
-        scan ─┬─ project (conv_id, turn_idx, fp=xxhash64(text))
-              └─ distinct(fp, text) → repartition(fp) → mapInArrow
+        scan ─┬─ project (conv_id, turn_idx, fp=md5(text))
+              └─ distinct(fp, text) → repartition(fp) → extract_df
                    └────────── join on fp (both sides shuffle on fp)
 
     The key is a 128-bit md5 (32-char hex, 2^-128 collision odds —
@@ -317,46 +322,29 @@ def extract_df_deduped(
             spark.sparkContext.defaultParallelism, _shuffle_floor(spark)
         )
     fp = F.coalesce(F.md5("text"), F.lit("NULL")).alias("fp")
-    keyed = df.select("conv_id", "turn_idx", F.col("text"), fp)
+    keyed = df.select(*KEY_NAMES, "text", fp)
     distinct = (
         keyed.select("fp", "text")
         .dropDuplicates(["fp"])
         .repartition(num_partitions, "fp")
     )
-    fn = make_extract_fn(transformation, row_fn=row_fn)
-
-    def extract_keep_fp(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            fps = batch.column(batch.schema.get_field_index("fp"))
-            # reuse the kernel batch fn on a (conv_id, turn_idx, text)
-            # shaped batch; conv_id/turn_idx are dummies here
-            shaped = pa.RecordBatch.from_arrays(
-                [
-                    pa.array([""] * len(batch), type=pa.string()),
-                    pa.array([0] * len(batch), type=pa.int32()),
-                    batch.column(batch.schema.get_field_index("text")),
-                ],
-                names=["conv_id", "turn_idx", "text"],
-            )
-            for out in fn(iter([shaped])):
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        fps,
-                        out.column(2),  # extracted_text
-                        out.column(3),  # spans
-                        out.column(4),  # failure
-                    ],
-                    names=["fp", "extracted_text", "spans", "failure"],
-                )
-
-    extracted_distinct = distinct.mapInArrow(
-        extract_keep_fp,
-        "fp string, extracted_text string, "
-        "spans array<struct<start:int,end:int,path:string>>, failure string",
-    )
+    # the kernel hop is extract_df itself: fp passes through, and
+    # literal keys fill the key columns (dropped before the join,
+    # where ``keyed`` has the real ones — kept, they make the join's
+    # key references ambiguous). The fp exchange above already
+    # shuffles, so extract_df adds no fan-out on the literal keys,
+    # which would send every distinct payload to one task.
+    extracted_distinct = extract_df(
+        distinct.select(
+            F.lit("").alias("conv_id"), F.lit(0).alias("turn_idx"), "text", "fp"
+        ),
+        transformation,
+        row_fn=row_fn,
+        passthrough_cols=("fp",),
+    ).drop(*KEY_NAMES)
     return (
         keyed.drop("text")
         .join(extracted_distinct, "fp")
         .drop("fp")
-        .select("conv_id", "turn_idx", "extracted_text", "spans", "failure")
+        .select(*KEY_NAMES, *RESULT_NAMES)
     )

@@ -1,1 +1,1 @@
-"""Sources/sinks: session builder, table I/O seam, transcript synthesis."""
+"""Sources/sinks: session builder, storage helpers, transcript synthesis."""

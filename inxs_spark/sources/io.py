@@ -1,17 +1,19 @@
-"""Table I/O seam — ALL table reads/writes go through here.
+"""Storage helpers the jobs share.
 
-In this sandbox tables are Parquet; in production the same calls target
-Iceberg (``format("iceberg")`` + snapshot pinning) — the seam keeps
-that a config switch (SURVEY.md §0 environment constraints; no Iceberg
-jars locally). ``input_fingerprint`` stands in for an Iceberg snapshot
-id (BASELINE.json:6): a hash over a table's files' (path, size, mtime)
-— stable for an immutable table.
+Tables are Parquet, read and written with Spark's own
+``spark.read.parquet`` / ``df.write.parquet`` at each call site (no
+Iceberg jars locally, SURVEY.md §0 environment constraints). This
+module holds what those calls do not cover:
 
-Small JSON files (run records, manifests, index metadata, codebooks,
-tokenizer models) go through the same seam: :func:`write_json_atomic`
-is the package's one write-then-rename, and :func:`compact_records`
-folds a run's ``metrics/*.json`` records into its queryable
-``metrics_table``.
+- :func:`write_bucketed`, the co-located-join layout;
+- :func:`input_fingerprint`, the stand-in for an Iceberg snapshot id
+  (BASELINE.json:6): a hash over a table's files' (path, size, mtime)
+  — stable for an immutable table — and :func:`local_path`, which
+  maps the file URIs Spark lists back to paths;
+- small JSON files (run records, manifests, index metadata, codebooks,
+  tokenizer models): :func:`write_json_atomic` is the package's one
+  write-then-rename, and :func:`compact_records` folds a run's
+  ``metrics/*.json`` records into its queryable ``metrics_table``.
 """
 
 from __future__ import annotations
@@ -25,26 +27,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLE_FORMAT = os.environ.get("INXS_SPARK_TABLE_FORMAT", "parquet")
-
-
-def read_table(spark: SparkSession, location: str, fmt: str | None = None,
-               snapshot_id: str | None = None) -> DataFrame:
-    fmt = fmt or TABLE_FORMAT
-    reader = spark.read.format(fmt)
-    if snapshot_id is not None and fmt == "iceberg":
-        reader = reader.option("snapshot-id", snapshot_id)
-    return reader.load(location)
-
-
-def write_table(df: DataFrame, location: str, fmt: str | None = None,
-                mode: str = "overwrite") -> None:
-    (df.write.format(fmt or TABLE_FORMAT).mode(mode).save(location))
-
 
 def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
-                   n_buckets: int, sort_cols: list[str] | None = None,
-                   fmt: str | None = None) -> None:
+                   n_buckets: int, sort_cols: list[str] | None = None) -> None:
     """Persist a table BUCKETED by the join/aggregation key — the
     co-located-join layout. Two tables bucketed the same way join with
     ZERO Exchange on either side (asserted in
@@ -52,7 +37,7 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
     recurring fact-fact join from a full shuffle into a local
     merge-per-bucket. Parquet+bucketBy here; on Iceberg the same call
     becomes a ``bucket(n, col)`` partition transform."""
-    writer = df.write.format(fmt or TABLE_FORMAT).mode("overwrite")
+    writer = df.write.format("parquet").mode("overwrite")
     writer = writer.bucketBy(n_buckets, *bucket_cols)
     writer = writer.sortBy(*(sort_cols or bucket_cols))
     writer.saveAsTable(table)

@@ -11,11 +11,30 @@ from pyspark.sql import functions as F
 
 
 def _release(df):
-    for attr in ("_candidate_pairs_cache", "_batch_memberships_cache",
-                 "_batch_sigs_cache"):
-        c = getattr(df, attr, None)
-        if c is not None:
-            c.unpersist()
+    """Release the candidate-pair cache an eager verify leaves on a
+    one-shot result (incremental results are local checkpoints:
+    ``release_checkpoint``)."""
+    c = getattr(df, "_candidate_pairs_cache", None)
+    if c is not None:
+        c.unpersist()
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.fixture(autouse=True)
+def _no_leaked_caches(request):
+    """Every test here releases every cache and checkpoint it makes:
+    a test that leaves a persisted RDD behind fails."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    spark = request.getfixturevalue("spark")
+    before = _persisted(spark)
+    yield
+    leaked = _persisted(spark) - before
+    assert leaked == 0, f"{leaked} persisted RDD(s) left behind"
 
 
 def _path(df):
@@ -67,7 +86,7 @@ def _batch_rows(start, fam_extra=""):
     return rows
 
 
-PARAMS = dict(k=3, num_perm=64, bands=16, mode="word")
+PARAMS = dict(k=3, num_perm=64, bands=16)
 THRESH = 0.5
 
 
@@ -82,7 +101,7 @@ class TestMinhashIncremental:
         every incremental pair involves a batch id."""
         from inxs_spark.operators.dedup import (
             minhash_dedup_pairs, minhash_dedup_pairs_incremental,
-            minhash_write_index,
+            minhash_write_index, release_checkpoint,
         )
 
         idx = str(tmp_path / "mh_index")
@@ -108,7 +127,7 @@ class TestMinhashIncremental:
                 append=True,
             )
             inc_rows = inc.collect()
-            _release(inc)
+            release_checkpoint(inc)
             batch_ids = {i for i, _t in batch_rows}
             assert inc_rows, "expected cross/within-batch near-dups"
             for r in inc_rows:
@@ -126,12 +145,14 @@ class TestMinhashIncremental:
         # meta tracked the growth
         from inxs_spark.operators.dedup import _read_index_meta, \
             MINHASH_INDEX_FORMAT
-        assert _read_index_meta(idx, MINHASH_INDEX_FORMAT)["n_docs"] == 60
+        meta = _read_index_meta(idx, MINHASH_INDEX_FORMAT)
+        assert meta["n_docs"] == 60 and meta["mode"] == "word"
 
     def test_no_append_leaves_index_unchanged(self, spark, tmp_path):
         from inxs_spark.operators.dedup import (
             _read_index_meta, MINHASH_INDEX_FORMAT,
             minhash_dedup_pairs_incremental, minhash_write_index,
+            release_checkpoint,
         )
 
         idx = str(tmp_path / "mh_index_ro")
@@ -142,7 +163,7 @@ class TestMinhashIncremental:
             threshold=THRESH, max_bucket=10_000, append=False,
         )
         rows1 = _pairset(inc.collect())
-        _release(inc)
+        release_checkpoint(inc)
         assert _read_index_meta(idx, MINHASH_INDEX_FORMAT) == before
         # read-only run is repeatable
         inc2 = minhash_dedup_pairs_incremental(
@@ -150,7 +171,7 @@ class TestMinhashIncremental:
             threshold=THRESH, max_bucket=10_000, append=False,
         )
         assert _pairset(inc2.collect()) == rows1
-        _release(inc2)
+        release_checkpoint(inc2)
 
     def test_wrong_format_rejected(self, spark, tmp_path):
         from inxs_spark.operators.dedup import (
@@ -164,12 +185,30 @@ class TestMinhashIncremental:
                 _mk_docs(spark, _batch_rows(100)[:3]), idx
             )
 
+    def test_other_shingle_mode_rejected(self, spark, tmp_path):
+        """Indexes record their shingle mode; one built with anything
+        but word shingles is refused before any Spark work."""
+        from inxs_spark.operators.dedup import (
+            MINHASH_INDEX_FORMAT, _write_index_meta,
+            minhash_dedup_pairs_incremental,
+        )
+
+        idx = str(tmp_path / "char_index")
+        _write_index_meta(idx, {
+            "format": MINHASH_INDEX_FORMAT, "k": 3, "num_perm": 64,
+            "bands": 16, "mode": "char", "n_docs": 0,
+        })
+        with pytest.raises(ValueError, match="'char'"):
+            minhash_dedup_pairs_incremental(
+                _mk_docs(spark, _batch_rows(100)[:3]), idx
+            )
+
 
 class TestSimhashIncremental:
     def test_incremental_equals_full_recompute(self, spark, tmp_path):
         from inxs_spark.operators.dedup import (
-            simhash_dup_pairs, simhash_dup_pairs_incremental,
-            simhash_write_index,
+            release_checkpoint, simhash_dup_pairs,
+            simhash_dup_pairs_incremental, simhash_write_index,
         )
 
         idx = str(tmp_path / "sh_index")
@@ -187,7 +226,7 @@ class TestSimhashIncremental:
             batch, idx, max_hamming=8, append=True
         )
         inc_rows = inc.collect()
-        _release(inc)
+        release_checkpoint(inc)
         assert inc_rows
         batch_ids = {i for i, _t in b1_rows}
         for r in inc_rows:
@@ -380,6 +419,7 @@ class TestReplaySafety:
         from inxs_spark.operators.dedup import (
             _read_index_meta, MINHASH_INDEX_FORMAT,
             minhash_dedup_pairs_incremental, minhash_write_index,
+            release_checkpoint,
         )
 
         idx = str(tmp_path / "replay_idx")
@@ -390,6 +430,7 @@ class TestReplaySafety:
             append=True, append_tag="b7",
         )
         want = _pairset(first.collect())
+        release_checkpoint(first)
         meta1 = _read_index_meta(idx, MINHASH_INDEX_FORMAT)
         assert meta1["n_docs"] == 45 and meta1["appended_tags"] == ["b7"]
         n_memb1 = spark.read.parquet(idx + "/bands").count()
@@ -400,11 +441,52 @@ class TestReplaySafety:
             append=True, append_tag="b7",
         )
         got = _pairset(replay.collect())
-        _release(replay)
+        release_checkpoint(replay)
         assert got == want
         assert not [p for p in got if p[0] == p[1]]
         assert _read_index_meta(idx, MINHASH_INDEX_FORMAT) == meta1
         assert spark.read.parquet(idx + "/bands").count() == n_memb1
+
+    @pytest.mark.parametrize("case", ["minhash_replay", "minhash_no_append",
+                                      "simhash_no_append"])
+    def test_result_is_the_only_cache_left(self, spark, tmp_path, case):
+        """One cache contract in every mode: the incremental result is
+        a local checkpoint and nothing else stays persisted, so
+        ``release_checkpoint(result)`` brings the persisted-RDD count
+        back to where it was before the call — a replayed tag (what a
+        retried streaming microbatch sends) and ``append=False``
+        included."""
+        from inxs_spark.operators.dedup import (
+            minhash_dedup_pairs_incremental, minhash_write_index,
+            release_checkpoint, simhash_dup_pairs_incremental,
+            simhash_write_index,
+        )
+
+        idx = str(tmp_path / "idx")
+        old = _mk_docs(spark, _corpus_rows())
+        batch = _mk_docs(spark, _batch_rows(100))
+        if case == "simhash_no_append":
+            simhash_write_index(old, idx)
+
+            def call():
+                return simhash_dup_pairs_incremental(
+                    batch, idx, max_hamming=8, append=False)
+        else:
+            minhash_write_index(old, idx, **PARAMS)
+
+            def call():
+                return minhash_dedup_pairs_incremental(
+                    batch, idx, threshold=THRESH, max_bucket=10_000,
+                    append=case == "minhash_replay", append_tag="b1")
+            if case == "minhash_replay":
+                first = call()
+                first.collect()
+                release_checkpoint(first)
+        before = _persisted(spark)
+        result = call()
+        assert result.collect()
+        release_checkpoint(result)
+        assert _persisted(spark) == before
 
     def test_meta_write_failure_keeps_previous_meta(self, tmp_path):
         """A meta.json write that fails part-way (here: a value json

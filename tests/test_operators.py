@@ -1379,7 +1379,7 @@ class TestDedup:
         texts = pd.Series([" ".join(f"w{i}" for i in range(40)),
                            " ".join(f"v{i}" for i in range(40))])
 
-        sig = dedup._make_minhash_udf(8, 3, "word").func
+        sig = dedup._make_minhash_udf(8, 3).func
         memo = inspect.getclosurevars(sig).nonlocals["memo"]
         first = sig(texts)
         assert len(memo) == 5

@@ -512,6 +512,31 @@ def test_deduped_pipeline_on_duplicate_heavy_input(spark):
     assert got[("nulltext", 0)] == ("NULL", None)
 
 
+def test_deduped_pipeline_plan_shuffles_on_fp_only(spark, tiny_transcripts):
+    """extract_df_deduped runs the kernel in ONE MapInArrow, and every
+    shuffle in its plan hashes on the payload fingerprint: a fan-out on
+    the literal keys the kernel hop carries would put every distinct
+    payload on one task. Broadcast is off, so the join-back plans the
+    shuffle join it takes at scale."""
+    import re
+
+    from inxs_spark.plans.extract_pipeline import extract_df_deduped
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = extract_df_deduped(
+            spark.read.parquet(tiny_transcripts)
+        )._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert plan.count("MapInArrow") == 1, plan
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert exchanges, plan
+    for ln in exchanges:
+        assert re.search(r"Exchange hashpartitioning\(fp#\d+, \d+\)", ln), plan
+
+
 def test_contract_deduped_equals_plain(spark, tiny_transcripts):
     """x_extract_deduped must match x_extract_transcripts row-for-row."""
     import __spark_entry__ as E

@@ -1,4 +1,4 @@
-"""Stateful streaming operator + io seam tests."""
+"""Stateful streaming operator + storage helper tests."""
 
 import os
 
@@ -51,20 +51,20 @@ def test_conversation_progress_stateful(spark, tiny_transcripts, tmp_out):
 
 
 def test_io_roundtrip_and_fingerprint(spark, tmp_out):
-    from inxs_spark.sources.io import input_fingerprint, read_table, write_table
+    from inxs_spark.sources.io import input_fingerprint
 
     df = spark.range(100).select(
         F.col("id"), (F.col("id") * 2).alias("v")
     )
     path = os.path.join(tmp_out, "t")
-    write_table(df, path)
-    back = read_table(spark, path)
+    df.write.parquet(path)
+    back = spark.read.parquet(path)
     assert back.count() == 100
     assert set(back.columns) == {"id", "v"}
     fp1 = input_fingerprint(path)
     fp2 = input_fingerprint(path)
     assert fp1 == fp2 and fp1.startswith("files-")
-    write_table(df.limit(10), os.path.join(tmp_out, "t2"))
+    df.limit(10).write.parquet(os.path.join(tmp_out, "t2"))
     assert input_fingerprint(os.path.join(tmp_out, "t2")) != fp1
 
 
@@ -135,25 +135,45 @@ def test_functions_facade(spark):
 
 def test_sql_function_matches_pipeline(spark, tiny_transcripts):
     """extract_main_content() from spark.sql must produce byte-identical
-    text/failure to the extract_df pipeline (same kernel)."""
+    text, spans and failure to the extract_df pipeline (same kernel,
+    same encoder), failed turns included: an oversized payload and a
+    broken ``<?xml``-declared one ride along with the tiny tier."""
+    import warnings
+
+    from inxs_spark.extract import MAX_PAYLOAD_CHARS
     from inxs_spark.functions.sql import register_sql_functions
     from inxs_spark.plans.extract_pipeline import extract_df
 
-    assert register_sql_functions(spark) == ["extract_main_content"]
-    tdf = spark.read.parquet(tiny_transcripts)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert register_sql_functions(spark) == ["extract_main_content"]
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+    extra = spark.createDataFrame(
+        [("sql-extra", 0, "x" * (MAX_PAYLOAD_CHARS + 1)),
+         ("sql-extra", 1, '<?xml version="1.0"?><doc><p>broken</doc>')],
+        "conv_id string, turn_idx int, text string",
+    )
+    tdf = (spark.read.parquet(tiny_transcripts)
+           .select("conv_id", "turn_idx", "text").unionByName(extra))
     tdf.createOrReplaceTempView("transcripts_sql_test")
+
+    def val(r):
+        return (r.extracted_text, [tuple(s) for s in r.spans], r.failure)
+
     via_sql = {
-        (r.conv_id, r.turn_idx): (r.r.extracted_text, r.r.failure)
+        (r.conv_id, r.turn_idx): val(r.r)
         for r in spark.sql(
             "SELECT conv_id, turn_idx, extract_main_content(text) AS r "
             "FROM transcripts_sql_test"
         ).collect()
     }
     via_pipeline = {
-        (r.conv_id, r.turn_idx): (r.extracted_text, r.failure)
-        for r in extract_df(tdf).collect()
+        (r.conv_id, r.turn_idx): val(r) for r in extract_df(tdf).collect()
     }
     assert via_sql == via_pipeline
+    assert via_sql[("sql-extra", 0)] == (None, [], "payload_too_large")
+    assert via_sql[("sql-extra", 1)] == (None, [], "parse_error")
+    assert any(spans for _t, spans, _f in via_sql.values())
     # plan stays vectorized: ArrowEvalPython, never BatchEvalPython
     plan = spark.sql(
         "SELECT extract_main_content(text) FROM transcripts_sql_test"
