@@ -1972,8 +1972,8 @@ def q_binary_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         payload = bytes(r.payload)
         try:
             if r.kind == "image":
-                feature, w2, h2 = _image_features(payload, (32, 32))
-                fk, tw, th, err = "real", w2, h2, None
+                feature = _image_features(payload)
+                fk, tw, th, err = "real", 32, 32, None
             elif r.kind == "audio":
                 feature, fk, tw, th, err = (
                     _audio_features(payload), "real", None, None, None,

@@ -43,27 +43,31 @@ def table_transformation() -> Transformation:
 
 def main() -> None:
     if "--spark" in sys.argv:
-        # at scale: the same per-document kernel inside mapInPandas,
+        # at scale: the same per-document kernel inside mapInArrow,
         # exploding each table row to an output record
         from typing import Iterator
 
-        import pandas as pd
+        import pyarrow as pa
 
+        from inxs_spark.sources.io import row_batcher
         from inxs_spark.sources.session import get_spark
 
         t = table_transformation()
+        schema = "doc_id long, cells array<string>"
 
-        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
+        def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in it:
                 out = []
-                for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
+                for doc_id, payload in zip(batch.column("doc_id").to_pylist(),
+                                           batch.column("text").to_pylist()):
                     for row in t(parse_html(payload)):
                         out.append((doc_id, list(row)))
-                yield pd.DataFrame(out, columns=["doc_id", "cells"])
+                yield to_batch(out)
 
         spark = get_spark(master="local[2]")
+        to_batch = row_batcher(schema)  # Arrow schema resolved on the driver
         df = spark.createDataFrame([(1, PAGE)], "doc_id long, text string")
-        df.mapInPandas(batches, "doc_id long, cells array<string>").show(truncate=False)
+        df.mapInArrow(batches, schema).show(truncate=False)
         spark.stop()
         return
     rows = table_transformation()(parse_html(PAGE))

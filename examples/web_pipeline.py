@@ -1,7 +1,7 @@
 """Web-archive → training-data pipeline: the round-3 operators
 composed the way a crawl-scale corpus build would chain them.
 
-    WARC files ──▶ read_warc (binaryFile + one mapInPandas record split)
+    WARC files ──▶ read_warc (binaryFile + one mapInArrow record split)
                ──▶ content-type gate (non-text flagged, never mojibake)
                ──▶ URL canonicalization → URL-level dedup (keep one page
                    per canonical URL)

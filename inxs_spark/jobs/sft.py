@@ -38,14 +38,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-#: stage names in pipeline order — shared by the stats line and tests
-SFT_STAGES = (
-    "input_turns",
-    "extracted_turns",
-    "turns_after_loop_drop",
-    "examples",
-)
-
 
 def assemble_sft_dataset(
     turns: DataFrame,

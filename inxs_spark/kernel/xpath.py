@@ -35,15 +35,6 @@ from typing import Callable, List, Optional, Sequence
 
 from .nodes import Node
 
-_STEP_RE = re.compile(
-    r"""^
-    (?P<axis>\.//|//|\./|/)?          # leading axis marker (first step only)
-    (?P<name>\.\.|\.|\*|\{[^}]*\}[\w.-]+|[\w.-]+(?::[\w.-]+)?)
-    (?P<preds>(?:\[[^\]]*\])*)
-    $""",
-    re.VERBOSE,
-)
-
 _PRED_RE = re.compile(r"\[([^\]]*)\]")
 
 

@@ -3,13 +3,13 @@ Jaccard. Designed for the 100 TB path:
 
 - exact: one hash-aggregate shuffle on a 16-byte digest (never the
   full text) — partial aggregation map-side, AQE handles skew.
-- MinHash+LSH: signatures come from one vectorized pandas UDF that
+- MinHash+LSH: signatures come from one Arrow UDF (``arrow_udf``) that
   shingles and hashes each Arrow batch (a per-permutation HOF-lambda
   expression is interpreted, not codegen'd, and measured ~50x
   slower); banding explodes to (band, key) and one groupBy finds
   candidate buckets; hot buckets are capped to bound the quadratic
   pair expansion.
-- SimHash: one vectorized Pandas UDF (numpy bit-twiddling — the only
+- SimHash: one Arrow UDF (numpy bit-twiddling — the only
   place Python genuinely beats a 64-lambda expression tree), then
   block-index on 16-bit chunks (pigeonhole: hamming ≤ 3 ⇒ one of 4
   blocks equal) and verify with JVM-side bit_count(xor).
@@ -19,10 +19,10 @@ Jaccard. Designed for the 100 TB path:
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import ArrayType, LongType
 
 
 # ---------------------------------------------------------------------------
@@ -112,12 +112,10 @@ def _make_minhash_udf(num_perm: int, k: int):
     and mod M31 commutes), and a bounded per-task memo skips blake2b
     for repeated shingles entirely (signatures are a min over the
     base-hash set, so lookup order is irrelevant)."""
-    from pyspark.sql.types import ArrayType, LongType
-
     memo: dict = {}  # captured by the UDF closure — one per task
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig_udf(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf(ArrayType(LongType()))
+    def sig_udf(texts: pa.Array) -> pa.Array:
         import numpy as np
         from hashlib import blake2b
 
@@ -155,7 +153,8 @@ def _make_minhash_udf(num_perm: int, k: int):
                 axis=1
             ).tolist()
 
-        return texts.map(one)
+        return pa.array([one(t) for t in texts.to_pylist()],
+                        type=pa.list_(pa.int64()))
 
     return sig_udf
 
@@ -254,7 +253,7 @@ def minhash_band_memberships(
     sig_udf = _make_minhash_udf(num_perm, k)
     # No exchange barrier here (rounds 2-4 repartitioned on id to stop
     # the signature re-running once per band): on Spark 4's planner,
-    # ExtractPythonUDFs materializes the pandas UDF as ONE
+    # ExtractPythonUDFs materializes the Arrow UDF as ONE
     # ArrowEvalPython node whose OUTPUT ATTRIBUTE the band expression
     # references — the UDF cannot be inlined into the per-band lambda,
     # so the signature computes exactly once per row with zero
@@ -700,8 +699,8 @@ _SIMHASH_MEMO: dict = {}
 _SIMHASH_MEMO_MAX = 1_000_000
 
 
-@F.pandas_udf(LongType())
-def _simhash64(texts: pd.Series) -> pd.Series:
+@F.arrow_udf(LongType())
+def _simhash64(texts: pa.Array) -> pa.Array:
     """64-bit SimHash over whitespace tokens — vectorized numpy bit
     count per batch (Arrow transfer; no per-row Python at the API
     level). Python here beats a 64-lambda JVM expression tree.
@@ -715,7 +714,7 @@ def _simhash64(texts: pd.Series) -> pd.Series:
 
     get = _SIMHASH_MEMO.get
     out = np.zeros(len(texts), dtype=np.int64)
-    for i, text in enumerate(texts):
+    for i, text in enumerate(texts.to_pylist()):
         if not text:
             continue
         toks = set(text.split(" "))
@@ -741,7 +740,7 @@ def _simhash64(texts: pd.Series) -> pd.Series:
         for b in np.nonzero(votes > 0)[0]:
             sim |= np.uint64(1) << np.uint64(b)
         out[i] = np.int64(sim)
-    return pd.Series(out)
+    return pa.array(out)
 
 
 def simhash(df: DataFrame, id_col: str = "doc_id",

@@ -1,11 +1,12 @@
 """One fan-out rule for every Python stage.
 
-A Python stage (an Arrow hop, a pandas UDF, an interpreted lambda) runs
-one task per input partition, and Spark splits no file below its row
-group nor a small file below the 4 MB ``openCostInBytes``: one or two
-small files run the stage on one or two tasks while the other cores
-idle. :func:`ensure_compute_fanout` places at most one exchange before
-such a stage, decided from the planned input alone:
+A Python stage (a ``mapInArrow`` hop, an ``arrow_udf``, an interpreted
+lambda) runs one task per input partition, and Spark splits no file
+below its row group nor a small file below the 4 MB
+``openCostInBytes``: one or two small files run the stage on one or two
+tasks while the other cores idle. :func:`ensure_compute_fanout` places
+at most one exchange before such a stage, decided from the planned
+input alone:
 
 - read the partition count ``df`` plans, without a Spark job
   (:func:`planned_partitions`: the RDD of the plan, or of the child of

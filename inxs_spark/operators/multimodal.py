@@ -1,5 +1,5 @@
 """Multimodal columns: image/audio/video as opaque binary columns with
-typed metadata, processed via Arrow-batched mapInPandas.
+typed metadata, processed via Arrow-batched mapInArrow.
 
 The decode step is REAL for images and audio (stdlib codecs in
 :mod:`..kernel.mediamini`): PNG decode with full unfiltering + nearest-
@@ -10,9 +10,8 @@ library. VIDEO decode stays stubbed (real codecs — ffmpeg — are not in
 this container, SURVEY.md §0): video rows get hash-derived features,
 marked by ``feature_kind='stub'`` so nothing silently pretends.
 Undecodable payloads degrade to a ``failure`` value, never an
-exception. ``decoder='pil'``/'real' raise NotImplementedError at call
-time; ``decoder='fake'`` keeps the old hash-features stub for plumbing
-tests over arbitrary bytes.
+exception. Full decoders (PIL, ffmpeg) are not in this container
+either, so the stdlib decoder is the only one.
 
 Scale notes: binary payloads dominate partition size — size partitions
 by bytes (spark.sql.files.maxPartitionBytes), never by row count; keep
@@ -24,14 +23,15 @@ from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterator, Optional
+from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..kernel import mediamini
 from ..kernel.mediamini import MediaError
+from ..sources.io import row_batcher
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -45,6 +45,9 @@ FEATURE_SCHEMA = (
 )
 
 FEATURE_DIM = 8
+
+#: the (width, height) every image is resized to
+THUMB = (32, 32)
 
 
 def synth_media(spark: SparkSession, n: int = 256, seed: int = 42) -> DataFrame:
@@ -84,7 +87,7 @@ def synth_media(spark: SparkSession, n: int = 256, seed: int = 42) -> DataFrame:
 
 
 def _fake_decode(payload: bytes) -> list[float]:
-    """Hash-derived stand-in features (video rows; decoder='fake')."""
+    """Hash-derived stand-in features (video rows)."""
     digest = hashlib.blake2b(payload, digest_size=FEATURE_DIM * 4).digest()
     return [
         int.from_bytes(digest[i * 4:(i + 1) * 4], "big") / 2**32
@@ -92,7 +95,7 @@ def _fake_decode(payload: bytes) -> list[float]:
     ]
 
 
-def _image_features(payload: bytes, thumb: tuple[int, int]):
+def _image_features(payload: bytes):
     w, h, nch, rows = mediamini.png_decode(payload)
     n_px = w * h
     sums = [0.0, 0.0, 0.0]
@@ -115,9 +118,8 @@ def _image_features(payload: bytes, thumb: tuple[int, int]):
         mean_lum / 255.0, math.sqrt(var) / 255.0,
         w / 4096.0, h / 4096.0, (w / h) / 8.0,
     ]
-    tw, th = thumb
-    mediamini.resize_nearest(rows, tw, th)  # real resize; bytes not kept
-    return feature, tw, th
+    mediamini.resize_nearest(rows, *THUMB)  # real resize; bytes not kept
+    return feature
 
 
 def _audio_features(payload: bytes):
@@ -136,28 +138,15 @@ def _audio_features(payload: bytes):
             float(ch), 0.0]
 
 
-def extract_features(
-    df: DataFrame,
-    decoder: str = "mini",
-    thumb: tuple[int, int] = (32, 32),
-) -> DataFrame:
-    """Decode / feature-extract / resize via mapInPandas. One output
+def extract_features(df: DataFrame) -> DataFrame:
+    """Decode / feature-extract / resize via mapInArrow. One output
     row per input; decode failures land in ``failure``, never raise."""
-    if decoder not in ("mini", "fake"):
-        raise NotImplementedError(
-            f"decoder={decoder!r}: full decoders (PIL/ffmpeg) are "
-            "unavailable in this container (SURVEY.md §0); 'mini' is the "
-            "stdlib PNG/WAV decoder, 'fake' the hash-features stub."
-        )
-    tw, th = thumb
+    to_batch = row_batcher(FEATURE_SCHEMA)
 
     def one(kind: str, payload: bytes):
-        if decoder == "fake":
-            return _fake_decode(payload), "stub", tw, th, None
         try:
             if kind == "image":
-                feature, w2, h2 = _image_features(payload, thumb)
-                return feature, "real", w2, h2, None
+                return _image_features(payload), "real", *THUMB, None
             if kind == "audio":
                 return _audio_features(payload), "real", None, None, None
             # video: real decode needs codecs — documented stub
@@ -167,33 +156,21 @@ def extract_features(
         except Exception:
             return None, "none", None, None, "decode_error"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats, fkinds, tws, ths, fails = [], [], [], [], []
-            for kind, payload in zip(pdf["kind"], pdf["payload"]):
-                f, fk, w2, h2, err = one(kind, bytes(payload))
-                feats.append(f)
-                fkinds.append(fk)
-                tws.append(w2)
-                ths.append(h2)
-                fails.append(err)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "sha": pdf["payload"].map(
-                        lambda b: hashlib.sha256(bytes(b)).hexdigest()
-                    ),
-                    "feature": feats,
-                    "feature_kind": fkinds,
-                    "thumb_w": pd.array(tws, dtype="Int32"),
-                    "thumb_h": pd.array(ths, dtype="Int32"),
-                    "failure": fails,
-                }
-            )
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            yield to_batch([
+                (media_id, kind, len(payload),
+                 hashlib.sha256(payload).hexdigest(), *one(kind, payload))
+                for media_id, kind, payload in zip(
+                    batch.column("media_id").to_pylist(),
+                    batch.column("kind").to_pylist(),
+                    batch.column("payload").to_pylist(),
+                )
+            ])
 
-    return df.mapInPandas(batches, FEATURE_SCHEMA)
+    return df.select("media_id", "kind", "payload").mapInArrow(
+        batches, FEATURE_SCHEMA
+    )
 
 
 def frame_sample(df: DataFrame, every_ms: int = 500) -> DataFrame:

@@ -10,10 +10,8 @@ Tj/TJ/'/") into positioned runs. ``synth_pdfs`` emits spec-valid PDFs
 is exercised end-to-end without any external library. Features beyond
 the subset (encryption, object streams, CID fonts, non-Flate filters)
 degrade to a ``parse_error`` row, never an exception — same discipline
-as HTML extraction. ``parser='pdfium'``/``'mupdf'`` raise
-NotImplementedError at call time (real renderers, not in this
-container — SURVEY.md §0); ``parser='fake'`` keeps the old
-deterministic stub for plumbing tests on arbitrary bytes.
+as HTML extraction. Rendering parsers (pdfium, mupdf) are not in this
+container (SURVEY.md §0), so this parser is the only one.
 
 Layout step: runs group into blocks on vertical gaps (> 1.6 x font
 size), classified header/body/footer by page-height fraction. The
@@ -23,15 +21,15 @@ body blocks concatenate in reading order into ``extracted_text``.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernel import pdfmini
 from ..kernel.pdfmini import PdfError
+from ..sources.io import row_batcher
 
 PDF_SCHEMA = "doc_id long, payload binary, n_pages int"
 
@@ -39,8 +37,6 @@ BLOCK_SCHEMA = (
     "doc_id long, page int, block_idx int, kind string, "
     "x0 float, y0 float, x1 float, y1 float, text string, failure string"
 )
-
-_BLOCK_KINDS = ("header", "body", "body", "body", "footer", "figure")
 
 _WORDS = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
@@ -71,25 +67,6 @@ def synth_pdfs(spark, n: int = 64, seed: int = 42) -> DataFrame:
             (i, bytearray(pdfmini.build_pdf(pages, compress=bool(i % 2))), n_pages)
         )
     return spark.createDataFrame(rows, PDF_SCHEMA)
-
-
-def _fake_layout(doc_id: int, payload: bytes, n_pages: int) -> list[tuple]:
-    """Deterministic stand-in used by parser='fake': blocks with
-    plausible geometry derived from the bytes (works on ANY payload)."""
-    out = []
-    for page in range(n_pages):
-        h = hashlib.blake2b(payload + page.to_bytes(2, "big"), digest_size=16).digest()
-        n_blocks = 2 + h[0] % 4
-        for b in range(n_blocks):
-            kind = _BLOCK_KINDS[(h[b % 16] + b) % len(_BLOCK_KINDS)]
-            y0 = 760.0 - b * 120.0
-            out.append((
-                doc_id, page, b, kind,
-                72.0, y0, 540.0, y0 + 100.0,
-                f"{kind} text {h[:4].hex()} p{page} b{b}",
-                None,
-            ))
-    return out
 
 
 def _mini_layout(doc_id: int, payload: bytes) -> list[tuple]:
@@ -134,37 +111,23 @@ def _mini_layout(doc_id: int, payload: bytes) -> list[tuple]:
     return out
 
 
-def parse_layout(df: DataFrame, parser: str = "mini") -> DataFrame:
-    """pdf rows → (page, block) rows via mapInPandas. One shuffle-free
+def parse_layout(df: DataFrame) -> DataFrame:
+    """pdf rows → (page, block) rows via mapInArrow. One shuffle-free
     pass; geometry/kind columns are typed so downstream filters prune
     without touching payloads."""
-    if parser not in ("mini", "fake"):
-        raise NotImplementedError(
-            f"parser={parser!r}: rendering parsers (pdfium/mupdf) are "
-            "unavailable in this container (SURVEY.md §0); 'mini' is the "
-            "stdlib text-subset parser, 'fake' the plumbing stub."
-        )
+    to_batch = row_batcher(BLOCK_SCHEMA)
 
-    cols = [
-        "doc_id", "page", "block_idx", "kind",
-        "x0", "y0", "x1", "y1", "text", "failure",
-    ]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
             rows: list[tuple] = []
-            for doc_id, payload, n_pages in zip(
-                pdf["doc_id"], pdf["payload"], pdf["n_pages"]
+            for doc_id, payload in zip(
+                batch.column("doc_id").to_pylist(),
+                batch.column("payload").to_pylist(),
             ):
-                if parser == "mini":
-                    rows.extend(_mini_layout(int(doc_id), bytes(payload)))
-                else:
-                    rows.extend(
-                        _fake_layout(int(doc_id), bytes(payload), int(n_pages))
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+                rows.extend(_mini_layout(doc_id, payload))
+            yield to_batch(rows)
 
-    return df.mapInPandas(batches, BLOCK_SCHEMA)
+    return df.select("doc_id", "payload").mapInArrow(batches, BLOCK_SCHEMA)
 
 
 def extract_pdf_text(blocks: DataFrame) -> DataFrame:

@@ -16,8 +16,10 @@ bucket, IVF cell, PQ code, k-means partial sums) is a NumPy kernel
 run once per Arrow batch. The public ``dot`` / ``norm`` / ``cosine``
 Column helpers are higher-order functions that Spark interprets per
 row and never codegens (measured 2.6-40x slower, PLANS.md §15); they
-stay for ad-hoc queries only. Every kernel maps a null or wrong-dim
-vector to NULL — never NaN, never a crashed batch.
+stay for ad-hoc queries only. Every kernel reads its batch through
+:func:`_vectors` and maps a null, wrong-dim or holed vector (a null
+element) to NULL — never NaN, never a crashed batch, never a silent
+bucket or cell 0.
 """
 
 from __future__ import annotations
@@ -27,10 +29,11 @@ import math
 from typing import Optional, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 
 logger = logging.getLogger(__name__)
 
@@ -67,27 +70,39 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def _stack_valid(vals: np.ndarray, dim: int) -> tuple[np.ndarray, np.ndarray]:
-    """(mask of the rows holding a ``dim``-long vector, those rows as
-    one float64 matrix) for one Arrow batch. Null and wrong-dim rows
-    are masked out: one of them would crash ``np.vstack`` for the
-    whole batch. Arrow hands list cells over as per-row ndarrays, and
-    vstack assembles them without a Python loop over elements.
+def _vectors(vecs: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(mask of the rows holding a ``dim``-long vector with no null
+    element, those rows as one ``(n_valid, dim)`` float64 matrix) for
+    one Arrow list column: the list values are flattened once and
+    reshaped, with no Python loop over rows or elements.
 
-    The kernels mark a NULL result as NaN; pyspark sends every NaN of
-    a pandas UDF's result to Spark as NULL. That matters: Spark orders
-    NaN above every double, so a NaN cosine would win a top-k and pass
-    any ``>=`` threshold."""
-    valid = np.array([v is not None and len(v) == dim for v in vals], dtype=bool)
-    if not valid.any():
-        return valid, np.empty((0, dim))
-    return valid, np.vstack(vals[valid]).astype(np.float64, copy=False)
+    A kernel builds its result with ``pa.array(values, mask=...)``:
+    a NULL must be a real Arrow null, because an Arrow UDF returns NaN
+    as NaN and Spark orders NaN above every double — a NaN cosine would
+    win a top-k and pass any ``>=`` threshold."""
+    valid = pc.fill_null(
+        pc.equal(pc.list_value_length(vecs), dim), False
+    ).to_numpy(zero_copy_only=False)
+    flat = vecs.flatten()
+    if flat.null_count:
+        holes = flat.is_null().to_numpy(zero_copy_only=False)
+        valid[pc.list_parent_indices(vecs).to_numpy()[holes]] = False
+    if not valid.all():
+        flat = vecs.filter(pa.array(valid)).flatten()
+    X = flat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return valid, X.reshape(int(valid.sum()), dim)
 
 
 def _cosines(num: np.ndarray, den: np.ndarray) -> np.ndarray:
     """num / den with a zero denominator (a zero vector) giving NaN."""
     with np.errstate(divide="ignore", invalid="ignore"):
         return np.where(den > 0, num / den, np.nan)
+
+
+def _nan_as_null(out: np.ndarray) -> pa.Array:
+    """A cosine result column: NaN (a masked row or a zero vector)
+    becomes an Arrow null."""
+    return pa.array(out, mask=np.isnan(out))
 
 
 def _query_cos_udf(query_vec: np.ndarray):
@@ -97,13 +112,12 @@ def _query_cos_udf(query_vec: np.ndarray):
     qn = float(np.sqrt(q @ q))
     dim = len(q)
 
-    @F.pandas_udf("double")
-    def qcos(vecs: pd.Series) -> pd.Series:
-        vals = vecs.to_numpy()
-        valid, X = _stack_valid(vals, dim)
-        out = np.full(len(vals), np.nan)
+    @F.arrow_udf(DoubleType())
+    def qcos(vecs: pa.Array) -> pa.Array:
+        valid, X = _vectors(vecs, dim)
+        out = np.full(len(vecs), np.nan)
         out[valid] = _cosines(X @ q, np.sqrt((X * X).sum(axis=1)) * qn)
-        return pd.Series(out)
+        return _nan_as_null(out)
 
     return qcos
 
@@ -136,23 +150,20 @@ def bucket_key_udf(vec_col: str, planes: np.ndarray) -> Column:
     """Sign-bit bucket id: bit h set iff dot(vec, plane_h) > 0, as ONE
     vectorized matrix multiply per Arrow batch (the MinHash precedent:
     numpy beats a giant expression tree). The driver-side query bucket
-    in :func:`ann_topk` uses the same float64 numpy dot. Null and
-    wrong-dim rows get a NULL bucket, never a silent bucket 0."""
-    from pyspark.sql.types import LongType
-
+    in :func:`ann_topk` uses the same float64 numpy dot. Null,
+    wrong-dim and holed rows get a NULL bucket, never a silent
+    bucket 0."""
     P = np.ascontiguousarray(planes, dtype=np.float64)
-    weights = (1 << np.arange(P.shape[0], dtype=np.uint64))
+    weights = (1 << np.arange(P.shape[0], dtype=np.int64))
 
     dim = P.shape[1]
 
-    @F.pandas_udf(LongType())
-    def key(vecs: pd.Series) -> pd.Series:
-        vals = vecs.to_numpy()
-        valid, X = _stack_valid(vals, dim)
-        out = np.full(len(vals), np.nan)
-        bits = (X @ P.T) > 0
-        out[valid] = (bits.astype(np.uint64) * weights).sum(axis=1)
-        return pd.Series(out).astype("Int64")
+    @F.arrow_udf(LongType())
+    def key(vecs: pa.Array) -> pa.Array:
+        valid, X = _vectors(vecs, dim)
+        out = np.zeros(len(vecs), dtype=np.int64)
+        out[valid] = (((X @ P.T) > 0) * weights).sum(axis=1)
+        return pa.array(out, mask=~valid)
 
     return key(F.col(vec_col))
 
@@ -257,25 +268,23 @@ def pairwise_ann_candidates(
     ).distinct()
 
 
-@F.pandas_udf(DoubleType())  # a DDL string would need a session at import
-def _pair_cos_udf(va: pd.Series, vb: pd.Series) -> pd.Series:
+@F.arrow_udf(DoubleType())  # a DDL string would need a session at import
+def _pair_cos_udf(va: pa.Array, vb: pa.Array) -> pa.Array:
     """cos(v_a, v_b) rowwise as vectorized numpy per Arrow batch. A
-    pair whose vectors are null or differ in length scores NULL."""
-    a, b = va.to_numpy(), vb.to_numpy()
-    lens = np.array([
-        -1 if x is None or y is None or len(x) != len(y) else len(x)
-        for x, y in zip(a, b)
-    ], dtype=np.int64)
-    out = np.full(len(a), np.nan)
-    for dim in set(lens[lens >= 0].tolist()):  # one length on clean data
-        sel = lens == dim
-        A = np.vstack(a[sel]).astype(np.float64, copy=False)
-        B = np.vstack(b[sel]).astype(np.float64, copy=False)
-        out[sel] = _cosines(
+    pair whose vectors are null, holed or differ in length scores
+    NULL."""
+    out = np.full(len(va), np.nan)
+    lens = pc.list_value_length(va).fill_null(-1).to_numpy()
+    for dim in np.unique(lens[lens >= 0]).tolist():  # one length on clean data
+        ok_a, A = _vectors(va, dim)
+        ok_b, B = _vectors(vb, dim)
+        both = ok_a & ok_b
+        A, B = A[both[ok_a]], B[both[ok_b]]
+        out[both] = _cosines(
             (A * B).sum(axis=1),
             np.sqrt((A * A).sum(axis=1) * (B * B).sum(axis=1)),
         )
-    return pd.Series(out)
+    return _nan_as_null(out)
 
 
 def _within_group_cosine_pairs(
@@ -357,21 +366,19 @@ def ivf_train_centroids(
 def _cell_udf(centroids: np.ndarray):
     """Nearest-centroid cell, argmin_c ||v - c||^2 == argmax_c
     (dot(v, c) - ||c||^2 / 2): one (batch x dim) @ (dim x cells)
-    matmul per Arrow batch. Null and wrong-dim rows get a NULL cell."""
-    from pyspark.sql.types import IntegerType
-
+    matmul per Arrow batch. Null, wrong-dim and holed rows get a NULL
+    cell."""
     C = np.ascontiguousarray(centroids, dtype=np.float64)
     half_norms = 0.5 * (C * C).sum(axis=1)
 
     dim = C.shape[1]
 
-    @F.pandas_udf(IntegerType())
-    def cell(vecs: pd.Series) -> pd.Series:
-        vals = vecs.to_numpy()
-        valid, X = _stack_valid(vals, dim)
-        out = np.full(len(vals), np.nan)
+    @F.arrow_udf(IntegerType())
+    def cell(vecs: pa.Array) -> pa.Array:
+        valid, X = _vectors(vecs, dim)
+        out = np.zeros(len(vecs), dtype=np.int32)
         out[valid] = (X @ C.T - half_norms[None, :]).argmax(axis=1)
-        return pd.Series(out).astype("Int32")
+        return pa.array(out, mask=~valid)
 
     return cell
 
@@ -603,28 +610,22 @@ def pq_train_codebooks(
 
 def _pq_code_udf(codebooks: np.ndarray):
     """Per-subspace nearest sub-centroid codes, one Arrow batch per
-    call: each row's ``m`` subvectors are scored against their
-    codebooks with one ``einsum`` (m x k scores) in a Python loop over
-    the batch's rows. Null and wrong-dim rows get a NULL code."""
-    from pyspark.sql.types import ArrayType, IntegerType
-
+    call: every valid row's ``m`` subvectors are scored against their
+    codebooks with one batched ``einsum`` (n x m x k scores). Null,
+    wrong-dim and holed rows get a NULL code."""
     C = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, k, sub = C.shape
     half_norms = 0.5 * (C * C).sum(axis=2)  # (m, k)
     dim = m * sub
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def code(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            if v is None or len(v) != dim:
-                out.append(None)
-                continue
-            x = np.asarray(v, dtype=np.float64).reshape(m, sub)
-            # scores[j, c] = dot(x_j, C[j,c]) - |C[j,c]|^2 / 2
-            scores = np.einsum("js,jcs->jc", x, C) - half_norms
-            out.append([int(c) for c in scores.argmax(axis=1)])
-        return pd.Series(out, dtype=object)
+    @F.arrow_udf(ArrayType(IntegerType()))
+    def code(vecs: pa.Array) -> pa.Array:
+        valid, X = _vectors(vecs, dim)
+        # scores[n, j, c] = dot(x_nj, C[j,c]) - |C[j,c]|^2 / 2
+        scores = np.einsum("njs,jcs->njc", X.reshape(-1, m, sub), C) - half_norms
+        codes = scores.argmax(axis=2).astype(np.int32).ravel()
+        offsets = np.concatenate(([0], np.cumsum(valid * m))).astype(np.int32)
+        return pa.ListArray.from_arrays(offsets, codes, mask=pa.array(~valid))
 
     return code
 
@@ -869,21 +870,25 @@ def ivfpq_topk(
 def _kmeans_stats_partials(
     df: DataFrame, centroids: np.ndarray, vec_col: str
 ) -> list:
-    """Per-cell (count, elementwise mean) via mapInPandas partial
+    """Per-cell (count, elementwise mean) via mapInArrow partial
     sums. Each Arrow batch contributes at most k rows of (cell, n,
     sum-vector); the combine explodes those FEW partial rows to
     (cell, pos, s) narrow rows and sums — the full vectors never
     shuffle, no aggregate grows with dim (a groupBy with one avg()
     per dim runs interpreted past spark.sql.codegen.maxFields), and
-    the driver collects only k + k x dim scalars. Null and wrong-dim
-    rows belong to no cell."""
+    the driver collects only k + k x dim scalars. Null, wrong-dim and
+    holed rows belong to no cell."""
+    from ..sources.io import row_batcher
+
     C = np.ascontiguousarray(centroids, dtype=np.float64)
     half = 0.5 * (C * C).sum(axis=1)
     k, dim = C.shape
+    ddl = "cell int, n long, sums array<double>"
+    to_batch = row_batcher(ddl)
 
     def gen(batches):
-        for pdf in batches:
-            valid, X = _stack_valid(pdf[vec_col].to_numpy(), dim)
+        for batch in batches:
+            valid, X = _vectors(batch.column(0), dim)
             if not valid.any():
                 continue
             cells = (X @ C.T - half[None, :]).argmax(axis=1)
@@ -891,11 +896,9 @@ def _kmeans_stats_partials(
             for c in np.unique(cells):
                 m = cells == c
                 rows.append((int(c), int(m.sum()), X[m].sum(axis=0).tolist()))
-            yield pd.DataFrame(rows, columns=["cell", "n", "sums"])
+            yield to_batch(rows)
 
-    partials = df.select(vec_col).mapInPandas(
-        gen, "cell int, n long, sums array<double>"
-    )
+    partials = df.select(vec_col).mapInArrow(gen, ddl)
     from pyspark.storagelevel import StorageLevel
 
     partials = partials.persist(StorageLevel.MEMORY_AND_DISK)

@@ -2,7 +2,9 @@
 quality scoring, language ID, fingerprinting.
 
 All JVM-side column expressions (whole-stage codegen; no Python in the
-hot path). Each has an ANSI-SQL equivalent in ``__spark_entry__.
+hot path) except :func:`normalize_expr` and :func:`compression_ratio`,
+which are Arrow UDFs because Spark has neither NFC nor zlib. Each
+expression has an ANSI-SQL equivalent in ``__spark_entry__.
 oracle_sql`` — numeric outputs are ROUNDED in both engines because the
 driver hash-compares values and float summation order differs between
 Spark and DuckDB.
@@ -13,9 +15,10 @@ no shuffle, filters/column-prune push into the scan.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import DoubleType, StringType
 
 # tiny multilingual stopword lists for the n-gram/stopword language
 # heuristic; deterministic and identical in the DuckDB oracle SQL
@@ -247,16 +250,15 @@ def decontamination(
 
 def normalize_expr(text_col: str) -> Column:
     """Column expression for canonical normalization: unicode NFC →
-    lowercase → collapse ASCII whitespace runs → strip. Arrow-batched
-    pandas UDF (Spark has no builtin NFC); the explicit [ \\t\\n\\r\\f]
+    lowercase → collapse ASCII whitespace runs → strip. An Arrow UDF
+    (Spark has no builtin NFC); the explicit [ \\t\\n\\r\\f]
     class (not \\s) keeps Python-regex and RE2/DuckDB semantics
     identical, so DuckDB oracles can value-check downstream output
     (lower(nfc_normalize(..)) + regexp_replace). Factored out so
     dedup/decontamination compose it as a pre-fingerprint step."""
-    from pyspark.sql.types import StringType
 
-    @F.pandas_udf(StringType())
-    def norm(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf(StringType())
+    def norm(texts: pa.Array) -> pa.Array:
         import re
         import unicodedata
 
@@ -267,7 +269,7 @@ def normalize_expr(text_col: str) -> Column:
                 return None
             return ws.sub(" ", unicodedata.normalize("NFC", t).lower()).strip()
 
-        return texts.map(one)
+        return pa.array([one(t) for t in texts.to_pylist()], type=pa.string())
 
     return norm(F.col(text_col))
 
@@ -540,13 +542,12 @@ def compression_ratio(df: DataFrame, id_col: str = "doc_id",
     """zlib compression ratio per document (compressed/raw bytes) — the
     CCNet/RefinedWeb-style quality signal: very low ratios flag
     repetitive/templated text, very high ones flag noise/random bytes.
-    Arrow-batched pandas UDF (zlib is C, the Python loop is per-doc
-    bookkeeping only); no SQL oracle exists for zlib output, so this
-    is test-verified (ordering properties) rather than DuckDB-checked."""
-    from pyspark.sql.types import DoubleType
+    An Arrow UDF (zlib is C, the Python loop is per-doc bookkeeping
+    only); no SQL oracle exists for zlib output, so this is
+    test-verified (ordering properties) rather than DuckDB-checked."""
 
-    @F.pandas_udf(DoubleType())
-    def ratio(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf(DoubleType())
+    def ratio(texts: pa.Array) -> pa.Array:
         import zlib
 
         def one(t):
@@ -555,7 +556,7 @@ def compression_ratio(df: DataFrame, id_col: str = "doc_id",
             raw = t.encode("utf-8")
             return round(len(zlib.compress(raw, level)) / len(raw), 4)
 
-        return texts.map(one)
+        return pa.array([one(t) for t in texts.to_pylist()], type=pa.float64())
 
     return df.select(
         F.col(id_col),

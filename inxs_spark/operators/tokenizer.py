@@ -22,7 +22,7 @@ Design, Spark-first:
   running text). Cost is O(sample), never O(corpus), at any corpus
   size.
 
-* **Encoding is distributed with ONE Arrow hop** — a pandas_udf maps
+* **Encoding is distributed with ONE Arrow hop** — an arrow_udf maps
   ``text -> array<string>`` (or ``array<int>`` ids) per Arrow batch,
   with a per-executor word-level LRU memo (natural-language word
   frequency is Zipfian; the memo hit rate is high). Zero row-at-a-time
@@ -46,11 +46,12 @@ suffix units and decode can restore word boundaries.
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping, Sequence
+from typing import Callable, Iterable, Mapping, Sequence
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import ArrayType, DataType, IntegerType, StringType
 
 #: end-of-word marker appended to every word's symbol sequence before
 #: merge learning/application (contains no '|', so the SQL oracle's
@@ -230,36 +231,31 @@ class BpeTokenizer:
     # -- distributed encode (ONE Arrow hop) ---------------------------
     def tokens_col(self, text_col: str | Column) -> Column:
         """array<string> BPE tokens per row, Arrow-batched."""
-        from pyspark.sql.types import ArrayType, StringType
-
-        merges = self.merges
-        alphabet = self.alphabet
-        state: dict = {}  # per-task: keeps the word memo across batches
-
-        @F.pandas_udf(ArrayType(StringType()))
-        def _encode(texts: pd.Series) -> pd.Series:
-            tok = state.get("t")
-            if tok is None:
-                tok = state["t"] = BpeTokenizer(merges, alphabet)
-            return texts.map(tok.encode)
-
-        col = F.col(text_col) if isinstance(text_col, str) else text_col
-        return _encode(col)
+        return self._encode_col(text_col, BpeTokenizer.encode, StringType())
 
     def ids_col(self, text_col: str | Column) -> Column:
         """array<int> BPE token ids per row, Arrow-batched."""
-        from pyspark.sql.types import ArrayType, IntegerType
+        return self._encode_col(text_col, BpeTokenizer.encode_ids, IntegerType())
+
+    def _encode_col(self, text_col: str | Column, encode: Callable,
+                    element: DataType) -> Column:
+        """``encode(tokenizer, text)`` over every row as one Arrow UDF
+        returning ``array<element>``."""
+        from pyspark.sql.pandas.types import to_arrow_type
 
         merges = self.merges
         alphabet = self.alphabet
+        out_type = ArrayType(element)
+        arrow_type = to_arrow_type(out_type)
         state: dict = {}  # per-task: keeps the word memo across batches
 
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def _encode(texts: pd.Series) -> pd.Series:
+        @F.arrow_udf(out_type)
+        def _encode(texts: pa.Array) -> pa.Array:
             tok = state.get("t")
             if tok is None:
                 tok = state["t"] = BpeTokenizer(merges, alphabet)
-            return texts.map(tok.encode_ids)
+            return pa.array([encode(tok, t) for t in texts.to_pylist()],
+                            type=arrow_type)
 
         col = F.col(text_col) if isinstance(text_col, str) else text_col
         return _encode(col)

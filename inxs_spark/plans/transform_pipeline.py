@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from ..kernel.parse import parse_payload
 from ..kernel.transformation import Transformation
 from ..operators.fanout import ensure_compute_fanout
+from ..sources.io import row_batcher
 
 
 def transform_df(
@@ -60,12 +61,10 @@ def transform_df(
         f"{f.name} {f.dataType.simpleString()}"
         for f in df.select(*id_cols).schema.fields
     ) + ", " + result_schema
-    # arrow schema resolved ON THE DRIVER (executors build batches
-    # against it with RecordBatch.from_pylist)
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
-    arrow_schema = to_arrow_schema(_parse_datatype_string(out_schema_str))
+    to_batch = row_batcher(out_schema_str)
+    result_names = _parse_datatype_string(result_schema).fieldNames()
     id_list = list(id_cols)
 
     def run_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -73,7 +72,7 @@ def transform_df(
             cols = {name: batch.column(i).to_pylist()
                     for i, name in enumerate(batch.schema.names)}
             payloads = cols[payload_col]
-            out_rows: list[dict] = []
+            out_rows: list[tuple] = []
             for row_i, payload in enumerate(payloads):
                 try:
                     root, _kind = parse_payload(payload)
@@ -87,10 +86,10 @@ def transform_df(
                     continue
                 if not records:
                     continue
-                ids = {name: cols[name][row_i] for name in id_list}
+                ids = tuple(cols[name][row_i] for name in id_list)
                 for rec in records:
-                    out_rows.append({**ids, **rec})
-            yield pa.RecordBatch.from_pylist(out_rows, schema=arrow_schema)
+                    out_rows.append(ids + tuple(rec.get(n) for n in result_names))
+            yield to_batch(out_rows)
 
     pruned = df.select(*id_cols, payload_col)
     if num_partitions is None:

@@ -13,7 +13,9 @@ module holds what those calls do not cover:
 - small JSON files (run records, manifests, index metadata, codebooks,
   tokenizer models): :func:`write_json_atomic` is the package's one
   write-then-rename, and :func:`compact_records` folds a run's
-  ``metrics/*.json`` records into its queryable ``metrics_table``.
+  ``metrics/*.json`` records into its queryable ``metrics_table``;
+- the rows a ``mapInArrow`` stage emits: :func:`row_batcher` is the
+  package's one way from Python row tuples to an Arrow batch.
 """
 
 from __future__ import annotations
@@ -24,6 +26,9 @@ import json
 import os
 import urllib.parse
 import uuid
+from typing import Callable
+
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -125,3 +130,24 @@ def compact_records(spark: SparkSession, root: str, schema: str) -> None:
     spark.read.schema(schema).json(paths).coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(root, "metrics_table"))
+
+
+def row_batcher(ddl: str) -> Callable[[list], pa.RecordBatch]:
+    """``to_batch(rows)`` for a ``mapInArrow`` stage whose output is the
+    Spark DDL schema ``ddl``: the Arrow schema is resolved here, on the
+    driver, and ``to_batch`` turns a list of row tuples (fields in
+    ``ddl`` order, ``None`` for NULL) into one ``RecordBatch`` of it,
+    column by column."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+
+    def to_batch(rows: list) -> pa.RecordBatch:
+        cols = list(zip(*rows)) if rows else [()] * len(schema)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+            schema=schema,
+        )
+
+    return to_batch

@@ -13,7 +13,7 @@ headers, blank line, HTML body). Files may be plain ``.warc`` or
 — members concatenate, and :func:`gzip.decompress` inflates the whole
 stream).
 
-Spark plan: ``binaryFile`` scan → ONE ``mapInPandas`` hop that splits
+Spark plan: ``binaryFile`` scan → ONE ``mapInArrow`` hop that splits
 records, picks responses, and emits (url, warc_date, http_status,
 html) rows — the same quarantined-Python shape as the extraction
 kernel. The emitted frame feeds ``extract_df`` directly (rename
@@ -34,7 +34,11 @@ from __future__ import annotations
 import gzip
 from typing import Iterator, Optional
 
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession
+
+from .io import row_batcher
 
 WARC_SPARK_SCHEMA = (
     "warc_file string, record_idx int, url string, warc_date string, "
@@ -149,20 +153,18 @@ def _records_from_file(path_bytes: bytes, path: str) -> Iterator[tuple]:
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """WARC files → (warc_file, record_idx, url, warc_date,
     http_status, content_type, html, failure) rows."""
-    import pandas as pd
-
     files = spark.read.format("binaryFile").load(path).select("path", "content")
+    to_batch = row_batcher(WARC_SPARK_SCHEMA)
 
-    def split_records(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["warc_file", "record_idx", "url", "warc_date",
-                "http_status", "content_type", "html", "failure"]
-        for pdf in batches:
+    def split_records(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(_records_from_file(bytes(content), p))
-            yield pd.DataFrame(rows, columns=cols)
+            for p, content in zip(batch.column("path").to_pylist(),
+                                  batch.column("content").to_pylist()):
+                rows.extend(_records_from_file(content, p))
+            yield to_batch(rows)
 
-    return files.mapInPandas(split_records, WARC_SPARK_SCHEMA)
+    return files.mapInArrow(split_records, WARC_SPARK_SCHEMA)
 
 
 def warc_to_turns(warc_df: DataFrame) -> DataFrame:

@@ -1,7 +1,5 @@
 """DOM-heuristic density extraction + PDF layout plumbing tests."""
 
-import pytest
-
 from inxs_spark.heuristics import density_extract_turn, pick_main_node, score
 from inxs_spark.kernel.parse import parse_html
 
@@ -98,12 +96,6 @@ class TestPdfLayout:
             assert orders == sorted(orders)
             pages = [s.page for s in d.spans]
             assert pages == sorted(pages)  # reading order across pages
-
-    def test_real_parser_raises(self, spark):
-        from inxs_spark.operators.pdf import parse_layout, synth_pdfs
-
-        with pytest.raises(NotImplementedError):
-            parse_layout(synth_pdfs(spark, 2), parser="pdfium")
 
 
 def test_density_inline_junk_tail_survives():

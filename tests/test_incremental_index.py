@@ -369,7 +369,7 @@ class TestAutoPruneVerify:
 
 class TestMembershipsPlan:
     def test_memberships_single_udf_eval(self, spark):
-        """The signature pandas UDF must appear as EXACTLY ONE
+        """The signature Arrow UDF must appear as EXACTLY ONE
         ArrowEvalPython node with no exchange below the band explode —
         the property the (now removed) repartition barrier used to
         buy. If a future Spark version starts inlining the UDF into

@@ -1369,15 +1369,15 @@ class TestDedup:
         capacity: one batch of misses never pushes them past the cap."""
         import inspect
 
-        import pandas as pd
+        import pyarrow as pa
 
         from inxs_spark.operators import dedup
 
         monkeypatch.setattr(dedup, "_MINHASH_MEMO_MAX", 5)
         monkeypatch.setattr(dedup, "_SIMHASH_MEMO_MAX", 5)
         monkeypatch.setattr(dedup, "_SIMHASH_MEMO", {})
-        texts = pd.Series([" ".join(f"w{i}" for i in range(40)),
-                           " ".join(f"v{i}" for i in range(40))])
+        texts = pa.array([" ".join(f"w{i}" for i in range(40)),
+                          " ".join(f"v{i}" for i in range(40))])
 
         sig = dedup._make_minhash_udf(8, 3).func
         memo = inspect.getclosurevars(sig).nonlocals["memo"]
@@ -1469,9 +1469,9 @@ class TestSimilarity:
             assert (r.bucket, r.cell) == (want_bucket, want_cell), r.vec_id
 
     def test_bucket_and_cell_null_ragged_rows(self, spark):
-        """Dirty data (null or wrong-dim embeddings) must yield a NULL
-        bucket/cell — never a batch-killing exception, never a silent
-        bucket 0."""
+        """Dirty data (null, wrong-dim or holed embeddings) must yield a
+        NULL bucket/cell — never a batch-killing exception, never a
+        silent bucket 0."""
         import numpy as np
 
         from inxs_spark.operators.similarity import (
@@ -1481,7 +1481,8 @@ class TestSimilarity:
         )
 
         df = spark.createDataFrame(
-            [(0, [1.0, 2.0, 3.0, 4.0]), (1, None), (2, [1.0, 2.0])],
+            [(0, [1.0, 2.0, 3.0, 4.0]), (1, None), (2, [1.0, 2.0]),
+             (3, [1.0, None, 3.0, 4.0])],
             "vec_id long, embedding array<double>",
         )
         planes = hyperplanes(4, 6, seed=1)
@@ -1493,7 +1494,7 @@ class TestSimilarity:
         ).collect()
         got = {r.vec_id: r for r in rows}
         assert got[0].b is not None and got[0].c is not None
-        for bad in (1, 2):
+        for bad in (1, 2, 3):
             assert got[bad].b is None and got[bad].c is None
 
     def test_cosine_topk_exact(self, spark):
@@ -1589,12 +1590,6 @@ class TestMultimodal:
         assert len(a) == 32
         assert all(len(r.feature) == 8 for r in a)
         assert all(0.0 <= x <= 1.0 for r in a for x in r.feature)
-
-    def test_real_decoder_raises(self, spark):
-        from inxs_spark.operators.multimodal import extract_features, synth_media
-
-        with pytest.raises(NotImplementedError):
-            extract_features(synth_media(spark, 2), decoder="pil")
 
     def test_frame_sample(self, spark):
         from inxs_spark.operators.multimodal import frame_sample, synth_media
@@ -2095,15 +2090,15 @@ class TestPQ:
         )
         books = pq_train_codebooks(good, dim=4, m=2, k=4)
         bad = spark.createDataFrame(
-            [(100, None), (101, [1.0, 2.0])],
+            [(100, None), (101, [1.0, 2.0]), (102, [1.0, None, 3.0, 4.0])],
             "vec_id long, embedding array<double>",
         )
         codes = pq_encode(good.unionByName(bad), books)
         got = {r.vec_id: r.pq_code for r in codes.collect()}
-        assert got[100] is None and got[101] is None
+        assert got[100] is None and got[101] is None and got[102] is None
         top = pq_topk(codes, books, [1.0, 1.0, 0.0, 2.0], k=50)
         ids = [r.vec_id for r in top.collect()]
-        assert 100 not in ids and 101 not in ids
+        assert not {100, 101, 102} & set(ids)
 
     def test_adc_topk_and_rerank_recall(self, spark, clustered):
         """Raw ADC top-10 lands in the query's cluster and overlaps
@@ -2328,10 +2323,11 @@ class TestCosineImplSwitch:
         assert got and [t[:2] for t in got] == [t[:2] for t in sorted(want)]
         assert np.allclose([t[2] for t in got], [t[2] for t in sorted(want)],
                            atol=1e-12)
-        # null, mismatched-length and zero vectors pair to NULL, not NaN
+        # null, mismatched-length, holed and zero vectors pair to NULL,
+        # not NaN
         dirty = spark.createDataFrame(
             [(0, [1.0, 0.0]), (1, None), (2, [1.0, 0.0, 0.0]), (3, [0.0, 0.0]),
-             (4, [2.0, 0.0])],
+             (4, [2.0, 0.0]), (5, [1.0, None])],
             "vec_id long, embedding array<double>",
         ).withColumn("g", F.lit(1))
         pairs = S._within_group_cosine_pairs(dirty, "g", "vec_id", "embedding", -1.0)
@@ -2375,8 +2371,9 @@ class TestKMeans:
 
     def test_partials_path_matches_expr_path(self, spark):
         """One refinement step equals a NumPy Lloyd step over the clean
-        rows; null and wrong-dim rows belong to no cell (the reference
-        was the deleted avg()-columns path; the test keeps its name)."""
+        rows; null, wrong-dim and holed rows belong to no cell (the
+        reference was the deleted avg()-columns path; the test keeps its
+        name)."""
         import numpy as np
 
         from inxs_spark.operators.similarity import kmeans_refine
@@ -2385,7 +2382,7 @@ class TestKMeans:
         clean = np.array([r.embedding for r in df.orderBy("vec_id").collect()])
         df = df.unionByName(
             spark.createDataFrame(
-                [(900, None), (901, [1.0])],
+                [(900, None), (901, [1.0]), (902, [10.0, None, 0.0, 0.0])],
                 "vec_id long, embedding array<double>",
             )
         )
