@@ -12,8 +12,9 @@ Spark API level — BASELINE.json:15): each batch of payloads goes
 through the pipeline's own encoder (``plans.extract_pipeline.
 encode_turns``) and comes back as one ``StructArray`` of the
 ``RESULT_FIELDS`` contract, so results are byte-identical to
-``extract_df``. Note the pipeline remains the scale path (it also
-writes lineage); the SQL function is the ad-hoc/interactive surface.
+``extract_df``. Note the pipeline remains the scale path (the
+resumable runner writes lineage around it); the SQL function is the
+ad-hoc/interactive surface.
 """
 
 import pyarrow as pa
@@ -33,8 +34,9 @@ def extract_udf(transformation: Transformation = MAIN_CONTENT):
     # real annotations (no ``from __future__ import annotations`` in
     # this module): arrow_udf reads the SCALAR type from the hints
     def extract_main_content(payload: pa.Array) -> pa.Array:
-        arrays, _ = encode_turns(payload.to_pylist(), row_fn)
-        return pa.StructArray.from_arrays(arrays, names=RESULT_NAMES)
+        return pa.StructArray.from_arrays(
+            encode_turns(payload.to_pylist(), row_fn), names=RESULT_NAMES
+        )
 
     return arrow_udf(extract_main_content, RESULT_DDL)
 

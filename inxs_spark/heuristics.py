@@ -138,7 +138,5 @@ def density_extract_turn(
 ) -> tuple[Optional[str], list[tuple[int, int, str]], Optional[str]]:
     """Per-turn heuristic extraction: ``extract_turn(payload, DENSITY)``,
     pluggable into the mapInArrow pipeline via
-    ``extract_df(..., row_fn=density_extract_turn)``. A named module
-    function, so the pipeline's lineage ``rule_set_hash`` (taken from
-    the row function's qualified name) is the same in every process."""
+    ``extract_df(..., row_fn=density_extract_turn)``."""
     return extract_turn(payload, DENSITY)

@@ -170,30 +170,6 @@ def derive_max_bucket(n_rows: int, lo: int = 64, hi: int = 4096) -> int:
     return min(max(lo, int(math.isqrt(max(n_rows, 1)))), hi)
 
 
-def clamped_count(df: DataFrame, saturation: int) -> int:
-    """Saturating row count for deriving CLAMPED parameters: returns
-    the exact count below ``saturation`` and exactly ``saturation`` at
-    or above it (every n ≥ saturation maps to the same derived value
-    anyway).
-
-    Cost profile, honestly (round-3 advice + round-4 review): a
-    DISTRIBUTED JVM ``count()`` clamped on the driver. The previously
-    shipped alternatives both lose: ``limit(n).count()`` plans as
-    LocalLimit → Exchange SinglePartition → GlobalLimit (every
-    upstream partition computes fully, all capped rows funnel through
-    ONE reduce task), and a Python ``mapPartitions`` early-exit
-    serializes every probed row JVM→Python (~1M rows/s/core vs >100M
-    for a JVM zero-column count — the per-task bound never pays for a
-    100× slower row loop). The plain count is fully parallel, stays
-    in whole-stage codegen over a zero-column projection, and on an
-    unfiltered parquet scan is answered from file row-group metadata.
-    The probe IS a full pass on derived frames — that is inherent to
-    counting without an index; callers with a row-count hint
-    (``n_rows=`` / table metadata) should always pass it and skip the
-    probe entirely."""
-    return min(df.count(), saturation)
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -217,19 +193,14 @@ def minhash_lsh_candidates(
     r = num_perm // bands
     assert bands * r == num_perm, "bands must divide num_perm"
     if max_bucket is None:
-        # derive_max_bucket's hi clamp saturates at hi² rows, so the
-        # clamped probe yields the IDENTICAL parameter as an unclamped
-        # count for every corpus size (see clamped_count for the cost
-        # profile; pass max_bucket explicitly to skip the probe)
-        saturation = 4096 * 4096
-        n = clamped_count(df, saturation)
+        # one count job (pass max_bucket explicitly to skip it)
+        n = df.count()
         max_bucket = derive_max_bucket(n)
         import logging
 
         logging.getLogger(__name__).info(
-            "minhash_lsh_candidates: n=%s -> max_bucket=%d "
-            "(clamp(sqrt(n), 64, 4096); probe clamped at %d)",
-            f">={n}" if n >= saturation else n, max_bucket, saturation,
+            "minhash_lsh_candidates: n=%d -> max_bucket=%d "
+            "(clamp(sqrt(n), 64, 4096))", n, max_bucket,
         )
     exploded = minhash_band_memberships(
         df, id_col, text_col, k=k, num_perm=num_perm, bands=bands
@@ -386,7 +357,7 @@ def jaccard_verify(
     verdict task 4): the pair frame is persisted and counted either
     way (that count is the materialization the eager path needed
     anyway), then the corpus is semi-pruned ONLY when it is large
-    (``corpus_n_rows`` hint, or a clamped count probe) AND the
+    (``corpus_n_rows`` hint, or a count of ``df``) AND the
     candidate ids are a small minority of it (8·n_pairs ≤ n) — below
     either bound the lazy plan's cheap corpus shingle pass beats the
     prune's extra joins. The prune path shows in the returned
@@ -398,14 +369,7 @@ def jaccard_verify(
 
         pairs = pairs_cache = pairs.persist(StorageLevel.MEMORY_AND_DISK)
         n_pairs = pairs.count()
-        if corpus_n_rows is not None:
-            n = corpus_n_rows
-        else:
-            # saturation covers both decision terms, so the clamped
-            # probe yields the identical decision as an exact count
-            n = clamped_count(
-                df, max(AUTO_PRUNE_MIN_CORPUS, 8 * n_pairs) + 1
-            )
+        n = corpus_n_rows if corpus_n_rows is not None else df.count()
         prune_to_candidates = (
             n >= AUTO_PRUNE_MIN_CORPUS and 8 * n_pairs <= n
         )
@@ -508,10 +472,7 @@ def ngram_jaccard_pairs(
     a column (e.g. lang) to bound the join. O(n²) within block — this
     is the EXACT oracle-checkable variant; at scale use minhash_dedup_
     pairs, which approximates the same output."""
-    grams = F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size(split({text_col}, ' ')) - {n} + 1, 1)),"
-        f" i -> array_join(slice(split({text_col}, ' '), i, {n}), ' ')))"
-    )
+    grams = shingles(text_col, n)
     extra = [F.col(block_col).alias("blk")] if block_col else []
     base = df.select(F.col(id_col).alias("id"), grams.alias("grams"), *extra)
     blk = ["blk"] if block_col else []
@@ -812,16 +773,24 @@ def _worst_key_width(n_blocks: int, q: int) -> int:
     return q * base + max(0, q - n_narrow)
 
 
-def _simhash_block_keys(max_hamming: int, n_blocks: int | None) -> Column:
-    """The combined-block keys of one ``simhash`` column, as an array:
-    64 bits split into ``n_blocks`` near-equal blocks, one key per
-    q-subset of blocks (q = n_blocks − max_hamming, at least 1), key =
-    xxhash64(subset index, the subset's block values). Equal subsets
-    always collide, so two signatures within ``max_hamming`` bits share
-    a key whenever n_blocks > max_hamming (pigeonhole); hash collisions
-    only ever ADD candidates. ``n_blocks=None`` derives the plan from
-    :func:`derive_simhash_blocks`. The one key builder of both the
-    batch and the incremental pair search."""
+def _simhash_block_keys(max_hamming: int, n_blocks: int | None):
+    """``keyed(sigs)``: (id, simhash) rows → (id, simhash, key) rows,
+    one per combined-block key of each signature. 64 bits split into
+    ``n_blocks`` near-equal blocks, one key per q-subset of blocks
+    (q = n_blocks − max_hamming, at least 1), key = xxhash64(subset
+    index, the subset's block values). Equal subsets always collide,
+    so two signatures within ``max_hamming`` bits share a key whenever
+    n_blocks > max_hamming (pigeonhole); hash collisions only ever ADD
+    candidates. ``n_blocks=None`` derives the plan from
+    :func:`derive_simhash_blocks`; an out-of-range ``n_blocks`` raises
+    here, before any Spark work. The one key builder of both the batch
+    and the incremental pair search.
+
+    The subsets explode as an index ``t``, and each key reads its
+    blocks' offsets and masks from literal arrays at ``t``: one small
+    projection whatever C(b, q) is. An ``array`` of C(b, q) hash calls
+    (495 at max_hamming=8) generates a Java method past the 64 KB
+    limit, so whole-stage codegen could not compile it."""
     from itertools import combinations
 
     if n_blocks is None:
@@ -833,17 +802,26 @@ def _simhash_block_keys(max_hamming: int, n_blocks: int | None) -> Column:
     base, extra = divmod(64, n_blocks)
     widths = [base + (1 if b < extra else 0) for b in range(n_blocks)]
     offsets = [sum(widths[:b]) for b in range(n_blocks)]
-    vals = []
-    for b in range(n_blocks):
-        v = F.shiftrightunsigned("simhash", offsets[b])
-        if widths[b] < 64:  # (1<<64)-1 overflows signed long; the
-            # shift already isolated a full-width block
-            v = v.bitwiseAND(F.lit((1 << widths[b]) - 1))
-        vals.append(v)
-    return F.array(*[
-        F.xxhash64(F.lit(t), *[vals[i] for i in combo])
-        for t, combo in enumerate(combinations(range(n_blocks), q))
-    ])
+    # a full-width block (n_blocks=1) keeps every bit: mask -1, since
+    # (1<<64)-1 overflows signed long
+    masks = [(1 << w) - 1 if w < 64 else -1 for w in widths]
+    combos = list(combinations(range(n_blocks), q))
+    at = F.col("t") + 1
+    blocks = []
+    for j in range(q):  # the j-th block of subset t
+        off = F.array(*[F.lit(offsets[c[j]]) for c in combos])
+        mask = F.array(*[F.lit(masks[c[j]]).cast("long") for c in combos])
+        blocks.append(F.call_function(
+            "shiftrightunsigned", F.col("simhash"), F.element_at(off, at)
+        ).bitwiseAND(F.element_at(mask, at)))
+    subsets = F.explode(F.sequence(F.lit(0), F.lit(len(combos) - 1)))
+
+    def keyed(sigs: DataFrame) -> DataFrame:
+        return sigs.select("id", "simhash", subsets.alias("t")).select(
+            "id", "simhash", F.xxhash64("t", *blocks).alias("key")
+        )
+
+    return keyed
 
 
 def simhash_candidates(sigs: DataFrame, max_hamming: int,
@@ -852,8 +830,7 @@ def simhash_candidates(sigs: DataFrame, max_hamming: int,
     combined-block key — the pre-verification stage, factored out so
     candidate VOLUME (the scale cost) is testable separately from
     recall (keys: :func:`_simhash_block_keys`)."""
-    keys = _simhash_block_keys(max_hamming, n_blocks)
-    keyed = sigs.select("id", "simhash", F.explode(keys).alias("key"))
+    keyed = _simhash_block_keys(max_hamming, n_blocks)(sigs)
     a = keyed.select("key", F.col("id").alias("id_a"),
                      F.col("simhash").alias("sh_a"))
     b = keyed.select("key", F.col("id").alias("id_b"),
@@ -1183,7 +1160,7 @@ def simhash_dup_pairs_incremental(
 
     from pyspark import StorageLevel
 
-    keys = _simhash_block_keys(max_hamming, n_blocks)
+    keyed = _simhash_block_keys(max_hamming, n_blocks)
     meta = _read_index_meta(index_dir, SIMHASH_INDEX_FORMAT)
     spark = new_df.sparkSession
     new_sigs = simhash(new_df, id_col, text_col).withColumnRenamed(
@@ -1193,12 +1170,10 @@ def simhash_dup_pairs_incremental(
     # index side read BEFORE any append (listing pinned pre-append)
     old_sigs = spark.read.parquet(os.path.join(index_dir, "sigs"))
 
-    new_keyed = new_sigs.select(
-        "id", "simhash", F.explode(keys).alias("key")
+    new_keyed = keyed(new_sigs)
+    old_keyed = keyed(old_sigs).join(
+        new_keyed.select("key").distinct(), "key", "left_semi"
     )
-    old_keyed = old_sigs.select(
-        "id", "simhash", F.explode(keys).alias("key")
-    ).join(new_keyed.select("key").distinct(), "key", "left_semi")
     keyed = new_keyed.unionByName(old_keyed)
     new_ids = new_sigs.select(F.col("id").alias("id_a")).distinct()
     a = new_keyed.select("key", F.col("id").alias("id_a"),

@@ -235,27 +235,15 @@ def pairwise_ann_candidates(
     buckets (expected size corpus/2^p). ``n_planes=None`` (default)
     derives the plane count from the corpus size — pass ``n_rows`` (an
     external corpus-size hint, e.g. from table metadata) to skip the
-    probe entirely; otherwise a saturating probe runs, exact below its
-    536.9M-row saturation point (32·2^24 — round-3 advice fix: the
-    docstring previously claimed 16.7M). The probe is a distributed
-    JVM count clamped on the driver — a full (zero-column, codegen,
-    metadata-fast on plain parquet scans) pass, so a ``n_rows``
-    metadata hint is always the cheaper path at scale. A saturated
-    probe logs and uses the probe bound (planes err LOW:
-    too-few planes costs bucket size, never recall — too MANY planes
-    is the recall killer for single-table hyperplane LSH)."""
+    count entirely; otherwise a distributed JVM count of ``df`` runs —
+    a full (zero-column, codegen, metadata-fast on plain parquet
+    scans) pass, so a ``n_rows`` metadata hint is always the cheaper
+    path at scale. Planes err LOW past the hi clamp: too-few planes
+    costs bucket size, never recall — too MANY planes is the recall
+    killer for single-table hyperplane LSH."""
     if n_planes is None:
         if n_rows is None:
-            from .dedup import clamped_count
-
-            # derive_n_planes' hi clamp saturates at target_bucket·2^hi
-            # = 32·2^24 rows, so a probe bounded there yields the
-            # IDENTICAL parameter as a full count for EVERY corpus
-            # size (same alignment as the minhash max_bucket probe —
-            # a smaller bound would silently under-plane corpora in
-            # the 16.7M–536M range by up to 32x bucket size)
-            saturation = 32 * (1 << 24)
-            n_rows = clamped_count(df, saturation)
+            n_rows = df.count()
         n_planes = derive_n_planes(n_rows)
         logger.info(
             "pairwise_ann_candidates: n=%d -> n_planes=%d "

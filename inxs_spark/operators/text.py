@@ -20,6 +20,8 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import DoubleType, StringType
 
+from .dedup import shingles
+
 # tiny multilingual stopword lists for the n-gram/stopword language
 # heuristic; deterministic and identical in the DuckDB oracle SQL
 STOPWORDS = {
@@ -176,22 +178,13 @@ def pii_scrub_expr(text_col: str = "text") -> Column:
     )
 
 
-def _word_grams(text_col: str, n: int) -> str:
-    """SQL fragment: ALL word n-grams (non-distinct) of the column."""
-    return (
-        f"transform(sequence(1, greatest(size(split({text_col}, ' ')) - {n - 1}, 1)),"
-        f" i -> array_join(slice(split({text_col}, ' '), i, {n}), ' '))"
-    )
-
-
 def repetition_ratio(df: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text", n: int = 3) -> DataFrame:
     """Within-document repetition (Gopher/RefinedWeb-style quality
     signal): 1 - distinct/total word n-grams. High values flag
-    looping/boilerplate generations. Pure codegen projection."""
-    grams = F.expr(_word_grams(text_col, n))
-    total = F.size(grams)
-    distinct = F.size(F.array_distinct(grams))
+    looping/boilerplate generations. One JVM projection."""
+    total = F.greatest(F.size(F.split(F.col(text_col), " ")) - n + 1, F.lit(1))
+    distinct = F.size(shingles(text_col, n))
     return df.select(
         F.col(id_col),
         total.cast("long").alias("n_grams"),
@@ -225,13 +218,9 @@ def decontamination(
     if normalize:
         df = df.withColumn(text_col, normalize_expr(text_col))
         eval_df = eval_df.withColumn(text_col, normalize_expr(text_col))
-    grams = F.expr(_word_grams(text_col, n))
-    eval_grams = (
-        eval_df.select(F.explode(F.array_distinct(grams)).alias("gram")).distinct()
-    )
-    doc_grams = df.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("gram")
-    )
+    grams = shingles(text_col, n)
+    eval_grams = eval_df.select(F.explode(grams).alias("gram")).distinct()
+    doc_grams = df.select(F.col(id_col), F.explode(grams).alias("gram"))
     hits = (
         doc_grams.join(F.broadcast(eval_grams), "gram")
         .groupBy(id_col)
@@ -462,8 +451,8 @@ def remove_boilerplate_lines(
     distinct strings" fails at 100 TB with a low ``min_docs`` — every
     common short sentence clears the bar and an unbounded broadcast
     can blow the driver/broadcast limit. The blacklist is therefore
-    persisted (spillable) and size-probed with a clamped distributed
-    count (``clamped_count``, never a single-partition limit): at or below
+    persisted (spillable) and size-probed with a distributed count
+    (never a single-partition limit): at or below
     ``broadcast_max_lines`` rows it broadcasts as before; above, the
     anti-join falls back to a digest-keyed SHUFFLE_HASH join — both
     sides exchange only 16-byte keys, still cheap. Which path ran is
@@ -484,19 +473,17 @@ def remove_boilerplate_lines(
 
     from pyspark import StorageLevel
 
-    from .dedup import clamped_count
-
     freq = line_doc_freq(df, id_col, text_col, sep)
     blacklist = (
         freq.filter(F.col("n_docs") >= min_docs)
         .select("line_md5")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_black = clamped_count(blacklist, broadcast_max_lines + 1)
+    n_black = blacklist.count()
     use_broadcast = n_black <= broadcast_max_lines
     logging.getLogger(__name__).info(
-        "remove_boilerplate_lines: blacklist %s%d lines -> %s anti-join",
-        ">=" if not use_broadcast else "", n_black,
+        "remove_boilerplate_lines: blacklist %d lines -> %s anti-join",
+        n_black,
         "broadcast" if use_broadcast else "shuffle_hash",
     )
     bl = F.broadcast(blacklist) if use_broadcast else blacklist.hint("shuffle_hash")
@@ -698,9 +685,9 @@ def pack_sequences(
 
     ``n_shards=None`` (default) derives the shard count from the
     corpus size via ``derive_n_shards`` — from the ``n_rows`` hint if
-    given, else a distributed count probe (see clamped_count's cost
-    profile; always pass the hint when the row count is known from
-    table metadata). Pass ``n_shards`` explicitly for bit-for-bit
+    given, else a distributed count of ``df`` (a full pass on a
+    derived frame; always pass the hint when the row count is known
+    from table metadata). Pass ``n_shards`` explicitly for bit-for-bit
     reproducible packing across corpora of different sizes (the
     cross-engine oracle does).
 
@@ -717,11 +704,7 @@ def pack_sequences(
     if seq_len < 1:
         raise ValueError(f"seq_len must be >= 1, got {seq_len}")
     if n_shards is None:
-        from .dedup import clamped_count
-
-        n = n_rows if n_rows is not None else clamped_count(
-            df, 4096 << 16  # derivation saturates at hi shards anyway
-        )
+        n = n_rows if n_rows is not None else df.count()
         n_shards = derive_n_shards(n)
         import logging
 

@@ -39,16 +39,13 @@ module's mapInArrow, :func:`extract_df_deduped` (which is
 :func:`extract_df` over the distinct payloads) and the SQL function
 (``functions.sql``, an ``arrow_udf``).
 
-Lineage: each task writes a per-partition metrics JSON (rows in/out,
-failures, wall ms, rule-set hash, input snapshot) via atomic rename —
-the sandbox stand-in for a metrics Iceberg table append
-(BASELINE.json:6). On a cluster this directory lives on shared storage.
+Lineage is not this module's concern: the resumable runner
+(``plans.runner``) counts each file group on the group's own write
+and writes one record per group from the driver.
 """
 
 from __future__ import annotations
 
-import os
-import time
 from typing import Iterator, Optional
 
 import pyarrow as pa
@@ -58,7 +55,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..extract import MAIN_CONTENT, turn_extractor
 from ..kernel.transformation import Transformation
 from ..operators.fanout import ensure_compute_fanout, planned_partitions
-from ..sources.io import write_json_atomic
 
 #: the per-turn result contract, declared once: (name, Spark DDL type)
 #: of each column ``row_fn`` fills. The pipeline's output schema, the
@@ -75,14 +71,13 @@ KEY_NAMES = ["conv_id", "turn_idx"]
 OUTPUT_SPARK_SCHEMA = "conv_id string, turn_idx int, " + RESULT_DDL
 
 
-def encode_turns(texts: list, row_fn) -> tuple[list, int]:
+def encode_turns(texts: list, row_fn) -> list:
     """``row_fn`` (payload → (text, spans, failure)) over one batch of
-    payloads → (the ``RESULT_FIELDS`` columns as Arrow arrays, number
-    of failed turns). The one place payloads become Arrow columns:
-    the pipeline's mapInArrow and the SQL function both call it."""
+    payloads → the ``RESULT_FIELDS`` columns as Arrow arrays. The one
+    place payloads become Arrow columns: the pipeline's mapInArrow and
+    the SQL function both call it."""
     extracted: list[Optional[str]] = []
     fails: list[Optional[str]] = []
-    n_failed = 0
     # spans build FLAT (offsets + three value arrays) — pyarrow
     # converts flat primitive lists far faster than nested
     # list-of-tuples (profiled ~half the wrapper overhead)
@@ -99,8 +94,6 @@ def encode_turns(texts: list, row_fn) -> tuple[list, int]:
             s_paths.append(p)
         offsets.append(len(s_starts))
         fails.append(failure)
-        if failure is not None:
-            n_failed += 1
     spans_arr = pa.ListArray.from_arrays(
         pa.array(offsets, type=pa.int32()),
         pa.StructArray.from_arrays(
@@ -112,101 +105,11 @@ def encode_turns(texts: list, row_fn) -> tuple[list, int]:
             names=["start", "end", "path"],
         ),
     )
-    arrays = [
+    return [
         pa.array(extracted, type=pa.string()),
         spans_arr,
         pa.array(fails, type=pa.string()),
     ]
-    return arrays, n_failed
-
-
-def make_extract_fn(
-    transformation: Transformation,
-    metrics_dir: Optional[str] = None,
-    run_id: str = "",
-    chunk_id: int = -1,
-    input_snapshot_id: str = "",
-    row_fn=None,
-    passthrough_cols: tuple = (),
-):
-    """Build the mapInArrow function. The transformation object is
-    captured in the closure — Spark cloudpickles it ONCE per job and
-    reuses it for every batch on a worker (no per-batch deserialize).
-
-    ``row_fn`` overrides the per-payload extractor (payload → (text,
-    spans, failure)) — e.g. the DOM-heuristic density extractor; the
-    default runs the declarative ``transformation``.
-
-    ``passthrough_cols`` ride the Arrow batch untouched: extraction is
-    1:1 per input row, so any caller that needs source columns next to
-    the extracted text (the SFT job needs ``role``) can carry them
-    through the hop instead of paying a full-corpus equi-join back to
-    the source afterwards — at 10^12 turns that join is two more
-    shuffles of the whole table."""
-    import hashlib as _hashlib
-
-    if row_fn is None:
-        rule_set_hash = transformation.fingerprint()
-        row_fn = turn_extractor(transformation)
-    else:
-        rule_set_hash = _hashlib.sha256(
-            f"row_fn:{getattr(row_fn, '__module__', '')}."
-            f"{getattr(row_fn, '__qualname__', repr(row_fn))}".encode()
-        ).hexdigest()
-    names = KEY_NAMES + RESULT_NAMES + list(passthrough_cols)
-
-    def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        start = time.monotonic()
-        rows = failures = 0
-        for batch in batches:
-            schema = batch.schema
-            texts = batch.column(schema.get_field_index("text")).to_pylist()
-            arrays, n_failed = encode_turns(texts, row_fn)
-            rows += len(texts)
-            failures += n_failed
-            keys = [
-                batch.column(schema.get_field_index("conv_id")).cast(pa.string()),
-                batch.column(schema.get_field_index("turn_idx")).cast(pa.int32()),
-            ]
-            passthrough = [
-                batch.column(schema.get_field_index(c)) for c in passthrough_cols
-            ]
-            yield pa.RecordBatch.from_arrays(keys + arrays + passthrough, names=names)
-        if metrics_dir:
-            _write_partition_metrics(
-                metrics_dir, run_id, chunk_id, input_snapshot_id,
-                rule_set_hash, rows, rows, failures,
-                int((time.monotonic() - start) * 1000),
-            )
-
-    return extract_batches
-
-
-def _write_partition_metrics(
-    metrics_dir: str, run_id: str, chunk_id: int, input_snapshot_id: str,
-    rule_set_hash: str, rows_in: int, rows_out: int, failures: int,
-    wall_ms: int,
-) -> None:
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-    record = {
-        "run_id": run_id,
-        "chunk_id": chunk_id,
-        "partition_id": pid,
-        "input_snapshot_id": input_snapshot_id,
-        "rule_set_hash": rule_set_hash,
-        "rows_in": rows_in,
-        "rows_out": rows_out,
-        "failures": failures,
-        "wall_ms": wall_ms,
-    }
-    # atomic: speculative retries overwrite with identical
-    # deterministic content (except wall_ms)
-    write_json_atomic(
-        os.path.join(metrics_dir, f"c{chunk_id:04d}-p{pid:05d}.json"), record
-    )
 
 
 def default_fanout_partitions(df: DataFrame) -> int:
@@ -237,19 +140,26 @@ def extract_df(
     df: DataFrame,
     transformation: Transformation = MAIN_CONTENT,
     num_partitions: Optional[int] = None,
-    metrics_dir: Optional[str] = None,
-    run_id: str = "",
-    chunk_id: int = -1,
-    input_snapshot_id: str = "",
     row_fn=None,
     passthrough_cols: tuple = (),
 ) -> DataFrame:
     """transcripts → extracted(conv_id, turn_idx, extracted_text,
     spans, failure[, *passthrough_cols]). Pure transformation —
-    callers choose the sink. ``passthrough_cols`` (simple scalar
-    source columns, e.g. ``("role",)``) ride the Arrow batch through
-    the kernel hop 1:1, saving the full-corpus join-back a caller
-    would otherwise need (see make_extract_fn)."""
+    callers choose the sink.
+
+    ``row_fn`` overrides the per-payload extractor (payload → (text,
+    spans, failure)) — e.g. the DOM-heuristic density extractor; the
+    default runs the declarative ``transformation``. The mapInArrow
+    closure captures it, so Spark cloudpickles it ONCE per job and
+    reuses it for every batch on a worker.
+
+    ``passthrough_cols`` (simple scalar source columns, e.g.
+    ``("role",)``) ride the Arrow batch untouched: extraction is 1:1
+    per input row, so a caller that needs source columns next to the
+    extracted text (the SFT job needs ``role``) carries them through
+    the hop instead of paying a full-corpus equi-join back to the
+    source afterwards — at 10^12 turns that join is two more shuffles
+    of the whole table."""
     passthrough_cols = tuple(passthrough_cols)
     # round-5 advice: a passthrough column colliding with the fixed
     # output schema (or the key/text inputs) used to fail deep inside
@@ -262,10 +172,25 @@ def extract_df(
             f"passthrough_cols {clash} collide with the extraction "
             f"output schema / key columns {sorted(reserved)}"
         )
-    fn = make_extract_fn(
-        transformation, metrics_dir, run_id, chunk_id, input_snapshot_id,
-        row_fn=row_fn, passthrough_cols=passthrough_cols,
-    )
+    if row_fn is None:
+        row_fn = turn_extractor(transformation)
+    names = KEY_NAMES + RESULT_NAMES + list(passthrough_cols)
+
+    def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            schema = batch.schema
+            texts = batch.column(schema.get_field_index("text")).to_pylist()
+            keys = [
+                batch.column(schema.get_field_index("conv_id")).cast(pa.string()),
+                batch.column(schema.get_field_index("turn_idx")).cast(pa.int32()),
+            ]
+            passthrough = [
+                batch.column(schema.get_field_index(c)) for c in passthrough_cols
+            ]
+            yield pa.RecordBatch.from_arrays(
+                keys + encode_turns(texts, row_fn) + passthrough, names=names
+            )
+
     out_schema = OUTPUT_SPARK_SCHEMA
     if passthrough_cols:
         out_schema += ", " + ", ".join(
@@ -277,14 +202,11 @@ def extract_df(
         pruned = ensure_compute_fanout(pruned, "conv_id", "turn_idx")
     else:
         pruned = pruned.repartition(num_partitions, "conv_id", "turn_idx")
-    return pruned.mapInArrow(fn, out_schema)
+    return pruned.mapInArrow(extract_batches, out_schema)
 
 
 def extract_df_deduped(
-    df: DataFrame,
-    transformation: Transformation = MAIN_CONTENT,
-    num_partitions: Optional[int] = None,
-    row_fn=None,
+    df: DataFrame, transformation: Transformation = MAIN_CONTENT
 ) -> DataFrame:
     """Dedup-before-extract: run the kernel over DISTINCT payloads
     only, then join results back to every (conv_id, turn_idx).
@@ -314,13 +236,12 @@ def extract_df_deduped(
     case where this variant wins biggest.
     """
     spark = df.sparkSession
-    if num_partitions is None:
-        # not the scan's splits: this repartition carries the DISTINCT
-        # payload set, whose size is unrelated to the raw input's
-        # (billions of duplicate turns → thousands of fingerprints)
-        num_partitions = max(
-            spark.sparkContext.defaultParallelism, _shuffle_floor(spark)
-        )
+    # not the scan's splits: this repartition carries the DISTINCT
+    # payload set, whose size is unrelated to the raw input's
+    # (billions of duplicate turns → thousands of fingerprints)
+    num_partitions = max(
+        spark.sparkContext.defaultParallelism, _shuffle_floor(spark)
+    )
     fp = F.coalesce(F.md5("text"), F.lit("NULL")).alias("fp")
     keyed = df.select(*KEY_NAMES, "text", fp)
     distinct = (
@@ -339,7 +260,6 @@ def extract_df_deduped(
             F.lit("").alias("conv_id"), F.lit(0).alias("turn_idx"), "text", "fp"
         ),
         transformation,
-        row_fn=row_fn,
         passthrough_cols=("fp",),
     ).drop(*KEY_NAMES)
     return (

@@ -10,7 +10,7 @@ group, exact coverage, no row ever in two groups) and commits each
 group independently:
 
     out_root/extracted/chunk=<k>/      group k's Parquet (job-atomic)
-    out_root/metrics/c<k>-p<p>.json    per-(group, partition) lineage rows
+    out_root/metrics/c<k>.json         group k's lineage row
     out_root/manifests/chunk-<k>.json  checkpoint manifest (atomic rename)
     out_root/metrics_table/            compacted metrics Parquet
 
@@ -26,9 +26,15 @@ from, and a rerun plans every group in Python, with no Spark job:
   re-written (the kill/rerun test asserts it);
 * manifest missing or stale (new, changed or crashed group) → delete
   the group's lineage records, recompute, overwrite its output, then
-  write its manifest;
+  write its lineage record and its manifest;
 * no files left in the group → delete its output, records and
   manifest.
+
+Lineage is counted on the group's own write: one ``Observation``
+(rows, failures) rides the write's Spark jobs, so counting adds no
+job and no re-read, and the driver writes the group's record from
+it. No executor writes a record, so the metrics directory needs no
+path shared with the executors.
 
 A manifest written with another chunk count or rule set fails the
 run (:class:`ResumeMismatch`): its groups cover other files, or its
@@ -52,7 +58,7 @@ import uuid
 import zlib
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..extract import MAIN_CONTENT
 from ..kernel.transformation import Transformation
@@ -65,7 +71,7 @@ from ..sources.io import (
 from .extract_pipeline import extract_df
 
 METRICS_SCHEMA = (
-    "run_id string, chunk_id int, partition_id int, input_snapshot_id string, "
+    "run_id string, chunk_id int, input_snapshot_id string, "
     "rule_set_hash string, rows_in long, rows_out long, failures long, "
     "wall_ms long"
 )
@@ -99,14 +105,15 @@ def _manifest_records(out_root: str) -> list[dict]:
 
 
 def _lineage_records(metrics_dir: str, chunk_ids) -> list[str]:
-    """Paths of the per-partition lineage records of the given groups."""
+    """Paths of the given groups' lineage records: ``c<k>.json``, and
+    the per-partition ``c<k>-p<p>.json`` records of older runs."""
     if not os.path.isdir(metrics_dir):
         return []
-    prefixes = tuple(f"c{k:04d}-" for k in chunk_ids)
+    stems = {f"c{k:04d}" for k in chunk_ids}
     return [
         os.path.join(metrics_dir, name)
         for name in sorted(os.listdir(metrics_dir))
-        if name.startswith(prefixes) and name.endswith(".json")
+        if name.endswith(".json") and name[:-5].split("-")[0] in stems
     ]
 
 
@@ -190,25 +197,33 @@ def run_extraction(
     rows_total = 0
     for k in todo:
         out_path = _output_path(out_root, k)
+        # counted on the write itself: re-reading the written group
+        # only to count it would double its read IO
+        obs = Observation()
+        write_t0 = time.monotonic()
         # the listing's schema: no schema-inference job per group
         extract_df(
             spark.read.schema(listing.schema)
             .parquet(*map(local_path, groups[k])),
             transformation,
             num_partitions=num_partitions,
-            metrics_dir=metrics_dir,
-            run_id=run_id,
-            chunk_id=k,
-            input_snapshot_id=fingerprints[k],
+        ).observe(
+            obs, F.count(F.lit(1)).alias("n"), F.count("failure").alias("f")
         ).write.mode("overwrite").parquet(out_path)
-        # rows_out from the lineage records the UDF just wrote (the
-        # group's older records were deleted above): re-reading the
-        # written group only to count it would double its read IO
-        rows_out = 0
-        for path in _lineage_records(metrics_dir, [k]):
-            with open(path) as fh:
-                rows_out += json.load(fh)["rows_out"]
+        wall_ms = int((time.monotonic() - write_t0) * 1000)
+        counts = obs.get
+        rows_out = counts["n"]
         rows_total += rows_out
+        write_json_atomic(os.path.join(metrics_dir, f"c{k:04d}.json"), {
+            "run_id": run_id,
+            "chunk_id": k,
+            "input_snapshot_id": fingerprints[k],
+            "rule_set_hash": rule_hash,
+            "rows_in": rows_out,  # extraction is 1:1 per input row
+            "rows_out": rows_out,
+            "failures": counts["f"],
+            "wall_ms": wall_ms,
+        })
         write_json_atomic(_manifest_path(out_root, k), {
             "run_id": run_id,
             "chunk_id": k,

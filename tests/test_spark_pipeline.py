@@ -152,15 +152,31 @@ def test_resume_recomputes_only_missing_chunks(spark, tiny_transcripts, tmp_out)
     assert _extracted(spark, tmp_out) == full  # exact resume (BASELINE.json:14)
 
 
-def _jobs_in_group(spark, group, fn):
-    """Spark jobs ``fn()`` runs, counted by job group."""
+def _job_ids_in_group(spark, group, fn):
+    """Ids of the Spark jobs ``fn()`` runs, found by job group."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs ``fn()`` runs, counted by job group."""
+    return len(_job_ids_in_group(spark, group, fn))
+
+
+def _result_stage_tasks(spark, group, fn):
+    """Tasks of the last stage ``fn()`` runs: its action's result
+    stage, the one that holds a narrow input's kernel hop."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = [
+        s for j in _job_ids_in_group(spark, group, fn)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    return tracker.getStageInfo(max(stages)).numTasks
 
 
 def test_recomputed_group_runs_only_its_write_jobs(spark, tiny_transcripts, tmp_out):
@@ -403,9 +419,13 @@ def test_midjob_failure_then_resume(spark, tiny_transcripts, tmp_out, monkeypatc
 
     orig = R.extract_df
     calls = []
+    group_of = {path: k for k, paths in _file_groups(spark, src, 3).items()
+                for path in paths}
 
     def boom(df, *a, **kw):
-        calls.append(kw["chunk_id"])
+        from inxs_spark.sources.io import local_path
+
+        calls.append(group_of[local_path(df.inputFiles()[0])])
         if len(calls) == 2:
             raise RuntimeError("injected driver loss")
         return orig(df, *a, **kw)
@@ -424,20 +444,49 @@ def test_midjob_failure_then_resume(spark, tiny_transcripts, tmp_out, monkeypatc
 
 
 def test_lineage_metrics(spark, tiny_transcripts, tmp_out):
+    """One lineage row per committed group, counted on the group's
+    write: rows sum to the input, failures to the written failures."""
     run_extraction(spark, tiny_transcripts, tmp_out, chunks=2, num_partitions=4)
     metrics = spark.read.parquet(os.path.join(tmp_out, "metrics_table"))
     rows = metrics.collect()
     assert rows, "metrics table empty"
+    manifests = _manifests(tmp_out)
+    assert sorted(r.chunk_id for r in rows) == sorted(manifests)
     n_input = spark.read.parquet(tiny_transcripts).count()
     assert _lineage_totals(spark, tmp_out) == (n_input, n_input)
     hashes = {r.rule_set_hash for r in rows}
     assert hashes == {MAIN_CONTENT.fingerprint()}
-    # each record carries its group's input fingerprint
-    manifests = _manifests(tmp_out)
+    # each record carries its group's input fingerprint and row count
     for r in rows:
         assert r.input_snapshot_id == manifests[r.chunk_id]["input_snapshot_id"]
-    # failures are counted (synthetic mix includes ~3% malformed)
-    assert sum(r.failures for r in rows) > 0
+        assert r.rows_out == manifests[r.chunk_id]["rows_out"]
+    # failures are the written ones (synthetic mix includes ~3% malformed)
+    n_failed = read_extracted(spark, tmp_out).filter("failure IS NOT NULL").count()
+    assert n_failed > 0
+    assert sum(r.failures for r in rows) == n_failed
+
+
+def test_recomputed_group_drops_per_partition_records(spark, tiny_transcripts,
+                                                      tmp_out):
+    """An out_root whose lineage was written one record per (group,
+    partition), ``c<k>-p<p>.json``, resumes without double counting:
+    a recomputed group's old records are deleted with its new one."""
+    from inxs_spark.sources.io import write_json_atomic
+
+    run_extraction(spark, tiny_transcripts, tmp_out, chunks=2, num_partitions=4)
+    k = min(_manifests(tmp_out))
+    _drop_group(tmp_out, k)
+    write_json_atomic(
+        os.path.join(tmp_out, "metrics", f"c{k:04d}-p00000.json"),
+        {"chunk_id": k, "rows_in": 999, "rows_out": 999, "failures": 9},
+    )
+    summary = run_extraction(spark, tiny_transcripts, tmp_out, chunks=2,
+                             num_partitions=4)
+    assert summary["chunks_run"] == 1
+    assert sorted(os.listdir(os.path.join(tmp_out, "metrics"))) == sorted(
+        f"c{g:04d}.json" for g in _manifests(tmp_out))
+    n_input = spark.read.parquet(tiny_transcripts).count()
+    assert _lineage_totals(spark, tmp_out) == (n_input, n_input)
 
 
 def test_resume_with_new_partitioning_keeps_lineage_exact(spark, tiny_transcripts,
@@ -548,12 +597,12 @@ def test_contract_deduped_equals_plain(spark, tiny_transcripts):
     assert a == b
 
 
-def test_default_fanout_partitions_rule(spark, tiny_transcripts, tmp_out):
+def test_default_fanout_partitions_rule(spark, tiny_transcripts):
     """The reported count is the number of kernel tasks extract_df runs
-    (one lineage record each), read from the planned scan with no
-    Spark job: the scan's own splits, or one task per core for a scan
-    with fewer splits than cores. A plan that already shuffles is
-    refused."""
+    (the tasks of its write's result stage), read from the planned
+    scan with no Spark job: the scan's own splits, or one task per
+    core for a scan with fewer splits than cores. A plan that already
+    shuffles is refused."""
     from inxs_spark.plans.extract_pipeline import default_fanout_partitions
     from inxs_spark.sources.io import local_path
 
@@ -568,10 +617,12 @@ def test_default_fanout_partitions_rule(spark, tiny_transcripts, tmp_out):
             spark, f"fanout-{name}",
             lambda: got.append(default_fanout_partitions(df)),
         ) == 0
-        metrics = os.path.join(tmp_out, f"metrics-{name}")
-        extract_df(df, metrics_dir=metrics).write.format("noop").mode(
-            "overwrite").save()
-        assert got == [len(os.listdir(metrics))]
+        tasks = _result_stage_tasks(
+            spark, f"fanout-write-{name}",
+            lambda: extract_df(df).write.format("noop").mode(
+                "overwrite").save(),
+        )
+        assert got == [tasks]
         if name == "narrow":
             assert got == [cores]
 

@@ -4,7 +4,9 @@ against oracle_sql() via DuckDB — a local mimic of CORRECTNESS_r{N}.
 
 Usage: python tools/check_contract.py [sf_dir] [query ...]
 Spark runs on get_spark()'s default master: local[$SPARK_GRAFT_CPUS],
-or every core when it is unset.
+or every core when it is unset, with spark.sql.codegen.fallback=false:
+generated code that fails to compile fails its query instead of
+logging an ERROR and running interpreted.
 Set SPARK_GRAFT_EXTRAS=1 to also run extra_queries() (rows-only demo
 set — printed as ROWS lines, never compared).
 Set SPARK_GRAFT_EXTRAS_JSON=/path/EXTRAS_rN.json to persist the demo
@@ -55,6 +57,7 @@ def main() -> int:
     from inxs_spark.sources.session import get_spark
 
     spark = get_spark()
+    spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
         failures = _check(spark, sf_dir, only)
     finally:
