@@ -17,6 +17,19 @@ gate is a codegen projection, quota sampling is a hash-ordered window.
 Dropped rows are COUNTED per stage (no silent attrition — the stats
 line and the metrics table are the lineage record).
 
+Stage widths come from the session (``sources.session.get_spark``):
+AQE coalesces each shuffle to about one partition per core, however
+few bytes it moves, and a cache built on a shuffle is coalesced the
+same way. So the final gate/scrub write and the LSH bucket stage run
+on about cores tasks (under Spark's 1 MB coalescing floor each ran on
+one), and the MinHash UDF over the ``after_exact_dedup`` cache runs
+on about cores Python tasks, not on 32. The input cache keeps the
+scan's splits: a one-row-group file is one task. Every Spark job of a call
+carries the job description ``curate/<stage>`` (input, exact_dedup,
+near_dup, output), so an event log attributes each job to its stage
+(``tools/stage_report.py``); the caller's description is restored on
+return.
+
 SINGLE-PASS LINEAGE: every stage computes exactly once and the input
 is scanned exactly once (test-asserted via a row-tap accumulator).
 A frame is persisted (MEMORY_AND_DISK) only when two actions read it:
@@ -129,101 +142,113 @@ def curate(
             dd_col = "_" + dd_col
         df = df.withColumn(dd_col, normalize_expr(text_col))
 
-    # stage 0: the ONLY input scan — everything downstream reads this
-    # cache (exact_dedup alone consumes it twice: digest groups + join
-    # back). If the CALLER already persisted this exact frame
-    # (normalize=False passes it through unchanged), do NOT
-    # persist/unpersist it here: our unpersist would silently evict
-    # the caller's cache entry (round-4 review finding)
-    caller_cached = df.storageLevel.useMemory or df.storageLevel.useDisk
-    c0 = df if caller_cached else df.persist(lvl)
-    stats["input"] = c0.count()
-    walls["input"] = time.monotonic() - t0
+    # each stage's Spark jobs carry the description "curate/<stage>" so
+    # an event log attributes them; the caller's description comes back
+    # on return
+    sc = df.sparkSession.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    try:
+        # stage 0: the ONLY input scan — everything downstream reads this
+        # cache (exact_dedup alone consumes it twice: digest groups + join
+        # back). If the CALLER already persisted this exact frame
+        # (normalize=False passes it through unchanged), do NOT
+        # persist/unpersist it here: our unpersist would silently evict
+        # the caller's cache entry (round-4 review finding)
+        sc.setJobDescription("curate/input")
+        caller_cached = df.storageLevel.useMemory or df.storageLevel.useDisk
+        c0 = df if caller_cached else df.persist(lvl)
+        stats["input"] = c0.count()
+        walls["input"] = time.monotonic() - t0
 
-    t = time.monotonic()
-    deduped = exact_dedup(c0, id_col, dd_col).persist(lvl)
-    stats["after_exact_dedup"] = deduped.count()
-    walls["after_exact_dedup"] = time.monotonic() - t
-    if not caller_cached:
-        c0.unpersist()
+        sc.setJobDescription("curate/exact_dedup")
+        t = time.monotonic()
+        deduped = exact_dedup(c0, id_col, dd_col).persist(lvl)
+        stats["after_exact_dedup"] = deduped.count()
+        walls["after_exact_dedup"] = time.monotonic() - t
+        if not caller_cached:
+            c0.unpersist()
 
-    t = time.monotonic()
-    # prune_verify="auto": the candidate pairs are cached and counted,
-    # and the verify touches candidate docs only once the corpus is
-    # large. The hot-bucket cap comes from the count this stage
-    # already took, so the LSH step runs no corpus count of its own.
-    pairs = minhash_dedup_pairs(
-        deduped, id_col=id_col, text_col=dd_col,
-        threshold=jaccard_threshold, prune_verify="auto",
-        corpus_n_rows=stats["after_exact_dedup"],
-        max_bucket=derive_max_bucket(stats["after_exact_dedup"]),
-    )
-    # component-correct: keep the min id of every CONNECTED near-dup
-    # cluster (pairwise loser-dropping over-deletes on chains A~B~C).
-    # connected_components scans the verified pairs once, inside the
-    # call: its edge count materializes the edge checkpoint, so the
-    # verify runs exactly once and reads the deduped CACHE, not the
-    # input. That checkpoint was the candidate cache's only reader.
-    clusters = connected_components(pairs)
-    if getattr(pairs, "_candidate_pairs_cache", None) is not None:
-        pairs._candidate_pairs_cache.unpersist()
-    walls["after_near_dup_prune"] = time.monotonic() - t
-
-    # the last three stages run no action of their own (so the gate's
-    # wall_s is 0.0): each is counted by an Observation that the final
-    # action fills
-    obs = {s: Observation() for s in CURATE_STAGES[2:]}
-    n_rows = F.count(F.lit(1)).alias("n")
-    pruned = keep_cluster_min(deduped, clusters, id_col)
-    if normalize:
-        pruned = pruned.drop(dd_col)
-    pruned = pruned.observe(obs["after_near_dup_prune"], n_rows)
-
-    # quality, language and the scrub are column expressions attached
-    # with withColumn, never a join of the frame to its own projection
-    # (at 2.4M docs each such join was a full shuffle of the text)
-    q_expr = (
-        quality_model.score_expr(text_col)
-        if quality_model is not None else quality_score_expr(text_col)
-    )
-    gated = (
-        pruned.withColumn("quality", q_expr)
-        .withColumn("lang_pred", language_id_expr(text_col))
-        .filter(F.col("quality") >= min_quality)
-    )
-    if langs:
-        gated = gated.filter(F.col("lang_pred").isin(list(langs)))
-    gated = gated.observe(obs["after_quality_lang_gate"], n_rows)
-
-    scrubbed = gated.withColumn(text_col, pii_scrub_expr(text_col))
-    if quota_per_lang is not None:
-        # shared keyed-quota primitive — same md5-hash-order selection
-        # rule as the per-domain quota (one definition, no drift)
-        from ..operators.text import deterministic_quota
-
-        scrubbed = deterministic_quota(
-            scrubbed, "lang_pred", id_col, quota_per_lang
+        sc.setJobDescription("curate/near_dup")
+        t = time.monotonic()
+        # prune_verify="auto": the candidate pairs are cached and counted,
+        # and the verify touches candidate docs only once the corpus is
+        # large. The hot-bucket cap comes from the count this stage
+        # already took, so the LSH step runs no corpus count of its own.
+        pairs = minhash_dedup_pairs(
+            deduped, id_col=id_col, text_col=dd_col,
+            threshold=jaccard_threshold, prune_verify="auto",
+            corpus_n_rows=stats["after_exact_dedup"],
+            max_bucket=derive_max_bucket(stats["after_exact_dedup"]),
         )
-    scrubbed = scrubbed.observe(obs["output"], n_rows)
+        # component-correct: keep the min id of every CONNECTED near-dup
+        # cluster (pairwise loser-dropping over-deletes on chains A~B~C).
+        # connected_components scans the verified pairs once, inside the
+        # call: its edge count materializes the edge checkpoint, so the
+        # verify runs exactly once and reads the deduped CACHE, not the
+        # input. That checkpoint was the candidate cache's only reader.
+        clusters = connected_components(pairs)
+        if getattr(pairs, "_candidate_pairs_cache", None) is not None:
+            pairs._candidate_pairs_cache.unpersist()
+        walls["after_near_dup_prune"] = time.monotonic() - t
 
-    # the final action: the write, or one count that leaves the frame
-    # cached so the caller's action reads the cache
-    t = time.monotonic()
-    if out is not None:
-        scrubbed.write.mode("overwrite").parquet(out)
-    else:
-        scrubbed = scrubbed.persist(lvl)
-        scrubbed.count()
-    walls["output"] = time.monotonic() - t
-    stats.update((s, int(o.get["n"])) for s, o in obs.items())
-    release_checkpoint(clusters)
-    deduped.unpersist()
+        # the last three stages run no action of their own (so the gate's
+        # wall_s is 0.0): each is counted by an Observation that the final
+        # action fills
+        obs = {s: Observation() for s in CURATE_STAGES[2:]}
+        n_rows = F.count(F.lit(1)).alias("n")
+        pruned = keep_cluster_min(deduped, clusters, id_col)
+        if normalize:
+            pruned = pruned.drop(dd_col)
+        pruned = pruned.observe(obs["after_near_dup_prune"], n_rows)
 
-    if metrics_out is not None:
-        write_curate_metrics(
-            df.sparkSession, metrics_out, stats, walls,
-            run_id=run_id or uuid.uuid4().hex[:12],
+        # quality, language and the scrub are column expressions attached
+        # with withColumn, never a join of the frame to its own projection
+        # (at 2.4M docs each such join was a full shuffle of the text)
+        q_expr = (
+            quality_model.score_expr(text_col)
+            if quality_model is not None else quality_score_expr(text_col)
         )
+        gated = (
+            pruned.withColumn("quality", q_expr)
+            .withColumn("lang_pred", language_id_expr(text_col))
+            .filter(F.col("quality") >= min_quality)
+        )
+        if langs:
+            gated = gated.filter(F.col("lang_pred").isin(list(langs)))
+        gated = gated.observe(obs["after_quality_lang_gate"], n_rows)
+
+        scrubbed = gated.withColumn(text_col, pii_scrub_expr(text_col))
+        if quota_per_lang is not None:
+            # shared keyed-quota primitive — same md5-hash-order selection
+            # rule as the per-domain quota (one definition, no drift)
+            from ..operators.text import deterministic_quota
+
+            scrubbed = deterministic_quota(
+                scrubbed, "lang_pred", id_col, quota_per_lang
+            )
+        scrubbed = scrubbed.observe(obs["output"], n_rows)
+
+        # the final action: the write, or one count that leaves the frame
+        # cached so the caller's action reads the cache
+        sc.setJobDescription("curate/output")
+        t = time.monotonic()
+        if out is not None:
+            scrubbed.write.mode("overwrite").parquet(out)
+        else:
+            scrubbed = scrubbed.persist(lvl)
+            scrubbed.count()
+        walls["output"] = time.monotonic() - t
+        stats.update((s, int(o.get["n"])) for s, o in obs.items())
+        release_checkpoint(clusters)
+        deduped.unpersist()
+
+        if metrics_out is not None:
+            write_curate_metrics(
+                df.sparkSession, metrics_out, stats, walls,
+                run_id=run_id or uuid.uuid4().hex[:12],
+            )
+    finally:
+        sc.setLocalProperty("spark.job.description", caller_desc)
     return scrubbed, stats
 
 

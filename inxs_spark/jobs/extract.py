@@ -5,6 +5,8 @@ Cluster (BASELINE.json:14):
     python tools/package.py   # builds dist/inxs_spark.zip
     spark-submit --py-files dist/inxs_spark.zip \
         --conf spark.sql.adaptive.enabled=true \
+        --conf spark.sql.adaptive.coalescePartitions.minPartitionSize=1b \
+        --conf spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true \
         --conf spark.sql.execution.arrow.maxRecordsPerBatch=4096 \
         inxs_spark/jobs/extract.py \
         --input <iceberg-table-or-parquet-path> --output <out_root> \

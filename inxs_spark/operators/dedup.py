@@ -736,7 +736,11 @@ def simhash_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     return simhash_pairs_from_sigs(sigs, max_hamming, n_blocks)
 
 
-def derive_simhash_blocks(max_hamming: int, table_cap: int = 1024,
+#: most q-subset key tables one SimHash block plan may enumerate
+SIMHASH_TABLE_CAP = 1024
+
+
+def derive_simhash_blocks(max_hamming: int, table_cap: int = SIMHASH_TABLE_CAP,
                           max_extra_blocks: int = 16) -> tuple[int, int]:
     """Choose (n_blocks b, key_blocks q = b − max_hamming): the
     smallest b whose worst-case combined-key width (sum of the q
@@ -782,8 +786,9 @@ def _simhash_block_keys(max_hamming: int, n_blocks: int | None):
     so two signatures within ``max_hamming`` bits share a key whenever
     n_blocks > max_hamming (pigeonhole); hash collisions only ever ADD
     candidates. ``n_blocks=None`` derives the plan from
-    :func:`derive_simhash_blocks`; an out-of-range ``n_blocks`` raises
-    here, before any Spark work. The one key builder of both the batch
+    :func:`derive_simhash_blocks`; an out-of-range ``n_blocks``, or one
+    whose C(n_blocks, q) exceeds ``SIMHASH_TABLE_CAP``, raises here,
+    before any subset or Spark work. The one key builder of both the batch
     and the incremental pair search.
 
     The subsets explode as an index ``t``, and each key reads its
@@ -792,6 +797,7 @@ def _simhash_block_keys(max_hamming: int, n_blocks: int | None):
     (495 at max_hamming=8) generates a Java method past the 64 KB
     limit, so whole-stage codegen could not compile it."""
     from itertools import combinations
+    from math import comb
 
     if n_blocks is None:
         n_blocks, q = derive_simhash_blocks(max_hamming)
@@ -799,6 +805,12 @@ def _simhash_block_keys(max_hamming: int, n_blocks: int | None):
         if not 1 <= n_blocks <= 64:
             raise ValueError(f"n_blocks must be in [1, 64], got {n_blocks}")
         q = max(n_blocks - max_hamming, 1)
+        if comb(n_blocks, q) > SIMHASH_TABLE_CAP:
+            raise ValueError(
+                f"n_blocks={n_blocks}, max_hamming={max_hamming} needs "
+                f"C({n_blocks}, {q}) = {comb(n_blocks, q)} key tables, "
+                f"over the cap of {SIMHASH_TABLE_CAP}"
+            )
     base, extra = divmod(64, n_blocks)
     widths = [base + (1 if b < extra else 0) for b in range(n_blocks)]
     offsets = [sum(widths[:b]) for b in range(n_blocks)]

@@ -8,6 +8,29 @@ per core: Spark's default of one per core packs small files by count
 (each is charged the 4 MB ``openCostInBytes``), so one uneven split
 stalls a stage that runs the extraction kernel straight over the
 scan. Inputs above ``maxPartitionBytes`` × 2 × cores split as before.
+
+Post-shuffle stages are sized by cores, not by bytes. AQE's
+``coalescePartitions.parallelismFirst`` aims each coalesced partition
+at shuffle bytes / ``defaultParallelism``, but Spark floors that
+target at ``coalescePartitions.minPartitionSize`` (1 MB), so a stage
+that shuffles under cores × 1 MB collapses onto fewer tasks than
+cores, down to one. Curation's stages shuffle little and spend a lot
+of CPU per byte (the final gate/scrub write, the LSH bucket stage),
+so the floor here is one byte: every coalesced stage lands on about
+``defaultParallelism`` tasks. Greedy packing often gives cores + 1:
+the last partition is the small remainder, so its second wave costs
+tens of milliseconds. Floors of 16 KB to 256 KB timed the same as one
+byte on curation; one byte keeps the rule free of a byte size.
+Persisted frames follow the same rule:
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` (off by
+default in Spark 4.1) lets AQE coalesce the plan a cache is built
+from, so a frame persisted after a shuffle holds about cores
+partitions, not ``spark.sql.shuffle.partitions``, and every stage
+that reads it runs that many tasks instead of 32 (each Python task
+has about 70 ms of fixed cost). Its output partitioning is then no
+longer the shuffle's hash partitioning, so a join keyed like the
+cached shuffle may plan one more exchange.
+
 Local Python workers start through
 :mod:`inxs_spark.sources.worker_daemon`, which removes the per-task
 cost of re-reading Spark's pyspark archives.
@@ -24,6 +47,8 @@ ARROW_MAX_RECORDS_PER_BATCH = 4096
 #: file-scan splits asked for per core (``spark.sql.files.minPartitionNum``)
 SCAN_SPLITS_PER_CORE = 2
 WORKER_DAEMON_MODULE = "inxs_spark.sources.worker_daemon"
+#: AQE's floor on a coalesced shuffle partition (Spark's default 1 MB)
+COALESCE_MIN_PARTITION_SIZE = "1b"
 
 
 def worker_daemon_module(master: str) -> str | None:
@@ -55,6 +80,11 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
+        .config(
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+            COALESCE_MIN_PARTITION_SIZE,
+        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",

@@ -604,6 +604,37 @@ class TestDedup:
         assert stats["after_near_dup_prune"] == stats["output"] == 11
         assert n_jobs <= 28, n_jobs
 
+    def test_curate_describes_each_stage(self, spark, tmp_path):
+        """Every Spark job of a curate call carries the description
+        curate/<stage>, so an event log attributes it to its stage, and
+        the caller's own description is back in place on return."""
+        from inxs_spark.jobs.curate import curate
+
+        sc = spark.sparkContext
+        group = "test_curate_describes_each_stage"
+        sc.setJobGroup(group, "caller description")
+        try:
+            curate(
+                self._metrics_fixture(spark), jaccard_threshold=0.6,
+                min_quality=0.0, out=str(tmp_path / "curated"),
+                metrics_out=str(tmp_path),
+            )
+            assert sc.getLocalProperty("spark.job.description") == "caller description"
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jvm_sc = sc._jsc.sc()
+        jvm_sc.listenerBus().waitUntilEmpty()
+        jobs = jvm_sc.statusStore().jobsList(None).iterator()
+        descriptions = set()
+        while jobs.hasNext():
+            job = jobs.next()
+            if job.jobGroup().isDefined() and job.jobGroup().get() == group:
+                descriptions.add(job.description().get())
+        assert descriptions == {
+            "curate/input", "curate/exact_dedup", "curate/near_dup", "curate/output",
+        }
+
     def test_remove_boilerplate_lines(self, spark):
         """Planted banner/footer lines (in every doc) are removed,
         unique content survives in ORIGINAL order, all-boilerplate
@@ -1365,6 +1396,35 @@ class TestDedup:
         assert q3 == b3 - 3 and q3 * (64 // b3) >= 30
         with pytest.raises(ValueError):
             derive_simhash_blocks(63)
+
+    def test_simhash_explicit_blocks_over_table_cap_raise(self, spark):
+        """An explicit n_blocks whose C(n_blocks, q) key tables exceed
+        the cap raises before it enumerates a subset or runs a Spark
+        job: n_blocks=64 at max_hamming=8 would ask for C(64, 56), about
+        4.4e9 subsets. The largest plan under the cap still builds."""
+        import time
+        from math import comb
+
+        from inxs_spark.operators.dedup import (
+            SIMHASH_TABLE_CAP,
+            simhash_candidates,
+        )
+
+        sigs = spark.createDataFrame([(1, 42), (2, 43)], "id long, simhash long")
+        sc = spark.sparkContext
+        group = "test_simhash_explicit_blocks_over_table_cap_raise"
+        sc.setJobGroup(group, group)
+        t0 = time.monotonic()
+        try:
+            for n_blocks in (64, 13):  # C(13, 5) = 1287
+                with pytest.raises(ValueError, match="over the cap"):
+                    simhash_candidates(sigs, max_hamming=8, n_blocks=n_blocks)
+            assert comb(12, 4) <= SIMHASH_TABLE_CAP
+            simhash_candidates(sigs, max_hamming=8, n_blocks=12)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert time.monotonic() - t0 < 10
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
     def test_simhash_full_width_block_plan_runs(self, spark):
         """max_hamming=0 derives one 64-bit block — the (1<<64)-1 mask

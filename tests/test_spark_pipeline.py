@@ -630,6 +630,43 @@ def test_default_fanout_partitions_rule(spark, tiny_transcripts):
         default_fanout_partitions(spark.range(10).repartition(7))
 
 
+def test_post_shuffle_and_cached_stages_sized_by_cores(spark):
+    """Stages after a small shuffle run on about one task per core,
+    not on one task (AQE's 1 MB coalescing floor) or on every shuffle
+    partition (a cached plan keeps its 32 unless it may coalesce): a
+    persisted post-shuffle frame of a few hundred rows reads back with
+    at most 2 x cores partitions, and a projection after a shuffle of
+    a few kilobytes runs on at least cores tasks."""
+    from pyspark.sql import functions as F
+
+    cores = spark.sparkContext.defaultParallelism
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 32
+    cached = (
+        spark.range(300).groupBy((F.col("id") % 50).alias("k")).count()
+        .persist()
+    )
+    try:
+        cached.count()
+        tasks = _result_stage_tasks(
+            spark, "sizing-cached",
+            lambda: cached.write.format("noop").mode("overwrite").save(),
+        )
+        assert tasks <= 2 * cores, tasks
+        assert cached.rdd.getNumPartitions() <= 2 * cores
+    finally:
+        cached.unpersist()
+
+    hashed = (
+        spark.range(0, 64 * cores, numPartitions=1).repartition("id")
+        .select(F.sha2(F.col("id").cast("string"), 512).alias("h"))
+    )
+    tasks = _result_stage_tasks(
+        spark, "sizing-post-shuffle",
+        lambda: hashed.write.format("noop").mode("overwrite").save(),
+    )
+    assert cores <= tasks <= 2 * cores, tasks
+
+
 def test_transform_df_matches_serial_kernel(spark, tiny_transcripts):
     """Generic runner parity: Spark table-records output must equal the
     serial kernel applied per turn (same transformation object)."""
